@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCores
     // Timed repetitions per query; the noise band on this box is up to
     // ±2.3x on multi-second queries, so the HEADLINE is the min of N runs
     // (contamination-immune: load only ever inflates a rep) with the
@@ -15,14 +15,7 @@ object Bench {
     // itself is OFF — the leaf must not recurse.
     val onlySet: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    graft.multimodal.MediaIo.init()
+    val spark = GraftSession.local(cpus, "graft-bench")
     // Load sentinel: a fixed single-threaded FMA loop whose wall time
     // depends ONLY on how much CPU this box gives one thread. Timed before
     // warmup, between the two query halves, and after the last query; if
@@ -57,7 +50,6 @@ object Bench {
       ts.foreach(_.join())
       (System.nanoTime() - t0) / 1e9
     }
-    val nThreads = cpus.toInt
     calibrate() // untimed: first run pays JIT compilation of the loop
     def cal3(v: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -84,7 +76,7 @@ object Bench {
       calPre = calibrate()
     }
     val gateFailed = calPre > GateRatio * CalFloorSec
-    val calPrePar = calibratePar(nThreads)
+    val calPrePar = calibratePar(cpus)
     // Untimed warmup at sf0.001: first execution of each plan shape pays
     // JIT + whole-stage-codegen class compilation (measured 8-20x on the
     // victim query); the cheap SF compiles those once. Target-SF plan
@@ -158,11 +150,11 @@ object Bench {
       if (reps >= 3) (1 to reps).map(_ => timeOnce(fn))
       else { timeOnce(fn); (1 to reps).map(_ => timeOnce(fn)) }
     val firstPass = ordered.zipWithIndex.map { case ((name, fn), idx) =>
-      if (idx == ordered.size / 2) { calMid = calibrate(); calMidPar = calibratePar(nThreads) }
+      if (idx == ordered.size / 2) { calMid = calibrate(); calMidPar = calibratePar(cpus) }
       val calQ = calibrateN(10000000)
       (name, fn, repSet(fn), calQ)
     }
-    if (calMid < 0) { calMid = calibrate(); calMidPar = calibratePar(nThreads) }
+    if (calMid < 0) { calMid = calibrate(); calMidPar = calibratePar(cpus) }
     // SELF-HEALING pass (round-13 verdict): the per-query calibration
     // already detects exactly WHICH rep windows a load spike landed on —
     // act on it instead of publishing a poisoned min and leaving the
@@ -204,7 +196,7 @@ object Bench {
       }
     }
     val calPost = calibrate()
-    val calPostPar = calibratePar(nThreads)
+    val calPostPar = calibratePar(cpus)
     // PER-QUERY CROSS-RUN DRIFT GATE (round-15 verdict): the run-level
     // sentinels certify the BOX was quiet, yet a 9x per-query outlier
     // (q_knn_quantized: 4.43 s in BENCH_r15 vs a same-code 0.49 s close
@@ -281,7 +273,7 @@ object Bench {
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_BENCH_ONLY", names.mkString(","))
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.environment().put("SPARK_GRAFT_BENCH_REPS", reps.toString)
       pb.environment().put("SPARK_GRAFT_BENCH_OUT", outF.toString)
       pb.redirectOutput(logF.toFile)
@@ -457,7 +449,7 @@ object Bench {
     def recoveryJsonAt(cap: Int) = if (!recAttempted) "" else
       s""","contamination_unresolved":$contaminationUnresolved,"contamination_recovery":{"cooldown_tries":$recCooldownTries,"quiet":$recQuiet,"subset_n":$recSubsetN,"env_clean":$recClean,"healed_n":${recHealed.size},"healed":${healedEntries(recHealed, cap)}${if (recError.nonEmpty) s""","error":"${jesc(recError)}"""" else ""}}"""
     def calJsonAt(listCap: Int) =
-      s""""calibration_sec":{"pre":${cal3(calPre)},"mid":${cal3(calMid)},"post":${cal3(calPost)}},"calibration_par_sec":{"threads":$nThreads,"pre":${cal3(calPrePar)},"mid":${cal3(calMidPar)},"post":${cal3(calPostPar)}},"cal_floor":$CalFloorSec,"cooldown_retries":$cooldownRetries,"contaminated":$contaminated${recoveryJsonAt(listCap)},"cal_q_spread":${cal3(calSpread)},"cal_q_spread_raw":${cal3(calSpreadRaw)},"requeried_n":${requeried.size},"requeried":${requeriedJsonAt(listCap)},${driftJsonAt(listCap)}"""
+      s""""calibration_sec":{"pre":${cal3(calPre)},"mid":${cal3(calMid)},"post":${cal3(calPost)}},"calibration_par_sec":{"threads":$cpus,"pre":${cal3(calPrePar)},"mid":${cal3(calMidPar)},"post":${cal3(calPostPar)}},"cal_floor":$CalFloorSec,"cooldown_retries":$cooldownRetries,"contaminated":$contaminated${recoveryJsonAt(listCap)},"cal_q_spread":${cal3(calSpread)},"cal_q_spread_raw":${cal3(calSpreadRaw)},"requeried_n":${requeried.size},"requeried":${requeriedJsonAt(listCap)},${driftJsonAt(listCap)}"""
     // full artifact keeps the historical 20-entry caps; the compact
     // stdout line's 6 bounds its worst-case head to ~1.6 KB (fixed ~600
     // + 6 entries x ~45 chars x up to 4 struct lists), under the budget

@@ -25,13 +25,7 @@ import org.apache.spark.sql.functions._
 object FixtureStats {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: FixtureStats <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-fixture-stats")
     args.foreach(d => println(statsJson(spark, d)))
     spark.stop()
   }

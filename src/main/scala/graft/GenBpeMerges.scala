@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Offline BPE-merge trainer — freezes [[graft.text.BpeMerges]] the same
@@ -22,12 +21,8 @@ object GenBpeMerges {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1)
       .getOrElse("src/main/scala/graft/text/BpeMerges.scala")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // pinned, not SPARK_GRAFT_CPUS: the output is a committed source file
+    val spark = GraftSession.local(8, "graft-gen-bpe-merges")
     val docs = ops.Tables.documents(spark, sfDir)
     val vocab = docs
       .select(explode(filter(split(lower(coalesce(col("text"), lit(""))),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates `sim/SemanticCentroids.scala` — the frozen k-means
   * quantizer the SemDeDup catalog query and its DuckDB oracle both
   * consume.
@@ -26,12 +24,8 @@ object GenSemanticCentroids {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1)
       .getOrElse("src/main/scala/graft/sim/SemanticCentroids.scala")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // pinned, not SPARK_GRAFT_CPUS: the output is a committed source file
+    val spark = GraftSession.local(8, "graft-gen-semantic-centroids")
     val emb = ops.Tables.embeddings(spark, sfDir)
     val k = 32
     val trained = sim.Knn.trainSphericalKmeans(emb, "embedding", k = k,

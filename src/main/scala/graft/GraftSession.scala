@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's recommended configuration.
+/** Session factory with the engine's recommended configuration, and the
+  * engine's only session builder: every main (Bench, Verify, Tool, Sweep,
+  * the data/fixture generators) and the benchmark build their session
+  * here, so the benchmarked session is the verified one.
   *
   * `cluster` is the 100-TB profile: AQE with skew-join splitting and
   * partition coalescing, larger scan partitions, broadcast threshold wide
@@ -28,7 +31,16 @@ object GraftSession {
     "spark.ui.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC")
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else every available
+    * processor. The only reader of that variable.
+    */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** A `local[cores]` session with [[localConf]], the engine's SQL functions
+    * registered and process-wide media IO configured.
+    */
+  def local(cores: Int = defaultCores,
       appName: String = "graft"): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
@@ -36,6 +48,7 @@ object GraftSession {
     localConf(cores).foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.register(s)
     // process-wide media-IO config (in-memory ImageIO streams) lives with
     // session startup, not codec class-loading — see MediaIo's scaladoc
     graft.multimodal.MediaIo.init()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer utility: explain / show / time a single catalog query.
   *   runMain graft.Tool explain <query> <sfDir>
   *   runMain graft.Tool show <query> <sfDir> [rows]
@@ -13,17 +11,7 @@ object Tool {
     val mode = args(0)
     val name = args(1)
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // experiment knob: local fixtures are a few MB, so default 128m
-      // splits cap scan-stage parallelism at 1-3 tasks regardless of cores
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-tool")
     val q = SparkEntry.queries(name)
     mode match {
       case "explain" =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names — builder-side
     // targeted runs; the driver always invokes with 2 args = full catalog
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    graft.multimodal.MediaIo.init()
+    val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // An erroring query must be VISIBLE, not silently absent from the
     // output set (the round-11 fixture refresh dropped 9 queries and the

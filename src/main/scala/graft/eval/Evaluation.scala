@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.mllib.evaluation.MulticlassMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -13,9 +12,10 @@ import org.apache.spark.sql.functions._
 import graft.tree.{PLeaf, PNode, PSplit, ProximityForestModel, ProximityTreeModel}
 
 /** Model evaluation suite (SURVEY §2.10, reference: code/src/evaluation.py).
-  * Headline metrics use the same Spark ML classes the reference wraps from
-  * Python (E1/E3/E4), so numbers agree by construction; balanced accuracy
-  * (E2) is the DataFrame chain in [[Metrics]].
+  * Headline metrics come from mllib's MulticlassMetrics, the class the
+  * Spark ML evaluator the reference wraps from Python (E1/E3/E4) delegates
+  * to, so numbers agree by construction; balanced accuracy (E2) is derived
+  * from the same object with [[Metrics.balancedAccuracy]]'s semantics.
   */
 object Evaluation {
 
@@ -29,28 +29,30 @@ object Evaluation {
   final case class ClassMetrics(
       label: Double, precision: Double, recall: Double, f1: Double)
 
-  /** E1 — accuracy / weightedPrecision / weightedRecall / f1 via
-    * MulticlassClassificationEvaluator (evaluation.py:102-117) + E2.
-    * Label/prediction columns are cast to double as the evaluator requires
-    * (evaluation.py:99-100).
+  /** (prediction, label) cast to double, as the evaluator requires
+    * (evaluation.py:99-100); its counts are one Spark job, on first use. */
+  private def metrics(pred: DataFrame, labelCol: String, predCol: String)
+      : MulticlassMetrics =
+    new MulticlassMetrics(pred.select(
+      col(predCol).cast("double"), col(labelCol).cast("double"))
+      .rdd.map(r => (r.getDouble(0), r.getDouble(1))))
+
+  /** E1 — accuracy / weightedPrecision / weightedRecall / f1, the values
+    * MulticlassClassificationEvaluator reports (evaluation.py:102-117), and
+    * E2 — the mean per-class recall over the actual labels, rounded HALF_UP
+    * to 6 places like [[Metrics.balancedAccuracy]]. One pass over `pred`.
     */
   def performance(pred: DataFrame, labelCol: String, predCol: String): Performance = {
-    val d = pred.select(
-      col(labelCol).cast("double").as("label"),
-      col(predCol).cast("double").as("prediction"))
-      .cache()
-    try {
-      def m(name: String): Double =
-        new MulticlassClassificationEvaluator()
-          .setLabelCol("label").setPredictionCol("prediction")
-          .setMetricName(name).evaluate(d)
-      Performance(
-        accuracy = m("accuracy"),
-        balancedAccuracy = Metrics.balancedAccuracy(d, "label", "prediction"),
-        weightedPrecision = m("weightedPrecision"),
-        weightedRecall = m("weightedRecall"),
-        f1 = m("f1"))
-    } finally { d.unpersist(); () }
+    val mm = metrics(pred, labelCol, predCol)
+    val recalls = mm.labels.map(mm.recall)
+    require(recalls.nonEmpty, "performance: no predictions to evaluate")
+    Performance(
+      accuracy = mm.accuracy,
+      balancedAccuracy = BigDecimal(recalls.sum / recalls.length)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+      weightedPrecision = mm.weightedPrecision,
+      weightedRecall = mm.weightedRecall,
+      f1 = mm.weightedFMeasure)
   }
 
   /** E3/E4 — confusion matrix + per-class precision/recall/F1 via mllib
@@ -59,10 +61,7 @@ object Evaluation {
     */
   def classWise(pred: DataFrame, labelCol: String, predCol: String)
       : (Seq[Double], Array[Array[Double]], Seq[ClassMetrics]) = {
-    val rdd = pred.select(
-      col(predCol).cast("double"), col(labelCol).cast("double"))
-      .rdd.map(r => (r.getDouble(0), r.getDouble(1)))
-    val mm = new MulticlassMetrics(rdd)
+    val mm = metrics(pred, labelCol, predCol)
     val labels = mm.labels.toSeq
     val cm = mm.confusionMatrix
     val matrix = Array.tabulate(cm.numRows, cm.numCols)((i, j) => cm(i, j))

@@ -93,12 +93,4 @@ object Metrics {
     branchGiniDF(df, branchCol, classCol)
       .agg(round(sum(col("total") * col("gini")) / sum(col("total")), 6)
         .as("weighted_gini"))
-
-  /** A9 — driver-side Gini over class counts
-    * (reference: code/src/global_model_manager.py:161-166). */
-  def gini(classCounts: Iterable[Long]): Double = {
-    val total = classCounts.sum.toDouble
-    if (total == 0) 0.0
-    else 1.0 - classCounts.map(c => (c / total) * (c / total)).sum
-  }
 }

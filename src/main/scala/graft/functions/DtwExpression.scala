@@ -177,18 +177,12 @@ case class LbKeogh(first: Expression, second: Expression, third: Expression)
   override def prettyName: String = "lb_keogh"
 }
 
-/** Registration: either `spark.sql.extensions=graft.functions.GraftExtensions`
-  * at session build, or [[GraftFunctions.register]] on a live session.
+/** SQL names for the native expressions, registered on every session by
+  * [[graft.GraftSession.local]]; the Column entry points need no registry.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    GraftFunctions.injections.foreach(ext.injectFunction)
-}
-
 object GraftFunctions {
-  type Injection = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
-
-  val injections: Seq[Injection] = Seq(
+  private val injections
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("dtw_distance"),
       new ExpressionInfo(classOf[DtwDistance].getName, "dtw_distance"),
       (es: Seq[Expression]) => DtwDistance(es(0), es(1))),
@@ -206,7 +200,7 @@ object GraftFunctions {
       new ExpressionInfo(classOf[LbKeogh].getName, "lb_keogh"),
       (es: Seq[Expression]) => LbKeogh(es(0), es(1), es(2))))
 
-  /** Imperative registration for an existing session (tests, REPLs). */
+  /** Registers the SQL names on a live session (idempotent). */
   def register(spark: SparkSession): Unit =
     injections.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)

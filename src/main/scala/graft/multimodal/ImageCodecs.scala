@@ -18,8 +18,8 @@ import javax.imageio.ImageIO
 object ImageCodecs {
 
   // In-memory stream caching for byte-array sources — owned and documented
-  // by MediaIo (entry points call it explicitly; this covers direct
-  // library use of the codecs without an entry point).
+  // by MediaIo (GraftSession.local calls it explicitly; this covers direct
+  // library use of the codecs without that session factory).
   MediaIo.init()
 
   /** Decode allocation bound: a hostile/corrupt header can claim any WxH

@@ -16,10 +16,10 @@ import javax.imageio.ImageIO
   *
   * `setUseCache` is a process-wide JVM flag, so flipping it belongs in ONE
   * clearly-named place rather than as a class-loading side effect scattered
-  * across codec objects (round-12 ADVICE): entry points ([[graft.Bench]],
-  * [[graft.Verify]], [[graft.GraftSession]]) call [[init]] explicitly, and
-  * the codec objects call it from their initializers as a belt-and-braces
-  * for direct library use. Idempotent and thread-safe.
+  * across codec objects (round-12 ADVICE): [[graft.GraftSession.local]],
+  * which every main builds its session with, calls [[init]] explicitly,
+  * and the codec objects call it from their initializers as a
+  * belt-and-braces for direct library use. Idempotent and thread-safe.
   */
 object MediaIo {
   private val done = new AtomicBoolean(false)

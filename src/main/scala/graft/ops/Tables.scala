@@ -19,8 +19,9 @@ object Tables {
     * flag (loads as TimestampNTZType). Branch on the LOADED type rather
     * than assuming one generation, so downstream queries always see `ts`
     * as session-zoned TimestampType regardless of the writer. The session
-    * timezone is pinned to UTC everywhere (GraftSession/Verify/Bench), so
-    * the NTZ→LTZ cast is value-preserving.
+    * timezone is pinned to UTC by GraftSession.local, which every main
+    * (Verify, Bench, Tool, ...) builds its session with, so the NTZ→LTZ
+    * cast is value-preserving.
     */
   private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
     // Set once: mutating the shared session's conf on every load would

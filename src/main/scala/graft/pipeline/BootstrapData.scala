@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.io.Ingestion
 
 /** Seeded bootstrap synthesis: scale a small labeled training file up to the
@@ -82,13 +83,7 @@ object BootstrapData {
     val jitter = rest.lift(1).map(_.toDouble).getOrElse(0.05)
     val seed = rest.lift(2).map(_.toLong).getOrElse(123L)
     val numFeatures = rest.lift(3).map(_.toInt).getOrElse(140)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-bootstrap")
     val feats = Ingestion.featureCols(numFeatures)
     val src = Ingestion.readUcrTsv(spark, inPath, numFeatures)
     if (splitMode) {

@@ -99,11 +99,13 @@ object Controller {
     val (trainNorm, testNorm) = timer.time("preprocess") {
       val trN = Preprocessing.minMaxNormalize(
         Preprocessing.dropAllNull(train), stats, features, Seq(cfg.labelCol))
+        .cache()
       val teN = Preprocessing.minMaxNormalize(
         Preprocessing.dropAllNull(test), stats, features, Seq(cfg.labelCol))
-      (trN.cache(), teN.cache())
+        .cache()
+      trN.count(); teN.count() // materialize shared inputs once, timed here
+      (trN, teN)
     }
-    trainNorm.count(); testNorm.count() // materialize shared inputs once
     (trainNorm, testNorm, features)
   }
 
@@ -123,9 +125,9 @@ object Controller {
       val p = LocalTrainer.predict(spark, forest, test, features).cache()
       p.count(); p
     }
-    val perf = timer.time("evaluation")(
-      Evaluation.performance(pred, cfg.labelCol, "prediction"))
-    val (labels, cm, classWise) = Evaluation.classWise(pred, cfg.labelCol, "prediction")
+    val (perf, (labels, cm, classWise)) = timer.time("evaluation")(
+      (Evaluation.performance(pred, cfg.labelCol, "prediction"),
+        Evaluation.classWise(pred, cfg.labelCol, "prediction")))
     pred.unpersist()
     cfg.plotsDir.foreach(dir =>
       Plots.writeAll(labels, cm, classWise, s"$dir/local_$iteration"))
@@ -153,9 +155,9 @@ object Controller {
       val p = LocalTrainer.predictTree(spark, tree, test, features).cache()
       p.count(); p
     }
-    val perf = timer.time("evaluation")(
-      Evaluation.performance(pred, cfg.labelCol, "prediction"))
-    val (labels, cm, classWise) = Evaluation.classWise(pred, cfg.labelCol, "prediction")
+    val (perf, (labels, cm, classWise)) = timer.time("evaluation")(
+      (Evaluation.performance(pred, cfg.labelCol, "prediction"),
+        Evaluation.classWise(pred, cfg.labelCol, "prediction")))
     pred.unpersist()
     cfg.plotsDir.foreach(dir =>
       Plots.writeAll(labels, cm, classWise, s"$dir/global_$iteration"))

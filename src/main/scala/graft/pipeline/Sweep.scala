@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Experiment entry point (reference: code/src/main.py:5-9). Usage:
   *   runMain graft.pipeline.Sweep <dataPath> <outDir> [maxPartitions] [tsv] [sampleParams] [testPath]
@@ -16,13 +16,7 @@ object Sweep {
     val isTsv = args.lift(3).forall(_.toBoolean) // TSV by default
     val sampleParams = args.lift(4).exists(_.toBoolean)
     val testPath = args.lift(5).filter(_ != "-")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-sweep")
     val cfg = SweepConfig(
       dataPath = dataPath, tsv = isTsv,
       localMaxPartitions = maxParts, globalMaxPartitions = maxParts,

@@ -64,17 +64,25 @@ class EvaluationSpec extends AnyFunSuite with SparkSpec {
     assert(Evaluation.driverMemoryMb() > 0)
   }
 
-  test("WeightedGiniAggregator matches the DataFrame-chain weighted Gini") {
-    val df = Seq(
-      ("b1", "x"), ("b1", "x"), ("b1", "y"),
-      ("b2", "x"), ("b2", "y"), ("b2", "y"), ("b2", "y")
-    ).toDF("branch", "cls")
-    val chain = Metrics.weightedGiniDF(df, "branch", "cls").head().getDouble(0)
-    val agg = new WeightedGiniAggregator().toColumn
-    val single = df.as[(String, String)].select(agg).head()
-    assert(math.abs(single - chain) < 1e-6)
-    // hand value: b1 gini = 1-(4/9+1/9)=4/9 w=3/7; b2 gini=1-(1/16+9/16)=3/8 w=4/7
-    val expected = (3.0 / 7) * (4.0 / 9) + (4.0 / 7) * (3.0 / 8)
-    assert(math.abs(single - expected) < 1e-9)
+  test("performance equals the ML evaluator and the balanced-accuracy chain") {
+    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
+    import org.apache.spark.sql.functions.col
+    // 5 actual classes, skewed shares, ~30% errors, and a predicted class
+    // (6) that never occurs as a label
+    val rnd = new scala.util.Random(17)
+    val rows = (1 to 3000).map { _ =>
+      val l = 1 + math.min(4, (rnd.nextDouble() * rnd.nextDouble() * 6).toInt)
+      (l, if (rnd.nextDouble() < 0.7) l else 1 + rnd.nextInt(6))
+    }
+    val df = rows.toDF("label", "prediction").repartition(7)
+    val p = Evaluation.performance(df, "label", "prediction")
+    val d = df.select(col("label").cast("double"), col("prediction").cast("double"))
+    def m(name: String) = new MulticlassClassificationEvaluator()
+      .setMetricName(name).evaluate(d)
+    assert(p.accuracy === m("accuracy"))
+    assert(p.weightedPrecision === m("weightedPrecision"))
+    assert(p.weightedRecall === m("weightedRecall"))
+    assert(p.f1 === m("f1"))
+    assert(p.balancedAccuracy === Metrics.balancedAccuracy(d, "label", "prediction"))
   }
 }

@@ -50,7 +50,12 @@ class IngestionSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("empty data raises") {
-    val empty = Ingestion.readUcrTsv(spark, ecgPath, 140).limit(0)
+    // header-only CSV: a real file with the full wide schema and no rows
+    val dir = java.nio.file.Files.createTempDirectory("csv_empty").toString
+    val p = java.nio.file.Paths.get(dir, "empty.csv")
+    java.nio.file.Files.writeString(p,
+      Ingestion.wideSchema(140).fieldNames.mkString(",") + "\n")
+    val empty = Ingestion.readCsv(spark, p.toString, Ingestion.wideSchema(140))
     assertThrows[IllegalStateException](Ingestion.validateNonEmpty(empty))
   }
 

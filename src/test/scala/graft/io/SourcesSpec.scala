@@ -1,12 +1,9 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.ops.Display
 import graft.prep.Preprocessing
 import graft.split.Splits
 
@@ -16,63 +13,6 @@ class SourcesSpec extends AnyFunSuite with SparkSpec {
   private lazy val df = (1 to 100).map(i =>
     (i.toLong, s"name_$i", i % 4, i * 1.5)).toDF("id", "name", "grp", "score")
 
-  test("parquet roundtrip with partitionBy produces hive layout and prunes") {
-    val dir = Files.createTempDirectory("src_parquet").toString + "/t"
-    Sources.writeParquet(df, dir, partitionByCols = Seq("grp"))
-    assert(new java.io.File(dir).listFiles().exists(_.getName.startsWith("grp=")))
-    val back = Sources.parquet(spark, dir)
-    assert(back.count() === 100)
-    val plan = back.filter(col("grp") === 2).queryExecution.executedPlan.toString
-    assert(back.filter(col("grp") === 2).count() === 25)
-    // partition pruning: non-matching partition dirs never scanned
-    assert(plan.contains("PartitionFilters") || back.filter(col("grp") === 2)
-      .queryExecution.optimizedPlan.toString.nonEmpty)
-  }
-
-  test("csv/json/orc roundtrips with explicit schema") {
-    val base = Files.createTempDirectory("src_fmt").toString
-    Sources.writeCsv(df, s"$base/c")
-    Sources.writeJsonLines(df, s"$base/j")
-    Sources.writeOrc(df, s"$base/o")
-    val schema = df.schema
-    assert(Sources.csv(spark, s"$base/c", schema).count() === 100)
-    assert(Sources.jsonLines(spark, s"$base/j", schema).count() === 100)
-    assert(Sources.orc(spark, s"$base/o", schema).count() === 100)
-    // values survive, not just counts
-    val sum = Sources.csv(spark, s"$base/c", schema).agg(sum_distinct(col("id")))
-    assert(sum.head().getLong(0) === 5050L)
-  }
-
-  test("bucketed table: join on bucket key plans without a shuffle of the fact side") {
-    spark.sql("DROP TABLE IF EXISTS graft_bucketed")
-    // a killed previous run can leave the location behind without the
-    // catalog entry — clear it or CTAS refuses
-    val loc = new java.io.File("spark-warehouse/graft_bucketed")
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(loc)
-    }
-    Sources.writeBucketedTable(df, "graft_bucketed", Seq("id"), numBuckets = 4,
-      sortCols = Seq("id"))
-    val t = spark.table("graft_bucketed")
-    val small = (1L to 10L).map(i => (i, s"x$i")).toDF("id", "tag")
-    // disable broadcast to force the join to reveal its shuffle needs
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = t.join(small.repartition(4, col("id")), "id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(joined.count() === 10)
-      // the bucketed side must not re-shuffle on id
-      val exchanges = "Exchange hashpartitioning\\(id".r
-        .findAllIn(plan).size
-      assert(exchanges <= 1, s"bucketed side re-shuffled:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("withRowId: unique ids, reuses an existing id column by cast") {
     val withId = Preprocessing.withRowId(df.drop("id"))
     assert(withId.select("row_id").distinct().count() === 100)
@@ -80,14 +20,6 @@ class SourcesSpec extends AnyFunSuite with SparkSpec {
       df.withColumnRenamed("id", "row_id"), "row_id")
     assert(reused.schema("row_id").dataType.typeName === "long")
     assert(reused.select(max(col("row_id"))).head().getLong(0) === 100L)
-  }
-
-  test("compact show elides middle columns and bounds rows") {
-    val s = Display.compactString(df, n = 2, k = 1)
-    val lines = s.split("\n")
-    assert(lines.length === 3) // header + 2 rows
-    assert(lines.head === "id | ... | score")
-    assert(lines(1).split(" \\| ").length === 3)
   }
 
   test("T1 random split: disjoint halves that union to the input") {

@@ -98,6 +98,23 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
         "spark.sql.adaptive.skewJoin.enabled",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor"))
       assert(local(k) === cluster(k), k)
+    // one session builder and one registration point: every main builds
+    // through GraftSession.local, so the benchmarked session is the
+    // verified one (a source scan — building a session here would
+    // reconfigure the shared test session)
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    // one file name per occurrence of `needle`
+    def sitesOf(needle: String): List[String] = sources.flatMap { f =>
+      val text = java.nio.file.Files.readString(f)
+      Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0).map(_ => f.getFileName.toString)
+    }
+    assert(sitesOf("SparkSession.builder") === List("GraftSession.scala"))
+    assert(sitesOf("GraftFunctions.register") === List("GraftSession.scala"))
   }
 
   test("connected components: an exhausted maxRounds refuses in strict mode, warns otherwise") {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
-/** GraftSession ships `spark.sql.adaptive.skewJoin` on, and SourcesSpec
+/** GraftSession ships `spark.sql.adaptive.skewJoin` on, and OperatorsSpec
   * asserts the CONF — but a conf is not a lever until the split is seen
   * happening (the CboStatsSpec doctrine). This builds a celebrity-key
   * join, drops AQE's skew thresholds to fixture scale, and pins the FLIP:
@@ -69,39 +69,5 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
     assert(!plan2.contains("skew=true"), "contrast run still split")
     assert((n, s) === (n2, s2), "skew split must not perturb values")
     assert(n === 200000L)
-  }
-
-  // AQE skew-split covers the post-shuffle SortMergeJoin case; the manual
-  // salted join stays for the shapes AQE can't touch (pre-aggregations
-  // that must keep partition boundaries, skewed-but-unbroadcastable dims)
-  // — so it keeps a direct equivalence contract, not just a conf.
-  test("saltedEquiJoin: row-for-row equal to the plain equi join") {
-    val l = fact
-    val r = dim
-    val plain = l.join(r, Seq("k"))
-      .groupBy(col("k")).agg(count(lit(1)).as("n"),
-        sum(col("payload") + col("attr")).as("s"))
-      .orderBy(col("k")).collect().toSeq
-    val salted = SkewJoin.saltedEquiJoin(l, r, "k", buckets = 8)
-      .groupBy(col("k")).agg(count(lit(1)).as("n"),
-        sum(col("payload") + col("attr")).as("s"))
-      .orderBy(col("k")).collect().toSeq
-    assert(salted === plain)
-    // the salt really spreads the hot key: replay the same deterministic
-    // rand(seed) draw the operator uses and count distinct buckets
-    val spread = l.filter(col("k") === 0L)
-      .withColumn("_salt", (rand(42L) * 8).cast("int"))
-      .select(col("_salt")).distinct().count()
-    assert(spread >= 2, "hot key should spread across salt buckets")
-  }
-
-  test("keySkewProfile: hottest key first with its true share") {
-    val prof = SkewJoin.keySkewProfile(fact, col("k"), topN = 3).collect()
-    assert(prof.length === 3)
-    assert(prof(0).getAs[Long]("key") === 0L)
-    val share = prof(0).getAs[Number]("share").doubleValue()
-    assert(math.abs(share - 0.9) < 0.001, s"hot-key share was $share")
-    // shares are shares of ALL rows, not of the top-n subset
-    assert(prof.map(r => r.getAs[Long]("cnt")).sum < 200000L)
   }
 }
