@@ -15,7 +15,7 @@ import graft.tree.{PLeaf, PNode, PSplit, ProximityForestModel, ProximityTreeMode
   * Headline metrics come from mllib's MulticlassMetrics, the class the
   * Spark ML evaluator the reference wraps from Python (E1/E3/E4) delegates
   * to, so numbers agree by construction; balanced accuracy (E2) is derived
-  * from the same object with [[Metrics.balancedAccuracy]]'s semantics.
+  * from the same object with [[Metrics.balancedAccuracyDF]]'s semantics.
   */
 object Evaluation {
 
@@ -40,7 +40,7 @@ object Evaluation {
   /** E1 — accuracy / weightedPrecision / weightedRecall / f1, the values
     * MulticlassClassificationEvaluator reports (evaluation.py:102-117), and
     * E2 — the mean per-class recall over the actual labels, rounded HALF_UP
-    * to 6 places like [[Metrics.balancedAccuracy]]. One pass over `pred`.
+    * to 6 places like [[Metrics.balancedAccuracyDF]]. One pass over `pred`.
     */
   def performance(pred: DataFrame, labelCol: String, predCol: String): Performance = {
     val mm = metrics(pred, labelCol, predCol)

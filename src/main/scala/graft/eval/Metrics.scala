@@ -28,17 +28,11 @@ object Metrics {
       .agg(round(avg(col("recall")), 6).as("balanced_accuracy"))
   }
 
-  def balancedAccuracy(pred: DataFrame, labelCol: String, predCol: String): Double =
-    balancedAccuracyDF(pred, labelCol, predCol).head().getDouble(0)
-
   /** P11 + A6 — plain accuracy as avg of boolean-to-int
     * (reference: code/src/test.py:119-122). */
   def accuracyDF(pred: DataFrame, labelCol: String, predCol: String): DataFrame =
     pred.agg(round(avg((col(labelCol) === col(predCol)).cast("int")), 6)
       .as("accuracy"))
-
-  def accuracy(pred: DataFrame, labelCol: String, predCol: String): Double =
-    accuracyDF(pred, labelCol, predCol).head().getDouble(0)
 
   /** Per-class recall table (the intermediate of E2), kept as an operator in
     * its own right: (cls, actual_total, tp, recall). */

@@ -3,13 +3,15 @@ package graft.global
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.dist.Distances
 import graft.tree._
+import graft.tree.ProximityTree.{branchOf, drawMeasure, isLeaf, majorityLabel, weightedGini}
 
 /** Global-model strategy: ONE Proximity Tree grown breadth-first,
   * level-synchronously, with every split decision expressed as distributed
@@ -20,13 +22,20 @@ import graft.tree._
   * broadcast, UDF labeling, three aggregations, `first()`
   * (global_model_manager.py:271-295) — i.e. O(nodes × n_splitters) jobs per
   * level, which is why its global training takes 1900–5300 s on 4k rows.
-  * Here each level costs a FIXED number of jobs regardless of node count:
-  *   1. per-(node,label) class histograms            — one hash aggregate
-  *   2. distributed exemplar sampling (window top-k) — one shuffle
-  *   3. ALL candidates scored in one pass: each row emits one
+  * Here one (label -> count) aggregate before the loop gives the row
+  * total, the root's class histogram and the whole-set majority, and each
+  * level then costs a FIXED number of jobs regardless of node count:
+  *   1. exemplar sampling: the k smallest rand() per (node, class), kept by
+  *      a bounded aggregate that ships at most k rows per group per partition
+  *   2. ALL candidates scored in one pass: each row emits one
   *      (node, candidate, branch, label) key per candidate of its node and
-  *      a map-side-combined count feeds the driver's weighted-Gini argmin
-  *   4. routing: one broadcast map + one projection, persist/unpersist
+  *      a map-side-combined count feeds the driver's weighted-Gini argmin;
+  *      the winner's counts are also its children's class histograms
+  *   3. routing: one broadcast map + one projection, persist/unpersist
+  * The split policy — leaf test, majority label, measure draw, weighted
+  * Gini, branch of an all-Infinity row — is [[ProximityTree]]'s, the one
+  * the local learner applies; an empty child is a leaf of its exemplar's
+  * class in both.
   * Driver state stays tiny (exemplars + per-node class counts); data never
   * leaves executors except as aggregate counts. On a 1000-executor cluster
   * the shape is identical — broadcasts fan out the split table, the level
@@ -70,6 +79,44 @@ object GlobalTrainer {
       df.select(array(featureCols.map(c => col(c).cast("double")): _*)
         .as("time_series")))
 
+  /** The k smallest (r, series) pairs of one group, ordered by r and then
+    * by series (`java.util.Arrays.compare`), so no tie depends on arrival
+    * order. The buffer holds k pairs per (group, partition), so map-side
+    * combining ships at most k rows per group per partition.
+    */
+  private final class SmallestK(k: Int) extends Aggregator[
+      (Double, Array[Double]), Seq[(Double, Array[Double])], Seq[(Double, Array[Double])]] {
+    private def before(a: (Double, Array[Double]), b: (Double, Array[Double])): Boolean =
+      a._1 < b._1 || (a._1 == b._1 && java.util.Arrays.compare(a._2, b._2) < 0)
+    def zero: Seq[(Double, Array[Double])] = Nil
+    def reduce(b: Seq[(Double, Array[Double])], v: (Double, Array[Double]))
+        : Seq[(Double, Array[Double])] =
+      if (b.length == k && !before(v, b.last)) b // fast reject above the bar
+      else (b :+ v).sortWith(before).take(k)
+    def merge(a: Seq[(Double, Array[Double])], b: Seq[(Double, Array[Double])])
+        : Seq[(Double, Array[Double])] =
+      (a ++ b).sortWith(before).take(k)
+    def finish(b: Seq[(Double, Array[Double])]): Seq[(Double, Array[Double])] = b
+    def bufferEncoder: Encoder[Seq[(Double, Array[Double])]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Seq[(Double, Array[Double])]] = ExpressionEncoder()
+  }
+
+  /** (node, class) -> the series of its k rows with the smallest `r`, in
+    * `r` order. `frame` has columns node_id, true_label, r, time_series.
+    */
+  private[global] def smallestK(frame: DataFrame, k: Int)
+      : Map[(Int, Int), IndexedSeq[Array[Double]]] = {
+    import frame.sparkSession.implicits._
+    val top = udaf(new SmallestK(k), ExpressionEncoder[(Double, Array[Double])]())
+    frame.groupBy(col("node_id"), col("true_label"))
+      .agg(top(col("r"), col("time_series")).as("top"))
+      .select(col("node_id"), col("true_label"), col("top._2"))
+      .as[(Int, Int, Seq[Array[Double]])]
+      .collect()
+      .map { case (nid, lbl, series) => (nid, lbl) -> series.toIndexedSeq }
+      .toMap
+  }
+
   /** Fit one distributed Proximity Tree. Returns the same model type as the
     * sequential learner — prediction, complexity metrics, and the JSON sink
     * are shared.
@@ -93,8 +140,14 @@ object GlobalTrainer {
     // superseded level's cache, dropped only after the successor's lazy
     // persist has been materialized by the next level's first action
     var pendingUnpersist: Option[DataFrame] = None
-    val total = assign.count()
+
+    // One aggregate before the level loop: the root's class histogram,
+    // which also gives the row total and the whole-set majority.
+    val rootHist = assign.groupBy(col("true_label")).agg(count(lit(1)))
+      .as[(Int, Long)].collect().toMap
+    val total = rootHist.values.sum
     require(total > 0, "cannot fit on empty data")
+    val globalMajority = majorityLabel(rootHist)
 
     // Right-size the level frame to the DATA, not the core count: every
     // level job re-scans this exact frame, and partitions holding fewer
@@ -106,19 +159,14 @@ object GlobalTrainer {
     // untouched. (Values change only through rand()'s partition
     // dependence — the same freedom any repartition of the caller's input
     // already has; determinism per (data, partitioning, seed) holds.)
+    // The resized frame persists lazily, like every routed level below.
     val rightParts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong,
       total / MinRowsPerTask)).toInt
     if (rightParts < assign.rdd.getNumPartitions) {
-      val resized = ts0.repartition(rightParts)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      resized.count()
-      assign.unpersist(blocking = false)
-      assign = resized
+      pendingUnpersist = Some(assign)
+      assign = ts0.repartition(rightParts).persist(StorageLevel.MEMORY_AND_DISK)
     }
-
-    val rng = new Random(params.seed)
-    val pool = params.pool
 
     // sigma for per-candidate lcss/erp parameter sampling — one startup
     // linear aggregate, paid only when sampling is enabled and the caller
@@ -126,202 +174,100 @@ object GlobalTrainer {
     // (forests, partition sweeps) should compute this once via
     // [[computeDataStd]] and thread it through params.dataStd — otherwise
     // every fit() repeats an identical full-scan job.
-    val dataStd: Double =
-      if (!params.sampleParams) 1.0
-      else if (!java.lang.Double.isNaN(params.dataStd)) params.dataStd
-      else computeDataStd(assign)
+    val p =
+      if (params.sampleParams && java.lang.Double.isNaN(params.dataStd))
+        params.copy(dataStd = computeDataStd(assign))
+      else params
+    val rng = new Random(p.seed)
+    val pool = p.pool
 
     // driver-side tree under construction
     val leaves = mutable.Map.empty[Int, Int]        // nodeId -> predicted label
     val splits = mutable.Map.empty[Int, SplitSpec]  // nodeId -> split
     var nextId = 1
     var open = List((0, 0)) // (nodeId, depth)
+    // class histograms of the open nodes: the root's from the aggregate
+    // above, every later node's from its parent's winning scoring counts
+    // (scoring and routing share one deterministic branch function, so
+    // those counts are exact)
+    var hist = Map(0 -> rootHist)
     var level = 0
 
-    val globalMajority = assign.groupBy(col("true_label"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("true_label"))
-      .head().getInt(0)
-
-    // Class histograms for the CURRENT open nodes. Level 0 computes them
-    // with one aggregate; every later level derives them for free on the
-    // driver from the scoring counts of the level above (the winning
-    // candidate's per-(branch,label) counts ARE the children's histograms —
-    // scoring and routing share one deterministic distance function, so the
-    // derived counts are exact). Saves one full scan+shuffle per level.
-    var histNext: Option[Map[Int, Map[Int, Long]]] = None
-
     while (open.nonEmpty) {
-      val openIds = open.map(_._1)
       val depthOf = open.toMap
-
-      // (1) per-node class histograms — aggregate at level 0, derived after
-      val hist: Map[Int, Map[Int, Long]] = histNext.getOrElse {
-        assign.filter(col("node_id").isin(openIds: _*))
-          .groupBy(col("node_id"), col("true_label"))
-          .agg(count(lit(1)).as("cnt"))
-          .collect()
-          .groupBy(_.getInt(0))
-          .map { case (nid, rows) =>
-            nid -> rows.map(r => r.getInt(1) -> r.getLong(2)).toMap
-          }
-      }
-
-      // leaf decisions (pure / too small / depth-capped / vanished)
       val (leafNow, splitting) = open.partition { case (nid, depth) =>
-        val h = hist.getOrElse(nid, Map.empty)
-        h.isEmpty || h.size == 1 ||
-          h.values.sum < params.minSamplesSplit ||
-          (params.maxDepth >= 0 && depth >= params.maxDepth)
+        isLeaf(hist(nid), depth, p)
       }
-      leafNow.foreach { case (nid, _) =>
-        val h = hist.getOrElse(nid, Map.empty)
-        leaves(nid) =
-          if (h.isEmpty) globalMajority
-          else h.toSeq.maxBy { case (lbl, n) => (n, -lbl) }._1
-      }
+      leafNow.foreach { case (nid, _) => leaves(nid) = majorityLabel(hist(nid)) }
 
       if (splitting.isEmpty) {
         open = Nil
       } else {
         val splittingIds = splitting.map(_._1)
+        val active = assign.filter(col("node_id").isin(splittingIds: _*))
 
-        // (2) W2 — distributed exemplar sampling: the k random rows per
+        // (1) W2 — distributed exemplar sampling: the k smallest rand() per
         // (node, class) (reference: global_model_manager.py:225-233, seeded
-        // per SURVEY §4 "P3"). Semantics = "k smallest rand() per group",
-        // but NOT via a window sort — that shuffles every row (arrays
-        // included) each level. Instead: filter to rows whose rand falls
-        // under an oversampled per-group threshold (30k/n, known from the
-        // histogram), collect that near-constant set, and take the k
-        // smallest on the driver. If the k smallest pass the filter the
-        // result is identical to the full sort; P(miss) < e^-20 per group,
-        // and an undersampled group (collected < min(k, n)) falls back to
-        // the exact window path for the level.
-        val kNeed = params.nSplitters
-        val thrTable: Map[(Int, Int), Double] = hist
-          .filter { case (nid, _) => splittingIds.contains(nid) }
-          .flatMap { case (nid, h) =>
-            h.map { case (lbl, n) =>
-              (nid, lbl) -> math.min(1.0, 30.0 * kNeed / math.max(1L, n))
-            }
-          }
-        val bcThr = spark.sparkContext.broadcast(thrTable)
-        val thrUdf = udf((nid: Int, lbl: Int) =>
-          bcThr.value.getOrElse((nid, lbl), 1.0))
-        // truncate to the k smallest r per group ON EXECUTORS (array_sort +
-        // slice inside the aggregate): the driver receives k arrays per
-        // (node, class), not the ~30k oversampled rows — at thousands of
-        // open nodes x wide series the un-truncated collect is a driver
-        // OOM. n_coll (pre-truncation count) feeds the exactness guard.
-        val collected = assign.filter(col("node_id").isin(splittingIds: _*))
-          .withColumn("r", rand(params.seed + level))
-          .filter(col("r") < thrUdf(col("node_id"), col("true_label")))
-          .groupBy(col("node_id"), col("true_label"))
-          .agg(count(lit(1)).as("n_coll"),
-            slice(array_sort(collect_list(struct(col("r"), col("time_series")))),
-              1, kNeed).as("top"))
-          .select(col("node_id"), col("true_label"), col("n_coll"),
-            explode(col("top")).as("s"))
-          .select(col("node_id"), col("true_label"), col("n_coll"),
-            col("s.r").as("r"), col("s.time_series").as("ts"))
-          .as[(Int, Int, Long, Double, Array[Double])]
-          .collect()
-        bcThr.destroy()
+        // per SURVEY §4 "P3"), kept by a bounded aggregate instead of a
+        // window sort that would shuffle every row each level
+        val sampled = smallestK(
+          active.withColumn("r", rand(p.seed + level)), p.nSplitters)
         // that collect was this level's first action over `assign`: it ran
-        // every partition, so a lazily-persisted routing result is now fully
-        // cached and the superseded parent can go
+        // every partition, so a lazily-persisted frame is now fully cached
+        // and the superseded parent can go
         pendingUnpersist.foreach(_.unpersist())
         pendingUnpersist = None
-        val byGroup = collected.groupBy(t => (t._1, t._2))
-        val undersampled = thrTable.exists { case ((nid, lbl), thr) =>
-          thr < 1.0 &&
-            byGroup.get((nid, lbl)).map(_.head._3).getOrElse(0L) <
-              math.min(kNeed.toLong, hist(nid)(lbl))
-        }
-        val sampled: Map[(Int, Int), IndexedSeq[Array[Double]]] =
-          if (!undersampled)
-            byGroup.map { case (k, rows) =>
-              k -> rows.sortBy(_._4).map(_._5).toIndexedSeq
-            }
-          else {
-            // exact fallback — the window sort this level only
-            val w = Window.partitionBy(col("node_id"), col("true_label"))
-              .orderBy(rand(params.seed + level))
-            assign.filter(col("node_id").isin(splittingIds: _*))
-              .withColumn("rk", row_number().over(w))
-              .filter(col("rk") <= params.nSplitters)
-              .select(col("node_id"), col("true_label"), col("rk"), col("time_series"))
-              .as[(Int, Int, Int, Array[Double])]
-              .collect()
-              .groupBy(t => (t._1, t._2))
-              .map { case (k, rows) =>
-                k -> rows.sortBy(_._3).map(_._4).toIndexedSeq
-              }
-          }
 
         // driver assembles candidate splits: measure + one exemplar/class
         val candidates: Map[Int, IndexedSeq[(String, IndexedSeq[Int], IndexedSeq[Array[Double]])]] =
           splittingIds.map { nid =>
-            val classLabels = hist(nid).keys.toSeq.sorted
-            val cands = (0 until params.nSplitters).flatMap { c =>
-              val measure =
-                if (params.sampleParams)
-                  Distances.sampleMeasure(rng, dataStd, featureCols.length)
-                else pool(rng.nextInt(pool.length))
-              val ex = classLabels.map { lbl =>
-                val pool0 = sampled.getOrElse((nid, lbl), IndexedSeq.empty)
-                if (pool0.isEmpty) null else pool0(c % pool0.size)
-              }
-              if (ex.contains(null)) None
-              else Some((measure.name, classLabels.toIndexedSeq, ex.toIndexedSeq))
+            val classLabels = hist(nid).keys.toIndexedSeq.sorted
+            nid -> (0 until p.nSplitters).map { c =>
+              val measure = drawMeasure(rng, p, pool, featureCols.length)
+              (measure.name, classLabels, classLabels.map { lbl =>
+                val ex = sampled((nid, lbl))
+                ex(c % ex.size)
+              })
             }
-            nid -> cands
           }.toMap
         val bcCand = spark.sparkContext.broadcast(candidates)
 
-        // (3) ALL candidates scored in ONE job: per row, one record per
+        // (2) ALL candidates scored in ONE job: per row, one record per
         // candidate of its node; hash aggregate does map-side combine so
         // the shuffle carries only distinct (node,cand,branch,label) keys.
-        val counts = assign.filter(col("node_id").isin(splittingIds: _*))
+        val counts = active
           .select(col("node_id"), col("true_label"), col("time_series"))
           .as[(Int, Int, Array[Double])]
           .flatMap { case (nid, lbl, series) =>
-            bcCand.value.getOrElse(nid, IndexedSeq.empty).iterator.zipWithIndex
-              .map { case ((mName, _, exemplars), ci) =>
-                val b = Distances.nearestIndex(Distances.byName(mName), series, exemplars)
-                // nearestIndex yields -1 when all distances are +Infinity;
-                // score such rows on branch 0 (where routeUdf sends them)
-                // rather than letting a phantom branch join the Gini argmin
-                (nid, ci, if (b < 0) 0 else b, lbl)
-              }
+            bcCand.value(nid).iterator.zipWithIndex.map { case ((mName, _, exemplars), ci) =>
+              (nid, ci, branchOf(Distances.byName(mName), series, exemplars), lbl)
+            }
           }
           .toDF("node_id", "cand", "branch", "lbl")
           .groupBy("node_id", "cand", "branch", "lbl")
           .agg(count(lit(1)).as("cnt"))
+          .as[(Int, Int, Int, Int, Long)]
           .collect()
+        bcCand.destroy()
 
-        // driver: weighted-Gini argmin per node (A5)
-        val byNodeCand = counts.groupBy(r => (r.getInt(0), r.getInt(1)))
-        val chosen = mutable.Map.empty[Int, Int] // nodeId -> winning cand idx
-        splittingIds.foreach { nid =>
-          val nodeTotal = hist(nid).values.sum.toDouble
-          var best = -1; var bestG = Double.PositiveInfinity
-          candidates(nid).indices.foreach { ci =>
-            val rows = byNodeCand.getOrElse((nid, ci), Array.empty)
-            val branches = rows.groupBy(_.getInt(2))
-            if (branches.size >= 2) {
-              val wg = branches.values.map { br =>
-                val bTotal = br.map(_.getLong(4)).sum.toDouble
-                val g = 1.0 - br.map { r =>
-                  val p = r.getLong(4) / bTotal; p * p
-                }.sum
-                (bTotal / nodeTotal) * g
-              }.sum
-              if (wg < bestG) { bestG = wg; best = ci }
+        // (node, cand) -> class histogram per branch
+        val tables: Map[(Int, Int), IndexedSeq[Map[Int, Long]]] =
+          counts.groupBy(t => (t._1, t._2)).map { case (key @ (nid, ci), rows) =>
+            key -> IndexedSeq.tabulate(candidates(nid)(ci)._2.size) { b =>
+              rows.collect { case (_, _, `b`, lbl, n) => lbl -> n }.toMap
             }
           }
+
+        // driver: weighted-Gini argmin per node (A5), first candidate on ties
+        val chosen = mutable.Map.empty[Int, Int] // nodeId -> winning cand idx
+        splittingIds.foreach { nid =>
+          var best = -1; var bestG = Double.PositiveInfinity
+          candidates(nid).indices.foreach { ci =>
+            weightedGini(tables((nid, ci)).map(_.toSeq.sortBy(_._1).map(_._2)))
+              .foreach { wg => if (wg < bestG) { bestG = wg; best = ci } }
+          }
           if (best < 0) {
-            leaves(nid) = hist(nid).toSeq.maxBy { case (l, n) => (n, -l) }._1
+            leaves(nid) = majorityLabel(hist(nid))
           } else {
             val (mName, branchLabels, exemplars) = candidates(nid)(best)
             val childIds = branchLabels.map { _ => val id = nextId; nextId += 1; id }
@@ -329,11 +275,10 @@ object GlobalTrainer {
             chosen(nid) = best
           }
         }
-        bcCand.destroy()
 
-        // (4) U2 — route every row of a split node to its child; identity
+        // (3) U2 — route every row of a split node to its child; identity
         // elsewhere (reference: global_model_manager.py:351-371)
-        if (splits.nonEmpty && chosen.nonEmpty) {
+        if (chosen.nonEmpty) {
           val routeTable: Map[Int, (String, IndexedSeq[Array[Double]], IndexedSeq[Int])] =
             chosen.keys.map { nid =>
               val s = splits(nid)
@@ -343,11 +288,7 @@ object GlobalTrainer {
           val routeUdf = udf((nid: Int, series: Seq[Double]) =>
             bcRoute.value.get(nid) match {
               case Some((mName, exemplars, childIds)) =>
-                val b = Distances.nearestIndex(
-                  Distances.byName(mName), series.toArray, exemplars)
-                // -1 (all-Infinity distances) routes to branch 0, matching
-                // the scoring above, so no row is stranded at a split node
-                childIds(if (b < 0) 0 else b)
+                childIds(branchOf(Distances.byName(mName), series.toArray, exemplars))
               case None => nid
             })
           // every few levels cut the lineage: the routed plan stacks one
@@ -373,22 +314,18 @@ object GlobalTrainer {
             }
           assign = newAssign
 
-          open = chosen.keys.toList.flatMap { nid =>
-            val depth = depthOf(nid)
-            splits(nid).childIds.map(cid => (cid, depth + 1))
-          }
-
-          // next level's histograms, free from this level's scoring counts:
-          // the chosen candidate's (branch, label) counts are exactly the
-          // child memberships routing just materialized
-          histNext = Some(chosen.toMap.flatMap { case (nid, ci) =>
-            val childIds = splits(nid).childIds
-            byNodeCand.getOrElse((nid, ci), Array.empty)
-              .groupBy(r => childIds(r.getInt(2)))
-              .map { case (cid, rows) =>
-                cid -> rows.map(r => r.getInt(3) -> r.getLong(4)).toMap
-              }
-          })
+          // children: an empty branch is a leaf of its exemplar's class, as
+          // in the local learner; the rest open with the winning candidate's
+          // counts as their class histograms
+          val children = for {
+            (nid, ci) <- chosen.toList
+            s = splits(nid)
+            i <- s.childIds.indices
+          } yield (s.childIds(i), s.branchLabels(i), tables((nid, ci))(i), depthOf(nid) + 1)
+          val (empty, grown) = children.partition(_._3.isEmpty)
+          empty.foreach { case (cid, lbl, _, _) => leaves(cid) = lbl }
+          open = grown.map { case (cid, _, _, depth) => (cid, depth) }
+          hist = grown.map { case (cid, _, h, _) => cid -> h }.toMap
         } else {
           open = Nil
         }
@@ -404,7 +341,7 @@ object GlobalTrainer {
         case Some(s) =>
           PSplit(s.measureName, s.branchLabels, s.exemplars, s.childIds.map(build))
         case None =>
-          PLeaf(leaves.getOrElse(nid, globalMajority))
+          PLeaf(leaves(nid))
       }
     ProximityTreeModel(build(0), globalMajority)
   }

@@ -2,7 +2,6 @@ package graft.local
 
 import scala.util.Random
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,6 +41,29 @@ object LocalTrainer {
     (train.result(), hold.result())
   }
 
+  /** One partition's tree and its holdout weight (1.0 without a holdout).
+    * The rows are first sorted by (label, series), so the tree depends on
+    * the partition's contents, not on the order its rows arrived in.
+    */
+  private[local] def fitPartition(
+      rows: Seq[ProximityTree.Instance],
+      params: ProximityTree.Params,
+      holdoutFraction: Double): (ProximityTreeModel, Double) = {
+    val data = rows.sortWith { (a, b) =>
+      a.label < b.label ||
+        (a.label == b.label && java.util.Arrays.compare(a.ts, b.ts) < 0)
+    }.toIndexedSeq
+    val (trainData, holdData) =
+      if (holdoutFraction > 0) stratifiedHoldout(data, holdoutFraction, params.seed)
+      else (data, IndexedSeq.empty[ProximityTree.Instance])
+    val model = ProximityTree.fit(trainData, params)
+    val weight =
+      if (holdData.nonEmpty)
+        holdData.count(i => model.predictOne(i.ts) == i.label).toDouble / holdData.size
+      else 1.0
+    (model, weight)
+  }
+
   /** Train one tree per partition; returns the assembled forest.
     *
     * @param df          input with `labelCol` + `featureCols`
@@ -55,80 +77,61 @@ object LocalTrainer {
       numPartitions: Int,
       params: ProximityTree.Params,
       holdoutFraction: Double = 0.0,
-      useWeighting: Boolean = false,
-      deterministicKeyCol: Option[String] = None): ProximityForestModel = {
+      useWeighting: Boolean = false): ProximityForestModel = {
     import spark.implicits._
 
-    // seeded-random balance by default; md5(key)-ordered balance when a key
-    // column is supplied (bit-reproducible across runs and engines)
-    val balanced = deterministicKeyCol match {
-      case Some(key) =>
-        Preprocessing.deterministicPartitionId(df, labelCol, key, numPartitions)
-          .repartitionByRange(numPartitions, col("_partition_id"))
-          .drop("_partition_id")
-      case None =>
-        Preprocessing.classBalancedPartition(
-          df, labelCol, numPartitions, seed = params.seed)
-    }
-    val packed = balanced.select(
-      col(labelCol).cast("int").as("label"),
-      array(featureCols.map(c => col(c).cast("double")): _*).as("ts"))
-      .as[(Int, Array[Double])]
+    val packed = Preprocessing.classBalancedPartition(
+        df, labelCol, numPartitions, seed = params.seed, keepPartitionId = true)
+      .select(
+        col("_partition_id"),
+        col(labelCol).cast("int").as("label"),
+        array(featureCols.map(c => col(c).cast("double")): _*).as("ts"))
+      .as[(Int, Int, Array[Double])]
 
-    // Trees come back as JSON strings (the model sink format) so the only
-    // Encoder needed is the product (String, Double) — no Kryo/Java-ser.
-    val fitted: Array[(String, Double)] = packed.mapPartitions { it =>
-      val data = it.map { case (l, ts) => ProximityTree.Instance(ts, l) }.toIndexedSeq
-      if (data.isEmpty) Iterator.empty
-      else {
-        val pid = TaskContext.getPartitionId()
-        val treeSeed = params.seed + pid
-        val (trainData, holdData) =
-          if (holdoutFraction > 0)
-            stratifiedHoldout(data, holdoutFraction, treeSeed)
-          else (data, IndexedSeq.empty[ProximityTree.Instance])
-        val model = ProximityTree.fit(trainData, params.copy(seed = treeSeed))
-        val weight =
-          if (holdData.nonEmpty)
-            holdData.count(i => model.predictOne(i.ts) == i.label).toDouble / holdData.size
-          else 1.0
-        Iterator.single((ModelJson.treeJson(model), weight))
+    // One tree per balanced group `_partition_id`, not per physical
+    // partition: the range exchange samples its bounds, so from run to run
+    // two groups can land in one partition. Trees come back as JSON strings
+    // (the model sink format) so the only Encoder needed is the product
+    // (Int, String, Double) — no Kryo/Java-ser.
+    val fitted: Array[(Int, String, Double)] = packed.mapPartitions { it =>
+      it.toIndexedSeq.groupBy(_._1).iterator.map { case (pid, rows) =>
+        val (model, weight) = fitPartition(
+          rows.map { case (_, l, ts) => ProximityTree.Instance(ts, l) },
+          params.copy(seed = params.seed + pid), holdoutFraction)
+        (pid, ModelJson.treeJson(model), weight)
       }
-    }.collect()
+    }.collect().sortBy(_._1)
 
     require(fitted.nonEmpty, "no partition produced a tree (empty input?)")
     ProximityForestModel(
-      fitted.map(f => ModelJson.treeFromJson(f._1)).toIndexedSeq,
-      fitted.map(_._2).toIndexedSeq,
+      fitted.map(f => ModelJson.treeFromJson(f._2)).toIndexedSeq,
+      fitted.map(_._3).toIndexedSeq,
       useWeighting)
   }
 
-  /** U4 — forest prediction: broadcast the fitted forest, route every row
-    * through it (reference: code/src/prediction_manager.py:81-125). JVM-native
-    * closure — the Arrow/pickle boundary of the reference disappears.
+  /** U4 — prediction: broadcast the fitted tree or forest and route every
+    * row through it (reference: code/src/prediction_manager.py:81-125).
+    * JVM-native closure — the Arrow/pickle boundary of the reference
+    * disappears.
     */
   def predict(
       spark: SparkSession,
-      forest: ProximityForestModel,
+      model: SeriesClassifier,
       df: DataFrame,
       featureCols: Seq[String],
       predictionCol: String = "prediction"): DataFrame = {
-    val bc = spark.sparkContext.broadcast(forest)
+    val bc = spark.sparkContext.broadcast(model)
     val predictUdf = udf((ts: Seq[Double]) => bc.value.predictOne(ts.toArray))
     df.withColumn(predictionCol,
       predictUdf(array(featureCols.map(c => col(c).cast("double")): _*)))
   }
 
-  /** Single-tree prediction (used by the global path too). */
+  /** Single-tree prediction; forwards to [[predict]]. */
   def predictTree(
       spark: SparkSession,
       tree: ProximityTreeModel,
       df: DataFrame,
       featureCols: Seq[String],
-      predictionCol: String = "prediction"): DataFrame = {
-    val bc = spark.sparkContext.broadcast(tree)
-    val predictUdf = udf((ts: Seq[Double]) => bc.value.predictOne(ts.toArray))
-    df.withColumn(predictionCol,
-      predictUdf(array(featureCols.map(c => col(c).cast("double")): _*)))
-  }
+      predictionCol: String = "prediction"): DataFrame =
+    predict(spark, tree, df, featureCols, predictionCol)
 }

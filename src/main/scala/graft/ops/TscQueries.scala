@@ -72,8 +72,7 @@ object TscQueries {
         s, train.drop("vec_id"), "label", featureCols,
         numPartitions = 4,
         params = ProximityTree.Params(nSplitters = 3, seed = 42,
-          poolNames = Seq("euclidean", "manhattan")),
-        deterministicKeyCol = None) // train already deterministic subset
+          poolNames = Seq("euclidean", "manhattan")))
       predictionInvariants(
         LocalTrainer.predict(s, forest, test, featureCols), maxLabel = 9)
     }),

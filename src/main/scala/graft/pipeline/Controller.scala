@@ -3,13 +3,13 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.eval.{Evaluation, Metrics, Plots}
+import graft.eval.{Evaluation, Plots}
 import graft.global.GlobalTrainer
 import graft.io.Ingestion
 import graft.local.LocalTrainer
 import graft.prep.Preprocessing
 import graft.split.Splits
-import graft.tree.{ModelJson, ProximityTree}
+import graft.tree.{ModelJson, ProximityTree, SeriesClassifier}
 
 /** Experiment configuration (reference: code/src/config.py:11-44). */
 final case class SweepConfig(
@@ -109,6 +109,26 @@ object Controller {
     (trainNorm, testNorm, features)
   }
 
+  /** The tail both iterations share: predict the test set, evaluate, and
+    * render the plots under `<plotsDir>/<kind>_<iteration>` when configured.
+    */
+  private def predictAndEvaluate(
+      spark: SparkSession, cfg: SweepConfig, kind: String, iteration: Int,
+      model: SeriesClassifier, test: DataFrame, features: Seq[String],
+      timer: Evaluation.StageTimer): (Evaluation.Performance, Seq[Evaluation.ClassMetrics]) = {
+    val pred = timer.time("prediction") {
+      val p = LocalTrainer.predict(spark, model, test, features).cache()
+      p.count(); p
+    }
+    val (perf, (labels, cm, classWise)) = timer.time("evaluation")(
+      (Evaluation.performance(pred, cfg.labelCol, "prediction"),
+        Evaluation.classWise(pred, cfg.labelCol, "prediction")))
+    pred.unpersist()
+    cfg.plotsDir.foreach(dir =>
+      Plots.writeAll(labels, cm, classWise, s"$dir/${kind}_$iteration"))
+    (perf, classWise)
+  }
+
   def runLocalIteration(
       spark: SparkSession, cfg: SweepConfig, iteration: Int,
       train: DataFrame, test: DataFrame, features: Seq[String]): IterationResult = {
@@ -121,16 +141,8 @@ object Controller {
         holdoutFraction = cfg.holdoutFraction,
         useWeighting = cfg.useWeighting)
     }
-    val pred = timer.time("prediction") {
-      val p = LocalTrainer.predict(spark, forest, test, features).cache()
-      p.count(); p
-    }
-    val (perf, (labels, cm, classWise)) = timer.time("evaluation")(
-      (Evaluation.performance(pred, cfg.labelCol, "prediction"),
-        Evaluation.classWise(pred, cfg.labelCol, "prediction")))
-    pred.unpersist()
-    cfg.plotsDir.foreach(dir =>
-      Plots.writeAll(labels, cm, classWise, s"$dir/local_$iteration"))
+    val (perf, classWise) =
+      predictAndEvaluate(spark, cfg, "local", iteration, forest, test, features, timer)
     cfg.modelsDir.foreach { dir =>
       new java.io.File(dir).mkdirs()
       ModelJson.saveForest(forest, s"$dir/local_forest_$iteration.json")
@@ -151,16 +163,8 @@ object Controller {
       GlobalTrainer.fit(spark, prepared, cfg.labelCol, features,
         treeParams(cfg, dataStd))
     }
-    val pred = timer.time("prediction") {
-      val p = LocalTrainer.predictTree(spark, tree, test, features).cache()
-      p.count(); p
-    }
-    val (perf, (labels, cm, classWise)) = timer.time("evaluation")(
-      (Evaluation.performance(pred, cfg.labelCol, "prediction"),
-        Evaluation.classWise(pred, cfg.labelCol, "prediction")))
-    pred.unpersist()
-    cfg.plotsDir.foreach(dir =>
-      Plots.writeAll(labels, cm, classWise, s"$dir/global_$iteration"))
+    val (perf, classWise) =
+      predictAndEvaluate(spark, cfg, "global", iteration, tree, test, features, timer)
     cfg.modelsDir.foreach { dir =>
       new java.io.File(dir).mkdirs()
       ModelJson.saveTree(tree, s"$dir/global_tree_$iteration.json")

@@ -171,10 +171,10 @@ object Preprocessing {
       seed: Long = 123L,
       keepPartitionId: Boolean = false): DataFrame = {
     val w = Window.partitionBy(col(labelCol)).orderBy(rand(seed))
-    // repartitionByRange (not hash): k distinct pid values land in exactly k
-    // partitions with no hash collisions, so no partition comes up empty —
-    // the reference's hash repartition (preprocessing.py:79) can silently
-    // merge two pids into one partition and leave another empty.
+    // repartitionByRange (not hash) avoids the reference's hash collisions
+    // (preprocessing.py:79), but its bounds come from a sample, so two pids
+    // can still share a partition and leave another empty. Callers that
+    // need exactly one group per pid key on `_partition_id`.
     val withPid = df
       .withColumn("_partition_id",
         ((row_number().over(w) - lit(1)) % lit(numPartitions)).cast("int"))

@@ -18,8 +18,8 @@ import graft.dist.{DistanceMeasure, Distances}
   * partition, and route each series to its nearest exemplar's branch.
   *
   * The learner is deliberately Spark-free: it trains inside
-  * `mapPartitions` closures (local path) and scores candidates for the
-  * distributed level-synchronous trainer (global path).
+  * `mapPartitions` closures (local path), and its split policy is the one
+  * the distributed level-synchronous trainer applies (global path).
   */
 object ProximityTree {
 
@@ -44,16 +44,72 @@ object ProximityTree {
       poolNames.map(Distances.byName).toIndexedSeq
   }
 
-  def gini(counts: Iterable[Int]): Double = {
+  /** Bound on root-to-leaf steps when routing a series for prediction. */
+  private[tree] val MaxPredictDepth = 1000
+
+  def gini(counts: Iterable[Long]): Double = {
     val total = counts.sum.toDouble
     if (total == 0) 0.0
     else 1.0 - counts.map(c => (c / total) * (c / total)).sum
   }
 
-  private def majorityLabel(data: Seq[Instance]): Int =
-    // deterministic tie-break: highest count, then smallest label
-    data.groupBy(_.label).view.mapValues(_.size).toSeq
-      .maxBy { case (lbl, n) => (n, -lbl) }._1
+  // ---- the split policy both trainers share --------------------------------
+  // ProximityTree.grow applies it to in-memory instances; GlobalTrainer.fit
+  // applies it to the class counts its Spark aggregates return.
+
+  /** A node becomes a leaf when it is pure, holds fewer than
+    * `minSamplesSplit` rows, or sits at the depth cap.
+    */
+  def isLeaf(classCounts: Map[Int, Long], depth: Int, params: Params): Boolean =
+    classCounts.size <= 1 || classCounts.values.sum < params.minSamplesSplit ||
+      (params.maxDepth >= 0 && depth >= params.maxDepth)
+
+  /** The most frequent label; ties go to the smallest label. */
+  def majorityLabel(classCounts: Map[Int, Long]): Int =
+    classCounts.maxBy { case (lbl, n) => (n, -lbl) }._1
+
+  /** One candidate's measure: a parameter draw scaled by `params.dataStd`
+    * when `sampleParams` is set, else a uniform pick from the fixed pool.
+    */
+  def drawMeasure(
+      rng: Random,
+      params: Params,
+      pool: IndexedSeq[DistanceMeasure],
+      seriesLen: Int): DistanceMeasure =
+    if (params.sampleParams) Distances.sampleMeasure(rng, params.dataStd, seriesLen)
+    else pool(rng.nextInt(pool.length))
+
+  /** The branch a series takes at a split: its nearest exemplar.
+    * `nearestIndex` yields -1 when every distance is +Infinity (empty or
+    * length-mismatched series under aligned measures); such series take
+    * branch 0, so no row is stranded at a split node.
+    */
+  def branchOf(
+      measure: DistanceMeasure,
+      ts: Array[Double],
+      exemplars: IndexedSeq[Array[Double]]): Int = {
+    val b = Distances.nearestIndex(measure, ts, exemplars)
+    if (b < 0) 0 else b
+  }
+
+  /** Weighted Gini of a candidate split, from its class counts per branch
+    * (branches in exemplar order; the caller fixes the class order, which
+    * sets the summation order). None when fewer than two branches are
+    * non-empty: such a candidate separates nothing.
+    */
+  def weightedGini(branchClassCounts: IndexedSeq[Iterable[Long]]): Option[Double] = {
+    val sizes = branchClassCounts.map(_.sum)
+    if (sizes.count(_ > 0) < 2) None
+    else {
+      val n = sizes.sum.toDouble
+      Some(branchClassCounts.indices.map { b =>
+        if (sizes(b) == 0) 0.0 else (sizes(b) / n) * gini(branchClassCounts(b))
+      }.sum)
+    }
+  }
+
+  private def classCounts(data: Seq[Instance]): Map[Int, Long] =
+    data.groupMapReduce(_.label)(_ => 1L)(_ + _)
 
   /** Std of every value in the training matrix — sigma for the lcss/erp
     * parameter-sampling ranges (PF paper: epsilon, g ~ U(sigma/5, sigma)).
@@ -80,7 +136,7 @@ object ProximityTree {
     val rng = new Random(p.seed)
     val pool = p.pool
     val root = grow(data, depth = 0, p, pool, rng)
-    ProximityTreeModel(root, majorityLabel(data))
+    ProximityTreeModel(root, majorityLabel(classCounts(data)))
   }
 
   private def grow(
@@ -89,15 +145,11 @@ object ProximityTree {
       params: Params,
       pool: IndexedSeq[DistanceMeasure],
       rng: Random): PNode = {
-    val labels = data.map(_.label).distinct
-    if (labels.size == 1) return PLeaf(labels.head)
-    if (data.size < params.minSamplesSplit ||
-        (params.maxDepth >= 0 && depth >= params.maxDepth))
-      return PLeaf(majorityLabel(data))
+    val counts = classCounts(data)
+    if (isLeaf(counts, depth, params)) return PLeaf(majorityLabel(counts))
 
-    val best = bestSplit(data, params, pool, rng)
-    best match {
-      case None => PLeaf(majorityLabel(data))
+    bestSplit(data, params, pool, rng) match {
+      case None => PLeaf(majorityLabel(counts))
       case Some(split) =>
         val children = split.branches.zipWithIndex.map { case (branchData, i) =>
           if (branchData.isEmpty)
@@ -129,34 +181,20 @@ object ProximityTree {
     var best: Option[CandidateSplit] = None
     var k = 0
     while (k < params.nSplitters) {
-      val measure =
-        if (params.sampleParams)
-          Distances.sampleMeasure(rng, params.dataStd, data.head.ts.length)
-        else pool(rng.nextInt(pool.length))
+      val measure = drawMeasure(rng, params, pool, data.head.ts.length)
       val chosen = byLabel.map { case (lbl, insts) =>
         (lbl, insts(rng.nextInt(insts.size)).ts)
       }
       val exemplarLabels = chosen.map(_._1).toIndexedSeq
       val exemplars = chosen.map(_._2).toIndexedSeq
       val buckets = Array.fill(exemplars.length)(mutable.ArrayBuffer.empty[Instance])
-      data.foreach { inst =>
-        val idx = Distances.nearestIndex(measure, inst.ts, exemplars)
-        // nearestIndex returns -1 when every distance is +Infinity (empty or
-        // length-mismatched series under aligned measures) — route such
-        // instances to branch 0 instead of crashing, mirroring predictOne.
-        buckets(if (idx < 0) 0 else idx) += inst
-      }
-      val nonEmpty = buckets.count(_.nonEmpty)
-      if (nonEmpty >= 2) {
-        val n = data.size.toDouble
-        val wg = buckets.map { b =>
-          if (b.isEmpty) 0.0
-          else (b.size / n) * gini(b.groupBy(_.label).map(_._2.size))
-        }.sum
-        if (best.forall(_.weightedGini > wg))
-          best = Some(CandidateSplit(measure, exemplarLabels, exemplars,
-            buckets.map(_.toIndexedSeq).toIndexedSeq, wg))
-      }
+      data.foreach(inst => buckets(branchOf(measure, inst.ts, exemplars)) += inst)
+      weightedGini(buckets.toIndexedSeq.map(_.groupBy(_.label).map(_._2.size.toLong)))
+        .foreach { wg =>
+          if (best.forall(_.weightedGini > wg))
+            best = Some(CandidateSplit(measure, exemplarLabels, exemplars,
+              buckets.map(_.toIndexedSeq).toIndexedSeq, wg))
+        }
       k += 1
     }
     best
@@ -172,21 +210,26 @@ final case class PSplit(
     exemplars: IndexedSeq[Array[Double]],
     children: IndexedSeq[PNode]) extends PNode
 
+/** A fitted model that labels one series: a tree or a forest. */
+trait SeriesClassifier extends Serializable {
+  def predictOne(ts: Array[Double]): Int
+}
+
 /** A fitted Proximity Tree. `majority` is the whole-training-set majority
   * class, used as the prediction fallback (reference:
   * code/src/global_model_manager.py:475 coalesce).
   */
-final case class ProximityTreeModel(root: PNode, majority: Int) extends Serializable {
+final case class ProximityTreeModel(root: PNode, majority: Int) extends SeriesClassifier {
 
   /** Route a series root→leaf by nearest exemplar at each split.
     * Depth-guarded like the reference traversal UDF (MAX_DEPTH=50 at
     * code/src/global_model_manager.py:430); the guard falls back to the
     * majority class rather than looping.
     */
-  def predictOne(ts: Array[Double], maxDepth: Int = 1000): Int = {
+  def predictOne(ts: Array[Double]): Int = {
     var node = root
     var steps = 0
-    while (steps < maxDepth) {
+    while (steps < ProximityTree.MaxPredictDepth) {
       node match {
         case PLeaf(lbl) => return lbl
         case PSplit(m, _, exemplars, children) =>
@@ -232,7 +275,7 @@ final case class ProximityTreeModel(root: PNode, majority: Int) extends Serializ
 final case class ProximityForestModel(
     trees: IndexedSeq[ProximityTreeModel],
     weights: IndexedSeq[Double],
-    useWeighting: Boolean) extends Serializable {
+    useWeighting: Boolean) extends SeriesClassifier {
   require(trees.nonEmpty, "forest needs at least one tree")
   require(trees.length == weights.length, "one weight per tree")
 

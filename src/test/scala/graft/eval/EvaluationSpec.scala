@@ -83,6 +83,7 @@ class EvaluationSpec extends AnyFunSuite with SparkSpec {
     assert(p.weightedPrecision === m("weightedPrecision"))
     assert(p.weightedRecall === m("weightedRecall"))
     assert(p.f1 === m("f1"))
-    assert(p.balancedAccuracy === Metrics.balancedAccuracy(d, "label", "prediction"))
+    assert(p.balancedAccuracy ===
+      Metrics.balancedAccuracyDF(d, "label", "prediction").head().getDouble(0))
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.eval.Metrics
 import graft.global.GlobalTrainer
-import graft.tree.ProximityTree
+import graft.tree.{ModelJson, PLeaf, PSplit, ProximityTree}
 
 /** End-to-end Spark training tests for both strategies on the reference
   * smoke-test shape (code/src/test.py:58-122): separable clusters, assert
@@ -32,8 +32,27 @@ class TrainersSpec extends AnyFunSuite with SparkSpec {
       numPartitions = 3,
       params = ProximityTree.Params(nSplitters = 5, seed = 1))
     assert(forest.trees.size === 3) // one tree per partition
+    // a repeated call trains the same forest
+    val again = LocalTrainer.trainEnsemble(
+      spark, train, "label", Seq("_c1", "_c2"),
+      numPartitions = 3,
+      params = ProximityTree.Params(nSplitters = 5, seed = 1))
+    assert(ModelJson.forestJson(again) === ModelJson.forestJson(forest))
     val pred = LocalTrainer.predict(spark, forest, test, Seq("_c1", "_c2"))
-    assert(Metrics.accuracy(pred, "label", "prediction") >= 0.9)
+    assert(Metrics.accuracyDF(pred, "label", "prediction").head().getDouble(0) >= 0.9)
+  }
+
+  test("local path: a partition's tree and weight do not depend on its row order") {
+    val rng = new Random(21)
+    val rows = (1 to 3).flatMap(lbl => (1 to 12).map(_ =>
+      ProximityTree.Instance(Array(lbl * 3 + rng.nextGaussian(), rng.nextGaussian()), lbl)))
+    val params = ProximityTree.Params(nSplitters = 3, seed = 8)
+    val (tree, weight) = LocalTrainer.fitPartition(rows, params, holdoutFraction = 0.2)
+    (1 to 3).foreach { i =>
+      val (t, w) = LocalTrainer.fitPartition(new Random(i).shuffle(rows), params, 0.2)
+      assert(ModelJson.treeJson(t) === ModelJson.treeJson(tree))
+      assert(w === weight)
+    }
   }
 
   test("local path: holdout weighting produces per-tree weights in [0,1]") {
@@ -64,7 +83,28 @@ class TrainersSpec extends AnyFunSuite with SparkSpec {
       ProximityTree.Params(nSplitters = 3, seed = 1))
     assert(tree.numSplits >= 1)
     val pred = LocalTrainer.predictTree(spark, tree, test, Seq("_c1", "_c2"))
-    assert(Metrics.accuracy(pred, "label", "prediction") >= 0.9)
+    assert(Metrics.accuracyDF(pred, "label", "prediction").head().getDouble(0) >= 0.9)
+  }
+
+  test("an empty child is a leaf of its exemplar's class in both trainers") {
+    // class 2 sits on class 0's point: exemplars 0 and 2 tie, the first
+    // wins, so no row takes branch 2
+    val rows = Seq.fill(5)((0, 0.0, 0.0)) ++ Seq.fill(5)((1, 10.0, 10.0)) ++
+      Seq.fill(2)((2, 0.0, 0.0))
+    val params = ProximityTree.Params(nSplitters = 3, seed = 4, poolNames = Seq("euclidean"))
+    val local = ProximityTree.fit(
+      rows.map { case (l, a, b) => ProximityTree.Instance(Array(a, b), l) }.toIndexedSeq,
+      params)
+    val global = GlobalTrainer.fit(spark, spark.createDataFrame(rows).toDF("label", "_c1", "_c2"),
+      "label", Seq("_c1", "_c2"), params)
+    Seq("local" -> local, "global" -> global).foreach { case (name, m) =>
+      m.root match {
+        case s: PSplit =>
+          assert(s.exemplarLabels === Seq(0, 1, 2), name)
+          assert(s.children(2) === PLeaf(2), name)
+        case leaf => fail(s"$name: root is $leaf, expected a split")
+      }
+    }
   }
 
   test("global path respects maxDepth and handles tiny input") {

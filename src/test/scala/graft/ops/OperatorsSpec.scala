@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -564,9 +565,11 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   test("balanced accuracy: perfect predictor = 1, constant predictor = 1/k") {
     val df = (1 to 90).map(i => (i % 3, i % 3)).toDF("label", "prediction")
-    assert(Metrics.balancedAccuracy(df, "label", "prediction") === 1.0)
+    def balanced(d: DataFrame) =
+      Metrics.balancedAccuracyDF(d, "label", "prediction").head().getDouble(0)
+    assert(balanced(df) === 1.0)
     val const = (1 to 90).map(i => (i % 3, 0)).toDF("label", "prediction")
-    assert(math.abs(Metrics.balancedAccuracy(const, "label", "prediction") - 1.0 / 3) < 1e-6)
+    assert(math.abs(balanced(const) - 1.0 / 3) < 1e-6)
   }
 
   test("corpus diff classifies added/removed/changed/unchanged; whitespace drift is unchanged") {

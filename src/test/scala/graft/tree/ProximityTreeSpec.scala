@@ -99,6 +99,16 @@ class ProximityTreeSpec extends AnyFunSuite {
     assert(ProximityTree.gini(Seq(10)) === 0.0)
     assert(math.abs(ProximityTree.gini(Seq(1, 1, 1)) - 2.0 / 3.0) < 1e-12)
     assert(ProximityTree.gini(Nil) === 0.0)
+    // weighted Gini: each branch's Gini times its share of the rows
+    assert(ProximityTree.weightedGini(IndexedSeq(Seq(5L, 5L), Seq(10L))) === Some(0.25))
+    val uneven = ProximityTree.weightedGini(IndexedSeq(Seq(3L, 1L), Seq(2L), Nil))
+    assert(math.abs(uneven.get - (4.0 / 6) * (1 - 10.0 / 16)) < 1e-12)
+    assert(ProximityTree.weightedGini(IndexedSeq(Seq(4L), Nil, Seq(4L))) === Some(0.0))
+    // fewer than two non-empty branches separate nothing
+    assert(ProximityTree.weightedGini(IndexedSeq(Seq(3L, 1L), Nil)) === None)
+    // majority label: ties go to the smallest label
+    assert(ProximityTree.majorityLabel(Map(3 -> 4L, 1 -> 4L, 2 -> 1L)) === 1)
+    assert(ProximityTree.majorityLabel(Map(7 -> 2L)) === 7)
   }
 
   test("sampled measures round-trip through byName and are seeded-deterministic") {
