@@ -556,13 +556,6 @@ private[graft] object BenchDrift {
       .sortBy { case (k, mn) => -(mn / floors(k)) }
       .take(cap)
 
-  /** Single-tier form (the original r16 gate — kept as the tiered
-    * selection's one-tier special case).
-    */
-  def selectMovers(mins: Seq[(String, Double)], floors: Map[String, Double],
-      ratio: Double, cap: Int, minAbs: Double = 0.75): Seq[(String, Double)] =
-    selectMoversTiered(mins, floors, Seq((ratio, minAbs)), cap)
-
   /** Movers whose best min over both JVMs STILL trips a tier:
     * (query, best min, floor) — the adjudication queue.
     */
@@ -574,11 +567,6 @@ private[graft] object BenchDrift {
       if (trips(best, floors(k), tiers)) Some((k, best, floors(k)))
       else None
     }
-
-  def unresolved(movers: Seq[(String, Double)], fresh: Map[String, Double],
-      floors: Map[String, Double], ratio: Double,
-      minAbs: Double = 0.75): Seq[(String, Double, Double)] =
-    unresolvedTiered(movers, fresh, floors, Seq((ratio, minAbs)))
 
   // ---- contamination recovery (r16 verdict task 1): the instrument's
   // move when the RUN-level verdict is dirty — previously it published

@@ -55,7 +55,6 @@ object GenBpeMerges {
          |  * SAME table — the SemanticCentroids frozen-constant technique.
          |  */
          |object BpeMerges {
-         |  val numMerges: Int = ${merges.length}
          |  val values: Array[(String, String)] = Array(
          |$rows
          |  )

@@ -52,8 +52,6 @@ object GenSemanticCentroids {
          |  * SRP hyperplane oracles).
          |  */
          |object SemanticCentroids {
-         |  val k: Int = $k
-         |  val dim: Int = ${canonical.head.length}
          |  val values: Array[Array[Double]] = Array(
          |$rows
          |  )

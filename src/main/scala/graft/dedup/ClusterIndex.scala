@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   *
   * Epoch replay safety: both per-epoch writes use mode("error") — a
   * re-submitted epoch id fails loudly instead of double-appending (the
-  * [[graft.sim.IvfIndex.streamingIngest]] ledger discipline).
+  * ledger discipline of every graft index).
   */
 object ClusterIndex {
 
@@ -329,7 +329,7 @@ object ClusterIndex {
       .sorted
 
   /** Epoch ids recorded under `dir/face/epoch=N` — the one listing
-    * idiom shared by [[unsealedEpochs]], [[maxRecordedEpoch]], and
+    * idiom shared by [[unsealedEpochs]], [[maintain]], and
     * [[compact]]'s score-fold probe (second-review: three hand-rolled
     * copies of the same listStatus parse drift independently).
     */
@@ -466,11 +466,7 @@ object ClusterIndex {
     // and single-writer means no trigger lands between this snapshot and
     // the swap. Gate on a COMMITTED epoch existing, not on epochsOf
     // listing any dir (r17 ADVICE): doc_scores holding only a crashed
-    // uncommitted epoch (e.g. a dead seedScores) would otherwise fold an
-    // EMPTY committed epoch=0 — seedScores then early-returns on its
-    // committed check forever while the streaming coverage guard keeps
-    // failing, with no in-API recovery. Left unfolded, the crashed
-    // partial heals through seedScores' own clearPartial path.
+    // uncommitted epoch would otherwise fold an EMPTY committed epoch=0.
     if (hasCommittedScores(spark, dir)) {
       val folded = s"$st/doc_scores_folded"
       docScores(spark, dir).write.mode("error").parquet(folded)
@@ -531,8 +527,7 @@ object ClusterIndex {
     * doctrine — acting resets them to the floor). `needs_repair` is a
     * REPORT, not a move: re-deriving a crashed epoch's winners on a
     * best-enabled index needs the corpus' scores, which maintain must
-    * not invent — the same refusal-to-guess the streaming coverage
-    * guard applies; run [[repair]]/[[repairWithBest]] and call again.
+    * not invent; run [[repair]]/[[repairWithBest]] and call again.
     * Single-writer like every other maintenance op.
     */
   def maintain(spark: SparkSession, dir: String,
@@ -637,204 +632,6 @@ object ClusterIndex {
     "completed"
   }
 
-  /** Streaming face closing the whole near-dup loop: per trigger the
-    * micro-batch is (1) paired against the standing [[LshIndex]] (cross-
-    * corpus) and against itself (intra-batch) under the index's FROZEN
-    * hash parameters, (2) appended to the LshIndex so later triggers
-    * pair against it, and (3) its pairs folded into THIS clustering
-    * (epoch = trigger epoch + 1, so a replayed trigger refuses via the
-    * mode("error") ledger like every other graft streaming ingest).
-    *
-    * The complementary policy to [[LshIndex.streamingIngest]]: that face
-    * REJECTS near-dups at the door (dedup-on-ingest — right when storage
-    * is the constraint); this face keeps every doc and maintains the
-    * transitive keep/drop state instead (cluster-on-ingest — right when
-    * survivorship wants hindsight, e.g. [[Dedup.keepBest]] choosing the
-    * best member AFTER all duplicates have arrived).
-    *
-    * `epochBase` (r17 ADVICE fix) maps trigger ids into the cluster
-    * ledger: cluster epoch = epochBase + trigger epoch + 1. When batch
-    * [[addPairs]] epochs preceded streaming, pass
-    * [[maxRecordedEpoch]](clusterDir) — with the default 0 the first
-    * trigger would collide with batch epoch 1 and the mode("error")
-    * pairs write would kill the query. The base is FIXED for the
-    * stream's lifetime: on a crash-recovery restart pass the SAME value
-    * (the checkpoint resumes trigger ids, so the replayed trigger maps
-    * to its original — sealed — epoch and is skipped; recomputing the
-    * base at restart would shift the mapping and double-ingest).
-    *
-    * NO in-stream maintenance beat here, BY DESIGN (the one streaming
-    * index without one — TextIndex/LshIndex/IvfIndex all carry
-    * `maintainEvery`): [[maintain]] can return `needs_repair` as a
-    * REPORT rather than an action (a crashed best-fold's winners need
-    * the corpus' scores, which maintain must not invent), so a beat
-    * wired in here could silently report-and-continue forever while the
-    * operator believes maintenance is handled. A repair decision needs
-    * an operator with the score corpus in hand — schedule
-    * [[maintain]] out-of-band where its report is actually read.
-    */
-  def streamingIngest(spark: SparkSession, lshDir: String,
-      clusterDir: String, stream: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      epochBase: Long = 0L): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(!hasBest(spark, clusterDir),
-      "best-enabled index — use streamingIngestWithBest so the " +
-        "maintained winners stay consistent with the labels")
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val epoch = epochBase + epochId + 1
-        // RESTART IDEMPOTENCY: a re-delivered trigger (no streaming
-        // checkpointLocation, or a recovery replay) whose epoch already
-        // SEALED is skipped whole — without this, the LshIndex.append
-        // inside the trigger would re-run before addPairs' ledger could
-        // refuse, duplicating the batch's docs in the detection index
-        if (!isSealed(spark, clusterDir, epoch))
-          ingestTrigger(spark, lshDir, clusterDir, batch, epoch, idCol,
-            textCol, threshold, None)
-        ()
-      }
-      .start()
-  }
-
-  /** The shared per-trigger protocol of both streaming faces (r17
-    * self-review: one body, not two drifting copies): pair detection
-    * BEFORE the append (a doc must not pair with itself through the
-    * index), then LshIndex append, then — best face only — the batch's
-    * scores, then the clustering fold. A crash AFTER the append but
-    * before the epoch seal re-runs the whole trigger: the re-append
-    * duplicates doc rows in the LSH store — pair CORRECTNESS is
-    * unaffected (candidates and pairs are distinct-ed, addPairs
-    * canonicalizes), only doc counts inflate until an LshIndex.compact
-    * folds them. Per-trigger checkpoints die with the trigger, not with
-    * GC (the freeCheckpoint doctrine — a standing query must not
-    * accumulate batch-scale blocks across triggers).
-    */
-  private def ingestTrigger(spark: SparkSession, lshDir: String,
-      clusterDir: String, batch: DataFrame, epoch: Long, idCol: String,
-      textCol: String, threshold: Double,
-      best: Option[org.apache.spark.sql.Column]): Unit = {
-    val b = batch.localCheckpoint()
-    val m = LshIndex.loadMeta(spark, lshDir)
-    val cross = LshIndex.probe(spark, lshDir, b, idCol, textCol,
-        threshold)
-      .select(col("index_id").as("id_a"), col("probe_id").as("id_b"))
-    val intra = Dedup.minhashPairsExact(b, idCol, textCol,
-        shingleN = m.shingleN, numHashes = m.numHashes,
-        bands = m.bands, threshold = threshold, seed = m.seed)
-      .select(col("id_a"), col("id_b"))
-    val pairs = cross.unionByName(intra).localCheckpoint()
-    LshIndex.append(spark, lshDir, b, idCol, textCol)
-    best match {
-      case None =>
-        addPairs(spark, clusterDir, pairs, "id_a", "id_b", epoch)
-      case Some(score) =>
-        // scores: caller truth like pairs, committed BEFORE them (a
-        // crashed epoch's winners must be re-derivable from recorded
-        // state); a replayed trigger skips a committed score epoch and
-        // clears a crashed partial so mode("error") can land
-        val scoresDir = s"$clusterDir/doc_scores/epoch=$epoch"
-        if (!graft.io.EpochCommit.committed(spark, scoresDir)) {
-          graft.io.EpochCommit.clearPartial(spark, scoresDir)
-          val sc = b.select(col(idCol).cast("long").as("id"),
-            score.cast("double").as("score")).localCheckpoint()
-          if (sc.count() > 0) {
-            sc.write.mode("error").parquet(scoresDir)
-            graft.io.EpochCommit.seal(spark, scoresDir)
-          }
-          Dedup.releasePlan(sc)
-        }
-        addPairsWithBest(spark, clusterDir, pairs, "id_a", "id_b",
-          docScores(spark, clusterDir), "id", col("score"), epoch)
-        ()
-    }
-    Seq(b, pairs).foreach(Dedup.releasePlan)
-  }
-
-  /** [[streamingIngest]] with the keep/drop DECISION maintained per
-    * trigger — the streaming face of [[addPairsWithBest]]. Batch best
-    * maintenance looks member scores up in the standing corpus table;
-    * a stream HAS no corpus table (the index is the corpus), so each
-    * trigger's scores (`score`, a Column over the batch, stored as
-    * double) land in a `doc_scores/epoch=N` sidecar gated by the
-    * [[graft.io.EpochCommit]] marker, and winner recomputation reads
-    * the accumulated [[docScores]]. Write order per trigger: LshIndex
-    * append → doc scores → addPairsWithBest (pairs → updates → best →
-    * seal) — scores precede pairs so a crashed epoch's winners are
-    * always re-derivable; after a crash INSIDE addPairsWithBest, run
-    * [[repairWithBest]](dir, [[docScores]](dir), "id", col("score"))
-    * before restarting the stream. `clusterDir` must be
-    * [[buildWithBest]]-built; the resolved keep set is
-    * [[resolveBest]](dir, docScores(dir), "id"). If the detection index
-    * holds PRE-STREAM docs (a built corpus), their scores must be seeded
-    * via [[seedScores]] first — setup refuses otherwise (an unscored
-    * member would silently drop out of a merged cluster's winner max).
-    */
-  def streamingIngestWithBest(spark: SparkSession, lshDir: String,
-      clusterDir: String, stream: DataFrame, idCol: String,
-      textCol: String, threshold: Double,
-      score: org.apache.spark.sql.Column,
-      epochBase: Long = 0L): org.apache.spark.sql.streaming.StreamingQuery = {
-    require(hasBest(spark, clusterDir),
-      "not a best-enabled index — build with buildWithBest, or use streamingIngest")
-    // SCORE COVERAGE (second-review finding): winner recomputation reads
-    // ONLY the accumulated docScores, so every doc already probe-able in
-    // the detection index must have a stored score BEFORE a streamed
-    // near-dup can merge with it — an unscored member silently drops out
-    // of the struct-max and the wrong doc survives. One bounded setup
-    // job; the per-trigger sides are covered by construction (each
-    // batch's scores commit before its addPairsWithBest).
-    val unscored = LshIndex.liveIds(spark, lshDir)
-      .join(docScores(spark, clusterDir), Seq("id"), "left_anti")
-      .limit(1).count()
-    require(unscored == 0L,
-      "detection-index docs lack doc_scores coverage — the pre-stream " +
-        "corpus's scores are not in this cluster index; call " +
-        "ClusterIndex.seedScores(clusterDir, corpusDocs, idCol, score) " +
-        "before streaming (winner recomputation reads docScores only)")
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val epoch = epochBase + epochId + 1
-        if (!isSealed(spark, clusterDir, epoch))
-          ingestTrigger(spark, lshDir, clusterDir, batch, epoch, idCol,
-            textCol, threshold, Some(score))
-        ()
-      }
-      .start()
-  }
-
-  /** Every streamed doc's (id, score) accumulated by
-    * [[streamingIngestWithBest]] — the docs frame its winner lookups
-    * and [[resolveBest]] read. COMMITTED epochs only (r17 self-review):
-    * a crash mid-scores-write leaves a partial epoch dir that must
-    * never feed a reader — torn files or a row subset would surface as
-    * spurious keep rows matching no committed state. Empty (schema'd)
-    * when nothing committed.
-    */
-  /** One-time corpus-score seeding for [[streamingIngestWithBest]] over
-    * an index whose pre-stream corpus is non-empty (a [[buildWithBest]]
-    * corpus, or docs already in the detection LshIndex): the stream's
-    * winner recomputation reads ONLY the accumulated [[docScores]], so
-    * every doc a probe can pair against must have its score stored
-    * before streaming starts. Writes the corpus (id, score) as
-    * doc_scores/epoch=0 — trigger epochs start at 1, so the slot is
-    * reserved for the seed (and for [[compact]]'s fold). Idempotent: a
-    * committed seed is left alone; a crashed partial is cleared and
-    * rewritten (the ingestTrigger scores discipline).
-    */
-  def seedScores(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String, score: org.apache.spark.sql.Column): Unit = {
-    requireNoCompactStaging(spark, dir)
-    val scoresDir = s"$dir/doc_scores/epoch=0"
-    if (graft.io.EpochCommit.committed(spark, scoresDir)) return
-    graft.io.EpochCommit.clearPartial(spark, scoresDir)
-    docs.select(col(idCol).cast("long").as("id"),
-        score.cast("double").as("score"))
-      .write.mode("error").parquet(scoresDir)
-    graft.io.EpochCommit.seal(spark, scoresDir)
-  }
-
   /** True iff at least one doc_scores epoch carries a commit proof —
     * the [[compact]] fold gate (a merely-EXISTING epoch dir may be a
     * crashed partial that must heal in place, not be folded away).
@@ -847,6 +644,11 @@ object ClusterIndex {
         graft.io.EpochCommit.committed(spark, s.getPath.toString))
   }
 
+  /** Every committed doc_scores epoch's (id, score) — the docs frame
+    * [[compact]] folds. COMMITTED epochs only (r17 self-review): a crash
+    * mid-scores-write leaves a partial epoch dir that must never feed a
+    * reader. Empty (schema'd) when nothing committed.
+    */
   def docScores(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val empty = Seq.empty[(Long, Double)].toDF("id", "score")
@@ -863,15 +665,6 @@ object ClusterIndex {
         .parquet(committedDirs: _*)
         .select(col("id"), col("score"))
     }
-  }
-
-  /** Highest epoch the pairs ledger has recorded (0 = build only; -1 =
-    * no index yet) — the `epochBase` a caller passes to
-    * [[streamingIngest]] when batch [[addPairs]] epochs precede it.
-    */
-  def maxRecordedEpoch(spark: SparkSession, dir: String): Long = {
-    val es = epochsOf(spark, dir, "pairs")
-    if (es.isEmpty) -1L else es.max
   }
 
   // explicit schemas: an empty batch writes a part-file-less dir, and

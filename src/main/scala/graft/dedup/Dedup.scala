@@ -23,12 +23,6 @@ object Dedup {
     df.groupBy(TextFunctions.fingerprint(col(textCol)).as("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_cnt"))
 
-  /** Keep one row per distinct canonical text (the min-id winner). */
-  def dropExactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val keep = exactGroups(df, idCol, textCol).select(col("keep_id").as(idCol))
-    df.join(keep, Seq(idCol), "left_semi")
-  }
-
   /** Incremental-ingest dedup: admit only batch docs whose canonical
     * fingerprint is NOT already in the corpus, then dedup within the batch
     * (min-id winner) — the nightly-delta shape: the corpus side reduces to
@@ -80,16 +74,9 @@ object Dedup {
     shinglesUdf(text)
   }
 
-  /** Jaccard similarity of two pre-distinct shingle arrays. */
-  def jaccard(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val union = (size(a) + size(b)).cast("double") - inter
-    when(union > 0, inter / union).otherwise(lit(0.0))
-  }
-
-  /** Jaccard as a primitive UDF (hash-set membership) — same value as
-    * [[jaccard]] on pre-distinct arrays, ~an order of magnitude faster per
-    * pair than the interpreted array_intersect expression.
+  /** Jaccard of two pre-distinct shingle arrays, as a primitive UDF
+    * (hash-set membership) — ~an order of magnitude faster per pair than
+    * the interpreted array_intersect expression.
     */
   private[dedup] val jaccardUdf = udf((a: Seq[String], b: Seq[String]) => {
     val sa = a.toSet
@@ -122,7 +109,7 @@ object Dedup {
     * unfiltered output whenever no shingle crosses the cap (any corpus
     * sample with fewer docs than the cap trivially qualifies). Candidate
     * volume is thus bounded by maxDocFreq²/2 per shingle regardless of
-    * corpus size; for estimator-based discovery use [[minhashPairs]].
+    * corpus size; for LSH-banded discovery use [[minhashPairsExact]].
     */
   def jaccardPairs(
       df: DataFrame,
@@ -419,73 +406,8 @@ object Dedup {
         h
       })
 
-  /** MinHash + LSH near-duplicate pairs:
-    * shingle -> k-hash signature -> band buckets -> bucket equi-join for
-    * candidates -> similarity estimated FROM the signatures (fraction of
-    * matching components — the unbiased MinHash estimator of Jaccard).
-    * After the signatures are built the shingle sets are never touched
-    * again: every shuffle moves only ids + fixed-width signature arrays.
-    * Candidate volume is controlled by (bands, rowsPerBand); exact-verify
-    * variants should feed [[jaccardPairs]] with the candidate set instead.
-    */
-  def minhashPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 2,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val coeffs = minhashCoefficients(numHashes, seed)
-
-    val sigs = graft.prep.Preprocessing.spread(df)
-      .select(col(idCol),
-        wordShingles(col(textCol), shingleN).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .withColumn("sig", minhashSignature(col("shingles"), coeffs))
-
-    val bandUdf = udf((sig: Seq[Long]) =>
-      (0 until bands).map { bi =>
-        var h = 1125899906842597L // FNV-ish running fold over the band slice
-        var i = bi * r
-        while (i < (bi + 1) * r) { h = h * 31 + sig(i); i += 1 }
-        h
-      })
-    val banded = sigs.select(col(idCol), col("shingles"),
-      posexplode(bandUdf(col("sig"))).as(Seq("band_idx", "band_hash")))
-
-    // candidate discovery on NARROW rows (ids + band key only — dragging
-    // the shingle arrays through the join/distinct shuffles dominated cost)
-    val left = banded.select(col("band_idx"), col("band_hash"),
-      col(idCol).as("id_a"))
-    val right = banded.select(col("band_idx"), col("band_hash"),
-      col(idCol).as("id_b"))
-    val candidates = left.join(right, Seq("band_idx", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct() // a pair colliding in m bands estimates once, not m times
-
-    // estimate J from matching signature components (ids + longs only)
-    val matchFrac = udf((a: Seq[Long], b: Seq[Long]) => {
-      var m = 0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { if (a(i) == b(i)) m += 1; i += 1 }
-      if (n == 0) 0.0 else m.toDouble / n
-    })
-    val sigOnly = sigs.select(col(idCol), col("sig"))
-    candidates
-      .join(sigOnly.select(col(idCol).as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigOnly.select(col(idCol).as("id_b"), col("sig").as("sig_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        round(matchFrac(col("sig_a"), col("sig_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** Exact-verified MinHash+LSH pairs: band buckets produce the candidate
-    * set (same narrow-row discovery as [[minhashPairs]]), then each
+    * set (candidate discovery on narrow rows: ids + band key only), then each
     * candidate pair is verified with the EXACT Jaccard of the true shingle
     * sets — so the output is precise (no estimator noise) while the
     * all-pairs explosion is still avoided. The shingle arrays are only

@@ -119,20 +119,6 @@ object LshIndex {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Per-band posting-list report from the stored index: bucket count,
-    * max bucket size, and mean bucket size — the skew signal that says a
-    * degenerate shingle distribution is funnelling the corpus into few
-    * buckets (probe cost is candidate count, and candidates scale with
-    * bucket occupancy squared).
-    */
-  def bandStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/postings")
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col("band_idx"))
-      .agg(count(lit(1)).as("n_buckets"), max(col("n")).as("max_bucket"),
-        round(avg(col("n")), 6).as("mean_bucket"))
-
   /** Remove docs from the index without touching a data file — ids land
     * in a `tombstones/` sidecar and [[probe]] subtracts them at the
     * verification join (the [[graft.text.TextIndex.delete]] doctrine);
@@ -152,13 +138,6 @@ object LshIndex {
     if (fs.exists(p)) Some(broadcast(spark.read.parquet(p.toString).distinct()))
     else None
   }
-
-  /** Ids of live (non-tombstoned) stored docs — the doc set a [[probe]]
-    * can pair against; [[ClusterIndex.streamingIngestWithBest]]'s
-    * score-coverage guard reads it at stream setup.
-    */
-  def liveIds(spark: SparkSession, dir: String): DataFrame =
-    liveDocs(spark, dir).select(col("id"))
 
   private def liveDocs(spark: SparkSession, dir: String): DataFrame = {
     val docs = spark.read.parquet(s"$dir/docs")
@@ -270,89 +249,4 @@ object LshIndex {
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= MaxBroadcastBytes)
       broadcast(df)
     else df
-
-  /** Streaming near-dup ingest: each micro-batch probes the standing
-    * index, docs with a near-duplicate already indexed are REJECTED, the
-    * admitted remainder (deduped within the batch by keeping the lowest
-    * id of any intra-batch near-dup pair) is APPENDED — so later
-    * triggers dedup against everything earlier ones admitted. The index
-    * IS the operator state, which is what makes near-dup streaming
-    * tractable: shingle sets can't live in Spark's per-key state store
-    * (no key — similarity isn't equality), but they persist fine as an
-    * appendable table the probe path reads in place. Admission decisions
-    * land at `admissionsDir` (one parquet dir per epoch, with the
-    * admitted flag), the audit trail a curation pipeline keeps. Returns
-    * the StreamingQuery; callers own its lifecycle.
-    *
-    * `maintainEvery` > 0 closes the loop IN the stream: after every
-    * N-th trigger seals, [[maintain]] runs against the index the stream
-    * itself fragments (each append adds a postings generation; upstream
-    * deletes accumulate tombstones the probe anti-joins) — the stream
-    * maintains its own state instead of waiting for a nightly job.
-    * Safe by construction: foreachBatch is the index's single writer,
-    * so the maintenance op runs under the same writer discipline; it
-    * executes AFTER the epoch seal, so a crashed trigger's replay
-    * (which skips committed epochs whole) can never double-run it —
-    * a skipped maintenance beat is fine because the signals are
-    * ratchets the next beat reads cumulatively.
-    */
-  def streamingIngest(spark: SparkSession, dir: String, admissionsDir: String,
-      stream: DataFrame, idCol: String, textCol: String,
-      threshold: Double, maintainEvery: Int = 0,
-      policy: MaintenancePolicy = MaintenancePolicy())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // RESTART IDEMPOTENCY (round-16 review, r17 ADVICE fix): the
-        // admissions EPOCH COMMIT is the seal — gated on the committer's
-        // _SUCCESS marker, not dir existence (Spark creates the dir at
-        // job setup, so a crash mid-admissions-write leaves it present;
-        // existence-gating would skip the replay whole and the ledger
-        // would stay permanently partial while the index append already
-        // happened). A crashed partial dir is cleared so the replay's
-        // mode("error") write can land.
-        val epochDir = s"$admissionsDir/epoch=$epochId"
-        if (!graft.io.EpochCommit.committed(spark, epochDir)) {
-          graft.io.EpochCommit.clearPartial(spark, epochDir)
-          val b = batch.localCheckpoint() // probed, anti-joined, appended
-          val m = loadMeta(spark, dir) // intra pairs use the FROZEN params
-          // cross pairs vs the index + intra-batch pairs at the same bar.
-          // Admission rule, deterministic: a doc is rejected iff the index
-          // already holds a near-dup of it, or a LOWER-id batchmate is
-          // near-dup to it (order-of-arrival priority within a trigger)
-          val vsIndex = probe(spark, dir, b, idCol, textCol, threshold)
-            .select(col("probe_id").as("_rej"))
-          val intra = Dedup.minhashPairsExact(b, idCol, textCol,
-            shingleN = m.shingleN, numHashes = m.numHashes, bands = m.bands,
-            threshold = threshold, seed = m.seed)
-            .select(greatest(col("id_a"), col("id_b")).as("_rej"))
-          val admitted = b.join(
-            gated(vsIndex.unionByName(intra).distinct()),
-            col(idCol) === col("_rej"), "left_anti")
-            .localCheckpoint() // audit write + append from one frame
-          // index append FIRST, admissions ledger-seal SECOND: the
-          // ledger never claims docs the index lacks. The crash window
-          // (append done, seal missing) re-runs the trigger and
-          // re-appends — duplicate doc/posting rows for that epoch's
-          // admitted docs (same-id probe exclusion means a doc cannot
-          // reject its own first-attempt copy), dedupable offline by id;
-          // admission DECISIONS are unaffected. The old seal-first order
-          // was strictly worse: it lost the epoch's docs permanently
-          // while the ledger said admitted
-          append(spark, dir, admitted, idCol, textCol)
-          admitted.withColumn("epoch", lit(epochId))
-            .write.mode("error").parquet(epochDir)
-          graft.io.EpochCommit.seal(spark, epochDir)
-          // in-stream maintenance beat (after the seal — see scaladoc)
-          if (maintainEvery > 0 && (epochId + 1) % maintainEvery == 0) {
-            maintain(spark, dir, policy)
-            ()
-          }
-          // per-trigger checkpoints die with the trigger, not with GC
-          Seq(b, admitted).foreach(Dedup.releasePlan)
-        }
-        ()
-      }
-      .start()
 }

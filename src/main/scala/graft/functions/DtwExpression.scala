@@ -16,9 +16,6 @@ object DtwKernels {
   def dtw(a: ArrayData, b: ArrayData): Double =
     Distances.dtw(a.toDoubleArray(), b.toDoubleArray())
 
-  def dtwWindow(a: ArrayData, b: ArrayData, window: Int): Double =
-    Distances.dtw(a.toDoubleArray(), b.toDoubleArray(), window)
-
   def euclidean(a: ArrayData, b: ArrayData): Double =
     Distances.Euclidean(a.toDoubleArray(), b.toDoubleArray())
 
@@ -213,8 +210,6 @@ object GraftFunctions {
     GraftColumnBridge.column(
       build(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
-  def dtwDistance(a: Column, b: Column): Column = col2(DtwDistance.apply)(a, b)
-  def euclideanDistance(a: Column, b: Column): Column = col2(EuclideanDistance.apply)(a, b)
   def dotProduct(a: Column, b: Column): Column = col2(DotProduct.apply)(a, b)
   def jaroWinkler(a: Column, b: Column): Column = col2(JaroWinklerSimilarity.apply)(a, b)
   def lbKeogh(x: Column, u: Column, l: Column): Column = {

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Two formulations, identical values (BfsSpec pins bit-for-bit
   * equality): [[distancesFp]] re-joins the FULL label frame every
   * iteration — O(K·|labeled|) join work, trivially unrollable to the
-  * oracle's CTEs — while [[distancesDelta]] joins only the round's
+  * oracle's CTEs — while [[distances]]' distributed tier joins only the round's
   * newly-labeled frontier — O(Σ|frontier_i|) = O(|reachable|) total join
   * work, the production form on high-diameter graphs (a K-hop crawl
   * radius over a web graph re-probes every settled node K times under
@@ -45,7 +45,7 @@ object Bfs {
     * design): exact driver BFS at or under [[PageRank.DriverEdgeCap]]
     * distinct edges (the catalog fixture's 2,990-edge graph ran a
     * scheduler-bound distributed loop for a microsecond computation),
-    * [[distancesDelta]]'s frontier loop above it. Both tiers spec-pinned
+    * the delta-frontier loop above it. Both tiers spec-pinned
     * bit-equal; same contract as [[distancesFp]].
     */
   def distances(edges0: DataFrame, srcCol: String, dstCol: String,
@@ -124,18 +124,10 @@ object Bfs {
     dist
   }
 
-  /** Delta-frontier BFS: same contract and values as [[distancesFp]],
-    * join work proportional to nodes REACHED rather than nodes-settled ×
-    * iterations. See the object doc for the equivalence argument.
-    */
-  def distancesDelta(edges0: DataFrame, srcCol: String, dstCol: String,
-      seedPred: Column => Column, iterations: Int = 4): DataFrame =
-    distancesDeltaStats(edges0, srcCol, dstCol, seedPred, iterations)._1
-
-  /** [[distancesDelta]] plus the per-round frontier sizes (index 0 = the
-    * seed set) — the join-probe work measure BfsSpec uses to prove the
-    * frontier form does strictly less work than the full-frame form on a
-    * high-diameter graph.
+  /** The delta-frontier loop of [[distances]] plus the per-round
+    * frontier sizes (index 0 = the seed set) — the join-probe work
+    * measure BfsSpec uses to prove the frontier form does strictly less
+    * work than the full-frame form on a high-diameter graph.
     */
   def distancesDeltaStats(edges0: DataFrame, srcCol: String, dstCol: String,
       seedPred: Column => Column, iterations: Int = 4): (DataFrame, Seq[Long]) =

@@ -66,13 +66,16 @@ object PageRank {
   /** Production two-tier PageRank: exact dense power iteration on the
     * driver at or under `driverEdgeCap` distinct edges (identical
     * fixed-point arithmetic — spec-pinned bit-equal to the distributed
-    * loop), [[pageRankFp]] above it.
+    * loop), the distributed [[pageRankImpl]] loop above it.
     */
   def pageRank(edges0: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, driverEdgeCap: Long = DriverEdgeCap): DataFrame =
     twoTier(edges0, srcCol, dstCol, None, iterations, driverEdgeCap)
 
-  /** Two-tier [[personalizedPageRankFp]]. */
+  /** Two-tier personalized PageRank: the teleport vector concentrates
+    * on `seedPred`-nodes (see [[pageRankImpl]]); an empty seed set
+    * refuses loudly on both tiers.
+    */
   def personalizedPageRank(edges0: DataFrame, srcCol: String,
       dstCol: String,
       seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
@@ -116,7 +119,7 @@ object PageRank {
         driverPageRank(edges0.sparkSession, es, seedPred, iterations)
       case Right(canon) =>
         pageRankImpl(canon, "src", "dst", seedPred, iterations,
-          eager = true, canonPinned = Some(canon))
+          canonPinned = Some(canon))
     }
 
   /** Exact driver power iteration — the [[pageRankFpInner]] arithmetic
@@ -174,42 +177,19 @@ object PageRank {
     (0 until n).map(v => (nodeIds(v), r(v))).toDF("node", "r")
   }
 
-  /** PageRank after `iterations` power steps, damping 0.85.
-    * Returns (node, r) with r = rank × 10^12 as BIGINT.
-    *
-    * `eager = false` disables the per-iteration materialization (no
-    * persist / localCheckpoint) and returns the fully-unrolled
-    * DECLARATIVE plan — same values, exponentially re-computed scans —
-    * so plan-shape pins can inspect the per-iteration join strategy
-    * that checkpointing hides behind a LogicalRDD scan. Production and
-    * the catalog run eager.
+  /** The distributed power iteration behind both tiers' callers:
+    * PageRank after `iterations` steps, damping 0.85, returning (node, r)
+    * with r = rank × 10^12 as BIGINT. With `seedPred` the teleport
+    * vector concentrates on the seed nodes (personalized PageRank): the
+    * ONLY changes are the restart term (Scale·(1−d)/|S| on seeds, 0
+    * elsewhere) and the dangling mass returning to the seeds rather than
+    * everywhere. Uniform PageRank IS the special case seedPred ≡ true
+    * (PageRankSpec pins the two bit-for-bit equal). A node unreachable
+    * from the seed set converges to rank 0 — absent mass, not absent row.
     */
-  def pageRankFp(edges0: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 3, eager: Boolean = true): DataFrame =
-    pageRankImpl(edges0, srcCol, dstCol, None, iterations, eager)
-
-  /** Personalized PageRank: the teleport vector concentrates on
-    * `seedPred`-nodes instead of spreading uniformly — the random surfer
-    * restarts at a seed, so rank measures proximity-weighted authority
-    * RELATIVE TO the seed set (topic-focused crawl frontiers, "more like
-    * these" page discovery, seed-anchored spam distance). Same fixed-point
-    * arithmetic, same one-join-one-aggregate iteration shape, same
-    * checkpoint discipline: the ONLY changes are the restart term
-    * (Scale·(1−d)/|S| on seeds, 0 elsewhere) and the dangling mass
-    * returning to the seeds rather than everywhere. Uniform PageRank IS
-    * the special case seedPred ≡ true (PageRankSpec pins the two
-    * bit-for-bit equal), so both entry points share one loop. A node
-    * unreachable from the seed set converges to rank 0 — absent mass,
-    * not absent row (every node still reports).
-    */
-  def personalizedPageRankFp(edges0: DataFrame, srcCol: String,
-      dstCol: String, seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      iterations: Int = 3, eager: Boolean = true): DataFrame =
-    pageRankImpl(edges0, srcCol, dstCol, Some(seedPred), iterations, eager)
-
   private def pageRankImpl(edges0: DataFrame, srcCol: String, dstCol: String,
       seedPred: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column],
-      iterations: Int, eager: Boolean,
+      iterations: Int,
       canonPinned: Option[DataFrame] = None): DataFrame = {
     // Let AQE size the ITERATION frames' partitioning from observed data
     // instead of inheriting the static shuffle.partitions: cached-plan
@@ -223,10 +203,9 @@ object PageRank {
     val spark = edges0.sparkSession
     val scopedConfs = Seq(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
-    val prev = if (eager) scopedConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      else Nil
-    if (eager) scopedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try pageRankFpInner(edges0, srcCol, dstCol, seedPred, iterations, eager,
+    val prev = scopedConfs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    scopedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try pageRankFpInner(edges0, srcCol, dstCol, seedPred, iterations,
       canonPinned)
     finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -236,7 +215,7 @@ object PageRank {
 
   private def pageRankFpInner(edges0: DataFrame, srcCol: String, dstCol: String,
       seedPred: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column],
-      iterations: Int, eager: Boolean,
+      iterations: Int,
       canonPinned: Option[DataFrame] = None): DataFrame = {
     // persist() the frames every iteration re-reads: the unrolled plan
     // references edges and nodeDeg and ranks_k from 2-3 consumers each,
@@ -246,10 +225,9 @@ object PageRank {
     // nodes/edges-sized — the small side of the computation by design.
     // canonPinned = the two-tier gate's already-canonical cached frame,
     // reused so tier selection never costs a second distinct.
-    def pin(df: DataFrame): DataFrame = if (eager) df.persist() else df
-    val edges = canonPinned.getOrElse(pin(edges0
+    val edges = canonPinned.getOrElse((edges0
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .distinct()))
+      .distinct()).persist())
     // loop-invariant (node, outdeg|null) frame in ONE aggregation: each
     // distinct edge contributes its src endpoint flagged 1 and its dst
     // endpoint flagged 0; summing flags per node IS the out-degree, and a
@@ -265,21 +243,22 @@ object PageRank {
     // Uniform PageRank = every node a seed; __ns then equals __n and the
     // arithmetic below reduces to the classic form term for term.
     val isSeed = seedPred.map(p => p(col("node"))).getOrElse(lit(true))
-    val nodeDeg = pin(edges
+    val nodeDeg = edges
       .select(explode(array(
         struct(col("src").as("node"), lit(1L).as("__isSrc")),
         struct(col("dst").as("node"), lit(0L).as("__isSrc")))).as("ep"))
       .select(col("ep.node").as("node"), col("ep.__isSrc").as("__isSrc"))
       .groupBy(col("node"))
       .agg(when(sum(col("__isSrc")) > 0L, sum(col("__isSrc"))).as("outdeg"))
-      .withColumn("seed", isSeed))
+      .withColumn("seed", isSeed)
+      .persist()
     val nTotal = nodeDeg.agg(count(lit(1)).cast("long").as("__n"),
       coalesce(sum(when(col("seed"), 1L)), lit(0L)).as("__ns"))
-    if (eager && seedPred.isDefined) {
+    if (seedPred.isDefined) {
       // a silent empty seed set would converge every rank to 0 via NULL
-      // division — refuse loudly instead (plan-only callers skip the probe)
+      // division — refuse loudly instead
       require(nTotal.head().getLong(1) > 0L,
-        "personalizedPageRankFp: seed predicate matched no node")
+        "personalizedPageRank: seed predicate matched no node")
     }
 
     var ranks = nodeDeg.crossJoin(broadcast(nTotal))
@@ -304,8 +283,8 @@ object PageRank {
       // contrib has two consumers (the scalar probe and the rank update):
       // pin it — this replaces the former per-iteration rank pin; freed at
       // the span boundary below
-      val contribP = if (eager) contrib.persist() else contrib
-      if (eager) spanPinned = contribP :: spanPinned
+      val contribP = contrib.persist()
+      spanPinned = contribP :: spanPinned
       // one combined 1-row scalar broadcast per iteration (dangling mass
       // x node count); the aggregate guards the no-dangling-row case —
       // a bare filter(dst IS NULL) would yield an EMPTY frame there and
@@ -323,9 +302,7 @@ object PageRank {
             "(85 * (coalesce(__csum, 0L) + " +
             "case when seed then __dang div __ns else 0L end)) div 100").as("r"),
           col("outdeg"), col("seed"))
-      if (!eager) {
-        ranks = next
-      } else if (i % CheckpointEvery == 0 || i == iterations) {
+      if (i % CheckpointEvery == 0 || i == iterations) {
         // span boundary: cut lineage with ONE blocking materialization,
         // then free every frame the new checkpoint supersedes (integer
         // fixed-point, so the early materialization cannot perturb values)
@@ -341,13 +318,11 @@ object PageRank {
         ranks = next
       }
     }
-    if (eager) {
-      // the result is lineage-free (checkpointed), so the support caches
-      // are dead weight from here — free them rather than waiting on LRU
-      // eviction across repeated invocations
-      edges.unpersist(blocking = false)
-      nodeDeg.unpersist(blocking = false)
-    }
+    // the result is lineage-free (checkpointed), so the support caches
+    // are dead weight from here — free them rather than waiting on LRU
+    // eviction across repeated invocations
+    edges.unpersist(blocking = false)
+    nodeDeg.unpersist(blocking = false)
     // outdeg was loop state, not output — project it away (narrow op over
     // the checkpointed frame; lineage stays cut)
     ranks.select(col("node"), col("r"))
@@ -371,16 +346,10 @@ object GraphQueries {
     * destinations, so the graph HAS dangling nodes and the
     * dangling-mass path is exercised, not just compiled.
     */
-  private def docEdges(s: SparkSession, d: String): DataFrame =
+  private[graft] def docEdges(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(
       pmod(col("doc_id"), lit(97L)).as("src"),
       pmod(col("doc_id") * 31L + 7L, lit(101L)).as("dst"))
-
-  /** Declarative twin of `q_pagerank` (no mid-plan materialization) for
-    * plan-shape pins / lint — see [[PageRank.pageRankFp]] `eager` doc.
-    */
-  def pagerankPlanOnly(s: SparkSession, d: String): DataFrame =
-    PageRank.pageRankFp(docEdges(s, d), "src", "dst", eager = false)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TWO-TIER (r17): the fixture graph is 2,990 edges, so the catalog

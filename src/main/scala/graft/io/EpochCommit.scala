@@ -2,27 +2,21 @@ package graft.io
 
 import org.apache.spark.sql.SparkSession
 
-/** Commit-atomic epoch seals for streaming-ingest ledgers (round-17
-  * ADVICE fix, hardened by the r17 self-review). Directory EXISTENCE is
-  * not a commit marker: Spark creates the output directory (with
-  * `_temporary/`) at job setup, so a crash mid-write leaves the dir
-  * present and a replayed trigger gated on `fs.exists(dir)` is skipped
-  * whole — the ledger stays permanently empty/partial for that epoch
-  * while the index append already landed.
+/** Commit-atomic epoch seals for index ledgers (round-17 ADVICE fix,
+  * hardened by the r17 self-review). Directory EXISTENCE is not a commit
+  * marker: Spark creates the output directory (with `_temporary/`) at
+  * job setup, so a crash mid-write leaves the dir present.
   *
   * The seal is graft's OWN `_graft_commit` marker, written by [[seal]]
   * strictly after the parquet write returns — not the committer's
   * `_SUCCESS`, which is configuration-dependent
   * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false` and most
-  * cloud committers omit it; gating on it would make [[clearPartial]]
-  * DELETE fully-committed epochs on those configs). `_SUCCESS` is still
+  * cloud committers omit it; gating on it would read fully-committed
+  * epochs as crashed on those configs). `_SUCCESS` is still
   * ACCEPTED as proof of commit when present — it is only ever written
   * at job commit, and honoring it closes the crash window between the
   * parquet write and [[seal]] on configs that do produce it. A dir with
-  * neither marker is a crashed attempt, which the replay must CLEAR
-  * before re-running (the ledger writes use mode("error"), so a
-  * leftover partial dir would otherwise kill the replayed trigger
-  * instead of healing it).
+  * neither marker is a crashed attempt.
   */
 object EpochCommit {
 
@@ -30,16 +24,14 @@ object EpochCommit {
 
   // A commit is PERMANENT, so positive answers cache for the JVM's life
   // (second-review finding: readers like ClusterIndex.docScores probe
-  // every historical epoch per streaming trigger — on object stores
-  // each exists() is a HEAD request, O(epochs) RPCs per trigger without
-  // this). Only `true` is ever cached; `false` re-probes.
+  // every historical epoch — on object stores each exists() is a HEAD
+  // request). Only `true` is ever cached; `false` re-probes.
   private val committedCache =
     scala.collection.concurrent.TrieMap.empty[String, Unit]
 
   /** Migration caveat: epoch dirs written by PRE-marker code on a
     * committer config that also writes no `_SUCCESS` carry neither
-    * proof — stamp them once via [[seal]] before resuming replay-gated
-    * streams over them, or [[clearPartial]] will treat them as crashed.
+    * proof — stamp them once via [[seal]], or they read as crashed.
     */
   private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -76,16 +68,5 @@ object EpochCommit {
     committedCache.keySet.toSeq
       .filter(k => new org.apache.hadoop.fs.Path(k).toUri.getPath == p)
       .foreach(committedCache.remove)
-  }
-
-  /** Remove a crashed (present but uncommitted) epoch dir so the
-    * replayed trigger's mode("error") write can land. No-op when the
-    * dir is absent or committed. Returns true iff a partial was cleared.
-    */
-  def clearPartial(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val f = fs(spark, p)
-    if (f.exists(p) && !committed(spark, dir)) f.delete(p, true)
-    else false
   }
 }

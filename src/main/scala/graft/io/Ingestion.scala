@@ -1,8 +1,5 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -52,25 +49,5 @@ object Ingestion {
   def validateNonEmpty(df: DataFrame): DataFrame = {
     if (df.take(1).isEmpty) throw new IllegalStateException("Data is empty!")
     df
-  }
-
-  /** S7 — min-max stats sink (the reference's min_max_values.json artifact). */
-  def writeMinMaxJson(stats: Map[String, (Double, Double)], path: String): Unit = {
-    val body = stats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      s""""$c": [$mn, $mx]"""
-    }.mkString("{", ", ", "}")
-    Files.write(Paths.get(path), body.getBytes(StandardCharsets.UTF_8))
-  }
-
-  def readMinMaxJson(path: String): Map[String, (Double, Double)] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(Files.readAllBytes(Paths.get(path)))
-    val it = root.properties().iterator()
-    val out = Map.newBuilder[String, (Double, Double)]
-    while (it.hasNext) {
-      val e = it.next()
-      out += e.getKey -> ((e.getValue.get(0).asDouble(), e.getValue.get(1).asDouble()))
-    }
-    out.result()
   }
 }

@@ -1,14 +1,8 @@
 package graft.layout
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
 
 /** Small-file compaction — the #1 daily maintenance job on a real lake.
   * MERGE/CDC and incremental dedup ([[graft.ops.MergeOps]],
@@ -18,9 +12,9 @@ import scala.concurrent.duration._
   *
   * The job splits into PLAN (pure metadata: parquet footers already carry
   * per-file size/rows/min-max — no data read) and REWRITE (merge each
-  * planned bin's files into one output file — pure IO, no shuffle). Keeping
-  * the plan a first-class DataFrame makes it oracle-checkable and lets a
-  * scheduler diff/approve it before any bytes move.
+  * planned bin's files into one output file). Keeping the plan a
+  * first-class DataFrame makes it oracle-checkable and lets a scheduler
+  * diff/approve it before any bytes move.
   */
 object Compaction {
 
@@ -31,8 +25,8 @@ object Compaction {
     * ordering by Z-curve position ([[ZOrder.zkey]] of the footer's min
     * coordinates) preserves clustering: each merged file still covers one
     * compact curve segment, and the file-skipping boxes stay tight. A
-    * size-ordered first-fit pack (see [[firstFitDecreasing]]) would fill
-    * bins tighter but interleave distant curve segments, destroying the
+    * size-ordered first-fit pack would fill bins tighter but interleave
+    * distant curve segments, destroying the
     * layout the table was clustered for.
     *
     * Bins can overrun `targetBytes` by at most their last file (and a
@@ -53,103 +47,5 @@ object Compaction {
       .withColumn("_cum_before", sum(col(sizeCol)).over(w) - col(sizeCol))
       .withColumn("bin", expr(s"_cum_before DIV ${targetBytes}L"))
       .drop("_cum_before")
-  }
-
-  /** Exact first-fit-decreasing packing for tables with no clustering to
-    * preserve: files ordered by (size desc, id), each placed in the first
-    * bin it fits. Driver-side by design — the input is the same
-    * metadata-scale file report as [[planSequential]], and FFD's
-    * place-depends-on-all-previous recurrence has no declarative form.
-    * Guarantees: no bin exceeds `targetBytes` unless it holds a single
-    * oversized file (which always sits alone), and the classic FFD bound
-    * (≤ 11/9·OPT + 1 bins) applies.
-    */
-  def firstFitDecreasing(files: Seq[(String, Long)],
-      targetBytes: Long): Map[String, Int] = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val binLoads = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val out = Map.newBuilder[String, Int]
-    files.sortBy { case (id, size) => (-size, id) }.foreach { case (id, size) =>
-      val fit = binLoads.indexWhere(_ + size <= targetBytes)
-      val bin =
-        if (size > targetBytes) { // oversized: always its own bin
-          binLoads += size; binLoads.length - 1
-        } else if (fit >= 0) { binLoads(fit) += size; fit }
-        else { binLoads += size; binLoads.length - 1 }
-      out += id -> bin
-    }
-    out.result()
-  }
-
-  /** Distributed footer-stats gather: one row per parquet file in `dir`
-    * with its byte size, row count, and the (xCol, yCol) min/max box —
-    * exactly what the planner and the file-skipping report need, read from
-    * footers on EXECUTORS (mapPartitions over the path list; at a real
-    * file count the driver must not open every footer itself). Local-dir
-    * listing contract (this engine's test/deploy surface); a lake would
-    * feed the listing from its catalog instead.
-    */
-  def parquetFileBoxes(spark: SparkSession, dir: String,
-      xCol: String, yCol: String): DataFrame = {
-    import spark.implicits._
-    val paths = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") && f.length() > 0)
-      .map(_.getAbsolutePath).sorted.toSeq
-    require(paths.nonEmpty, s"no parquet files under $dir")
-    spark.createDataset(paths)
-      .repartition(math.min(paths.length, 32))
-      .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        it.map { p =>
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(p), conf))
-          try {
-            val blocks = reader.getFooter.getBlocks
-            def range(c: String): (Long, Long) = {
-              val stats = (0 until blocks.size()).flatMap { i =>
-                val b = blocks.get(i)
-                (0 until b.getColumns.size()).map(b.getColumns.get)
-                  .filter(_.getPath.toDotString == c)
-                  .map(_.getStatistics)
-              }.filter(_.hasNonNullValue)
-              require(stats.nonEmpty, s"no footer stats for $c in $p")
-              (stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue).min,
-                stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue).max)
-            }
-            val nRows = (0 until blocks.size()).map(blocks.get(_).getRowCount).sum
-            val (x0, x1) = range(xCol)
-            val (y0, y1) = range(yCol)
-            (p, new java.io.File(p).length(), nRows, x0, x1, y0, y1)
-          } finally reader.close()
-        }
-      }
-      .toDF("path", "size_bytes", "n_rows", "x_min", "x_max", "y_min", "y_max")
-  }
-
-  /** Execute a plan: merge each bin's input files into ONE output file
-    * under `outDir/bin=<id>/`. Each bin is an independent single-task job
-    * (`coalesce(1)` over just that bin's files — pure IO, no shuffle, rows
-    * keep their within-file order so a Z-sorted input stays Z-sorted);
-    * bins run concurrently on a bounded pool. Distinct per-bin output
-    * directories keep committers from clobbering each other, and the
-    * result reads back as one partitioned table (`bin` becomes a partition
-    * column under discovery).
-    */
-  def rewriteBins(spark: SparkSession, assignment: Seq[(String, Long)],
-      outDir: String, parallelism: Int = 8): Int = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val bins = assignment.groupBy(_._2).toSeq.sortBy(_._1)
-    try {
-      val jobs = bins.map { case (bin, files) =>
-        Future {
-          spark.read.parquet(files.map(_._1): _*)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$outDir/bin=$bin")
-        }
-      }
-      Await.result(Future.sequence(jobs), 30.minutes)
-      bins.size
-    } finally pool.shutdown()
   }
 }

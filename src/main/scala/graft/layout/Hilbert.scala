@@ -1,10 +1,9 @@
 package graft.layout
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Hilbert-curve layout key — [[ZOrder]]'s stronger sibling: the Hilbert
@@ -19,9 +18,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * [[graft.functions.DtwKernels]] discipline). The classic bit-level
   * algorithm (Wikipedia's xy2d/d2xy formulation of Hilbert 1891).
   *
-  * `clusterByZ`'s write-side machinery applies unchanged: range-
-  * repartition on this key instead of the Morton key and every output
-  * file is one contiguous Hilbert segment.
+  * Range-repartition on this key instead of the Morton key and every
+  * output file is one contiguous Hilbert segment.
   */
 object Hilbert {
 
@@ -36,16 +34,6 @@ object Hilbert {
     GraftColumnBridge.column(HilbertIndex(
       GraftColumnBridge.expression(x.cast("long")),
       GraftColumnBridge.expression(y.cast("long"))))
-  }
-
-  /** Range-repartition + in-partition sort on the Hilbert key — each
-    * output partition (→ parquet file) is one contiguous curve segment.
-    */
-  def clusterByH(df: DataFrame, xCol: String, yCol: String,
-      numPartitions: Int): DataFrame = {
-    val key = hkey(col(xCol), col(yCol))
-    df.repartitionByRange(numPartitions, key)
-      .sortWithinPartitions(key)
   }
 }
 

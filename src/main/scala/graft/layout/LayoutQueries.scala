@@ -157,14 +157,11 @@ object LayoutQueries {
           min(col("zmin")).as("zmin"))),
 
     // Snapshot-retention plan over a simulated version report (one row
-    // per committed version: rows, byte proxy, last commit ts — the shape
-    // StreamingMerge.listVersions + footer stats provide; versions here =
-    // order quarters, so commit timestamps genuinely advance). Keep rule:
-    // newest 4 versions OR inside the 1997+ time-travel window — the
-    // plan/execute split again: this DataFrame is what an operator
-    // approves before StreamingMerge.vacuum reclaims the bytes
-    // (StreamingMergeSpec covers the execute half incl. the
-    // _latest-pointer pin).
+    // per committed version: rows, byte proxy, last commit ts; versions
+    // here = order quarters, so commit timestamps genuinely advance).
+    // Keep rule: newest 4 versions OR inside the 1997+ time-travel
+    // window — the plan/execute split again: this DataFrame is what an
+    // operator approves before a vacuum reclaims the bytes.
     "q_retention_plan" -> ((s, d) => {
       val report = Tables.orders(s, d)
         .groupBy(((year(col("o_orderdate")) - 1992) * 4 +
@@ -183,7 +180,8 @@ object LayoutQueries {
     // predicate, how many simulated data files does footer min/max
     // pruning admit under the arrival-ordered layout vs the Z-ordered
     // one (value-blocked on the Morton key — contiguous curve segments,
-    // the shape clusterByZ writes)? Same rows, same predicate — only the
+    // the shape a Morton-key range-repartition writes)? Same rows, same
+    // predicate — only the
     // LAYOUT differs, and skip_ratio is the measured win, value-oracled.
     // (ZOrderFileSkipSpec proves the same effect against REAL parquet
     // footers; this query oracles the pruning arithmetic itself.)
@@ -363,9 +361,8 @@ object LayoutQueries {
     }
 
   /** The simulated ingest-file report feeding the compaction queries:
-    * (file_id, n_rows, size_bytes, zmin) — exactly the shape
-    * [[Compaction.parquetFileBoxes]] reads from real footers (zmin there =
-    * zkey of the footer min coordinates; CompactionSpec covers that path).
+    * (file_id, n_rows, size_bytes, zmin) — the per-file shape real parquet
+    * footers carry (zmin = zkey of the footer min coordinates).
     */
   private def compactionFileReport(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)

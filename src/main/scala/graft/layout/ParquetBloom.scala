@@ -19,10 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * format, and Spark's vectorized reader consults both automatically
   * under `spark.sql.parquet.filterPushdown`.
   *
-  * Mirrors the [[Compaction.parquetFileBoxes]] doctrine: the proof
-  * artifacts are DataFrame reports read from REAL footers on executors
-  * (mapPartitions over the file list — at lake file counts the driver
-  * must not open footers), spec-pinned against planted probes; the
+  * The proof artifacts are DataFrame reports read from REAL footers on
+  * executors (mapPartitions over the file list — at lake file counts the
+  * driver must not open footers), spec-pinned against planted probes; the
   * value-oracle-able statistics that JUSTIFY the levers (per-file ndv,
   * overlapping min/max boxes vs exact membership) live in the catalog as
   * `q_parquet_bloom_stats`, layout-independent.
@@ -118,60 +117,6 @@ object ParquetBloom {
       .toDF("path", "row_group", "n_rows", "has_bloom", "probe", "might_contain")
   }
 
-  /** The page index, surfaced: one row per (file, row group, page) with
-    * the page's min/max (rendered via UTF-8 for binary columns, as the
-    * little-endian long for INT64) and its row count from the offset
-    * index — the statistics a scan's page-level filtering consults after
-    * the row group survives file/bloom pruning.
-    */
-  def pageIndexReport(spark: SparkSession, dir: String,
-      colName: String): DataFrame = {
-    import spark.implicits._
-    val paths = parquetPaths(spark, dir)
-    spark.createDataset(paths)
-      .repartition(math.min(paths.length, 32))
-      .flatMap { p =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(p), conf))
-        try {
-          val blocks = reader.getFooter.getBlocks
-          (0 until blocks.size()).flatMap { g =>
-            val block = blocks.get(g)
-            val cmd = (0 until block.getColumns.size())
-              .map(block.getColumns.get)
-              .find(_.getPath.toDotString == colName)
-              .getOrElse(sys.error(s"column $colName not in $p"))
-            val ci = reader.readColumnIndex(cmd)
-            val oi = reader.readOffsetIndex(cmd)
-            require(ci != null && oi != null, s"no page index for $colName in $p")
-            val prim = cmd.getPrimitiveType.getPrimitiveTypeName.name()
-            def render(b: java.nio.ByteBuffer): String = {
-              val le = b.duplicate().order(java.nio.ByteOrder.LITTLE_ENDIAN)
-              prim match {
-                case "BINARY" =>
-                  val a = new Array[Byte](b.remaining()); b.duplicate().get(a)
-                  new String(a, java.nio.charset.StandardCharsets.UTF_8)
-                case "INT64" => le.getLong.toString
-                case "INT32" => le.getInt.toString
-                case "DOUBLE" => le.getDouble.toString
-                case other => sys.error(s"unsupported page-index type $other")
-              }
-            }
-            val nPages = oi.getPageCount
-            (0 until nPages).map { pg =>
-              val first = oi.getFirstRowIndex(pg)
-              val rows =
-                (if (pg + 1 < nPages) oi.getFirstRowIndex(pg + 1)
-                 else block.getRowCount) - first
-              (p, g.toLong, pg.toLong, rows,
-                render(ci.getMinValues.get(pg)), render(ci.getMaxValues.get(pg)))
-            }
-          }
-        } finally reader.close()
-      }
-      .toDF("path", "row_group", "page", "n_rows", "page_min", "page_max")
-  }
 
   /** Row-group column statistics from REAL footers: one row per
     * (file, row group, column) with the chunk's min/max (rendered via

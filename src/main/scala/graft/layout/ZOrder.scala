@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * dimension give tight boxes on that dimension and full-range boxes on
   * every other; rows sorted by the interleaved-bit Morton key give boxes
   * tight in ALL interleaved dimensions at once (each additional sorted bit
-  * halves one side of the box, alternating sides). `clusterByZ` is the
-  * write-side layout operator: range-repartition + in-partition sort by the
-  * Morton key, so each output file covers one compact Z-curve segment.
+  * halves one side of the box, alternating sides). Range-repartition +
+  * in-partition sort by the Morton key makes each output file cover one
+  * compact Z-curve segment.
   *
   * The key is pure bit arithmetic over codegen'd built-ins (`shiftleft`,
   * `bitwiseAND`/`OR`) — no UDF, stays inside whole-stage codegen, and the
@@ -55,8 +55,8 @@ object ZOrder {
     * coordinate: bit 31 of y would spread to bit 62 and shift onto the long
     * SIGN bit, making the key negative and breaking unsigned Z-curve order
     * under `repartitionByRange` (negative keys would sort before all
-    * positive ones). Masking here — not at call sites — makes [[zkey]] and
-    * [[clusterByZ]] sign-safe by construction.
+    * positive ones). Masking here — not at call sites — makes [[zkey]]
+    * sign-safe by construction.
     */
   val Mask31 = 0x7fffffffL
 
@@ -133,20 +133,6 @@ object ZOrder {
   def zkey(x: Column, y: Column): Column =
     spreadBits(x.cast("long").bitwiseAND(lit(Mask31)))
       .bitwiseOR(shiftleft(spreadBits(y.cast("long").bitwiseAND(lit(Mask31))), 1))
-
-  /** Write-side layout: range-repartition on the Morton key (each output
-    * partition = one contiguous Z-curve segment, the unit that becomes one
-    * parquet file) and sort within partitions so row groups inside a file
-    * are compact segments too. `numPartitions` ≈ target file count: size it
-    * to data volume / desired file size at the real scale.
-    */
-  def clusterByZ(
-      df: DataFrame, xCol: String, yCol: String,
-      numPartitions: Int): DataFrame = {
-    val key = zkey(col(xCol), col(yCol))
-    df.repartitionByRange(numPartitions, key)
-      .sortWithinPartitions(key)
-  }
 
   /** Layout quality report: bucket rows into `buckets` equal-size runs of
     * the given ordering and emit each bucket's (x, y) bounding box and

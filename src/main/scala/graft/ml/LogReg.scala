@@ -78,7 +78,7 @@ object LogReg {
   }
 
   /** σ(w·x) — ONE definition shared by training ([[gradientPass]]) and
-    * serving ([[score]]); z associates left-to-right, the order the
+    * serving ([[classify]]); z associates left-to-right, the order the
     * oracle's SQL replays.
     */
   private def sigmoid(features: Seq[Column], weights: Array[Double]): Column = {
@@ -118,17 +118,6 @@ object LogReg {
     import spark.implicits._
     (names :+ "bias").zip(w).toSeq.toDF("term", "weight")
       .select(col("term"), round(col("weight"), 6).as("weight"))
-  }
-
-  /** The trained model as a scoring expression: σ(w·x) over the same
-    * feature columns — apply with `.withColumn("quality", score(...))`
-    * and threshold downstream. Pure expression, broadcast-free (weights
-    * are literals), codegen'd.
-    */
-  def score(features: Seq[Column], weights: Array[Double]): Column = {
-    require(weights.length == features.size + 1,
-      "weights = features + bias (train() output)")
-    sigmoid(features.map(_.cast("double")), weights)
   }
 
   /** One-vs-rest multiclass (r17 verdict task 4) — the k-way face real
@@ -250,8 +239,9 @@ object LogReg {
       models.map(_._1))
   }
 
-  /** Argmax with deterministic low-index tie-break — ONE definition
-    * shared by [[classify]] (OVR) and [[classifySoftmax]].
+  /** Argmax with deterministic low-index tie-break. Over softmax models
+    * it picks the same class as over their σ scores: both are monotone in
+    * w·x.
     */
   private def argmaxClass(ps: Seq[Column], classes: Seq[String]): Column = {
     val structs = ps.zip(classes).zipWithIndex.map { case ((p, cls), i) =>
@@ -343,9 +333,8 @@ object LogReg {
   }
 
   /** exp(z_c) / Σ_j exp(z_j) with z and the normalizer both associating
-    * left-to-right in class order — ONE definition shared by training
-    * ([[gradientPassSoftmax]]) and serving ([[classifySoftmax]]), the
-    * order the oracle's SQL replays.
+    * left-to-right in class order — used by training
+    * ([[gradientPassSoftmax]]) in the order the oracle's SQL replays.
     */
   private def softmaxProbs(features: Seq[Column],
       ws: Seq[Array[Double]]): Seq[Column] = {
@@ -378,20 +367,5 @@ object LogReg {
       (names :+ "bias").zip(w).map { case (t, wt) => (cls, t, wt) }
     }.toDF("class", "term", "weight")
       .select(col("class"), col("term"), round(col("weight"), 6).as("weight"))
-  }
-
-  /** The softmax serving expression: argmax over the k coupled
-    * probabilities (shares [[softmaxProbs]] with training and the
-    * [[argmaxClass]] tie-break with OVR [[classify]]).
-    */
-  def classifySoftmax(features: Seq[Column],
-      models: Seq[(String, Array[Double])]): Column = {
-    require(models.size >= 2, "softmax serving needs >= 2 class models")
-    models.foreach { case (cls, w) =>
-      require(w.length == features.size + 1,
-        s"class $cls: weights = features + bias (trainSoftmax output)")
-    }
-    val fs = features.map(_.cast("double"))
-    argmaxClass(softmaxProbs(fs, models.map(_._2)), models.map(_._1))
   }
 }

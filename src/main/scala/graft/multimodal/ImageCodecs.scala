@@ -114,10 +114,6 @@ object ImageCodecs {
         encodePng(dst)
     }
 
-  /** Decoded (width, height); None when the payload is not an image. */
-  def dimensions(payload: Array[Byte]): Option[(Int, Int)] =
-    decode(payload).map(i => (i.getWidth, i.getHeight))
-
   private def encodePng(img: BufferedImage): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     ImageIO.write(img, "png", bos)

@@ -1,18 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read via deletion-vector sidecars — the delete-heavy
-  * complement of the copy-on-write family ([[MergeOps]],
-  * [[PartitionedMerge]]). COW rewrites every touched file per batch; when
+  * complement of copy-on-write ([[MergeOps]]). COW rewrites every
+  * touched file per batch; when
   * batches are frequent and deletes are scattered (GDPR erasure, crawl
   * retractions, label fixes), that rewrites the same 100 TB of survivors
   * nightly to remove kilobytes. Merge-on-read instead APPENDS: a delete
   * batch writes only a key sidecar, an upsert batch writes only its new
   * rows plus the sidecar entries masking the superseded versions, and the
   * read path subtracts the mask with one broadcast join. The deferred
-  * rewrite happens once, at fold/compaction time, amortized over many
+  * rewrite happens once, at compaction time, amortized over many
   * batches.
   *
   * The design is the public equality-delete protocol (Apache Iceberg's
@@ -76,8 +76,7 @@ object DeletionVectors {
   // a half-written batch (crashed writer, reader racing a writer) is
   // invisible until its single-file seal appears — atomic visibility
   // without a central coordinator. A crashed reservation is never
-  // reused (allocation maxes over locks AND commits) and its orphan
-  // files are vacuumed by [[fold]]. Atomicity of create-exclusive holds
+  // reused (allocation maxes over locks AND commits). Atomicity of create-exclusive holds
   // on HDFS and local filesystems; object stores need a conditional-put
   // or external-lock shim behind the same two calls.
   // ------------------------------------------------------------------
@@ -139,12 +138,6 @@ object DeletionVectors {
       s"commit $n already sealed — duplicate seal indicates a protocol bug")
   }
 
-  private def maxSeq(spark: SparkSession, dir: String): Long = {
-    val ds = committedIds(spark, dir)
-    require(ds.nonEmpty, s"not a DV table (no sealed commits): $dir")
-    ds.max
-  }
-
   /** Create the table: the initial snapshot lands as sequence 0. */
   def initTable(df: DataFrame, dir: String): Unit = {
     val spark = df.sparkSession
@@ -155,17 +148,8 @@ object DeletionVectors {
     seal(spark, dir, 0L)
   }
 
-  /** Append an upsert batch: its rows land as a NEW sequence directory and
-    * the sidecar masks the batch keys below it — prior versions of those
-    * keys are dead at read time without any data file being opened, let
-    * alone rewritten. Returns the batch's sequence number.
-    */
-  def appendUpserts(spark: SparkSession, dir: String,
-      updates: DataFrame, key: String): Long =
-    appendBatch(spark, dir, updates, updates.select(col(key)), key)
-
-  /** The generalized write protocol both [[appendUpserts]] and derived-
-    * view maintenance ([[JoinMv]]) use: `rows` land as a new sequence
+  /** The write protocol derived-view maintenance ([[JoinMv]]) uses:
+    * `rows` land as a new sequence
     * directory and `maskKeys` — which may be a SUPERSET of the rows'
     * keys — are masked below it. A masked key with no replacement row in
     * the batch is thereby deleted; a masked key with one is replaced.
@@ -236,12 +220,9 @@ object DeletionVectors {
   def applyDv(data: DataFrame, dv: DataFrame, key: String,
       maxBroadcastBytes: Long = 256L * 1024 * 1024): DataFrame = {
     // streaming frames can't be size-estimated here (forcing optimizedPlan
-    // below would throw mid-analysis) and the streaming MoR face goes
-    // through StreamingMerge anyway — fail with the pointer, not a stack
+    // below would throw mid-analysis) — fail with a message, not a stack
     // trace from the optimizer
-    require(!dv.isStreaming,
-      "applyDv is batch-only: streaming merge-on-read goes through " +
-        "graft.streaming.StreamingMerge (snapshotWithDeletes/currentStateMor)")
+    require(!dv.isStreaming, "applyDv is batch-only: the mask must not be a stream")
     val mask = dv.groupBy(col(key)).agg(max(col("below_seq")).as("_below"))
     // GATED broadcast (the enrichStream doctrine): the sidecar is
     // deltas-since-last-fold — normally the side a 1000-executor base
@@ -269,61 +250,15 @@ object DeletionVectors {
     applyDv(scanWithPositionMask(spark, dir), readDv(spark, dir, key), key)
       .drop(SeqCol)
 
-  /** Time travel: the table state just after commit `asOf` sealed.
-    * Three filters reconstruct it — data `seq <= asOf` (a PARTITION
-    * filter on the hive layout, so newer sequence directories are never
-    * opened), equality entries `below_seq <= asOf`, position deletes
-    * `at_seq <= asOf` — because every batch kind owns a commit id and
-    * stamps its artifacts with it. No snapshot metadata is stored or
-    * needed: commit ids ARE the version history, which is what makes MoR
-    * time travel free until [[fold]] collapses it (fold trades history
-    * for compaction — readers needing deeper travel keep pre-fold
-    * snapshots via the retention machinery).
-    */
-  def readAsOf(spark: SparkSession, dir: String, key: String,
-      asOf: Long): DataFrame = {
-    val base = scanWithPositionMask(spark, dir, posAsOf = Some(asOf))
-      .filter(col(SeqCol) <= asOf)
-    val dv = readDv(spark, dir, key).filter(col("below_seq") <= asOf)
-    applyDv(base, dv, key).drop(SeqCol)
-  }
-
-  /** NET change feed between two commits, derived from STORAGE — the
-    * inverse of the write protocol: downstream consumers (an
-    * [[IncrementalAgg]] aggregate, a [[JoinMv]] view, a replica)
-    * incrementally maintain from a DV table without ever seeing the
-    * original CDC stream. `_change = 'insert'` rows are new images that
-    * SURVIVE at `toSeq`; `_change = 'delete'` rows are the OLD images of
-    * rows live at `fromSeq` that a mask in (from, to] killed — an upsert
-    * appears as its delete+insert pair, and a row inserted AND deleted
-    * inside the window appears not at all (net semantics: applying the
-    * feed to the as-of-from state reproduces the as-of-to state,
-    * spec-pinned). Work is delta-shaped: the insert side's `seq > from`
-    * filter partition-prunes to the new sequence directories, and the
-    * delete side joins the base against the broadcast-gated NEW-mask key
-    * set — the base never shuffles, output is changed-keys-sized.
-    * Equality protocol only: position deletes are keyless, and a change
-    * FEED is keyed by definition — fold before deriving a feed across a
-    * position-delete window.
-    */
-  def changesBetween(spark: SparkSession, dir: String, key: String,
-      fromSeq: Long, toSeq: Long): DataFrame = {
-    require(fromSeq < toSeq, s"need fromSeq < toSeq, got $fromSeq >= $toSeq")
-    val (fs, _) = hfs(spark, dir)
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$PosDirName")),
-      "changesBetween covers the equality protocol only — fold position " +
-        "deletes before deriving a change feed")
-    val dataDirs = committedIds(spark, dir)
-      .map(n => new org.apache.hadoop.fs.Path(s"$dir/$SeqCol=$n"))
-      .filter(fs.exists)
-    val base = spark.read.option("basePath", dir)
-      .parquet(dataDirs.map(_.toString): _*)
-    changesOf(base, readDv(spark, dir, key), key, fromSeq, toSeq)
-  }
-
-  /** The pure combinator behind [[changesBetween]] (shared with the
-    * oracled catalog query): `data` carries a `seq` column, `dv` the
-    * `(key, below_seq)` entries.
+  /** NET change feed between two commits of a DV table (the oracled
+    * catalog query's combinator): `data` carries a `seq` column, `dv` the
+    * `(key, below_seq)` entries. `_change = 'insert'` rows are new images
+    * that SURVIVE at `toSeq`; `_change = 'delete'` rows are the OLD
+    * images of rows live at `fromSeq` that a mask in (from, to] killed —
+    * an upsert appears as its delete+insert pair, and a row inserted AND
+    * deleted inside the window appears not at all. The delete side joins
+    * the base against the broadcast-gated NEW-mask key set, so the base
+    * never shuffles.
     */
   def changesOf(data: DataFrame, dv: DataFrame, key: String,
       fromSeq: Long, toSeq: Long): DataFrame = {
@@ -356,13 +291,13 @@ object DeletionVectors {
     * carry (`file_path`, `row_index`) as produced by a scan's
     * `_metadata.file_path` / `_metadata.row_index` columns — the same
     * representation the read path re-derives, so the anti join matches
-    * exactly. Positions stay valid until [[fold]]: appends create new
-    * files and never renumber existing ones. Returns the number of
+    * exactly. Positions stay valid as appends create new files and never
+    * renumber existing ones. Returns the number of
     * distinct positions deleted.
     */
   def deletePositions(spark: SparkSession, dir: String,
       positions: DataFrame): Long = {
-    // at_seq = the batch's OWN commit id — the stamp [[readAsOf]]
+    // at_seq = the batch's OWN commit id — the stamp a `posAsOf` scan
     // filters on (visible as of s iff at_seq <= s, the same rule as
     // every other commit)
     val n = allocateCommit(spark, dir)
@@ -424,7 +359,7 @@ object DeletionVectors {
     // lacked (additive schema evolution — the only kind append-only
     // storage can express); without it the scan takes one footer's schema
     // and SILENTLY drops the new column. Old rows read null there,
-    // spec-pinned, and fold materializes the widened schema.
+    // spec-pinned.
     val base = spark.read.option("basePath", dir)
       .option("mergeSchema", "true")
       .parquet(dataDirs.map(_.toString): _*)
@@ -444,44 +379,5 @@ object DeletionVectors {
           "left_anti")
         .drop("_file", "_pos")
     }
-  }
-
-  /** Fold the sidecar into the data — the compaction step that turns the
-    * accumulated merge-on-read state back into a clean COW snapshot: one
-    * table-scale pass materializes the survivors (ordered by `orderBy`
-    * when given, so a Z/Hilbert-clustered table re-compacts onto its
-    * curve — the [[graft.layout.Compaction]] doctrine), rewrites them as
-    * one fresh sequence directory, and drops both the superseded sequence
-    * directories and the sidecar. Returns (surviving rows, sidecar
-    * entries folded).
-    */
-  def fold(spark: SparkSession, dir: String, key: String,
-      orderBy: Seq[Column] = Nil): (Long, Long) = {
-    val dvEntries = readDv(spark, dir, key).count()
-    val survivors0 = read(spark, dir, key)
-    val survivors =
-      (if (orderBy.nonEmpty) survivors0.sortWithinPartitions(orderBy: _*)
-       else survivors0).localCheckpoint() // the sink overwrites dirs the plan reads
-    val n = survivors.count()
-    val newSeq = allocateCommit(spark, dir)
-    survivors.write.mode("overwrite").parquet(s"$dir/$SeqCol=$newSeq")
-    seal(spark, dir, newSeq)
-    val (fs, _) = hfs(spark, dir)
-    // drop superseded sequence dirs — INCLUDING unsealed orphans from
-    // crashed writers (fold doubles as the vacuum), both sidecars (the
-    // rewritten files have fresh ordinals, so stale positions must not
-    // outlive the fold), and the spent locks/markers of folded history
-    seqDirs(spark, dir).filter(_ != newSeq).foreach { sq =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$SeqCol=$sq"), true); ()
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$DvDirName"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$PosDirName"), true)
-    Seq(LocksDirName, CommitsDirName).foreach { ld =>
-      listIds(fs, new org.apache.hadoop.fs.Path(s"$dir/$ld"))
-        .filter(_ != newSeq).foreach { id =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$ld/$id"), false); ()
-        }
-    }
-    (n, dvEntries)
   }
 }

@@ -27,8 +27,8 @@ object RelationalQueries {
   private val dec = DecimalType(18, 2)
 
   /** Rolling z-score stage of q_events_anomaly, reusable over ANY hourly
-    * count frame — the batch aggregate of the fact, or a streaming-
-    * maintained snapshot ([[graft.streaming.StreamingAgg]]): the scorer
+    * count frame — the batch aggregate of the fact, or an incrementally
+    * maintained snapshot ([[graft.ops.IncrementalAgg.applyDelta]]): the scorer
     * never needs the fact, only (event_type, hour_us, n). Baseline
     * frame excludes the current row; all window sums are exact integers;
     * +1.0 variance smoothing keeps a flat baseline finite.
@@ -1881,9 +1881,7 @@ object RelationalQueries {
       DeletionVectors.applyDv(data, dv, "k").drop(DeletionVectors.SeqCol)
     }),
 
-    // TIME TRAVEL over the DV protocol (DeletionVectors.readAsOf's
-    // declarative twin — the FS half, partition-pruned seq dirs and
-    // at_seq-stamped position deletes, is spec-pinned): sequence numbers
+    // TIME TRAVEL over the DV protocol: sequence numbers
     // ARE the version history, so every historical state is three
     // filters away — data seq <= s, masks below_seq <= s. The fixture
     // layers an upsert (seq 1), a delete issued at tip 1 (below 2), and
@@ -1915,8 +1913,7 @@ object RelationalQueries {
     }),
 
     // CHANGE FEED derived FROM the DV table (DeletionVectors.changesOf —
-    // the storage-level inverse of the write protocol; changesBetween's
-    // FS face and the asOf(from) ⊕ feed == asOf(to) law are spec-pinned):
+    // the storage-level inverse of the write protocol):
     // net insert/delete images over the (0, 2] window of the q_dv_asof
     // fixture — upserts emit their delete+insert pair, the %7 images
     // superseded again within the window net out of the insert side, and

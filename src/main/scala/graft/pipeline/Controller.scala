@@ -18,10 +18,7 @@ final case class SweepConfig(
     labelCol: String = "label",
     dataPercentage: Double = 1.0,
     tsv: Boolean = false,
-    minIterations: Int = 2,
-    runLocal: Boolean = true,
     localMaxPartitions: Int = 20,
-    runGlobal: Boolean = true,
     globalMaxPartitions: Int = 10,
     nSplitters: Int = 5,
     maxDepth: Int = -1,
@@ -50,7 +47,7 @@ final case class SweepConfig(
 
 /** The experiment sweep (reference: code/src/controller_loop.py:109-412):
   * for each iteration i (= partition count), run
-  * ingest → min-max → stratified split → preprocess → train (local and/or
+  * ingest → min-max → stratified split → preprocess → train (local and
   * global) → predict → evaluate → sinks, and emit one aggregated report per
   * strategy at the end.
   *
@@ -175,7 +172,14 @@ object Controller {
       Map("partitions" -> iteration.toString)))
   }
 
-  /** The full sweep. Returns all iteration reports (also written to
+  /** First iteration (= partition count) of both strategies' sweeps
+    * (reference: controller_loop.py:158).
+    */
+  val MinIteration = 2
+
+  /** The full sweep: local iterations then global ones, each from
+    * [[MinIteration]] to its max partition count. Returns all iteration
+    * reports (also written to
     * `reportsDir` when configured, one aggregated JSON per strategy —
     * reference: controller_loop.py:381-401).
     */
@@ -183,20 +187,16 @@ object Controller {
     val prepTimer = new Evaluation.StageTimer
     val (train, test, features) = prepare(spark, cfg, prepTimer)
     val results = Seq.newBuilder[IterationResult]
-    if (cfg.runLocal) {
-      (cfg.minIterations to cfg.localMaxPartitions).foreach { i =>
-        results += runLocalIteration(spark, cfg, i, train, test, features)
-      }
+    (MinIteration to cfg.localMaxPartitions).foreach { i =>
+      results += runLocalIteration(spark, cfg, i, train, test, features)
     }
-    if (cfg.runGlobal) {
-      // sampling sigma is a property of the dataset, not the iteration:
-      // compute once for the whole sweep instead of once per fit
-      val dataStd =
-        if (cfg.sampleParams) GlobalTrainer.computeDataStdWide(train, features)
-        else Double.NaN
-      (cfg.minIterations to cfg.globalMaxPartitions).foreach { i =>
-        results += runGlobalIteration(spark, cfg, i, train, test, features, dataStd)
-      }
+    // sampling sigma is a property of the dataset, not the iteration:
+    // compute once for the whole sweep instead of once per fit
+    val dataStd =
+      if (cfg.sampleParams) GlobalTrainer.computeDataStdWide(train, features)
+      else Double.NaN
+    (MinIteration to cfg.globalMaxPartitions).foreach { i =>
+      results += runGlobalIteration(spark, cfg, i, train, test, features, dataStd)
     }
     train.unpersist(); test.unpersist()
     val all = results.result()

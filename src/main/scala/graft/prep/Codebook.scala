@@ -74,16 +74,6 @@ object Codebook {
   def read(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
-  /** Encode a column through the book: unseen categories map to null
-    * (the caller's OOV policy — fail, drop, or a reserved id).
-    */
-  def encode(df: DataFrame, valueCol: String, book: DataFrame,
-      outCol: String): DataFrame =
-    df.join(
-      book.select(col("category").as(s"__cb_$valueCol"), col("id").as(outCol)),
-      col(valueCol).cast("string") === col(s"__cb_$valueCol"), "left_outer")
-      .drop(s"__cb_$valueCol")
-
   /** The hashing-trick companion: bucket = md5(category) mod numBuckets
     * — no book, no state, no OOV (every category lands somewhere,
     * collisions traded for the zero-maintenance id space; the standard

@@ -32,6 +32,11 @@ object Preprocessing {
           max(col(c)).cast("double").as(s"max_$c")))
     val row = df.agg(exprs.head, exprs.tail: _*).head()
     cols.zipWithIndex.map { case (c, i) =>
+      // min is null iff the column has no non-null value: an empty frame
+      // (e.g. a split that drew no train rows) or an all-null column
+      require(!row.isNullAt(2 * i),
+        s"computeMinMax: column '$c' has no non-null value — min-max " +
+          "needs a non-empty input and at least one value per feature column")
       c -> (row.getDouble(2 * i), row.getDouble(2 * i + 1))
     }.toMap
   }
@@ -65,16 +70,6 @@ object Preprocessing {
   /** R1 — round-robin repartition (reference: code/src/preprocessing.py:50-55). */
   def roundRobin(df: DataFrame, numPartitions: Int): DataFrame =
     df.repartition(numPartitions)
-
-  /** P5 — stable surrogate row id (reference:
-    * code/src/global_model_manager.py:130-136): reuse an existing id column
-    * (cast to long) when present, else monotonically_increasing_id —
-    * partition-local generation, no shuffle, unique across the dataset.
-    */
-  def withRowId(df: DataFrame, idCol: String = "row_id"): DataFrame =
-    if (df.columns.contains(idCol))
-      df.withColumn(idCol, col(idCol).cast("long"))
-    else df.withColumn(idCol, monotonically_increasing_id())
 
   /** Guarantee CPU parallelism for compute-heavy downstream stages.
     * Small-byte inputs (one parquet file, a few MB of text) scan as 1-few

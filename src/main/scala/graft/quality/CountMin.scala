@@ -70,16 +70,6 @@ object CountMin {
       .agg(agg(col("__bks")).as("sk"))
   }
 
-  /** Fold per-batch sketches (frames from [[sketch]], or any frame with
-    * an `sk` array column) into one — element-wise exact long sums over
-    * the metadata-scale d·w grid.
-    */
-  def mergeSketches(sketches: DataFrame, depth: Int, width: Int): DataFrame =
-    sketches.select(posexplode(col("sk")).as(Seq("pos", "c")))
-      .groupBy(col("pos")).agg(sum(col("c")).as("c"))
-      .agg(collect_list(struct(col("pos"), col("c"))).as("pc"))
-      .select(transform(array_sort(col("pc")), x => x.getField("c")).as("sk"))
-
   /** Estimated frequency for every probe key: min over depth rows of the
     * key's bucket counter. Pure projection against the broadcast 1-row
     * sketch — the probe set never shuffles.

@@ -12,16 +12,13 @@ import org.apache.spark.sql.functions._
   * a broadcast rate join + a stateless filter — no corpus shuffle, no
   * per-domain repartition.
   *
-  * Two faces, ONE admission definition ([[admit]]):
-  *  - batch ([[rates]] + [[admit]] — the q_select_mix shape): rates
-  *    derived from the corpus being mixed;
-  *  - streaming ([[admitStream]]): rates are FROZEN inputs — the
-  *    production cadence (rates retrain from a reference snapshot at
-  *    rebuild time, not per trigger), and because admission is a pure
-  *    per-row projection + filter against the broadcast rate table,
-  *    a streamed corpus admits EXACTLY the docs its batch twin admits
-  *    (MixingSpec pins set equality) — no state, no watermark, nothing
-  *    to crash-recover.
+  * One admission definition ([[admit]]) serves batch and stream: in
+  * batch ([[rates]] + [[admit]] — the q_select_mix shape) the rates are
+  * derived from the corpus being mixed; on a stream they are FROZEN
+  * inputs, and because admission is a pure per-row projection + filter
+  * against the broadcast rate table, a streamed corpus admits EXACTLY
+  * the docs its batch twin admits (MixingSpec pins set equality) — no
+  * state, no watermark, nothing to crash-recover.
   */
 object Mixing {
 
@@ -86,13 +83,4 @@ object Mixing {
       .withColumn("u", round(u, 6))
       .withColumn("rate", round(col("rate"), 6))
   }
-
-  /** The streaming face: same [[admit]], FROZEN rates. Returns the
-    * admitted stream — compose with any sink; batch-equality is the
-    * contract (MixingSpec), so mixing can move from a nightly batch to
-    * the ingest path without changing what survives.
-    */
-  def admitStream(stream: DataFrame, frozenRates: DataFrame,
-      domainCol: String, idCol: String, seed: Long): DataFrame =
-    admit(stream, frozenRates, domainCol, idCol, seed)
 }

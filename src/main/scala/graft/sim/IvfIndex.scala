@@ -114,17 +114,17 @@ object IvfIndex {
   }
 
   /** The missing last step of the index lifecycle (r16 verdict task 6):
-    * act on the retrain signal [[cellStats]] surfaces. The frozen
+    * act on the retrain signal [[occupancySkew]] surfaces. The frozen
     * quantizer is right at ingest cadence, but a drifted or skewed
     * ingest eventually concentrates vectors in few cells (probe cost)
     * or strands a query's true neighbors across cells trained on a
     * stale distribution (recall). When occupancy skew — max live cell
     * count over the mean across ALL trained cells — reaches `skewBar`
-    * (or `force`, the operator's move after reading cellStats' rising
-    * `mean_dist`, the recall-side signal occupancy alone cannot see),
+    * (or `force`, the operator's move after [[recallProbe]] reads a
+    * recall drop, the signal occupancy alone cannot see),
     * retrain centroids on a `sampleSize`-bounded sample of the STORED
     * live vectors and rebuild the hive layout in one pass. Tombstones
-    * fold away (the rebuild is also a [[compact]]); `nlist` 0 keeps the
+    * fold away in the rebuild; `nlist` 0 keeps the
     * current cell count. Returns the new centroids, or None when the
     * bar did not trip (the index is untouched — a no-op costs one
     * per-cell count aggregate).
@@ -138,7 +138,7 @@ object IvfIndex {
     if (!force && skew < skewBar) return None
     val k = if (nlist > 0) nlist else loadCentroids(spark, dir).size
     // one checkpoint: the staged rebuild replaces the very directories
-    // the live frame reads (the compact doctrine)
+    // the live frame reads
     val live = liveVectors(spark, dir).select(col("vec_id"), col("vec"))
       .localCheckpoint(true)
     val centroids =
@@ -191,7 +191,7 @@ object IvfIndex {
     * `newVectors` against the index's FROZEN centroids (the production
     * discipline: the coarse quantizer retrains at rebuild cadence, not
     * ingest cadence — recall decays only as the ingest distribution
-    * drifts from the trained one, which is what [[cellStats]] watches)
+    * drifts from the trained one, which is what [[recallProbe]] watches)
     * and APPEND them into the existing hive cell layout. Existing vector
     * files are never rewritten (spec-pinned — the
     * [[graft.ops.DeletionVectors]] no-rewrite doctrine applied to index
@@ -207,43 +207,6 @@ object IvfIndex {
     spark.read.parquet(s"$dir/vectors").count() - before
   }
 
-  /** Per-cell occupancy + drift report from the stored index: vector
-    * count and mean L2 distance to the cell's own centroid (unit-sphere
-    * geometry, same as assignment). Rising mean distance or skewed
-    * occupancy is the retrain signal for the frozen quantizer.
-    * Tombstoned vectors are excluded — the report describes what a
-    * probe can actually reach.
-    */
-  def cellStats(spark: SparkSession, dir: String): DataFrame = {
-    val centroids = loadCentroids(spark, dir)
-    val bc = spark.sparkContext.broadcast(centroids.map(_.clone()))
-    val distTo = udf((cell: Int, v: Seq[Double]) => {
-      val u = Knn.unit(v.toArray)
-      val c = bc.value(cell)
-      var d = 0.0; var i = 0
-      while (i < c.length && i < u.length) { val x = u(i) - c(i); d += x * x; i += 1 }
-      math.sqrt(d)
-    })
-    liveVectors(spark, dir)
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vectors"),
-        round(avg(distTo(col("cell"), col("vec"))), 6).as("mean_dist"))
-  }
-
-  /** Remove vectors from search without touching a vector file — ids
-    * land in a `tombstones/` sidecar and every read subtracts them (the
-    * [[graft.text.TextIndex.delete]] doctrine, completing the
-    * persistent-index family's mutable face). Ids are never reused
-    * before a [[compact]]. Returns ids tombstoned.
-    */
-  def delete(spark: SparkSession, dir: String, ids: DataFrame,
-      idCol: String): Long = {
-    val batch = ids.select(col(idCol).cast("long").as("vec_id")).distinct()
-      .localCheckpoint()
-    batch.write.mode("append").parquet(s"$dir/tombstones")
-    batch.count()
-  }
-
   private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -256,24 +219,9 @@ object IvfIndex {
     tombstones(spark, dir).fold(v)(t => v.join(t, Seq("vec_id"), "left_anti"))
   }
 
-  /** Fold tombstones: rewrite surviving vectors once (hive cell layout
-    * preserved), clear the sidecar. Returns (survivors, folded).
-    */
-  def compact(spark: SparkSession, dir: String): (Long, Long) = {
-    val nT = tombstones(spark, dir).map(_.count()).getOrElse(0L)
-    val live = liveVectors(spark, dir)
-      .localCheckpoint() // the sink overwrites dirs the plan reads
-    live.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/vectors")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    (live.count(), nT)
-  }
-
   /** The frozen-quantizer assignment projection: (vec_id, vec, vn, cell),
-    * non-finite norms dropped — shared by batch build/append and
-    * [[streamingIngest]] so every ingest face assigns identically.
+    * non-finite norms dropped — shared by build and append so both
+    * assign identically.
     */
   private def assignCells(vectors: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Array[Double]]): DataFrame = {
@@ -292,144 +240,6 @@ object IvfIndex {
       mode: String): Unit =
     assignCells(vectors, idCol, vecCol, centroids)
       .write.mode(mode).partitionBy("cell").parquet(s"$dir/vectors")
-
-  /** Streaming ingest — the vector-serving face of the same nightly
-    * pipeline [[graft.dedup.LshIndex.streamingIngest]] serves for
-    * near-dups: per trigger, assign the micro-batch against the index's
-    * FROZEN centroids (quantizer retrains at rebuild cadence, not ingest
-    * cadence — [[cellStats]] is the retrain signal) and APPEND into the
-    * hive cell layout; no existing vector file is rewritten. Each epoch
-    * then writes an audit row set (vec_id, cell, epoch) to
-    * `auditDir/epoch=N` — the ingest ledger (which vector arrived when,
-    * into which cell) AND the epoch seal: a re-delivered trigger whose
-    * audit already landed is skipped whole, so restarts never
-    * double-ingest a completed epoch. The vectors append strictly
-    * precedes the seal — the ledger never claims vectors the index
-    * lacks; the remaining crash window (append done, seal missing)
-    * re-runs the trigger and shows up as count(vectors) > audit total
-    * (dedupable offline by vec_id). A probe
-    * in trigger N+1 sees trigger N's vectors through the same
-    * partition-pruned [[search]]; IvfIndexSpec pins byte-equal search
-    * results against a single batch [[append]] of the same data (same
-    * frozen centroids => same cells => same index).
-    *
-    * `maintainEvery` > 0 runs the [[maintain]] beat after every N-th
-    * trigger seals — the [[graft.text.TextIndex.streamingIngest]]
-    * doctrine applied where it matters MOST: a vector stream under its
-    * own appends fragments the hive cell layout (read amplification,
-    * like the lexical case) AND drifts away from the frozen quantizer
-    * (recall degradation, which only this index suffers). The beat
-    * reads both signals and retrains with hysteresis per [[maintain]];
-    * it runs strictly AFTER the epoch seal and never inside an unsealed
-    * epoch (a retrain's staged swap must not race the epoch's own
-    * vector append — single-writer discipline holds because both run
-    * sequentially inside this foreachBatch).
-    *
-    * The beat condition is LEDGER-STATE driven, not positional (r19
-    * ADVICE — the positional form could permanently UNDER-run): a
-    * `_beat_epoch` marker records the last due epoch whose beat
-    * completed, and every trigger — including a replayed one whose
-    * sealed ingest is skipped whole — runs the beat iff the marker lags
-    * the latest due epoch. A crash between the seal and the beat is
-    * therefore CAUGHT UP on replay instead of skipped with the
-    * committed epoch. The remaining window (crash between [[maintain]]
-    * and the marker write) re-runs the beat once on replay: one extra
-    * ledger observation of the same index state — benign, both reads
-    * genuinely happened, and hysteresis counts observations.
-    */
-  def streamingIngest(spark: SparkSession, dir: String, auditDir: String,
-      stream: DataFrame, idCol: String, vecCol: String,
-      maintainEvery: Int = 0,
-      policy: MaintenancePolicy = MaintenancePolicy())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        // RESTART IDEMPOTENCY (r17 ADVICE fix): the audit EPOCH COMMIT
-        // is the seal — gated on the committer's _SUCCESS marker, not
-        // dir existence (Spark creates the dir at job setup; a crash
-        // mid-audit-write would leave it present, the replay would skip
-        // whole, and the count(vectors)-vs-audit-total reconciliation
-        // would be permanently broken). A crashed partial audit dir is
-        // cleared so the replay's mode("error") write can land.
-        val epochDir = s"$auditDir/epoch=$epochId"
-        if (!graft.io.EpochCommit.committed(spark, epochDir)) {
-          graft.io.EpochCommit.clearPartial(spark, epochDir)
-          // one checkpoint: the append and the ledger must record the
-          // SAME assignment (a lazy plan re-evaluated twice could in
-          // principle differ only in row order, but pinning it is free)
-          val assigned = assignCells(batch, idCol, vecCol,
-            loadCentroids(spark, dir)).localCheckpoint()
-          // vectors FIRST, ledger-seal SECOND: the ledger must never
-          // claim an ingest the index lacks (a crash in between re-runs
-          // the trigger and re-appends — duplicate vector rows for that
-          // epoch, visible as count(vectors) exceeding the audit total,
-          // dedupable offline by vec_id; the reverse order would lose the
-          // epoch's vectors PERMANENTLY while the audit says they
-          // arrived)
-          assigned.write.mode("append").partitionBy("cell")
-            .parquet(s"$dir/vectors")
-          assigned.select(col("vec_id"), col("cell"))
-            .withColumn("epoch", lit(epochId))
-            .write.mode("error").parquet(epochDir)
-          graft.io.EpochCommit.seal(spark, epochDir)
-          // free the per-trigger checkpoint now, not at GC
-          assigned.queryExecution.logical.collectFirst {
-            case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-          }.foreach(_.unpersist(blocking = false))
-        }
-        // OUTSIDE the idempotency guard: a replayed trigger skips the
-        // sealed ingest but still settles any beat the crash orphaned
-        runDueBeat(spark, dir, epochId, maintainEvery, policy)
-        ()
-      }
-      .start()
-
-  private def beatMarkerPath(dir: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/_beat_epoch")
-
-  private[sim] def lastBeatEpoch(spark: SparkSession, dir: String): Option[Long] = {
-    val p = beatMarkerPath(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        // a torn marker reads as "never ran" — worst case one duplicate
-        // maintain observation, never a lost beat
-        s.toLongOption
-      } finally in.close()
-    }
-  }
-
-  private def writeBeatMarker(spark: SparkSession, dir: String,
-      epoch: Long): Unit = {
-    val p = beatMarkerPath(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val o = fs.create(p, true)
-    try o.write(epoch.toString.getBytes("UTF-8")) finally o.close()
-  }
-
-  /** Run the [[maintain]] beat iff one is DUE and not yet recorded:
-    * epoch e is due when (e+1) % maintainEvery == 0; the `_beat_epoch`
-    * marker holds the last due epoch whose beat completed. Comparing
-    * marker-vs-latest-due (instead of firing positionally on the
-    * current trigger) is what lets a replayed session catch up a beat
-    * that a crash orphaned between the epoch seal and the maintain call
-    * (see [[streamingIngest]]). Exposed private[sim] for the spec.
-    */
-  private[sim] def runDueBeat(spark: SparkSession, dir: String,
-      epochId: Long, maintainEvery: Int,
-      policy: MaintenancePolicy): Unit = {
-    if (maintainEvery <= 0) return
-    val due = ((epochId + 1) / maintainEvery) * maintainEvery - 1
-    if (due < 0) return
-    if (lastBeatEpoch(spark, dir).forall(_ < due)) {
-      maintain(spark, dir, policy)
-      writeBeatMarker(spark, dir, due)
-    }
-  }
 
   def loadCentroids(spark: SparkSession, dir: String): Seq[Array[Double]] =
     spark.read.parquet(s"$dir/centroids")
@@ -468,7 +278,7 @@ object IvfIndex {
   }
 
   /** The recall-side health signal completing the maintenance loop:
-    * [[cellStats]] sees occupancy skew (the capacity signal), this
+    * [[occupancySkew]] sees the capacity signal, this
     * measures what skew actually COSTS — search quality. Samples
     * `sampleN` stored live vectors as self-queries by an md5-ordered
     * deterministic draw (the [[graft.quality.Mixing.drawU]] doctrine,
@@ -479,7 +289,7 @@ object IvfIndex {
     * [[search]] at `nprobe`, and
     * compares against the exact cosine truth over the stored live set.
     * One summary row: (n_queries, k, nprobe, hits, expected, recall) —
-    * recall dropping across probes while cellStats skew rises is the
+    * recall dropping across probes while skew rises is the
     * [[retrainAndCompact]] trigger; a post-retrain probe confirms
     * recovery (the IvfIndexSpec drift scenario, now a first-class op).
     *
@@ -563,7 +373,7 @@ object IvfIndex {
   }
 
   /** The closed maintenance loop (r17 verdict task 1): the three
-    * lifecycle primitives — [[cellStats]]/[[occupancySkew]] (capacity),
+    * lifecycle primitives — [[occupancySkew]] (capacity),
     * [[recallProbe]] (quality), [[retrainAndCompact]] (the move) —
     * composed into the policy a 100 TB index actually runs on a
     * schedule, instead of an operator reading two signals and firing

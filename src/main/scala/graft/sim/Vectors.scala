@@ -34,11 +34,6 @@ object Vectors {
   def fastDot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dotProduct(a, b)
 
-  def cosineSimilarity(a: Column, b: Column): Column = {
-    val denom = norm(a) * norm(b)
-    when(denom > 0, dot(a, b) / denom).otherwise(lit(0.0))
-  }
-
   /** Cosine from a precomputed-norm layout: sim = dot/(na*nb). Use when the
     * norms were computed once per row before a pairwise join — recomputing
     * ||v|| per PAIR is O(pairs x dim) wasted work at any scale.
@@ -55,8 +50,4 @@ object Vectors {
     */
   def finiteNorm(n: Column): Column =
     !isnan(n) && n < lit(Double.PositiveInfinity)
-
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 }

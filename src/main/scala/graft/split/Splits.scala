@@ -6,16 +6,6 @@ import org.apache.spark.sql.functions._
 /** Train/test split operators (reference: code/src/utilities.py:36-76). */
 object Splits {
 
-  /** T1 — random split via a rand(seed) threshold column
-    * (reference: code/src/utilities.py:36-50). Both halves re-evaluate the
-    * same seeded rand so the split is consistent without caching.
-    */
-  def randomSplit(df: DataFrame, trainFraction: Double, seed: Long): (DataFrame, DataFrame) = {
-    val withRand = df.withColumn("_rand", rand(seed))
-    (withRand.filter(col("_rand") <= trainFraction).drop("_rand"),
-     withRand.filter(col("_rand") > trainFraction).drop("_rand"))
-  }
-
   /** T2 — stratified split: per-class Bernoulli sample (map-side, no shuffle)
     * for train; test = anti-join complement on all columns
     * (reference: code/src/utilities.py:52-76, seed 123 at
@@ -23,7 +13,7 @@ object Splits {
     *
     * NOTE (kept from the reference, flagged in SURVEY §7): the
     * anti-join-on-all-columns complement drops duplicate rows from the test
-    * set. `hashSplit` below is the scale-safe idiom.
+    * set. `hashSplitColumn` below is the scale-safe idiom.
     */
   def stratifiedSplit(
       df: DataFrame,
@@ -46,11 +36,5 @@ object Splits {
     val cutoff = "0123456789abcdef".charAt(sixteenths).toString
     when(substring(md5(col(keyCol).cast("string")), 1, 1) < lit(cutoff), lit("train"))
       .otherwise(lit("test"))
-  }
-
-  def hashSplit(df: DataFrame, keyCol: String, sixteenths: Int): (DataFrame, DataFrame) = {
-    val tagged = df.withColumn("_split", hashSplitColumn(keyCol, sixteenths))
-    (tagged.filter(col("_split") === "train").drop("_split"),
-     tagged.filter(col("_split") === "test").drop("_split"))
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -12,16 +10,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * fingerprint, so admission decisions happen per trigger with no corpus
   * rescan at all. Spark's own `dropDuplicates` on a stream keeps silent
   * per-key state too; this operator exists because a pipeline wants the
-  * dup ACCOUNTING (who was admitted, how many copies arrived) and a
-  * retention-bounded variant — neither expressible with the built-in.
+  * dup ACCOUNTING (who was admitted, how many copies arrived), which the
+  * built-in does not expose.
   */
 object DedupStreams {
 
   /** One fingerprinted document arrival. */
   final case class FpDoc(fp: String, doc_id: Long)
-
-  /** One fingerprinted arrival with an event time (TTL variant). */
-  final case class FpDocTs(fp: String, doc_id: Long, ts: Timestamp)
 
   /** Per-fingerprint admission state: first-arrived id + copies seen. */
   final case class FpState(keep_id: Long, cnt: Long)
@@ -36,9 +31,8 @@ object DedupStreams {
 
   /** Cross-trigger exact dedup with unbounded state — the right tool when
     * the fingerprint universe is bounded (a curated corpus) or the stream
-    * is replayed in full. For open-ended ingest use
-    * [[admitFirstEventTime]], which expires state on the data clock.
-    * Runs identically over a batch Dataset (one invocation per group →
+    * is replayed in full. Runs identically over a batch Dataset (one
+    * invocation per group →
     * exactly [[graft.dedup.Dedup.exactGroups]], spec-pinned).
     */
   def admitFirst(spark: SparkSession, docs: Dataset[FpDoc]): Dataset[Admission] = {
@@ -56,63 +50,6 @@ object DedupStreams {
             prev.map(_.cnt).getOrElse(0L) + cnt)
           state.update(next)
           Iterator.single(Admission(fp, next.keep_id, next.cnt))
-      }
-  }
-
-  /** Admission row of the TTL variant: `expired = true` marks the final
-    * accounting row emitted when the watermark passed the fingerprint's
-    * last sighting + TTL and its state was dropped — after which the SAME
-    * content arriving again is admitted as new (dedup-within-retention,
-    * the production semantics: an ingest pipeline dedups against the
-    * recent window it can afford to remember, not all of history).
-    */
-  final case class AdmissionTtl(
-      fp: String, keep_id: Long, dup_cnt: Long, expired: Boolean)
-
-  /** Event-time-TTL exact dedup: state for a fingerprint idle past
-    * `idleTtlMinutes` (in EVENT time) is expired by the watermark, so
-    * state size is bounded by the retention window's content volume, not
-    * the stream's lifetime — and a stalled source cannot evict anything
-    * (the data clock drives expiry, the
-    * [[EventStreams.runningUserCountsEventTime]] doctrine). Requires an
-    * upstream watermark on `ts` (set here).
-    */
-  def admitFirstEventTime(
-      spark: SparkSession,
-      docs: Dataset[FpDocTs],
-      idleTtlMinutes: Long = 24 * 60,
-      watermarkDelay: String = "30 minutes"): Dataset[AdmissionTtl] = {
-    import spark.implicits._
-    val ttlMs = idleTtlMinutes * 60000L
-    docs
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.fp)
-      .flatMapGroupsWithState[(FpState, Long), AdmissionTtl](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (fp: String, batch: Iterator[FpDocTs],
-            state: GroupState[(FpState, Long)]) =>
-          if (state.hasTimedOut) {
-            val (s, _) = state.get
-            state.remove()
-            Iterator.single(AdmissionTtl(fp, s.keep_id, s.cnt, expired = true))
-          } else {
-            var cnt = 0L
-            var mn = Long.MaxValue
-            var lastTs = Long.MinValue
-            batch.foreach { d =>
-              cnt += 1
-              if (d.doc_id < mn) mn = d.doc_id
-              lastTs = math.max(lastTs, d.ts.getTime)
-            }
-            val prev = state.getOption
-            val next = (FpState(prev.map(_._1.keep_id).getOrElse(mn),
-              prev.map(_._1.cnt).getOrElse(0L) + cnt),
-              math.max(prev.map(_._2).getOrElse(Long.MinValue), lastTs))
-            state.update(next)
-            state.setTimeoutTimestamp(next._2 + ttlMs)
-            Iterator.single(
-              AdmissionTtl(fp, next._1.keep_id, next._1.cnt, expired = false))
-          }
       }
   }
 }

@@ -26,97 +26,6 @@ object EventStreams {
       user_id: Long, n_events: Long, session_start: Timestamp,
       session_end: Timestamp, closed: Boolean)
 
-  /** Tumbling-window counts/sums per event type with a watermark bounding
-    * late data and state size (the streaming twin of q_events_window).
-    */
-  def windowedAgg(
-      events: DataFrame,
-      windowDuration: String = "1 hour",
-      watermarkDelay: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDuration), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("event_type"), col("n"), col("total_value"))
-
-  /** Gap-based sessionization with the built-in session_window (the
-    * streaming twin of q_events_sessions' 30-minute-gap rule).
-    */
-  def sessionWindows(
-      events: DataFrame,
-      gap: String = "30 minutes",
-      watermarkDelay: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("user_id"), col("n_events"), col("total_value"))
-
-  /** Custom per-key state: running event counts per user via
-    * mapGroupsWithState with processing-time timeout — the
-    * KeyValueGroupedDataset state API the built-ins can't express.
-    */
-  def runningUserCounts(
-      spark: SparkSession,
-      events: Dataset[Event],
-      timeout: GroupStateTimeout = GroupStateTimeout.NoTimeout)
-      : Dataset[(Long, Long)] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[Long, (Long, Long)](timeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[Long]) =>
-          val newCount = state.getOption.getOrElse(0L) + batch.size
-          state.update(newCount)
-          (userId, newCount)
-      }
-  }
-
-  /** Running-count state row: `expired = true` marks the final count emitted
-    * when the watermark passed the user's last event + TTL and the state was
-    * dropped.
-    */
-  final case class UserCount(user_id: Long, n_events: Long, expired: Boolean)
-
-  /** Event-time variant of [[runningUserCounts]]: state for a user idle past
-    * `idleTtlMinutes` (in EVENT time) is expired by the watermark, emitting
-    * a final `expired = true` row — so state size is bounded by the active-
-    * user set, not the all-time user set, and a stalled source cannot evict
-    * anyone (the data clock, not the wall clock, drives expiry). The
-    * production-correct form of a running profile at 100 TB/day event
-    * volume. Requires a watermark on `ts` upstream (set here).
-    */
-  def runningUserCountsEventTime(
-      spark: SparkSession,
-      events: Dataset[Event],
-      idleTtlMinutes: Long = 60,
-      watermarkDelay: String = "30 minutes"): Dataset[UserCount] = {
-    import spark.implicits._
-    val ttlMs = idleTtlMinutes * 60000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), UserCount](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val (n, _) = state.get
-            state.remove()
-            Iterator.single(UserCount(userId, n, expired = true))
-          } else {
-            var (n, lastTs) = state.getOption.getOrElse((0L, Long.MinValue))
-            batch.foreach { e => n += 1; lastTs = math.max(lastTs, e.ts.getTime) }
-            state.update((n, lastTs))
-            state.setTimeoutTimestamp(lastTs + ttlMs)
-            Iterator.single(UserCount(userId, n, expired = false))
-          }
-      }
-  }
-
   /** Open-session state carried between triggers. */
   final case class SessionState(start: Long, end: Long, n: Long, total: Double)
 
@@ -187,87 +96,6 @@ object EventStreams {
       }
   }
 
-  /** Funnel-stage state: first qualifying time per stage (-1 = not yet). */
-  final case class FunnelState(tView: Long, tClick: Long, done: Boolean)
-
-  /** A user advancing to funnel stage 1 (view), 2 (click), 3 (purchase). */
-  final case class FunnelUpdate(user_id: Long, stage: Int, at: Timestamp)
-
-  /** STREAMING conversion funnel (view → click → purchase with a
-    * per-stage time window): emits one row the moment a user advances a
-    * stage, instead of recomputing the whole funnel per batch. Per-user
-    * state is three timestamps; event-time timeout removes it once the
-    * watermark passes tView + 2·window (after which no further
-    * advancement is possible), so state is bounded by ACTIVE funnels, not
-    * users ever seen.
-    *
-    * Semantics match the batch q_events_funnel fold exactly when per-user
-    * event-time order is preserved across triggers (events within one
-    * trigger are sorted; a stage-1 event arriving in a LATER trigger than
-    * an already-rejected stage-2 event cannot retroactively unlock it —
-    * streaming can't rewind emissions; the exact delta is pinned by
-    * EventStreamsSpec's adversarial-trigger test). Batch mode hands each
-    * key all its events at once, so the same fold IS the batch funnel;
-    * pass `setTimeouts = false` there (no watermark exists to time
-    * against).
-    *
-    * Bounded-state trade-off: the event-time timeout removes state for
-    * COMPLETED funnels too — a view arriving after the watermark passes
-    * tView + 2·window re-opens the funnel and re-emits stage 1 (and
-    * later stages) for the same user, where the batch fold (which keys
-    * everything to the user's first view ever) would not. Keeping done
-    * markers forever would make state grow with users-ever-seen instead
-    * of active funnels — the wrong trade at 100 TB/day; deduplicate
-    * per-user stages downstream if exactly-once-per-user emission
-    * matters. Pinned by the post-expiry re-open spec.
-    */
-  def funnelStages(
-      spark: SparkSession,
-      events: Dataset[Event],
-      windowMinutes: Long = 1440,
-      watermarkDelay: String = "1 hour",
-      setTimeouts: Boolean = true): Dataset[FunnelUpdate] = {
-    import spark.implicits._
-    val winMs = windowMinutes * 60000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var s = state.getOption.getOrElse(FunnelState(-1L, -1L, false))
-            val out = Seq.newBuilder[FunnelUpdate]
-            batch.toArray.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-              val t = e.ts.getTime
-              e.event_type match {
-                case "view" if s.tView < 0 =>
-                  s = s.copy(tView = t)
-                  out += FunnelUpdate(userId, 1, e.ts)
-                case "click" if s.tView >= 0 && s.tClick < 0 &&
-                    t >= s.tView && t < s.tView + winMs =>
-                  s = s.copy(tClick = t)
-                  out += FunnelUpdate(userId, 2, e.ts)
-                case "purchase" if s.tClick >= 0 && !s.done &&
-                    t >= s.tClick && t < s.tClick + winMs =>
-                  s = s.copy(done = true)
-                  out += FunnelUpdate(userId, 3, e.ts)
-                case _ => ()
-              }
-            }
-            // state survives completion UNTIL the event-time timeout: a
-            // duplicate view inside the window cannot re-open the funnel,
-            // but one arriving after expiry re-emits stage 1 (the
-            // documented bounded-state trade-off — see scaladoc)
-            state.update(s)
-            if (setTimeouts && s.tView >= 0)
-              state.setTimeoutTimestamp(s.tView + 2 * winMs)
-            out.result().iterator
-          }
-      }
-  }
-
   /** Stream-stream interval join: each purchase attributed to every click
     * by the same user in the preceding `horizonMinutes` (event time). The
     * canonical two-stream join shape: BOTH sides watermarked and the join
@@ -323,35 +151,6 @@ object EventStreams {
         col("click_ts"), col("purchase_ts"), col("value"))
   }
 
-  /** Streaming exact dedup — the streaming twin of the batch
-    * `Dedup.exactGroups` keep-first semantics: a row whose `keyCols` were
-    * already seen is dropped, and the dedup state is BOUNDED by the
-    * watermark (`dropDuplicatesWithinWatermark`), so at 100 TB/day the
-    * state holds only the watermark window's keys, not the all-time key
-    * set. Exactly the shape for at-least-once sources (Kafka replays,
-    * retried file batches) feeding a training-data lake.
-    */
-  def dedupStream(
-      events: DataFrame,
-      keyCols: Seq[String],
-      watermarkDelay: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Streaming model scoring: apply a fitted Proximity forest to a stream
-    * of feature rows (broadcast model, stateless map — scales with input
-    * rate, exactly-once under any sink that supports it). The same
-    * `predict` contract as the batch path.
-    */
-  def scoreStream(
-      spark: SparkSession,
-      forest: graft.tree.ProximityForestModel,
-      stream: DataFrame,
-      featureCols: Seq[String],
-      predictionCol: String = "prediction"): DataFrame =
-    graft.local.LocalTrainer.predict(spark, forest, stream, featureCols, predictionCol)
-
   /** Stream–static enrich: decorate each event with a slowly-changing
     * reference dimension via a broadcast left-outer join — the standard
     * firehose-decoration shape. Stateless (no watermark, no streaming
@@ -373,20 +172,4 @@ object EventStreams {
     val side = if (est <= maxBroadcastBytes) broadcast(dim) else dim
     events.join(side, Seq(key), "left_outer")
   }
-
-  /** File-source entry: stream the events table layout from a directory of
-    * parquet (the production shape: object-store prefix, many files).
-    */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-      .parquet(dir)
-
-  /** Parquet sink with checkpointing — the durable end of the pipeline. */
-  def writeParquetStream(df: DataFrame, outDir: String, checkpointDir: String) =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet")
 }

@@ -1,107 +1,22 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
-import org.apache.spark.sql.Row
 
-/** Streaming MERGE into the lake: a CDC stream (`op` = 'd' deletes its
-  * key, anything else upserts) maintains a queryable parquet snapshot via
-  * `foreachBatch` → [[graft.ops.MergeOps.applyChanges]] — tying the batch
-  * CDC primitive to the ingest path, so the snapshot is always one merged
-  * table, not an ever-growing change log the reader must replay.
-  *
-  * Snapshot layout: `tableDir/v=<n>/` per committed batch plus a `_latest`
-  * pointer file written AFTER the version commits — readers resolve the
-  * pointer and never observe a half-written version (the local-parquet
-  * stand-in for a table format's transactional commit; swap the pointer
-  * write for a Delta/Iceberg commit on a real lake). Only the previous
-  * version is read while the new one writes, so no read-overwrite cycle.
-  *
-  * Scale shape: each trigger does ONE pass over the current base with the
-  * batch's distinct key set anti-joined (broadcast for delta-sized
-  * batches — see MergeOps' scaladoc). The per-batch collapse-to-latest
-  * window partitions BY KEY over the micro-batch only. At 100 TB the full
-  * base rewrite per trigger is the part a table format replaces with
-  * file-level copy-on-write; the MERGE plan itself is already the right
-  * one, and [[graft.layout.Compaction]] handles the files it would leave.
+/** Retention for a versioned table (`tableDir/v=<n>/` per committed
+  * batch): which versions a vacuum may reclaim.
   */
 object StreamingMerge {
 
-  /** Resolve the committed snapshot, if any. */
-  def currentSnapshot(spark: SparkSession, tableDir: String): Option[DataFrame] = {
-    val ptr = new java.io.File(tableDir, "_latest")
-    if (!ptr.exists()) None
-    else {
-      val v = new String(java.nio.file.Files.readAllBytes(ptr.toPath)).trim
-      Some(spark.read.parquet(s"$tableDir/$v"))
-    }
-  }
-
-  /** All committed versions present on disk, ascending. A `v=<n>` dir
-    * without a `_SUCCESS` marker is an in-flight or failed write — not a
-    * committed version, never listed.
-    */
-  def listVersions(tableDir: String): Seq[Long] = {
-    val dirs = Option(new java.io.File(tableDir).listFiles()).getOrElse(Array.empty)
-    dirs.toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("v=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("v=").toLong)
-      .sorted
-  }
-
-  /** Time travel: read the snapshot AS OF a committed version — the
-    * reproducibility primitive (re-run yesterday's training mix against
-    * yesterday's corpus). Versions are immutable once committed, so this
-    * is a plain parquet scan of one version dir; only [[vacuum]] removes
-    * them.
-    */
-  def snapshotAt(spark: SparkSession, tableDir: String, version: Long): DataFrame = {
-    require(listVersions(tableDir).contains(version),
-      s"version $version not committed in $tableDir (have ${listVersions(tableDir).mkString(",")})")
-    spark.read.parquet(s"$tableDir/v=$version")
-  }
-
-  /** Retention: delete all but the newest `keepLast` committed versions —
-    * the storage-reclaim half of the maintenance loop (MERGE accumulates
-    * a full snapshot per trigger; without vacuum the table's footprint is
-    * versions × size). The version `_latest` resolves to is always kept
-    * regardless of `keepLast`, so a reader holding the pointer can never
-    * lose its data out from under it. Returns the versions deleted.
-    */
-  def vacuum(tableDir: String, keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1: $keepLast")
-    val versions = listVersions(tableDir)
-    val pinned = {
-      val ptr = new java.io.File(tableDir, "_latest")
-      if (!ptr.exists()) None
-      else Some(new String(java.nio.file.Files.readAllBytes(ptr.toPath))
-        .trim.stripPrefix("v=").toLong)
-    }
-    val doomed = versions.dropRight(keepLast).filterNot(pinned.contains)
-    doomed.foreach { v =>
-      val dir = new java.io.File(tableDir, s"v=$v")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(dir)
-    }
-    doomed
-  }
-
   /** The PLAN half of retention, as a DataFrame over a version report
-    * (one row per committed version — the shape [[listVersions]] +
-    * footer stats provide), mirroring [[graft.layout.Compaction]]'s
-    * plan/execute split: a version is kept if it is among the newest
-    * `keepLast` OR its commit timestamp is within the time-travel window
-    * (`>= minTs`); everything else is marked delete, with its bytes as
-    * the reclaim estimate. Metadata scale (one row per VERSION), so the
-    * unpartitioned max-version window is a few-hundred-row frame at
-    * worst; [[vacuum]] additionally pins the `_latest` target at execute
-    * time.
+    * (one row per committed version), mirroring
+    * [[graft.layout.Compaction]]'s plan/execute split: a version is kept
+    * if it is among the newest `keepLast` OR its commit timestamp is
+    * within the time-travel window (`>= minTs`); everything else is
+    * marked delete, with its bytes as the reclaim estimate. Metadata
+    * scale (one row per VERSION), so the unpartitioned max-version window
+    * is a few-hundred-row frame at worst.
     */
   def retentionPlan(report: DataFrame, versionCol: String, tsCol: String,
       keepLast: Int, minTs: java.sql.Timestamp): DataFrame = {
@@ -111,184 +26,4 @@ object StreamingMerge {
       when(col(versionCol) > maxV - keepLast || col(tsCol) >= lit(minTs),
         lit("keep")).otherwise(lit("delete")))
   }
-
-  /** Collapse a micro-batch to its LATEST change per key ((seqCol desc,
-    * op desc) — delete beats upsert on a true tie), satisfying MergeOps'
-    * one-change-per-key caller contract even when a trigger catches
-    * several changes to one row. Window partitions by key WITHIN the
-    * batch — delta-sized, never the base.
-    */
-  def collapseBatch(batch: DataFrame, key: String, seqCol: String,
-      opCol: String = "op"): DataFrame = {
-    val w = Window.partitionBy(col(key))
-      .orderBy(col(seqCol).desc, col(opCol).desc)
-    batch.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", seqCol)
-  }
-
-  /** Commit a merged frame as `v=<batchId>` and atomically move the
-    * `_latest` pointer onto it (write-then-rename: readers resolve either
-    * the old committed version or the new one, never a torn pointer).
-    */
-  private def commitVersion(merged: DataFrame, tableDir: String,
-      batchId: Long): Unit = {
-    val version = s"v=$batchId"
-    merged.write.mode("overwrite").parquet(s"$tableDir/$version")
-    val tmp = new java.io.File(tableDir, s"_latest.tmp$batchId").toPath
-    java.nio.file.Files.write(tmp,
-      version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, new java.io.File(tableDir, "_latest").toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Apply one CDC batch to the snapshot: collapse → merge → commit next
-    * version → move the `_latest` pointer. Exposed for batch-mode use and
-    * for the stream/batch agreement spec.
-    */
-  def applyBatch(spark: SparkSession, batch: DataFrame, key: String,
-      seqCol: String, tableDir: String, batchId: Long,
-      opCol: String = "op"): Unit = {
-    if (!batch.isEmpty) {
-      val collapsed = collapseBatch(batch, key, seqCol, opCol)
-      val merged = currentSnapshot(spark, tableDir) match {
-        case Some(base) => graft.ops.MergeOps.applyChanges(base, collapsed, key, opCol)
-        case None => collapsed.filter(col(opCol) =!= "d").drop(opCol)
-      }
-      commitVersion(merged, tableDir, batchId)
-    }
-  }
-
-  // ---------------------------------------------------------------------
-  // Merge-on-read extension: delete-only triggers append a PENDING
-  // deletion-vector sidecar (`_dv/d=<batchId>/`, the streaming face of
-  // [[graft.ops.DeletionVectors]]) instead of rewriting the snapshot —
-  // the dominant trigger shape of retraction/erasure streams costs
-  // sidecar-sized IO, and the table-scale rewrite happens only when an
-  // upsert-bearing trigger (or a scheduled one) folds the pending mask.
-  // Readers stay current by COMPOSING: committed snapshot ⊖ pending DVs,
-  // one broadcast anti-join — never a wait for the next full commit.
-  // ---------------------------------------------------------------------
-
-  /** Pending (not yet folded) delete-batch ids, ascending; `_SUCCESS`
-    * markers gate half-written sidecars exactly as [[listVersions]] gates
-    * versions.
-    */
-  def pendingDeleteBatches(tableDir: String): Seq[Long] = {
-    val dv = new java.io.File(tableDir, "_dv")
-    Option(dv.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("d=") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getName.stripPrefix("d=").toLong)
-      .sorted
-  }
-
-  /** Read state AS OF a committed version COMPOSED with the pending
-    * deletes that arrived after it (up to `asOfBatch`, default all):
-    * time travel that also sees the retractions a merge-on-read stream
-    * has accepted but not yet folded. `version ⊖ {d : version < d ≤
-    * asOfBatch}` — the sidecars are delta-sized, so the subtraction is
-    * one broadcast anti-join against the snapshot scan.
-    */
-  def snapshotWithDeletes(spark: SparkSession, tableDir: String,
-      version: Long, key: String,
-      asOfBatch: Long = Long.MaxValue): DataFrame = {
-    val snap = snapshotAt(spark, tableDir, version)
-    val ds = pendingDeleteBatches(tableDir)
-      .filter(d => d > version && d <= asOfBatch)
-    if (ds.isEmpty) snap
-    else {
-      val keys = spark.read
-        .parquet(ds.map(d => s"$tableDir/_dv/d=$d"): _*)
-        .select(col(key)).distinct()
-      snap.join(broadcast(keys), Seq(key), "left_anti")
-    }
-  }
-
-  /** The current LOGICAL state of a merge-on-read table: latest committed
-    * snapshot minus every pending deletion vector.
-    */
-  def currentStateMor(spark: SparkSession, tableDir: String,
-      key: String): Option[DataFrame] = {
-    val ptr = new java.io.File(tableDir, "_latest")
-    if (!ptr.exists()) None
-    else {
-      val v = new String(java.nio.file.Files.readAllBytes(ptr.toPath))
-        .trim.stripPrefix("v=").toLong
-      Some(snapshotWithDeletes(spark, tableDir, v, key))
-    }
-  }
-
-  /** Merge-on-read batch apply: a delete-only trigger writes ONLY its
-    * sidecar (data files byte-identical — spec-pinned); any trigger
-    * carrying upserts folds the pending mask and the batch into the next
-    * full version, then clears the folded sidecars. Ordering is honored
-    * by construction: pending deletes predate the current batch, so they
-    * subtract from the base BEFORE the batch applies — a re-insert of a
-    * pending-deleted key in this batch wins, exactly as it would have in
-    * version-per-trigger COW.
-    */
-  def applyBatchMor(spark: SparkSession, batch: DataFrame, key: String,
-      seqCol: String, tableDir: String, batchId: Long,
-      opCol: String = "op"): Unit = {
-    if (batch.isEmpty) return
-    val collapsed = collapseBatch(batch, key, seqCol, opCol)
-    val base0 = currentSnapshot(spark, tableDir)
-    val deleteOnly = collapsed.filter(col(opCol) =!= "d").isEmpty
-    if (deleteOnly && base0.isDefined) {
-      collapsed.select(col(key)).distinct()
-        .write.mode("overwrite").parquet(s"$tableDir/_dv/d=$batchId")
-    } else {
-      val pend = pendingDeleteBatches(tableDir)
-      val base = (base0, pend) match {
-        case (Some(b), ds) if ds.nonEmpty =>
-          val keys = spark.read
-            .parquet(ds.map(d => s"$tableDir/_dv/d=$d"): _*)
-            .select(col(key)).distinct()
-          Some(b.join(broadcast(keys), Seq(key), "left_anti"))
-        case (b, _) => b
-      }
-      val merged = base match {
-        case Some(b) => graft.ops.MergeOps.applyChanges(b, collapsed, key, opCol)
-        case None => collapsed.filter(col(opCol) =!= "d").drop(opCol)
-      }
-      commitVersion(merged, tableDir, batchId)
-      pend.filter(_ <= batchId).foreach { d =>
-        val dir = new java.io.File(tableDir, s"_dv/d=$d")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(dir)
-      }
-    }
-  }
-
-  /** The merge-on-read stream writer: [[mergeStream]] with delete-only
-    * triggers landing as pending deletion vectors.
-    */
-  def mergeStreamMor(changes: DataFrame, key: String, seqCol: String,
-      tableDir: String, checkpointDir: String,
-      opCol: String = "op"): DataStreamWriter[Row] =
-    changes.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchMor(batch.sparkSession, batch, key, seqCol, tableDir, batchId, opCol)
-      }
-
-  /** The stream writer: wire a CDC-shaped stream into the maintained
-    * snapshot. `changes` must carry `key`, `seqCol`, `opCol`, and the base
-    * payload columns; start + awaitTermination are the caller's.
-    */
-  def mergeStream(changes: DataFrame, key: String, seqCol: String,
-      tableDir: String, checkpointDir: String,
-      opCol: String = "op"): DataStreamWriter[Row] =
-    changes.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, batch, key, seqCol, tableDir, batchId, opCol)
-      }
 }

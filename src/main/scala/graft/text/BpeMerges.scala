@@ -10,7 +10,6 @@ package graft.text
   * SAME table — the SemanticCentroids frozen-constant technique.
   */
 object BpeMerges {
-  val numMerges: Int = 40
   val values: Array[(String, String)] = Array(
     ("e", "r"),
     ("i", "n"),

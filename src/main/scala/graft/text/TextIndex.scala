@@ -142,14 +142,6 @@ object TextIndex {
         round(coalesce(col("__score"), lit(0.0)), 6).as("bm25"))
   }
 
-  /** Serving shape: the k best-scoring documents (TakeOrdered — no
-    * global sort materializes).
-    */
-  def topK(spark: SparkSession, dir: String, terms: DataFrame, k: Int,
-      termCol: String = "term"): DataFrame =
-    scoreAll(spark, dir, terms, termCol)
-      .orderBy(desc("bm25"), asc("id")).limit(k)
-
   /** Compaction policy for [[maintain]]. `deadRatioBar` bounds the
     * tombstoned fraction of the stored spine (read amplification: every
     * score subtracts the sidecar twice — postings AND spine — and the
@@ -188,56 +180,6 @@ object TextIndex {
     */
   def maintenanceLog(spark: SparkSession, dir: String): DataFrame =
     graft.io.IndexHealth.tombstoneMaintenanceLog(spark, dir)
-
-  /** Streaming lexical ingest — the [[graft.dedup.LshIndex.streamingIngest]]
-    * shape on the BM25 index: each micro-batch tokenizes ITSELF only and
-    * appends its postings and spine rows (no existing file rewritten),
-    * and because df/N/avgdl recompute at query time from the stored
-    * frames, a streamed index scores EXACTLY like a one-shot build over
-    * everything ingested so far — bit-for-bit, not approximately
-    * (spec-pinned). No admissions ledger: lexical indexing admits every
-    * doc, so the append itself is the whole decision. Restart
-    * idempotency rides an `epochsDir` seal per trigger (the EpochCommit
-    * doctrine): a replayed committed epoch is skipped whole; the crash
-    * window (append done, seal missing) re-appends that epoch's rows —
-    * duplicate postings for those docs, dedupable offline by id, never
-    * a lost epoch.
-    *
-    * `maintainEvery` > 0 runs the [[maintain]] beat after every N-th
-    * trigger seals — the stream re-packs the fragmentation its own
-    * appends create (each trigger adds a postings generation, degrading
-    * term row-group pruning). Single-writer inside foreachBatch; the
-    * beat runs after the seal, so a replay can never double-run it.
-    */
-  def streamingIngest(spark: SparkSession, dir: String, epochsDir: String,
-      stream: DataFrame, idCol: String, textCol: String,
-      maintainEvery: Int = 0,
-      policy: MaintenancePolicy = MaintenancePolicy())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        val epochDir = s"$epochsDir/epoch=$epochId"
-        if (!graft.io.EpochCommit.committed(spark, epochDir)) {
-          graft.io.EpochCommit.clearPartial(spark, epochDir)
-          val b = batch.localCheckpoint() // appended + ledgered from one frame
-          // writeEntries directly, not append(): append's return value
-          // (docs added) costs two full spine counts, and the streaming
-          // hot path discards it (review fix)
-          writeEntries(b, idCol, textCol, dir, "append")
-          b.select(col(idCol).cast("long").as("id"))
-            .withColumn("epoch", lit(epochId))
-            .write.mode("error").parquet(epochDir)
-          graft.io.EpochCommit.seal(spark, epochDir)
-          if (maintainEvery > 0 && (epochId + 1) % maintainEvery == 0) {
-            maintain(spark, dir, policy)
-            ()
-          }
-          graft.dedup.Dedup.releasePlan(b)
-        }
-        ()
-      }
-      .start()
 
   private def writeEntries(docs: DataFrame, idCol: String, textCol: String,
       dir: String, mode: String): Unit = {

@@ -292,21 +292,3 @@ final case class ProximityForestModel(
     votes.toSeq.maxBy { case (lbl, v) => (v, -lbl) }._1
   }
 }
-
-object ProximityForest {
-
-  /** Train `numTrees` independent trees on the same data (the Proximity
-    * Forest algorithm uses no bagging — diversity comes from the random
-    * splitter draws; seeds are derived per tree).
-    */
-  def fit(
-      data: IndexedSeq[ProximityTree.Instance],
-      params: ProximityTree.Params,
-      numTrees: Int): ProximityForestModel = {
-    val trees = (0 until numTrees).map { i =>
-      ProximityTree.fit(data, params.copy(seed = params.seed + i))
-    }
-    ProximityForestModel(trees.toIndexedSeq, IndexedSeq.fill(numTrees)(1.0),
-      useWeighting = false)
-  }
-}

@@ -10,6 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BenchDriftSpec extends AnyFunSuite {
 
+  /** The original r16 gate: one tier, 3x the floor and 0.75 s over it. */
+  private val OneTier = Seq((3.0, 0.75))
+
   test("extractObj pulls the flat object after the key, first brace closes") {
     val env = """{"metric":"total","queries":{"q_a":1.5,"q_b":0.25},""" +
       """"queries_median":{"q_a":2.0,"q_b":0.30},"cal_per_query":{"q_a":0.02}}"""
@@ -33,29 +36,29 @@ class BenchDriftSpec extends AnyFunSuite {
   test("selectMovers: ratio gate, worst-excess-first ordering, cap, no floor = no mover") {
     val mins = Seq("q_a" -> 9.0, "q_b" -> 0.9, "q_c" -> 50.0, "q_new" -> 99.0)
     val floors = Map("q_a" -> 1.0, "q_b" -> 1.0, "q_c" -> 1.0) // q_new: none
-    val m = BenchDrift.selectMovers(mins, floors, ratio = 3.0, cap = 8)
+    val m = BenchDrift.selectMoversTiered(mins, floors, OneTier, cap = 8)
     assert(m === Seq("q_c" -> 50.0, "q_a" -> 9.0)) // b under 3x; new skipped
-    assert(BenchDrift.selectMovers(mins, floors, 3.0, cap = 1) ===
+    assert(BenchDrift.selectMoversTiered(mins, floors, OneTier, cap = 1) ===
       Seq("q_c" -> 50.0))
     // a zero/negative floor can never gate (guards a corrupt floors file)
-    assert(BenchDrift.selectMovers(Seq("q_z" -> 5.0), Map("q_z" -> 0.0),
-      3.0, 8) === Nil)
+    assert(BenchDrift.selectMoversTiered(Seq("q_z" -> 5.0), Map("q_z" -> 0.0),
+      OneTier, 8) === Nil)
   }
 
   test("absolute guard: sub-second jitter over 3x ratio never trips the gate") {
     // a 0.14s query seen at 0.44s is 3.1x but only +0.3s — scheduling
     // noise, not the multi-second outlier class (q_join_left_outer, r16)
     val floors = Map("q_small" -> 0.14, "q_big" -> 0.5)
-    assert(BenchDrift.selectMovers(Seq("q_small" -> 0.44), floors, 3.0, 8)
+    assert(BenchDrift.selectMoversTiered(Seq("q_small" -> 0.44), floors, OneTier, 8)
       === Nil)
     // q_knn_quantized's real r15 outlier clears both bars
-    assert(BenchDrift.selectMovers(Seq("q_big" -> 4.43), floors, 3.0, 8)
+    assert(BenchDrift.selectMoversTiered(Seq("q_big" -> 4.43), floors, OneTier, 8)
       === Seq("q_big" -> 4.43))
     // same guard on the adjudication side
-    assert(BenchDrift.unresolved(Seq("q_small" -> 0.44), Map.empty,
-      floors, 3.0) === Nil)
-    assert(BenchDrift.unresolved(Seq("q_big" -> 4.43), Map.empty,
-      floors, 3.0) === Seq(("q_big", 4.43, 0.5)))
+    assert(BenchDrift.unresolvedTiered(Seq("q_small" -> 0.44), Map.empty,
+      floors, OneTier) === Nil)
+    assert(BenchDrift.unresolvedTiered(Seq("q_big" -> 4.43), Map.empty,
+      floors, OneTier) === Seq(("q_big", 4.43, 0.5)))
   }
 
   test("unresolved: fresh JVM heals below ratio x floor; failure to heal stays listed") {
@@ -63,25 +66,25 @@ class BenchDriftSpec extends AnyFunSuite {
     val floors = Map("q_a" -> 1.0, "q_b" -> 1.0, "q_c" -> 1.0)
     // a: healed to 0.5; b: fresh still high; c: no fresh result at all
     val fresh = Map("q_a" -> 0.5, "q_b" -> 8.0)
-    val out = BenchDrift.unresolved(movers, fresh, floors, ratio = 3.0)
+    val out = BenchDrift.unresolvedTiered(movers, fresh, floors, OneTier)
     assert(out === Seq(("q_b", 8.0, 1.0), ("q_c", 9.0, 1.0)))
     // min over both JVMs: a fresh rep can only improve the published min
-    assert(BenchDrift.unresolved(Seq("q_d" -> 4.0), Map("q_d" -> 7.0),
-      Map("q_d" -> 1.0), 3.0) === Seq(("q_d", 4.0, 1.0)))
+    assert(BenchDrift.unresolvedTiered(Seq("q_d" -> 4.0), Map("q_d" -> 7.0),
+      Map("q_d" -> 1.0), OneTier) === Seq(("q_d", 4.0, 1.0)))
   }
 
   test("no silent cap: over-ratio queries beyond the retry cap still adjudicate as drifted") {
-    // Bench takes movers = selectMovers(..., cap) for the fresh-JVM retry
-    // but feeds the UNCAPPED over-ratio list to unresolved() — overflow
+    // Bench takes movers = selectMoversTiered(..., cap) for the fresh-JVM
+    // retry but feeds the UNCAPPED over-ratio list to unresolvedTiered() — overflow
     // queries land in `drifted` with their battery min
     val mins = (1 to 12).map(i => (s"q_$i", 10.0 + i))
     val floors = mins.map { case (k, _) => k -> 1.0 }.toMap
-    val overRatio = BenchDrift.selectMovers(mins, floors, 3.0, Int.MaxValue)
+    val overRatio = BenchDrift.selectMoversTiered(mins, floors, OneTier, Int.MaxValue)
     assert(overRatio.size === 12)
     val movers = overRatio.take(8)
     // fresh JVM heals only the retried 8; the other 4 must still be listed
     val fresh = movers.map { case (k, _) => k -> 0.5 }.toMap
-    val drifted = BenchDrift.unresolved(overRatio, fresh, floors, 3.0)
+    val drifted = BenchDrift.unresolvedTiered(overRatio, fresh, floors, OneTier)
     assert(drifted.map(_._1).toSet ===
       overRatio.drop(8).map(_._1).toSet)
   }

@@ -21,6 +21,16 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
   private def labelsOf(df: org.apache.spark.sql.DataFrame) =
     df.as[(Long, Long)].collect().toMap
 
+  /** A committed doc_scores epoch 0 of `bestDocs`' (id, score) — the
+    * on-disk face [[ClusterIndex.docScores]] reads and compact folds.
+    */
+  private def writeScores(dir: String): Unit = {
+    val p = s"$dir/doc_scores/epoch=0"
+    bestDocs.select(col("id").cast("long").as("id"),
+      col("score").cast("double").as("score")).write.parquet(p)
+    graft.io.EpochCommit.seal(spark, p)
+  }
+
   test("incremental batches converge to the from-scratch clustering, merges included") {
     val dir = Files.createTempDirectory("cluster_idx").toString + "/idx"
     // final graph: chain 1-2-3-4-5, triangle 10-11-12, pair 20-21
@@ -62,49 +72,6 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
       "id_a", "id_b", epoch = 4)
     assert(n4 === 1L)
     assert(labelsOf(ClusterIndex.resolve(spark, dir))(22L) === 20L)
-  }
-
-  test("streaming ingest: detection and clustering maintained together per trigger") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("cluster_stream").toString
-    val lshDir = s"$base/lsh"
-    val clDir = s"$base/cluster"
-    // seed corpus: two unrelated docs; no standing pairs yet (an EMPTY
-    // build is a first-class state)
-    val w = (1 to 10).map(i => s"w$i").mkString(" ")
-    val seed = Seq(
-      (1L, w),
-      (2L, "zero uno due tre quattro cinque sei sette otto nove")
-    ).toDF("doc_id", "text")
-    LshIndex.build(seed, "doc_id", "text", lshDir)
-    ClusterIndex.build(pairsDf(), "id_a", "id_b", clDir)
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = ClusterIndex.streamingIngest(spark, lshDir, clDir,
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5)
-    try {
-      // trigger 1: near-dup of SEED doc 1 -> cross pair via the index
-      stream.addData((10L, w + " w11"))
-      q.processAllAvailable()
-      val r1 = labelsOf(ClusterIndex.resolve(spark, clDir))
-      assert(r1 === Map(1L -> 1L, 10L -> 1L), s"after trigger 1: $r1")
-
-      // trigger 2: near-dup of the TRIGGER-1 doc (cross-trigger state)
-      // plus a novel doc that must stay unclustered
-      stream.addData((20L, w + " w11 w12"),
-        (21L, "red orange yellow green blue indigo violet pink"))
-      q.processAllAvailable()
-      val r2 = labelsOf(ClusterIndex.resolve(spark, clDir))
-      assert(r2.keySet.contains(20L) && r2(20L) === 1L, s"after trigger 2: $r2")
-      assert(!r2.contains(21L), "the novel doc has no pair, hence no label")
-
-      // the detection index grew too: every streamed doc is probe-able
-      val ids = spark.read.parquet(s"$lshDir/docs")
-        .select("id").as[Long].collect().toSet
-      assert(ids === Set(1L, 2L, 10L, 20L, 21L))
-    } finally q.stop()
   }
 
   test("crash recovery: unsealed pairs are invisible until repair re-derives and seals") {
@@ -291,7 +258,7 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
       === scratchKeep(1L -> 2L, 4L -> 5L, 3L -> 4L, 2L -> 3L, 10L -> 11L))
   }
 
-  test("face guards: plain addPairs/streamingIngest refuse a best index " +
+  test("face guards: plain addPairs refuses a best index " +
       "(silent winner corruption), repairWithBest refuses a plain one") {
     val dir = Files.createTempDirectory("cluster_guard").toString + "/idx"
     ClusterIndex.buildWithBest(pairsDf(1L -> 2L, 4L -> 5L), "id_a", "id_b",
@@ -303,16 +270,9 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
       ClusterIndex.addPairs(spark, dir, pairsDf(2L -> 4L), "id_a", "id_b", 1)
     }
     // nothing was recorded by the refusal
-    assert(ClusterIndex.maxRecordedEpoch(spark, dir) === 0L)
+    assert(!new java.io.File(s"$dir/pairs/epoch=1").exists())
     assert(keepOf(ClusterIndex.resolveBest(spark, dir, bestDocs, "id"))
       === scratchKeep(1L -> 2L, 4L -> 5L))
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    intercept[IllegalArgumentException] {
-      ClusterIndex.streamingIngest(spark, dir, dir,
-        stream.toDF().toDF("doc_id", "text"), "doc_id", "text", 0.5)
-    }
     // and the mirror: repairWithBest on a plain index would write
     // orphan best updates
     val plain = Files.createTempDirectory("cluster_guard2").toString + "/idx"
@@ -320,139 +280,6 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     intercept[IllegalArgumentException] {
       ClusterIndex.repairWithBest(spark, plain, bestDocs, "id", col("score"))
     }
-  }
-
-  test("streaming ingest with best: the keep set is maintained per " +
-      "trigger and equals from-scratch keepBest over the streamed docs") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("cluster_stream_best").toString
-    val lshDir = s"$base/lsh"
-    val clDir = s"$base/cluster"
-    val w = (1 to 10).map(i => s"w$i").mkString(" ")
-    // the pre-stream corpus: one doc already in the detection index. Its
-    // score must be SEEDED (setup refuses otherwise — see the coverage
-    // guard test): winner recomputation reads docScores only, and this
-    // doc can pair with streamed arrivals
-    val seedCorpus = Seq((1L, "zz yy xx ww vv uu tt ss rr qq"))
-      .toDF("doc_id", "text")
-    LshIndex.build(seedCorpus, "doc_id", "text", lshDir)
-    ClusterIndex.buildWithBest(pairsDf(), "id_a", "id_b",
-      Seq.empty[(Long, Double)].toDF("id", "score"), "id", col("score"),
-      clDir)
-    ClusterIndex.seedScores(spark, clDir, seedCorpus, "doc_id",
-      length(col("text")).cast("double"))
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = ClusterIndex.streamingIngestWithBest(spark, lshDir, clDir,
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5, score = length(col("text")).cast("double"))
-    def kept(): Set[Long] =
-      ClusterIndex.resolveBest(spark, clDir,
-        ClusterIndex.docScores(spark, clDir), "id")
-        .as[Long].collect().toSet
-    try {
-      // trigger 1: two unrelated docs — no pairs, both keep themselves
-      // (and the seeded corpus doc keeps itself: unpaired)
-      stream.addData((10L, w), (11L, "uno due tre quattro cinque sei"))
-      q.processAllAvailable()
-      assert(kept() === Set(1L, 10L, 11L))
-
-      // trigger 2: a LONGER near-dup of doc 10 (cross pair through the
-      // index) — the cluster winner moves to the longer text
-      stream.addData((20L, w + " w11"))
-      q.processAllAvailable()
-      assert(kept() === Set(1L, 20L, 11L))
-
-      // trigger 3: a still-longer member joins the same cluster AND an
-      // intra-trigger near-dup pair of fresh docs (50 longer than 51)
-      stream.addData((30L, w + " w11 w12"),
-        (50L, "red orange yellow green blue indigo violet extra"),
-        (51L, "red orange yellow green blue indigo violet"))
-      q.processAllAvailable()
-      assert(kept() === Set(1L, 30L, 11L, 50L))
-
-      // the maintained view == from-scratch keepBest over exactly the
-      // streamed docs and the recorded pair graph
-      val scratch = Dedup.keepBest(
-        ClusterIndex.docScores(spark, clDir), "id", col("score"),
-        Dedup.connectedComponents(
-          spark.read.schema("pa long, pb long")
-            .parquet(s"$clDir/pairs").select(col("pa"), col("pb")),
-          "pa", "pb"))
-        .as[Long].collect().toSet
-      assert(kept() === scratch)
-      assert(ClusterIndex.unsealedEpochs(spark, clDir).isEmpty)
-      assert(ClusterIndex.maxRecordedEpoch(spark, clDir) === 3L)
-    } finally q.stop()
-
-    // compact folds the streamed score epochs into ONE (a long-lived
-    // stream's winner joins otherwise re-scan a parquet dir per
-    // historical trigger) alongside labels and winners — resolved keep
-    // set unchanged, ledger intact
-    ClusterIndex.compact(spark, clDir)
-    assert(kept() === Set(1L, 30L, 11L, 50L))
-    val scoreEpochs = new java.io.File(s"$clDir/doc_scores").listFiles()
-      .map(_.getName).filter(_.startsWith("epoch=")).toSet
-    assert(scoreEpochs === Set("epoch=0"), s"folded score epochs: $scoreEpochs")
-    assert(ClusterIndex.maxRecordedEpoch(spark, clDir) === 3L)
-  }
-
-  test("streaming best over a PRE-STREAM corpus: setup refuses unseeded " +
-      "scores; seeded, a corpus-stream merge keeps the corpus winner") {
-    // THE silent-corruption scenario the coverage guard exists for:
-    // corpus docs A(long) -- pair -- B(short); stream doc C (mid length)
-    // that near-dups B. Winner recomputation reads docScores ONLY — with
-    // A and B unscored they'd drop out of the merged cluster's max and C
-    // would silently be crowned over the true winner A.
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("cluster_seed").toString
-    val lshDir = s"$base/lsh"
-    val clDir = s"$base/cluster"
-    val bText = (1 to 10).map(i => s"b$i").mkString(" ")
-    val corpus = Seq(
-      (1L, (1 to 18).map(i => s"a$i").mkString(" ")), // A: longest
-      (2L, bText)                                      // B: shortest
-    ).toDF("doc_id", "text")
-    val scoreCol = length(col("text")).cast("double")
-    LshIndex.build(corpus, "doc_id", "text", lshDir)
-    ClusterIndex.buildWithBest(pairsDf(1L -> 2L), "id_a", "id_b",
-      corpus, "doc_id", scoreCol, clDir)
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    // unseeded: the detection index holds unscored docs — refuse at setup
-    intercept[IllegalArgumentException] {
-      ClusterIndex.streamingIngestWithBest(spark, lshDir, clDir,
-        stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        threshold = 0.5, score = scoreCol)
-    }
-    ClusterIndex.seedScores(spark, clDir, corpus, "doc_id", scoreCol)
-    // seeding is idempotent — a second call leaves the committed seed
-    ClusterIndex.seedScores(spark, clDir, corpus, "doc_id", scoreCol)
-    val q = ClusterIndex.streamingIngestWithBest(spark, lshDir, clDir,
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5, score = scoreCol)
-    try {
-      // C near-dups B through the index -> pair (2,3) merges C into the
-      // corpus cluster {A,B}; A (longest) must stay the winner
-      stream.addData((3L, bText + " b11"))
-      q.processAllAvailable()
-      val kept = ClusterIndex.resolveBest(spark, clDir,
-        ClusterIndex.docScores(spark, clDir), "id")
-        .as[Long].collect().toSet
-      assert(kept === Set(1L), s"corpus winner must survive the merge: $kept")
-      // equals from-scratch keepBest over the seeded+streamed docs and
-      // the full recorded pair graph
-      val scratch = Dedup.keepBest(
-        ClusterIndex.docScores(spark, clDir), "id", col("score"),
-        Dedup.connectedComponents(
-          spark.read.schema("pa long, pb long")
-            .parquet(s"$clDir/pairs").select(col("pa"), col("pb")),
-          "pa", "pb"))
-        .as[Long].collect().toSet
-      assert(kept === scratch)
-    } finally q.stop()
   }
 
   test("compact is crash-safe: no _ready rolls back, _ready completes, " +
@@ -474,9 +301,6 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
         "id_a", "id_b", bestDocs, "id", col("score"), 2)
     }
     intercept[IllegalArgumentException] { ClusterIndex.compact(spark, dir) }
-    intercept[IllegalArgumentException] {
-      ClusterIndex.seedScores(spark, dir, bestDocs, "id", col("score"))
-    }
     assert(ClusterIndex.recoverCompact(spark, dir) === "rolled_back")
     assert(ClusterIndex.recoverCompact(spark, dir) === "no_staging")
     assert(keepOf(ClusterIndex.resolveBest(spark, dir, bestDocs, "id"))
@@ -507,7 +331,7 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("cluster_seal").toString + "/idx"
     ClusterIndex.buildWithBest(pairsDf(1L -> 2L), "id_a", "id_b",
       bestDocs, "id", col("score"), dir)
-    ClusterIndex.seedScores(spark, dir, bestDocs, "id", col("score"))
+    writeScores(dir)
     val want = ClusterIndex.docScores(spark, dir)
       .as[(Long, Double)].collect().toMap
     ClusterIndex.compact(spark, dir)
@@ -526,11 +350,11 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compact refuses to fold a doc_scores face holding ONLY a crashed " +
-      "uncommitted epoch — seedScores still heals after (r18 ADVICE)") {
+      "uncommitted epoch (r18 ADVICE)") {
     val dir = Files.createTempDirectory("cluster_fold").toString + "/idx"
     ClusterIndex.buildWithBest(pairsDf(1L -> 2L), "id_a", "id_b",
       bestDocs, "id", col("score"), dir)
-    // simulate a crashed seedScores: the epoch=0 dir exists with data
+    // simulate a crashed scores write: the epoch=0 dir exists with data
     // files but carries no commit proof
     val partial = s"$dir/doc_scores/epoch=0"
     bestDocs.select(col("id"), col("score").cast("double").as("score"))
@@ -538,50 +362,10 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     assert(new java.io.File(partial, "_SUCCESS").delete())
     graft.io.EpochCommit.dropCacheForTest(partial)
     ClusterIndex.compact(spark, dir)
-    // before the fix: compact folded a committed EMPTY epoch=0, so
-    // seedScores early-returned forever while the streaming coverage
-    // guard kept failing — the index was stuck with no in-API recovery
+    // before the fix: compact folded a committed EMPTY epoch=0
     assert(ClusterIndex.docScores(spark, dir).count() === 0L,
       "an uncommitted partial must never feed readers")
-    ClusterIndex.seedScores(spark, dir, bestDocs, "id", col("score"))
-    assert(ClusterIndex.docScores(spark, dir).count() === bestDocs.count(),
-      "seedScores must clear the preserved partial and land the seed")
-  }
-
-  test("streaming after batch epochs: epochBase = maxRecordedEpoch " +
-      "avoids the ledger collision (r17 ADVICE)") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("cluster_base").toString
-    val lshDir = s"$base/lsh"
-    val clDir = s"$base/cluster"
-    val w = (1 to 10).map(i => s"w$i").mkString(" ")
-    LshIndex.build(Seq((1L, w)).toDF("doc_id", "text"),
-      "doc_id", "text", lshDir)
-    ClusterIndex.build(pairsDf(), "id_a", "id_b", clDir)
-    // batch epochs 1 and 2 land BEFORE streaming starts — with the old
-    // epochId.toInt+1 mapping the first trigger would collide with
-    // epoch 1 and the mode("error") pairs write would kill the query
-    ClusterIndex.addPairs(spark, clDir, pairsDf(100L -> 101L),
-      "id_a", "id_b", 1)
-    ClusterIndex.addPairs(spark, clDir, pairsDf(200L -> 201L),
-      "id_a", "id_b", 2)
-    assert(ClusterIndex.maxRecordedEpoch(spark, clDir) === 2L)
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = ClusterIndex.streamingIngest(spark, lshDir, clDir,
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5,
-      epochBase = ClusterIndex.maxRecordedEpoch(spark, clDir))
-    try {
-      stream.addData((10L, w + " w11"))
-      q.processAllAvailable()
-      val r = labelsOf(ClusterIndex.resolve(spark, clDir))
-      // batch labels intact, streamed pair folded in at epoch 3
-      assert(r === Map(100L -> 100L, 101L -> 100L, 200L -> 200L,
-        201L -> 200L, 1L -> 1L, 10L -> 1L), s"resolved $r")
-      assert(ClusterIndex.maxRecordedEpoch(spark, clDir) === 3L)
-      assert(ClusterIndex.unsealedEpochs(spark, clDir).isEmpty)
-    } finally q.stop()
+    assert(!new java.io.File(s"$dir/doc_scores/epoch=0", "_graft_commit").exists(),
+      "the crashed partial must stay unfolded and uncommitted")
   }
 }

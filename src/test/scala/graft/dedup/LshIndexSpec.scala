@@ -94,88 +94,6 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
       s"no appended doc surfaced among ${viaAppend.size} pairs")
   }
 
-  test("streaming ingest: index-as-state dedups across triggers") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t = Files.createTempDirectory("lsh_stream").toString
-    val idxDir = s"$t/idx"
-    val admDir = s"$t/adm"
-    LshIndex.build(
-      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", idxDir)
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = LshIndex.streamingIngest(spark, idxDir, admDir,
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5)
-    try {
-      // trigger 1: near-dup of the SEEDED doc (rejected), one novel doc
-      // (admitted), and an intra-batch near-dup pair (lower id wins)
-      stream.addData(
-        (10L, "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"),
-        (11L, "one two three four five six seven eight nine ten"),
-        (12L, "one two three four five six seven eight nine ten eleven"))
-      q.processAllAvailable()
-      val e0 = spark.read.parquet(s"$admDir/epoch=0")
-        .select("doc_id").as[Long].collect().toSet
-      assert(e0 === Set(11L), s"epoch 0 admitted $e0")
-
-      // trigger 2: near-dup of a doc ADMITTED IN TRIGGER 1 — rejected
-      // through the index (the cross-trigger state), plus a novel doc
-      stream.addData(
-        (20L, "one two three four five six seven eight nine ten twelve"),
-        (21L, "red orange yellow green blue indigo violet pink brown black"))
-      q.processAllAvailable()
-      val e1 = spark.read.parquet(s"$admDir/epoch=1")
-        .select("doc_id").as[Long].collect().toSet
-      assert(e1 === Set(21L), s"epoch 1 admitted $e1")
-
-      // the index grew by exactly the admitted docs
-      val ids = spark.read.parquet(s"$idxDir/docs")
-        .select("id").as[Long].collect().toSet
-      assert(ids === Set(1L, 11L, 21L))
-    } finally q.stop()
-  }
-
-  test("streaming ingest maintains its own index: the maintenance beat " +
-      "fires every N triggers and compacts the fragmentation appends create") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t = Files.createTempDirectory("lsh_stream_mnt").toString
-    val idxDir = s"$t/idx"
-    LshIndex.build(
-      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", idxDir)
-    val baseFiles = graft.io.IndexHealth.dataFileCount(spark, s"$idxDir/postings")
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    // filesBar below a single post-append count: every beat must compact
-    val q = LshIndex.streamingIngest(spark, idxDir, s"$t/adm",
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5, maintainEvery = 2,
-      policy = LshIndex.MaintenancePolicy(filesBar = baseFiles))
-    try {
-      stream.addData((11L, "one two three four five six seven eight nine ten"))
-      q.processAllAvailable() // epoch 0: no beat ((0+1) % 2 != 0)
-      assert(LshIndex.maintenanceLog(spark, idxDir).count() === 0L)
-      stream.addData((21L, "red orange yellow green blue indigo violet pink"))
-      q.processAllAvailable() // epoch 1: beat fires, fragmentation over bar
-      val log = LshIndex.maintenanceLog(spark, idxDir).collect()
-      assert(log.length === 1 && log(0).getAs[String]("action") === "compact",
-        s"beat at epoch 1 must compact: ${log.toSeq}")
-      assert(log(0).getAs[Int]("post_files") <=
-          log(0).getAs[Int]("postings_files"),
-        "compact must not grow the postings file count")
-      // the compacted index still serves: all three docs live
-      assert(spark.read.parquet(s"$idxDir/docs")
-        .select("id").as[Long].collect().toSet === Set(1L, 11L, 21L))
-    } finally q.stop()
-  }
-
   test("delete: tombstoned docs leave probe results; compact folds them") {
     import spark.implicits._
     val t = Files.createTempDirectory("lsh_del").toString + "/idx"
@@ -233,57 +151,5 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
     assert(LshIndex.maintenanceLog(spark, t).collect()
       .map(r => (r.getAs[Long]("seq"), r.getAs[String]("action"))).toSeq ===
       Seq((0L, "none"), (1L, "compact"), (2L, "none")))
-  }
-
-  test("band stats report covers every band; postings range-laid-out") {
-    val stats = LshIndex.bandStats(spark, dir).collect()
-    assert(stats.map(_.getInt(0)).toSet === (0 until 16).toSet)
-    assert(stats.forall(_.getLong(2) >= 1L))
-    // the write path's range layout: each postings file's band_hash span
-    // is a narrow slice, so probe-side min/max pruning has teeth; weak
-    // proxy testable locally — files sorted by the write, multiple files
-    val parts = new java.io.File(s"$dir/postings").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(parts >= 1)
-  }
-
-  test("streaming ingest: a crashed partial admissions epoch is healed " +
-      "on replay (seal = _SUCCESS, not dir existence)") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t = Files.createTempDirectory("lsh_crash").toString
-    val idxDir = s"$t/idx"
-    val admDir = s"$t/adm"
-    LshIndex.build(
-      Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", idxDir)
-    // simulate a first attempt that crashed mid-admissions-write: the
-    // epoch dir exists (Spark creates it at job setup, and task output
-    // may be present) but the commit marker never landed — the r17
-    // ADVICE scenario where dir-existence gating would skip the replay
-    // whole and leave the ledger permanently wrong for this epoch
-    Seq((99L, "stale partial row")).toDF("doc_id", "text")
-      .withColumn("epoch", lit(0L)).write.parquet(s"$admDir/epoch=0")
-    assert(new java.io.File(s"$admDir/epoch=0", "_SUCCESS").delete())
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = LshIndex.streamingIngest(spark, idxDir, admDir,
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      threshold = 0.5)
-    try {
-      stream.addData((11L, "one two three four five six seven eight nine ten"))
-      q.processAllAvailable()
-      // the replayed trigger was NOT skipped: partial cleared, whole
-      // trigger re-run, epoch committed with the true admissions
-      val e0 = spark.read.parquet(s"$admDir/epoch=0")
-        .select("doc_id").as[Long].collect().toSet
-      assert(e0 === Set(11L), s"epoch 0 admissions $e0")
-      assert(new java.io.File(s"$admDir/epoch=0", "_SUCCESS").exists())
-      val ids = spark.read.parquet(s"$idxDir/docs")
-        .select("id").as[Long].collect().toSet
-      assert(ids === Set(1L, 11L))
-    } finally q.stop()
   }
 }

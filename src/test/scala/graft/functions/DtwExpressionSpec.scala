@@ -18,8 +18,8 @@ class DtwExpressionSpec extends AnyFunSuite with SparkSpec {
   test("native expression matches the pure-Scala kernel, in SQL and Column API") {
     GraftFunctions.register(spark)
     val out = df.select($"id",
-      GraftFunctions.dtwDistance($"a", $"b").as("d"),
-      GraftFunctions.euclideanDistance($"a", $"b").as("e"))
+      expr("dtw_distance(a, b)").as("d"),
+      expr("euclidean_distance(a, b)").as("e"))
       .as[(Long, Double, Double)].collect().map(t => t._1 -> ((t._2, t._3))).toMap
     val rows = df.as[(Long, Seq[Double], Seq[Double])].collect()
     rows.foreach { case (id, a, b) =>
@@ -40,7 +40,7 @@ class DtwExpressionSpec extends AnyFunSuite with SparkSpec {
     val ranged = spark.range(100).select(
       array(col("id").cast("double"), (col("id") + 1).cast("double")).as("a"),
       array((col("id") * 2).cast("double"), col("id").cast("double")).as("b"))
-    val q = ranged.select(GraftFunctions.dtwDistance($"a", $"b").as("d"))
+    val q = ranged.select(expr("dtw_distance(a, b)").as("d"))
     val plan = q.queryExecution.executedPlan.toString
     // "*(n)" marks operators inside a WholeStageCodegen stage
     assert(plan.contains("*(1) Project [dtw_distance"), plan)
@@ -51,7 +51,7 @@ class DtwExpressionSpec extends AnyFunSuite with SparkSpec {
     GraftFunctions.register(spark)
     val withNull = Seq((1L, Option.empty[Seq[Double]], Some(Seq(1.0))))
       .toDF("id", "a", "b")
-    val r = withNull.select(GraftFunctions.dtwDistance($"a", $"b")).head()
+    val r = withNull.select(expr("dtw_distance(a, b)")).head()
     assert(r.isNullAt(0))
   }
 
@@ -59,7 +59,7 @@ class DtwExpressionSpec extends AnyFunSuite with SparkSpec {
     GraftFunctions.register(spark)
     val bad = Seq((1, "x")).toDF("id", "s")
     assertThrows[org.apache.spark.sql.AnalysisException] {
-      bad.select(GraftFunctions.dtwDistance(col("s"), col("s"))).collect()
+      bad.select(expr("dtw_distance(s, s)")).collect()
     }
   }
 
@@ -78,7 +78,7 @@ class DtwExpressionSpec extends AnyFunSuite with SparkSpec {
     }
     val df = rows.toDF("x", "u", "l", "q")
     val got = df.select(GraftFunctions.lbKeogh($"x", $"u", $"l").as("lb"),
-        GraftFunctions.dtwDistance($"x", $"q").as("d"))
+        expr("dtw_distance(x, q)").as("d"))
       .as[(Double, Double)].collect()
     got.zip(rows).foreach { case ((lb, _), (x, u, l, _)) =>
       val ref = math.sqrt(x.indices.map { i =>

@@ -47,7 +47,7 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
         ((n: org.apache.spark.sql.Column) => n === 0L || n === 10L, 4),
         ((n: org.apache.spark.sql.Column) => n === 999L, 3))) { // no seeds
       val fp = asMap(Bfs.distancesFp(chain, "s", "t", pred, iters))
-      val de = asMap(Bfs.distancesDelta(chain, "s", "t", pred, iters))
+      val de = asMap(Bfs.distances(chain, "s", "t", pred, iters, driverEdgeCap = 0L))
       assert(de === fp)
     }
     // pseudo-random graph: residue edges, several components, cross edges
@@ -55,8 +55,8 @@ class BfsSpec extends AnyFunSuite with SparkSpec {
       (col("id") % 53).as("s"), ((col("id") * 17 + 3) % 59).as("t"))
     val fp = asMap(Bfs.distancesFp(rnd, "s", "t",
       n => n % 7L === 0L, iterations = 5))
-    val de = asMap(Bfs.distancesDelta(rnd, "s", "t",
-      n => n % 7L === 0L, iterations = 5))
+    val de = asMap(Bfs.distances(rnd, "s", "t",
+      n => n % 7L === 0L, iterations = 5, driverEdgeCap = 0L))
     assert(de === fp)
   }
 

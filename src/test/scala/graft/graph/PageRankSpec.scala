@@ -25,7 +25,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
   test("uniform cycle stays uniform at every iteration count") {
     val cycle = edges(1L -> 2L, 2L -> 3L, 3L -> 1L)
     for (k <- 1 to 4) {
-      val r = ranks(PageRank.pageRankFp(cycle, "src", "dst", iterations = k))
+      val r = ranks(PageRank.pageRank(cycle, "src", "dst",
+        iterations = k, driverEdgeCap = 0L))
       assert(r.size === 3)
       // exact uniform fixed point: every node keeps 10^12 div 3
       assert(r.values.toSet.size === 1, s"cycle ranks diverged at k=$k: $r")
@@ -34,7 +35,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
 
   test("mass is conserved up to deterministic floor leakage") {
     val g = edges(1L -> 2L, 1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L)
-    val r = ranks(PageRank.pageRankFp(g, "src", "dst", iterations = 3))
+    val r = ranks(PageRank.pageRank(g, "src", "dst",
+      iterations = 3, driverEdgeCap = 0L))
     val mass = r.values.sum
     // each div floors at most 1 unit per term; 3 iterations x ~10 terms
     assert(mass <= Scale && mass > Scale - 1000L, s"mass drifted: $mass")
@@ -44,7 +46,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     // 1 -> 2, 2 has no out-edges (dangling): without redistribution the
     // graph bleeds rank; with it, node 1 still receives the dangling share
     val g = edges(1L -> 2L)
-    val r = ranks(PageRank.pageRankFp(g, "src", "dst", iterations = 3))
+    val r = ranks(PageRank.pageRank(g, "src", "dst",
+      iterations = 3, driverEdgeCap = 0L))
     assert(r.keySet === Set(1L, 2L))
     assert(r.values.sum > Scale - 100L, s"dangling mass lost: $r")
     // the sink end of the edge outranks the source
@@ -53,13 +56,13 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
 
   test("residency: at most one node-scale frame stays cached after return") {
     // the checkpoint-cadence rewrite must keep the 100x-scale bound the
-    // per-iteration eager variant bought: whatever K, once pageRankFp
+    // per-iteration eager variant bought: whatever K, once the distributed loop
     // returns only the FINAL checkpointed rank frame may hold blocks —
     // span-internal persists and superseded checkpoints are freed.
     val g = edges(1L -> 2L, 1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // K=7 spans three checkpoint boundaries (3, 6, 7) plus span persists
-    val r = PageRank.pageRankFp(g, "src", "dst", iterations = 7)
+    val r = PageRank.pageRank(g, "src", "dst", iterations = 7, driverEdgeCap = 0L)
     r.collect()
     // unpersist(blocking=false) is async — give the block manager a beat
     val deadline = System.nanoTime() + 5000000000L
@@ -68,20 +71,12 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     assert(leftover.size <= 1, s"residency bound broken: ${leftover.size} frames held")
   }
 
-  test("checkpoint cadence does not perturb values vs the declarative plan") {
-    val g = edges(1L -> 2L, 1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L, 4L -> 2L)
-    for (k <- Seq(2, 4, 5, 7)) { // spans boundaries: mid-span and exact-span Ks
-      val eagerR = ranks(PageRank.pageRankFp(g, "src", "dst", iterations = k))
-      val lazyR = ranks(PageRank.pageRankFp(g, "src", "dst", iterations = k, eager = false))
-      assert(eagerR === lazyR, s"eager/declarative diverged at k=$k")
-    }
-  }
-
   test("personalized: all-seeds reduces bit-for-bit to uniform PageRank") {
     val g = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 5L -> 1L)
-    val uniform = ranks(PageRank.pageRankFp(g, "src", "dst", iterations = 3))
-    val allSeed = ranks(PageRank.personalizedPageRankFp(g, "src", "dst",
-      _ => lit(true), iterations = 3))
+    val uniform = ranks(PageRank.pageRank(g, "src", "dst",
+      iterations = 3, driverEdgeCap = 0L))
+    val allSeed = ranks(PageRank.personalizedPageRank(g, "src", "dst",
+      _ => lit(true), iterations = 3, driverEdgeCap = 0L))
     assert(allSeed === uniform)
   }
 
@@ -92,8 +87,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     // steady state's, not a transient's
     val g = edges(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 1L,
       10L -> 11L, 11L -> 10L)
-    val r = ranks(PageRank.personalizedPageRankFp(g, "src", "dst",
-      n => n === 1L, iterations = 12))
+    val r = ranks(PageRank.personalizedPageRank(g, "src", "dst",
+      n => n === 1L, iterations = 12, driverEdgeCap = 0L))
     assert(r.size === 5, "every node reports a row")
     assert(r(10L) === 0L && r(11L) === 0L,
       "teleport-unreachable nodes carry zero mass")
@@ -131,8 +126,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
   test("personalized: empty seed set refuses loudly") {
     val g = edges(1L -> 2L)
     intercept[IllegalArgumentException] {
-      PageRank.personalizedPageRankFp(g, "src", "dst",
-        n => n === 99L, iterations = 2).collect()
+      PageRank.personalizedPageRank(g, "src", "dst",
+        n => n === 99L, iterations = 2, driverEdgeCap = 0L).collect()
     }
   }
 
@@ -141,7 +136,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
     // dangling node, multi-out-degree, a node that is only a destination
     val g = edges(1L -> 2L, 1L -> 3L, 2L -> 3L, 3L -> 1L, 4L -> 1L, 2L -> 5L)
     for (k <- 1 to 4) {
-      val dist = ranks(PageRank.pageRankFp(g, "src", "dst", iterations = k))
+      val dist = ranks(PageRank.pageRank(g, "src", "dst",
+        iterations = k, driverEdgeCap = 0L))
       // default cap -> driver tier
       assert(ranks(PageRank.pageRank(g, "src", "dst", iterations = k))
         === dist, s"uniform driver tier diverged at k=$k")
@@ -150,8 +146,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
         driverEdgeCap = 0L)) === dist)
     }
     val seed = (n: org.apache.spark.sql.Column) => n % 3L === 1L
-    val pDist = ranks(PageRank.personalizedPageRankFp(g, "src", "dst",
-      seed, iterations = 3))
+    val pDist = ranks(PageRank.personalizedPageRank(g, "src", "dst",
+      seed, iterations = 3, driverEdgeCap = 0L))
     assert(ranks(PageRank.personalizedPageRank(g, "src", "dst", seed,
       iterations = 3)) === pDist)
     assert(ranks(PageRank.personalizedPageRank(g, "src", "dst", seed,
@@ -166,7 +162,8 @@ class PageRankSpec extends AnyFunSuite with SparkSpec {
   test("chain orders ranks by depth and matches closed-form hand iteration") {
     // 1 -> 2 -> 3 (3 a dangling sink): deeper nodes accumulate more rank
     val g = edges(1L -> 2L, 2L -> 3L)
-    val r = ranks(PageRank.pageRankFp(g, "src", "dst", iterations = 2))
+    val r = ranks(PageRank.pageRank(g, "src", "dst",
+      iterations = 2, driverEdgeCap = 0L))
     assert(r(3L) > r(2L) && r(2L) >= r(1L), s"chain order violated: $r")
     // hand-rolled fixed-point iteration (same div floors)
     def step(prev: Map[Long, Long]): Map[Long, Long] = {

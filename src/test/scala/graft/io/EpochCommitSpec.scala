@@ -7,16 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
 /** The epoch seal must be COMMIT-atomic (r17 ADVICE): a directory that
-  * exists without the committer's `_SUCCESS` marker is a crashed
-  * attempt — not a seal — and must be cleared so the replayed trigger's
-  * mode("error") write can land.
+  * exists without a commit marker is a crashed attempt, not a seal.
   */
 class EpochCommitSpec extends AnyFunSuite with SparkSpec {
 
   test("absent dir: not committed, nothing to clear") {
     val d = Files.createTempDirectory("epoch_commit").toString + "/epoch=0"
     assert(!EpochCommit.committed(spark, d))
-    assert(!EpochCommit.clearPartial(spark, d))
   }
 
   test("committed dir: recognized, never cleared") {
@@ -24,7 +21,6 @@ class EpochCommitSpec extends AnyFunSuite with SparkSpec {
     val d = Files.createTempDirectory("epoch_commit").toString + "/epoch=0"
     Seq((1L, "a")).toDF("id", "v").write.parquet(d)
     assert(EpochCommit.committed(spark, d))
-    assert(!EpochCommit.clearPartial(spark, d))
     assert(spark.read.parquet(d).count() === 1L)
   }
 
@@ -34,31 +30,14 @@ class EpochCommitSpec extends AnyFunSuite with SparkSpec {
     val d = Files.createTempDirectory("epoch_commit").toString + "/epoch=0"
     Seq((1L, "a")).toDF("id", "v").write.parquet(d)
     // simulate a no-marker committer config: the job commits fully but
-    // writes no _SUCCESS — without graft's own seal, clearPartial would
-    // DELETE this fully-committed ledger epoch on replay
+    // writes no _SUCCESS — without graft's own seal this fully-committed
+    // epoch would read as a crashed attempt
     assert(new java.io.File(d, "_SUCCESS").delete())
     assert(!EpochCommit.committed(spark, d))
     EpochCommit.seal(spark, d)
     assert(EpochCommit.committed(spark, d))
-    assert(!EpochCommit.clearPartial(spark, d))
     assert(spark.read.parquet(d).count() === 1L)
     EpochCommit.seal(spark, d) // idempotent
-    assert(EpochCommit.committed(spark, d))
-  }
-
-  test("crashed partial (dir present, no _SUCCESS): detected and cleared") {
-    import spark.implicits._
-    val d = Files.createTempDirectory("epoch_commit").toString + "/epoch=0"
-    Seq((1L, "a")).toDF("id", "v").write.parquet(d)
-    // simulate the crash window: job setup created the dir and task
-    // output may be present, but the commit marker never landed
-    assert(new java.io.File(d, "_SUCCESS").delete())
-    assert(!EpochCommit.committed(spark, d))
-    assert(EpochCommit.clearPartial(spark, d))
-    assert(!new java.io.File(d).exists(),
-      "the partial dir must be gone so a mode(error) replay can land")
-    // and the replay can indeed land
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("error").parquet(d)
     assert(EpochCommit.committed(spark, d))
   }
 }

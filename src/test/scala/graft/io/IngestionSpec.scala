@@ -58,11 +58,4 @@ class IngestionSpec extends AnyFunSuite with SparkSpec {
     val empty = Ingestion.readCsv(spark, p.toString, Ingestion.wideSchema(140))
     assertThrows[IllegalStateException](Ingestion.validateNonEmpty(empty))
   }
-
-  test("min-max JSON sink/source roundtrip") {
-    val stats = Map("_c1" -> ((0.5, 2.5)), "_c2" -> ((-1.0, 1.0)))
-    val path = java.nio.file.Files.createTempFile("minmax", ".json").toString
-    Ingestion.writeMinMaxJson(stats, path)
-    assert(Ingestion.readMinMaxJson(path) === stats)
-  }
 }

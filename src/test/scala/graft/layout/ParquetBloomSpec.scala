@@ -10,9 +10,8 @@ import graft.SparkSpec
   * md5 hex digest — every file's min/max box spans the whole value space,
   * so footer boxes admit every point probe — then read the REAL footers
   * back and show the column bloom filters reject the non-containing row
-  * groups that min/max cannot. Plus the page index narrowing a sorted
-  * file's surviving row group to one page, and the functional read path
-  * with the pushed point filter.
+  * groups that min/max cannot. Plus the functional read path with the
+  * pushed point filter.
   */
 class ParquetBloomSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -33,11 +32,10 @@ class ParquetBloomSpec extends AnyFunSuite with SparkSpec {
     // probe — the lever this spec exists to prove useless here
     val probe = // md5(123): present in exactly one file (id 123 -> file 0)
       hashTable(4000).filter(col("id") === 123).select("k").as[String].head()
-    // per-file k-range from the page index (parquetFileBoxes is long-typed;
-    // the min over page mins == the chunk min for this single-column check)
-    val pages = ParquetBloom.pageIndexReport(spark, dir, "k")
-      .groupBy(col("path"))
-      .agg(min(col("page_min")).as("kmin"), max(col("page_max")).as("kmax"))
+    // per-file k-range: exactly the min/max each file's footer carries
+    val pages = spark.read.parquet(dir)
+      .groupBy(input_file_name().as("path"))
+      .agg(min(col("k")).as("kmin"), max(col("k")).as("kmax"))
       .collect()
     assert(pages.length === 8)
     val admittedByMinMax = pages.count(r =>
@@ -72,33 +70,5 @@ class ParquetBloomSpec extends AnyFunSuite with SparkSpec {
     assert(pushed.contains("PushedFilters") && pushed.contains("IsNotNull(k)"),
       s"point filter must reach the parquet scan:\n$pushed")
     assert(q.select("id").as[Long].collect().toSeq === Seq(123L))
-  }
-
-  test("page index: a key-sorted file narrows a point probe to one page") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pageidx")
-      .toFile.getAbsolutePath + "/t"
-    // ONE file, sorted by k, small pages: the offset/column index is the
-    // only structure that can narrow the row group
-    ParquetBloom.writeWithBloom(
-      hashTable(4000).orderBy(col("k")).coalesce(1),
-      dir, bloomNdv = Map("k" -> 4000L), pageRowLimit = 500)
-
-    val idx = ParquetBloom.pageIndexReport(spark, dir, "k").collect()
-    assert(idx.length >= 8, s"expected >=8 pages at 500 rows/page, got ${idx.length}")
-    // pages tile the rows and the sort makes their ranges ordered
-    assert(idx.map(_.getAs[Long]("n_rows")).sum === 4000L)
-    val byPage = idx.sortBy(_.getAs[Long]("page"))
-    byPage.sliding(2).foreach {
-      case Array(a, b) =>
-        assert(a.getAs[String]("page_max") <= b.getAs[String]("page_min"),
-          "sorted file must yield non-overlapping page ranges")
-      case _ =>
-    }
-    // a point probe lands in exactly one page's [min, max]
-    val probe = hashTable(4000).filter(col("id") === 77).select("k").as[String].head()
-    val hit = byPage.filter(r => r.getAs[String]("page_min") <= probe &&
-      probe <= r.getAs[String]("page_max"))
-    assert(hit.length === 1,
-      s"sorted page index must narrow the probe to one page, got ${hit.length}")
   }
 }

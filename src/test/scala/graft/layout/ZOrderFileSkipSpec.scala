@@ -16,6 +16,13 @@ import graft.SparkSpec
   */
 class ZOrderFileSkipSpec extends AnyFunSuite with SparkSpec {
 
+  /** One contiguous curve segment per output file. */
+  private def clusterBy(df: org.apache.spark.sql.DataFrame,
+      key: org.apache.spark.sql.Column, numPartitions: Int) =
+    df.repartitionByRange(numPartitions, key).sortWithinPartitions(key)
+
+  private def zkey = ZOrder.zkey(col("l_partkey"), col("l_suppkey"))
+
   private def footerBoxArea(dir: String): BigInt = {
     val conf = spark.sessionState.newHadoopConf()
     val files = new java.io.File(dir).listFiles()
@@ -51,7 +58,7 @@ class ZOrderFileSkipSpec extends AnyFunSuite with SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft-zskip").toFile.getAbsolutePath
     val zDir = s"$base/z"
     val linDir = s"$base/lin"
-    ZOrder.clusterByZ(li, "l_partkey", "l_suppkey", numPartitions = 8)
+    clusterBy(li, zkey, numPartitions = 8)
       .write.mode("overwrite").parquet(zDir)
     li.repartitionByRange(8, col("l_orderkey"), col("l_linenumber"))
       .sortWithinPartitions(col("l_orderkey"), col("l_linenumber"))
@@ -72,9 +79,9 @@ class ZOrderFileSkipSpec extends AnyFunSuite with SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft-hskip").toFile.getAbsolutePath
     val hDir = s"$base/h"
     val zDir = s"$base/z"
-    Hilbert.clusterByH(li, "l_partkey", "l_suppkey", numPartitions = 8)
+    clusterBy(li, Hilbert.hkey(col("l_partkey"), col("l_suppkey")), numPartitions = 8)
       .write.mode("overwrite").parquet(hDir)
-    ZOrder.clusterByZ(li, "l_partkey", "l_suppkey", numPartitions = 8)
+    clusterBy(li, zkey, numPartitions = 8)
       .write.mode("overwrite").parquet(zDir)
     val hArea = footerBoxArea(hDir)
     val zArea = footerBoxArea(zDir)

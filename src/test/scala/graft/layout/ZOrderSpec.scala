@@ -21,7 +21,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
     // → even bits 0,4 from x, odd bits 1,3 from y = 0b11011 = 27
     assert(ZOrder.interleaveLong(5L, 3L) === 27L)
     // inputs with bit 31 set are masked to 31 bits, so the key can never
-    // land on the long sign bit (clusterByZ's range-partition contract:
+    // land on the long sign bit (the range-partition contract:
     // a negative key would sort before every positive one)
     val big = 0xffffffffL
     assert(ZOrder.interleaveLong(big, big) >= 0L)
@@ -152,19 +152,5 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
       .orderBy("bucket").collect().map(_.toSeq)
     assert(got.drop("box_area").orderBy("bucket").collect().map(_.toSeq).toSeq
       === ref.toSeq)
-  }
-
-  test("clusterByZ yields the requested partition count, sorted within each") {
-    val li = graft.ops.Tables.lineitem(spark, "/root/testdata/sf0.001")
-    val clustered = ZOrder.clusterByZ(li, "l_partkey", "l_suppkey", numPartitions = 8)
-    assert(clustered.rdd.getNumPartitions === 8)
-    val zk = ZOrder.zkey(col("l_partkey"), col("l_suppkey"))
-    val unsortedPartitions = clustered.withColumn("_zk", zk)
-      .select("_zk").rdd.mapPartitions { it =>
-        val a = it.map(_.getLong(0)).toArray
-        Iterator.single(a.zip(a.drop(1)).exists { case (p, n) => p > n })
-      }.collect()
-    assert(!unsortedPartitions.contains(true), "a partition was not zkey-sorted")
-    assert(clustered.count() === li.count())
   }
 }

@@ -13,6 +13,10 @@ import graft.SparkSpec
 class LogRegSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
+  /** σ(w·x + b) of a one-feature binary model. */
+  private def sigma(x: org.apache.spark.sql.Column, w: Array[Double]) =
+    lit(1.0) / (lit(1.0) + exp(-(x * lit(w(0)) + lit(w(1)))))
+
   // linearly separable in one feature: x > 0 <=> label 1
   private lazy val separable = (1 to 40).map { i =>
     val x = if (i % 2 == 0) 1.0 + (i % 5) * 0.1 else -1.0 - (i % 5) * 0.1
@@ -24,7 +28,7 @@ class LogRegSpec extends AnyFunSuite with SparkSpec {
       iters = 50, lr = 1.0)
     assert(w(0) > 0, s"feature weight should be positive: ${w.toSeq}")
     val scored = separable.withColumn("p",
-      LogReg.score(Seq(col("x")), w))
+      sigma(col("x"), w))
     val wrong = scored.filter(
       (col("p") >= 0.5) =!= (col("label") === 1)).count()
     assert(wrong === 0, "separable data must separate at 50 iterations")
@@ -32,7 +36,7 @@ class LogRegSpec extends AnyFunSuite with SparkSpec {
 
   test("training loss is non-increasing in iteration count") {
     def logLoss(w: Array[Double]): Double = {
-      val p = LogReg.score(Seq(col("x")), w)
+      val p = sigma(col("x"), w)
       separable.select(avg(
         when(col("label") === 1, -log(p)).otherwise(-log(lit(1.0) - p)))
         .as("ll")).head().getDouble(0)
@@ -69,7 +73,7 @@ class LogRegSpec extends AnyFunSuite with SparkSpec {
       LogReg.train(separable.limit(0), Seq(col("x")), col("label"), 1, 0.5)
     }
     intercept[IllegalArgumentException] {
-      LogReg.score(Seq(col("x")), Array(1.0)) // bias missing
+      LogReg.classify(Seq(col("x")), Seq("1" -> Array(1.0))) // bias missing
     }
   }
 
@@ -155,7 +159,8 @@ class LogRegSpec extends AnyFunSuite with SparkSpec {
     val fs = Seq(col("x0"), col("x1"))
     val models = LogReg.trainSoftmax(multi, fs, col("lang"),
       Seq("a", "b", "c"), iters = 50, lr = 1.0)
-    val wrong = multi.withColumn("pred", LogReg.classifySoftmax(fs, models))
+    // argmax over the σ scores = argmax over the softmax: both monotone in w·x
+    val wrong = multi.withColumn("pred", LogReg.classify(fs, models))
       .filter(col("pred") =!= col("lang")).count()
     assert(wrong === 0, "separable 3-class data must classify exactly")
     // gradient mass balance: at every step Σ_c g_c(row) = Σ_c p_c − 1 = 0,

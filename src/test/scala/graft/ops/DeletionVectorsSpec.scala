@@ -8,8 +8,8 @@ import graft.SparkSpec
 
 /** Merge-on-read contracts the oracled q_merge_on_read can't see: the
   * FILESYSTEM behavior (a delete writes only the sidecar, data files stay
-  * byte-identical; an upsert appends, never rewrites) and the fold step
-  * (read-equivalent, sidecar gone, one sequence directory left).
+  * byte-identical; an upsert appends, never rewrites) and the commit
+  * protocol.
   */
 class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
 
@@ -24,6 +24,10 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
 
   private def asMap(df: DataFrame): Map[Long, String] =
     df.collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
+
+  /** An upsert batch: its rows land as a new sequence, masking their keys below it. */
+  private def upsert(dir: String, rows: DataFrame): Long =
+    DeletionVectors.appendBatch(spark, dir, rows, rows.select(col("k")), "k")
 
   private def mkDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-$tag").toFile.getAbsolutePath + "/t"
@@ -57,7 +61,7 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
     val seq0Before = fileSet(s"$dir/seq=0")
 
     val batch = Seq((4L, "V4"), (900L, "V900")).toDF("k", "v")
-    val n = DeletionVectors.appendUpserts(spark, dir, batch, "k")
+    val n = upsert(dir, batch)
     assert(n === 1)
     assert(fileSet(s"$dir/seq=0") === seq0Before)
     assert(new java.io.File(s"$dir/seq=1").isDirectory)
@@ -71,31 +75,6 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
     DeletionVectors.deleteKeys(spark, dir, Seq(4L).toDF("k"), "k")
     val after = asMap(DeletionVectors.read(spark, dir, "k"))
     assert(after === cow - 4L)
-  }
-
-  test("fold rewrites survivors once: same read result, sidecar gone, one sequence") {
-    import spark.implicits._
-    val dir = mkDir("dv-fold")
-    DeletionVectors.initTable(
-      (1L to 30L).map(i => (i, s"v$i")).toDF("k", "v"), dir)
-    DeletionVectors.appendUpserts(spark, dir,
-      Seq((5L, "V5"), (31L, "V31")).toDF("k", "v"), "k")
-    DeletionVectors.deleteKeys(spark, dir, Seq(9L, 31L).toDF("k"), "k")
-
-    val beforeFold = asMap(DeletionVectors.read(spark, dir, "k"))
-    val (nRows, nDv) = DeletionVectors.fold(spark, dir, "k",
-      orderBy = Seq(col("k")))
-    assert(nRows === beforeFold.size)
-    assert(nDv === 4) // 2 upsert-mask keys + 2 delete keys
-
-    assert(!new java.io.File(s"$dir/_dv").exists())
-    val seqDirs = Option(new java.io.File(dir).listFiles()).get
-      .filter(f => f.isDirectory && f.getName.startsWith("seq=")).map(_.getName)
-    assert(seqDirs.length === 1)
-    assert(asMap(DeletionVectors.read(spark, dir, "k")) === beforeFold)
-    // and the folded table keeps answering under further batches
-    DeletionVectors.deleteKeys(spark, dir, Seq(1L).toDF("k"), "k")
-    assert(asMap(DeletionVectors.read(spark, dir, "k")) === beforeFold - 1L)
   }
 
   test("position delete writes ONLY the _pdv sidecar; exact ordinals subtracted") {
@@ -127,7 +106,7 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
       .map(i => i -> s"v$i").toMap)
   }
 
-  test("position and equality deletes compose; appends keep old ordinals valid; fold clears both") {
+  test("position and equality deletes compose; appends keep old ordinals valid") {
     import spark.implicits._
     val dir = mkDir("dv-pos-comp")
     DeletionVectors.initTable(
@@ -141,18 +120,11 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
     DeletionVectors.deleteKeys(spark, dir, Seq(20L).toDF("k"), "k")
     // an APPEND after the position delete: new files get fresh ordinals,
     // previously-recorded positions still name the same physical rows
-    DeletionVectors.appendUpserts(spark, dir,
-      Seq((41L, "v41"), (20L, "V20")).toDF("k", "v"), "k")
+    upsert(dir, Seq((41L, "v41"), (20L, "V20")).toDF("k", "v"))
 
     val expected = ((1L to 41L).filterNot(Set(7L))
       .map(i => i -> s"v$i").toMap) + (20L -> "V20")
     assert(asMap(DeletionVectors.read(spark, dir, "k")) === expected)
-
-    val before = asMap(DeletionVectors.read(spark, dir, "k"))
-    DeletionVectors.fold(spark, dir, "k", orderBy = Seq(col("k")))
-    assert(!new java.io.File(s"$dir/_pdv").exists())
-    assert(!new java.io.File(s"$dir/_dv").exists())
-    assert(asMap(DeletionVectors.read(spark, dir, "k")) === before)
   }
 
   test("read-side plan: DV mask broadcasts, base never shuffles") {
@@ -169,48 +141,7 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
       s"base must not shuffle for the DV subtraction:\n$plan")
   }
 
-  test("time travel: every historical state reproducible; newer seq dirs pruned") {
-    import spark.implicits._
-    val dir = mkDir("dv-asof")
-    DeletionVectors.initTable(
-      (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"), dir)
-    // seq 1: upsert 3 -> V3, 21 -> V21
-    DeletionVectors.appendUpserts(spark, dir,
-      Seq((3L, "V3"), (21L, "V21")).toDF("k", "v"), "k")
-    // delete at tip 1 (below_seq = 2): kills 5 and the upserted 3
-    DeletionVectors.deleteKeys(spark, dir, Seq(5L, 3L).toDF("k"), "k")
-    // seq 2: upsert 5 back -> V5b (legitimate post-delete reinsert)
-    DeletionVectors.appendUpserts(spark, dir,
-      Seq((5L, "V5b")).toDF("k", "v"), "k")
-    // position delete at tip 2: kill one ordinal of seq=0
-    val victim = DeletionVectors.scanWithPositionMask(spark, dir)
-      .filter(col("k") === 9L)
-      .select(col("_metadata.file_path").as("file_path"),
-        col("_metadata.row_index").as("row_index"))
-    DeletionVectors.deletePositions(spark, dir, victim)
-
-    // commit ids: 0 init, 1 upsert, 2 delete, 3 reinsert, 4 pos-delete —
-    // every batch kind owns a version, so each is its own as-of point
-    val s0 = (1L to 20L).map(i => i -> s"v$i").toMap
-    val s1 = s0 ++ Map(3L -> "V3", 21L -> "V21")
-    val s2 = s1 - 3L - 5L
-    val s3 = s2 ++ Map(5L -> "V5b")
-    val live = s3 - 9L
-    assert(asMap(DeletionVectors.readAsOf(spark, dir, "k", 0)) === s0)
-    assert(asMap(DeletionVectors.readAsOf(spark, dir, "k", 1)) === s1)
-    assert(asMap(DeletionVectors.readAsOf(spark, dir, "k", 2)) === s2)
-    assert(asMap(DeletionVectors.readAsOf(spark, dir, "k", 3)) === s3)
-    assert(asMap(DeletionVectors.readAsOf(spark, dir, "k", 4)) === live)
-    assert(asMap(DeletionVectors.read(spark, dir, "k")) === live)
-
-    // the data filter is a PARTITION filter: as-of 0 never opens seq>=1
-    val plan = DeletionVectors.readAsOf(spark, dir, "k", 0)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("seq"),
-      s"asOf seq filter must prune partitions:\n$plan")
-  }
-
-  test("commit protocol: unsealed batches invisible; CAS serializes writers; fold vacuums orphans") {
+  test("commit protocol: unsealed batches invisible; CAS serializes writers") {
     import spark.implicits._
     val dir = mkDir("dv-commit")
     DeletionVectors.initTable(
@@ -229,8 +160,7 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
 
     // the crashed reservation is never reused: the next writer allocates
     // PAST it, and its sealed batch is fully visible
-    val n2 = DeletionVectors.appendUpserts(spark, dir,
-      Seq((7L, "V7")).toDF("k", "v"), "k")
+    val n2 = upsert(dir, Seq((7L, "V7")).toDF("k", "v"))
     assert(n2 > orphan)
     assert(asMap(DeletionVectors.read(spark, dir, "k")) ===
       clean ++ Map(7L -> "V7"))
@@ -239,14 +169,50 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
     val a = DeletionVectors.allocateCommit(spark, dir)
     val b = DeletionVectors.allocateCommit(spark, dir)
     assert(a !== b)
+  }
 
-    // fold vacuums the orphan data dir and spent markers; read unchanged
-    DeletionVectors.fold(spark, dir, "k")
-    assert(asMap(DeletionVectors.read(spark, dir, "k")) ===
-      clean ++ Map(7L -> "V7"))
-    val seqDirsLeft = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty).filter(_.getName.startsWith("seq=")).map(_.getName)
-    assert(seqDirsLeft.length === 1, seqDirsLeft.mkString(","))
+  test("change feed: asOf(from) plus net changes reproduces asOf(to)") {
+    import spark.implicits._
+    val dir = mkDir("dv-feed")
+    // states(n) = the table just after commit n sealed, read live
+    DeletionVectors.initTable(
+      (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"), dir)
+    val s0 = asMap(DeletionVectors.read(spark, dir, "k"))
+    assert(upsert(dir, Seq((3L, "V3"), (21L, "V21")).toDF("k", "v")) === 1L)
+    val s1 = asMap(DeletionVectors.read(spark, dir, "k"))
+    DeletionVectors.deleteKeys(spark, dir, Seq(5L, 3L).toDF("k"), "k") // 2
+    val s2 = asMap(DeletionVectors.read(spark, dir, "k"))
+    assert(upsert(dir, Seq((5L, "V5b"), (3L, "V3b")).toDF("k", "v")) === 3L)
+    val s3 = asMap(DeletionVectors.read(spark, dir, "k"))
+    val states = Map(0L -> s0, 1L -> s1, 2L -> s2, 3L -> s3)
+
+    // the feed over the table's storage: every sealed sequence directory
+    // (with its seq partition column) against the sealed sidecar
+    val data = spark.read.option("basePath", dir).parquet(
+      DeletionVectors.committedIds(spark, dir).map(n => s"$dir/seq=$n")
+        .filter(p => new java.io.File(p).exists): _*)
+    val dv = DeletionVectors.readDv(spark, dir, "k")
+    def feed(from: Long, to: Long) =
+      DeletionVectors.changesOf(data, dv, "k", from, to).collect()
+        .map(r => (r.getAs[Long]("k"), r.getAs[String]("v"),
+          r.getAs[String]("_change")))
+    def applyFeed(state: Map[Long, String], from: Long, to: Long) = {
+      val f = feed(from, to)
+      val afterDel = f.filter(_._3 == "delete")
+        .foldLeft(state) { case (s, (k, v, _)) =>
+          assert(s.get(k).contains(v), s"delete image mismatch for $k")
+          s - k
+        }
+      f.filter(_._3 == "insert")
+        .foldLeft(afterDel) { case (s, (k, v, _)) => s + (k -> v) }
+    }
+    // every window: state(from) ⊕ feed(from,to) == state(to)
+    for (from <- 0L to 2L; to <- (from + 1) to 3L)
+      assert(applyFeed(states(from), from, to) === states(to), s"$from->$to")
+    // net semantics: key 3 deleted at 2 and reinserted at 3 appears in
+    // the 1->3 window as its delete(V3)+insert(V3b) pair, not a triple
+    val w13 = feed(1L, 3L).filter(_._1 == 3L).map(t => (t._2, t._3)).toSet
+    assert(w13 === Set(("V3", "delete"), ("V3b", "insert")))
   }
 
   test("additive schema evolution: a later batch's new column survives the read") {
@@ -255,8 +221,7 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
     DeletionVectors.initTable(
       (1L to 10L).map(i => (i, s"v$i")).toDF("k", "v"), dir)
     // the upsert batch carries a column the snapshot lacked
-    DeletionVectors.appendUpserts(spark, dir,
-      Seq((3L, "V3", "en"), (11L, "V11", "de")).toDF("k", "v", "lang"), "k")
+    upsert(dir, Seq((3L, "V3", "en"), (11L, "V11", "de")).toDF("k", "v", "lang"))
     val rows = DeletionVectors.read(spark, dir, "k").collect()
       .map(r => r.getAs[Long]("k") ->
         ((r.getAs[String]("v"), Option(r.getAs[String]("lang"))))).toMap
@@ -264,48 +229,6 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
     assert(rows(11L) === (("V11", Some("de"))))
     assert(rows(5L) === (("v5", None))) // old rows read null in the new column
     assert(rows.size === 11)
-    // fold materializes the widened schema; read unchanged
-    DeletionVectors.fold(spark, dir, "k")
-    val folded = DeletionVectors.read(spark, dir, "k").collect()
-      .map(r => r.getAs[Long]("k") ->
-        ((r.getAs[String]("v"), Option(r.getAs[String]("lang"))))).toMap
-    assert(folded === rows)
-  }
-
-  test("change feed: asOf(from) plus net changes reproduces asOf(to)") {
-    import spark.implicits._
-    val dir = mkDir("dv-feed")
-    DeletionVectors.initTable(
-      (1L to 20L).map(i => (i, s"v$i")).toDF("k", "v"), dir)
-    DeletionVectors.appendUpserts(spark, dir,
-      Seq((3L, "V3"), (21L, "V21")).toDF("k", "v"), "k") // commit 1
-    DeletionVectors.deleteKeys(spark, dir, Seq(5L, 3L).toDF("k"), "k") // 2
-    DeletionVectors.appendUpserts(spark, dir,
-      Seq((5L, "V5b"), (3L, "V3b")).toDF("k", "v"), "k") // commit 3
-
-    def applyFeed(state: Map[Long, String], from: Long, to: Long) = {
-      val feed = DeletionVectors.changesBetween(spark, dir, "k", from, to)
-        .collect().map(r => (r.getAs[Long]("k"), r.getAs[String]("v"),
-          r.getAs[String]("_change")))
-      val afterDel = feed.filter(_._3 == "delete")
-        .foldLeft(state) { case (s, (k, v, _)) =>
-          assert(s.get(k).contains(v), s"delete image mismatch for $k")
-          s - k
-        }
-      feed.filter(_._3 == "insert")
-        .foldLeft(afterDel) { case (s, (k, v, _)) => s + (k -> v) }
-    }
-    val states = (0L to 3L).map(i =>
-      i -> asMap(DeletionVectors.readAsOf(spark, dir, "k", i))).toMap
-    // every window: state(from) ⊕ feed(from,to) == state(to)
-    for (from <- 0L to 2L; to <- (from + 1) to 3L)
-      assert(applyFeed(states(from), from, to) === states(to), s"$from->$to")
-    // net semantics: key 3 deleted at 2 and reinserted at 3 appears in
-    // the 1->3 window as its delete(V3)+insert(V3b) pair, not a triple
-    val w13 = DeletionVectors.changesBetween(spark, dir, "k", 1, 3)
-      .filter(col("k") === 3L).collect()
-      .map(r => (r.getAs[String]("v"), r.getAs[String]("_change"))).toSet
-    assert(w13 === Set(("V3", "delete"), ("V3b", "insert")))
   }
 
   test("two writers racing full append batches both land, with distinct commits") {
@@ -319,8 +242,7 @@ class DeletionVectorsSpec extends AnyFunSuite with SparkSpec {
     val gate = new java.util.concurrent.CountDownLatch(1)
     def writer(key: Long, v: String): Future[Long] = Future {
       gate.await()
-      DeletionVectors.appendUpserts(spark, dir,
-        Seq((key, v)).toDF("k", "v"), "k")
+      upsert(dir, Seq((key, v)).toDF("k", "v"))
     }
     val fa = writer(3L, "A")
     val fb = writer(4L, "B")

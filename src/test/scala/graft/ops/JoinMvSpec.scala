@@ -60,10 +60,6 @@ class JoinMvSpec extends AnyFunSuite with SparkSpec {
     assert(got === cow)
     assert(!got.contains(10L) && !got.contains(15L))
     assert(got(6L) === ((3L, "seg3")))
-
-    // fold compacts the maintained view back to one clean sequence
-    DeletionVectors.fold(spark, dir, "k", orderBy = Seq(col("k")))
-    assert(asMap(JoinMv.read(spark, dir, "k")) === cow)
   }
 
   test("delete-only batch writes an empty sequence + sidecar; view still answers") {

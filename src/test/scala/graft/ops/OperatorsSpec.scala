@@ -28,8 +28,8 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   ).toDF("doc_id", "text")
 
   test("exact dedup keeps min-id winner per fingerprint") {
-    val kept = Dedup.dropExactDuplicates(docs, "doc_id", "text")
-      .select("doc_id").as[Long].collect().sorted
+    val kept = Dedup.exactGroups(docs, "doc_id", "text")
+      .select("keep_id").as[Long].collect().sorted
     assert(kept === Array(1L, 3L, 4L, 5L)) // 2 deduped into 1
   }
 
@@ -241,10 +241,12 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("minhash LSH surfaces exact duplicates with jaccard 1.0") {
-    val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
+    val pairs = Dedup.minhashPairsExact(docs, "doc_id", "text",
         shingleN = 2, numHashes = 32, bands = 16, threshold = 0.9)
       .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 1.0))
+    // the threshold applies to the exact jaccard: (1,3) at 0.6 stays out
+    assert(!pairs.exists(p => (p._1, p._2) == (1L, 3L)))
   }
 
   test("simhash: identical texts have hamming 0, unrelated texts don't collide at <=3") {
@@ -537,9 +539,11 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   test("hash split is deterministic and disjoint") {
     val df = (1 to 400).map(i => (i, "x")).toDF("id", "v")
-    val (tr1, te1) = Splits.hashSplit(df, "id", sixteenths = 12)
-    val (tr2, _) = Splits.hashSplit(df, "id", sixteenths = 12)
-    assert(tr1.count() === tr2.count())
+    def split() = df.withColumn("_split", Splits.hashSplitColumn("id", 12))
+    val tr1 = split().filter(col("_split") === "train")
+    val te1 = split().filter(col("_split") === "test")
+    assert(tr1.select("id").collect().toSet ===
+      split().filter(col("_split") === "train").select("id").collect().toSet)
     assert(tr1.count() + te1.count() === 400)
     assert(math.abs(tr1.count() / 400.0 - 0.75) < 0.1)
   }
@@ -561,6 +565,19 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     val out = Preprocessing.minMaxNormalize(df, stats, Seq("a", "b"), Nil)
       .as[(Double, Double)].collect().sortBy(_._1)
     assert(out === Array((0.0, 0.0), (0.5, 0.0), (1.0, 0.0)))
+  }
+
+  test("min-max stats refuse an empty frame and an all-null column, naming the column") {
+    val df = Seq((0.0, Option(5.0)), (5.0, None)).toDF("a", "b")
+    val empty = intercept[IllegalArgumentException] {
+      Preprocessing.computeMinMax(df.filter(col("a") > 100.0), Seq("a", "b"))
+    }
+    assert(empty.getMessage.contains("'a'"), empty.getMessage)
+    val allNull = intercept[IllegalArgumentException] {
+      Preprocessing.computeMinMax(df.withColumn("b", lit(null).cast("double")),
+        Seq("a", "b"))
+    }
+    assert(allNull.getMessage.contains("'b'"), allNull.getMessage)
   }
 
   test("balanced accuracy: perfect predictor = 1, constant predictor = 1/k") {

@@ -301,14 +301,35 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("q_pagerank: rank/edge joins are equi (hash) joins; only scalars cross") {
-    // the shipped query localCheckpoints each iteration (block discipline),
-    // so its final plan is a LogicalRDD scan — pin the join strategy on
-    // the declarative twin, which unrolls the same iterations lazily
-    val df = graft.graph.GraphQueries.pagerankPlanOnly(spark, d)
-    val plan = df.queryExecution.sparkPlan.toString
+    // the catalog's fixture graph runs the driver tier; above the edge cap
+    // the distributed loop runs, and it localCheckpoints each span, so
+    // the result's plan is a LogicalRDD scan — pin the join strategy on
+    // the plan each checkpoint action executes, forcing that tier on the
+    // q_pagerank graph
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.graph.PageRank.pageRank(graft.graph.GraphQueries.docEdges(spark, d),
+        "src", "dst", driverEdgeCap = 0L).collect()
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(!plans.isEmpty, "no localCheckpoint action observed")
+    val plan = plans.asScala.mkString("\n")
     // the per-iteration contrib join must be an equi join on src/node —
     // BNLJ is reserved for the broadcast 1-row scalars (allowlisted)
     assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
       s"no equi join strategy in PageRank plan:\n$plan")
+    assert(!plan.contains("CartesianProduct"),
+      s"a node-scale frame crossed instead of a broadcast scalar:\n$plan")
   }
 }

@@ -16,7 +16,6 @@ class ControllerSpec extends AnyFunSuite with SparkSpec {
     val cfg = SweepConfig(
       dataPath = graft.TestData.ecg5000Path,
       tsv = true,
-      minIterations = 2,
       localMaxPartitions = 3,
       globalMaxPartitions = 2,
       nSplitters = 3,

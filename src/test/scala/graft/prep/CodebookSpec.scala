@@ -45,13 +45,4 @@ class CodebookSpec extends AnyFunSuite with SparkSpec {
     val b1 = book(dir)
     b0.foreach { case (c, id) => assert(b1(c) === id, s"id of $c moved") }
   }
-
-  test("encode maps through the book; unseen categories go null") {
-    val dir = Files.createTempDirectory("codebook_enc").toString + "/b"
-    Codebook.init(Seq("x", "y", "x").toDF("v"), "v", dir)
-    val enc = Codebook.encode(Seq("x", "y", "w").toDF("v"), "v",
-      Codebook.read(spark, dir), "vid")
-      .collect().map(r => r.getString(0) -> Option(r.get(1))).toMap
-    assert(enc === Map("x" -> Some(0L), "y" -> Some(1L), "w" -> None))
-  }
 }

@@ -89,7 +89,7 @@ class MixingSpec extends AnyFunSuite with SparkSpec {
     val stream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val q = Mixing.admitStream(stream.toDF().toDF("id", "dom"), frozen,
+    val q = Mixing.admit(stream.toDF().toDF("id", "dom"), frozen,
         "dom", "id", 7L)
       .writeStream.outputMode("append")
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>

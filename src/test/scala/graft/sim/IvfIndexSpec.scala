@@ -118,37 +118,6 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     // visibility: appended (odd-id) vectors are reachable as neighbors
     val neighbors = res(t).map(_._2)
     assert(neighbors.exists(_ % 2 === 1), s"no appended vector surfaced: $neighbors")
-
-    // drift report: every cell occupied, mean distance finite
-    val stats = IvfIndex.cellStats(spark, t).collect()
-    assert(stats.map(_.getLong(1)).sum === emb.count())
-    assert(stats.forall(r => !r.getDouble(2).isNaN))
-  }
-
-  test("delete: tombstoned vectors leave search results; compact folds") {
-    import spark.implicits._
-    val t = Files.createTempDirectory("ivf_del").toString + "/idx"
-    IvfIndex.build(emb, "vec_id", "embedding", t, nlist = 8,
-      sampleSize = 500, seed = 7L)
-    val full = IvfIndex.search(spark, t, queries, "vec_id", "embedding",
-      k = 3, nprobe = 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val victim = full.head._2
-    IvfIndex.delete(spark, t, Seq(victim).toDF("vec_id"), "vec_id")
-    val after = IvfIndex.search(spark, t, queries, "vec_id", "embedding",
-      k = 3, nprobe = 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!after.exists(_._2 == victim), "tombstoned vector still served")
-    // ranks re-close over survivors: every query still gets k neighbors
-    assert(after.groupBy(_._1).forall(_._2.size == 3))
-    val statsTotal = IvfIndex.cellStats(spark, t).collect().map(_.getLong(1)).sum
-    assert(statsTotal === emb.count() - 1)
-    val (nLive, nFolded) = IvfIndex.compact(spark, t)
-    assert(nFolded === 1 && nLive === emb.count() - 1)
-    assert(!new java.io.File(s"$t/tombstones").exists())
-    assert(IvfIndex.search(spark, t, queries, "vec_id", "embedding",
-      k = 3, nprobe = 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet === after)
   }
 
   test("probe scan prunes unprobed cell partitions") {
@@ -170,73 +139,6 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     byQuery.foreach { case (_, rows) =>
       assert(rows.map(r => indexed(r.getLong(1))).toSet.size === 1)
     }
-  }
-
-  test("streaming ingest: frozen-centroid appends per trigger, audit " +
-      "ledger, cross-trigger visibility, batch-append equivalence") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("ivf_stream").toString
-    val idxDir = s"$base/idx"
-    val auditDir = s"$base/audit"
-    val seedHalf = emb.filter(col("vec_id") % 2 === 0)
-    IvfIndex.build(seedHalf, "vec_id", "embedding", idxDir, nlist = 8,
-      sampleSize = 500, seed = 7L)
-
-    // two deterministic 64-dim vectors, far from each other
-    def vec(phase: Double): Seq[Double] =
-      (0 until 64).map(i => math.sin(i / 3.0 + phase) + 0.1 * i * phase)
-    val v1 = vec(0.5); val v2 = vec(2.5)
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Double])]
-    val q = IvfIndex.streamingIngest(spark, idxDir, auditDir,
-      stream.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding")
-    try {
-      // trigger 1: one new vector
-      stream.addData((1001L, v1))
-      q.processAllAvailable()
-      val e0 = spark.read.parquet(s"$auditDir/epoch=0")
-      assert(e0.select("vec_id").as[Long].collect().toSet === Set(1001L))
-
-      // trigger 2: another vector arrives AND a probe must find the
-      // trigger-1 vector through the standing index
-      stream.addData((1002L, v2))
-      q.processAllAvailable()
-      val probe = Seq((9001L, v1)).toDF("vec_id", "embedding")
-      val hit = IvfIndex.search(spark, idxDir, probe,
-        "vec_id", "embedding", k = 1, nprobe = 2).collect()
-      assert(hit.length === 1)
-      assert(hit(0).getLong(1) === 1001L,
-        s"trigger-2 probe should find the trigger-1 vector, got ${hit(0)}")
-      assert(hit(0).getDouble(3) > 0.999999, "self-vector cosine ~ 1")
-
-      // audit ledger: one epoch dir per trigger, cells within nlist range
-      val e1 = spark.read.parquet(s"$auditDir/epoch=1")
-      assert(e1.select("vec_id").as[Long].collect().toSet === Set(1002L))
-      val cells = spark.read.parquet(s"$auditDir/epoch=0")
-        .union(e1).select("cell").as[Int].collect()
-      assert(cells.forall(c => c >= 0 && c < 8))
-    } finally q.stop()
-
-    // equivalence: a twin index (same seed half -> same frozen centroids)
-    // taking both vectors in ONE batch append answers every search
-    // identically — trigger count changes file layout, never results
-    val twin = s"$base/twin"
-    IvfIndex.build(seedHalf, "vec_id", "embedding", twin, nlist = 8,
-      sampleSize = 500, seed = 7L)
-    IvfIndex.append(spark, twin,
-      Seq((1001L, v1), (1002L, v2)).toDF("vec_id", "embedding"),
-      "vec_id", "embedding")
-    // embeddings is array<float>; cast for the union with the literal
-    // array<double> probes (search casts to double internally anyway)
-    val qset = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .union(Seq((9001L, v1), (9002L, v2)).toDF("vec_id", "embedding"))
-    def res(p: String) = IvfIndex.search(spark, p, qset, "vec_id",
-      "embedding", k = 3, nprobe = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(res(idxDir) === res(twin))
   }
 
   // ---- retrainAndCompact (r17): the index lifecycle's last step ----
@@ -354,9 +256,9 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(recallBefore < 0.85,
       s"drift scenario failed to degrade recall: $recallBefore")
 
-    // tombstone a few ids: the retrain is also a compact
-    IvfIndex.delete(spark, t,
-      (0L until 10L).toDF("vec_id"), "vec_id")
+    // tombstone a few ids (the `tombstones/` sidecar every read
+    // subtracts): the retrain is also a compact
+    (0L until 10L).toDF("vec_id").write.parquet(s"$t/tombstones")
     val live = stored.filterNot(_._1 < 10L)
     // snapshot the surviving vectors BEFORE the rebuild overwrites them
     val snap = spark.read.parquet(s"$t/vectors")
@@ -365,7 +267,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
 
     // occupancy is balanced here (drift, not skew) — the operator forces
-    // after reading cellStats' rising mean_dist, the documented signal —
+    // after recallProbe reads the drop, the documented signal —
     // and grows the quantizer to make room for the arrived cluster
     val cs = IvfIndex.retrainAndCompact(spark, t, force = true, nlist = 5)
     assert(cs.isDefined)
@@ -520,149 +422,5 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     // same centroids + same vectors staged -> identical searches
     assert(res() === before)
     assert(IvfIndex.recoverRetrain(spark, t) === "none")
-  }
-
-  test("streaming ingest: a crashed partial audit epoch is healed on " +
-      "replay (seal = _SUCCESS, not dir existence)") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("ivf_crash").toString
-    val idxDir = s"$base/idx"
-    val auditDir = s"$base/audit"
-    IvfIndex.build(emb.filter(col("vec_id") % 2 === 0), "vec_id",
-      "embedding", idxDir, nlist = 8, sampleSize = 500, seed = 7L)
-    // crash simulation: audit epoch dir present, no _SUCCESS — the r17
-    // ADVICE scenario where existence-gating would skip the replay and
-    // permanently break the count(vectors)-vs-audit reconciliation
-    Seq((999L, 0, 0L)).toDF("vec_id", "cell", "epoch")
-      .write.parquet(s"$auditDir/epoch=0")
-    assert(new java.io.File(s"$auditDir/epoch=0", "_SUCCESS").delete())
-
-    val v = (0 until 64).map(i => math.sin(i / 3.0 + 0.5) + 0.05 * i)
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Double])]
-    val q = IvfIndex.streamingIngest(spark, idxDir, auditDir,
-      stream.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding")
-    try {
-      stream.addData((1001L, v))
-      q.processAllAvailable()
-      // replay ran: stale partial cleared, true audit row committed
-      val e0 = spark.read.parquet(s"$auditDir/epoch=0")
-      assert(e0.select("vec_id").as[Long].collect().toSet === Set(1001L))
-      assert(new java.io.File(s"$auditDir/epoch=0", "_SUCCESS").exists())
-      // and the vector landed exactly once in the index
-      val n = spark.read.parquet(s"$idxDir/vectors")
-        .filter(col("vec_id") === 1001L).count()
-      assert(n === 1L)
-    } finally q.stop()
-  }
-
-  test("runDueBeat: marker-driven beats fire once per due epoch, a " +
-      "re-delivered trigger cannot double-run, and a replay catches up " +
-      "an orphaned beat (r19 ADVICE — the positional form under-ran)") {
-    val t = Files.createTempDirectory("ivf_due").toString + "/idx"
-    IvfIndex.build(emb.filter(col("vec_id") < 200), "vec_id", "embedding",
-      t, nlist = 4, sampleSize = 300, seed = 7L)
-    val pol = IvfIndex.MaintenancePolicy(probeN = 5, probeK = 3)
-    def rows = IvfIndex.maintenanceLog(spark, t).count()
-    IvfIndex.runDueBeat(spark, t, epochId = 0, maintainEvery = 2, pol)
-    assert(rows === 0L, "no due epoch yet (due epochs are 1, 3, ...)")
-    assert(IvfIndex.lastBeatEpoch(spark, t).isEmpty)
-    IvfIndex.runDueBeat(spark, t, epochId = 1, maintainEvery = 2, pol)
-    assert(rows === 1L)
-    assert(IvfIndex.lastBeatEpoch(spark, t) === Some(1L))
-    // re-delivered trigger / not-yet-due epoch: marker == latest due
-    IvfIndex.runDueBeat(spark, t, epochId = 1, maintainEvery = 2, pol)
-    IvfIndex.runDueBeat(spark, t, epochId = 2, maintainEvery = 2, pol)
-    assert(rows === 1L, "no new due epoch between 1 and 2")
-    // orphaned beat: the session crashed between epoch 3's seal and its
-    // beat — the marker still says 1. The replayed session's next
-    // trigger (epoch 4, itself NOT due) must catch up the missed beat.
-    IvfIndex.runDueBeat(spark, t, epochId = 4, maintainEvery = 2, pol)
-    assert(rows === 2L, "replay must catch up the orphaned due-3 beat")
-    assert(IvfIndex.lastBeatEpoch(spark, t) === Some(3L))
-    // maintainEvery <= 0 disables the beat entirely
-    IvfIndex.runDueBeat(spark, t, epochId = 9, maintainEvery = 0, pol)
-    assert(rows === 2L)
-  }
-
-  test("streaming ingest: the in-stream maintenance beat (r19) — drifted " +
-      "appends degrade recall, hysteresis holds one beat, the next beat " +
-      "retrains IN-stream, and later triggers ingest against the new " +
-      "quantizer") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("ivf_beat").toString
-    val idxDir = s"$base/idx"
-    val auditDir = s"$base/audit"
-    val c0 = (0 to 3).flatMap(c =>
-      (0 until 200).map(j => (c * 1000L + j, member(c, j))))
-    IvfIndex.build(c0.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      idxDir, nlist = 4, sampleSize = 900, seed = 7L)
-    // the maintain-spec drift cluster: Voronoi-boundary straddle whose
-    // cell hairline is invisible to cosine ranking (see bmember there)
-    def smember(j: Int): Seq[Double] = {
-      val v = Array.fill(64)(0.0)
-      val h = if (math.sin(j * 12.9898) >= 0) 0.02 else -0.02
-      v(0) = 1.0 + h
-      v(9) = 1.0 - h
-      var i = 10
-      while (i < 64) { v(i) = 0.2 * math.sin(i * 2.3 + j * 1.7); i += 1 }
-      v.toSeq
-    }
-    val policy = IvfIndex.MaintenancePolicy(recallFloor = 0.92,
-      badToAct = 2, probeN = 50, probeK = 10, probeNprobe = 1,
-      sampleSize = 1300)
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Double])]
-    val q = IvfIndex.streamingIngest(spark, idxDir, auditDir,
-      stream.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      maintainEvery = 1, policy = policy)
-    val cs0 = IvfIndex.loadCentroids(spark, idxDir).map(_.toSeq)
-    try {
-      // trigger 0: benign in-distribution batch -> beat observes healthy
-      stream.addData((0 until 20).map(j => (8000L + j, member(0, 300 + j))): _*)
-      q.processAllAvailable()
-      // trigger 1: the drift cluster arrives whole -> recall below the
-      // floor, but the FIRST bad beat must hold (hysteresis in-stream)
-      stream.addData((0 until 400).map(j => (5000L + j, smember(j))): _*)
-      q.processAllAvailable()
-      assert(IvfIndex.loadCentroids(spark, idxDir).map(_.toSeq) === cs0,
-        "a held beat must not touch the quantizer")
-      // trigger 2: more of the same drift -> second consecutive bad beat
-      // retrains IN-stream, post-probe confirms recovery
-      stream.addData((0 until 40).map(j => (5400L + j, smember(400 + j))): _*)
-      q.processAllAvailable()
-      assert(IvfIndex.loadCentroids(spark, idxDir).map(_.toSeq) !== cs0,
-        "the second bad beat must retrain in-stream")
-      // trigger 3: ingest continues against the NEW quantizer (centroids
-      // reload per trigger) and the beat reads the rebuilt index healthy
-      stream.addData((0 until 10).map(j => (8100L + j, member(1, 300 + j))): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    // the ledger audits one beat per trigger, the maintain-spec arc:
-    // healthy -> held -> retrain -> healthy-again
-    val log = IvfIndex.maintenanceLog(spark, idxDir)
-      .select("seq", "unhealthy", "consecutive_bad", "action")
-      .as[(Long, Boolean, Long, String)].collect().toSeq
-    assert(log === Seq((0L, false, 0L, "none"), (1L, true, 1L, "none"),
-      (2L, true, 2L, "retrain"), (3L, false, 0L, "none")), s"ledger: $log")
-    val act = IvfIndex.maintenanceLog(spark, idxDir)
-      .filter(col("seq") === 2L).collect()(0)
-    assert(act.getDouble(8) > act.getDouble(2) + 0.02,
-      s"in-stream retrain must recover recall: " +
-        s"${act.getDouble(2)} -> ${act.getDouble(8)}")
-    // every trigger sealed (the beat runs strictly after the seal), and
-    // the post-retrain trigger's vectors are searchable
-    (0 to 3).foreach { e =>
-      assert(new java.io.File(s"$auditDir/epoch=$e", "_SUCCESS").exists(),
-        s"epoch $e must be sealed")
-    }
-    val probe = Seq((90000L, member(1, 300))).toDF("vec_id", "embedding")
-    val hit = IvfIndex.search(spark, idxDir, probe,
-      "vec_id", "embedding", k = 1, nprobe = 2).collect()
-    assert(hit.length === 1 && hit(0).getLong(1) === 8100L,
-      s"post-retrain streamed vector must be found: ${hit.toSeq}")
   }
 }

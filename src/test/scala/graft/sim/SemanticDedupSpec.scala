@@ -160,8 +160,8 @@ class SemanticDedupSpec extends AnyFunSuite with SparkSpec {
       .groupBy(col("cluster_id")).count()
       .as[(Long, Long)].collect().toMap
     val n = sizes.values.sum
-    assert(sizes.size === graft.sim.SemanticCentroids.k,
-      s"only ${sizes.size}/${graft.sim.SemanticCentroids.k} centroids used")
+    assert(sizes.size === graft.sim.SemanticCentroids.values.length,
+      s"only ${sizes.size}/${graft.sim.SemanticCentroids.values.length} centroids used")
     // measured max is 27/500 (5.4%); 15% leaves headroom without letting
     // a degenerate quantizer (one mega-cluster) slip through
     assert(sizes.values.max <= n * 0.15,

@@ -57,12 +57,13 @@ class VectorFuzzSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("cosine arithmetic degrades to 0 on zero-norm and NaN vectors") {
+    def cosine(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      Vectors.cosineFromNorms(a, b, Vectors.norm(a), Vectors.norm(b))
     // zero vector: denom 0 -> guard branch -> exactly 0, not NaN
     def simOf(ida: Long, idb: Long): Double =
       hostile.filter(col("vec_id") === ida).as("a")
         .crossJoin(hostile.filter(col("vec_id") === idb).as("b"))
-        .select(Vectors.cosineSimilarity(
-          Vectors.toDoubleArray(col("a.embedding")),
+        .select(cosine(Vectors.toDoubleArray(col("a.embedding")),
           Vectors.toDoubleArray(col("b.embedding"))).as("sim"))
         .as[Double].head()
     assert(simOf(5L, 5L) === 0.0)

@@ -1,14 +1,12 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import DedupStreams.{Admission, AdmissionTtl, FpDoc, FpDocTs}
+import DedupStreams.{Admission, FpDoc}
 
 class DedupStreamsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -48,34 +46,6 @@ class DedupStreamsSpec extends AnyFunSuite with SparkSpec {
       assert(aaaRows.map(a => (a.keep_id, a.dup_cnt)).toSeq ===
         Seq((10L, 2L), (10L, 3L)))
       assert(t2.count(_.fp == "ccc") === 1)
-    } finally q.stop()
-  }
-
-  test("event-time TTL: idle state expires on the data clock and readmits") {
-    def ts(h: Int): Timestamp = Timestamp.valueOf(f"2026-01-01 $h%02d:00:00")
-    val stream = MemoryStream[FpDocTs]
-    val q = DedupStreams.admitFirstEventTime(spark, stream.toDS(),
-      idleTtlMinutes = 60, watermarkDelay = "0 seconds")
-      .writeStream.format("memory").queryName("dedup_ttl_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      stream.addData(FpDocTs("aaa", 10, ts(1)), FpDocTs("bbb", 11, ts(1)))
-      q.processAllAvailable()
-      // advance the watermark far past aaa/bbb's TTL; cc arrives fresh
-      stream.addData(FpDocTs("ccc", 12, ts(5)))
-      q.processAllAvailable()
-      // expired rows emitted with final accounting
-      val expired = spark.table("dedup_ttl_out").as[AdmissionTtl]
-        .collect().filter(_.expired).map(a => (a.fp, a.keep_id, a.dup_cnt)).toSet
-      assert(expired === Set(("aaa", 10L, 1L), ("bbb", 11L, 1L)))
-
-      // the SAME content arriving after expiry is admitted as new
-      stream.addData(FpDocTs("aaa", 99, ts(6)))
-      q.processAllAvailable()
-      val readmitted = spark.table("dedup_ttl_out").as[AdmissionTtl]
-        .collect().filter(a => a.fp == "aaa" && !a.expired)
-      assert(readmitted.map(a => (a.keep_id, a.dup_cnt)).toSet
-        .contains((99L, 1L)), readmitted.mkString(","))
     } finally q.stop()
   }
 }

@@ -22,23 +22,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     Event(3, ts(10), 200, "view", 3.0),
     Event(4, ts(50), 100, "click", 4.0)) // > 30 min gap from event 2
 
-  test("windowedAgg on a MemoryStream emits per-window per-type aggregates") {
-    val stream = MemoryStream[Event]
-    stream.addData(batch: _*)
-    val q = EventStreams.windowedAgg(stream.toDF(), "15 minutes", "5 minutes")
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode(OutputMode.Complete).start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("win_out")
-        .select("event_type", "n", "total_value")
-        .as[(String, Long, Double)].collect().toSet
-      assert(rows.contains(("click", 2L, 3.0))) // 10:00 + 10:05 in [10:00,10:15)
-      assert(rows.contains(("view", 1L, 3.0)))
-      assert(rows.contains(("click", 1L, 4.0))) // 10:50 window
-    } finally q.stop()
-  }
-
   test("enrichStream decorates a stream with a static dim and agrees with batch") {
     val dim = Seq((100L, "gold"), (300L, "silver")).toDF("user_id", "tier")
     val stream = MemoryStream[Event]
@@ -71,73 +54,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     // both paths produce the same rows
     assert(gated.select("event_id", "tier").collect().toSet ===
       hinted.select("event_id", "tier").collect().toSet)
-  }
-
-  test("sessionWindows groups by 30-minute gaps per user") {
-    val stream = MemoryStream[Event]
-    stream.addData(batch: _*)
-    val q = EventStreams.sessionWindows(stream.toDF(), "30 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode(OutputMode.Complete).start()
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("sess_out")
-        .select("user_id", "n_events").as[(Long, Long)].collect()
-        .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
-      assert(rows(100L) === Seq(1L, 2L)) // two sessions: {e1,e2}, {e4}
-      assert(rows(200L) === Seq(1L))
-    } finally q.stop()
-  }
-
-  test("runningUserCounts accumulates state across triggers") {
-    val stream = MemoryStream[Event]
-    val counts = EventStreams.runningUserCounts(spark, stream.toDS())
-    val q = counts.writeStream.format("memory").queryName("state_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      stream.addData(batch.take(3): _*)
-      q.processAllAvailable()
-      stream.addData(batch.drop(3): _*)
-      q.processAllAvailable()
-      val finalCounts = spark.table("state_out")
-        .groupBy("_1").agg(org.apache.spark.sql.functions.max("_2").as("n"))
-        .as[(Long, Long)].collect().toMap
-      assert(finalCounts(100L) === 3L) // 2 in first trigger + 1 in second
-      assert(finalCounts(200L) === 1L)
-    } finally q.stop()
-  }
-
-  test("runningUserCountsEventTime: watermark expires idle state and restarts counts") {
-    def ts2(hour: Int, minute: Int): Timestamp =
-      Timestamp.valueOf(f"2026-01-01 $hour%02d:$minute%02d:00")
-    val stream = MemoryStream[Event]
-    val counts = EventStreams.runningUserCountsEventTime(spark, stream.toDS(),
-      idleTtlMinutes = 60, watermarkDelay = "10 minutes")
-    val q = counts.writeStream.format("memory").queryName("et_counts")
-      .outputMode(OutputMode.Update).start()
-    try {
-      stream.addData(batch.take(3): _*) // u100 x2 (10:00,10:05), u200 x1 (10:10)
-      q.processAllAvailable()
-      // sentinel rolls the watermark past 10:05 + 60 min for u100/u200
-      stream.addData(Event(98, ts2(12, 0), 999, "click", 0.0))
-      q.processAllAvailable()
-      stream.addData(Event(99, ts2(13, 0), 999, "click", 0.0))
-      q.processAllAvailable()
-      val expired = spark.table("et_counts").filter($"expired")
-        .select("user_id", "n_events").as[(Long, Long)].collect().toMap
-      assert(expired === Map(100L -> 2L, 200L -> 1L),
-        "watermark must emit a final expired row per idle user")
-      // a fresh event after expiry restarts from zero: state was removed
-      // (a leak would make this row n=3; the memory sink also retains the
-      // pre-expiry n=2 row, so assert the restart row exists rather than max)
-      stream.addData(Event(100, ts2(13, 30), 100, "click", 9.0))
-      q.processAllAvailable()
-      val afterRestart = spark.table("et_counts")
-        .filter($"user_id" === 100 && !$"expired")
-        .select("n_events").as[Long].collect().toSet
-      assert(afterRestart === Set(2L, 1L),
-        "expired state must not leak into the new count")
-    } finally q.stop()
   }
 
   test("sessionizeEventTime: watermark-driven timeouts emit every session exactly once") {
@@ -185,166 +101,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
       .groupBy($"user_id").agg(sum($"new_s").as("n"))
       .as[(Long, Long)].collect().toMap
     assert(streamStyle === lagStyle)
-  }
-
-  test("funnelStages emits one row per stage advancement across triggers") {
-    val stream = MemoryStream[Event]
-    val q = EventStreams.funnelStages(spark, stream.toDS(),
-        windowMinutes = 30)
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // trigger 1: a click BEFORE any view converts nothing; then the view
-      stream.addData(
-        Event(1, ts(0), 100, "click", 0),
-        Event(2, ts(2), 100, "view", 0))
-      q.processAllAvailable()
-      // trigger 2: in-window click advances; out-of-window purchase doesn't
-      stream.addData(
-        Event(3, ts(10), 100, "click", 0),
-        Event(4, ts(45), 100, "purchase", 0)) // 35 min after click
-      q.processAllAvailable()
-      // trigger 3: an in-window purchase completes the funnel; a second
-      // view re-emits nothing (state survives completion)
-      stream.addData(
-        Event(5, ts(30), 100, "purchase", 0),
-        Event(6, ts(31), 100, "view", 0))
-      q.processAllAvailable()
-      val rows = spark.table("funnel_out")
-        .as[(Long, Int, Timestamp)].collect().sortBy(_._3.getTime)
-      assert(rows.map(r => (r._1, r._2)).toSeq ===
-        Seq((100L, 1), (100L, 2), (100L, 3)))
-    } finally q.stop()
-  }
-
-  test("funnelStages adversarial triggers: a click arriving BEFORE its view's trigger is lost") {
-    // The documented streaming-vs-batch divergence window: the click's
-    // EVENT time is after the view's, but it ARRIVES in an earlier
-    // trigger, when no view state exists to unlock it. Streaming cannot
-    // rewind emissions, so stage 2 never fires; the batch fold (all
-    // events at once, event-time order) sees view -> click. This pins the
-    // EXACT delta rather than hiding it.
-    val stream = MemoryStream[Event]
-    val q = EventStreams.funnelStages(spark, stream.toDS(),
-        windowMinutes = 30)
-      .writeStream.format("memory").queryName("funnel_adv")
-      .outputMode(OutputMode.Append).start()
-    try {
-      stream.addData(Event(1, ts(10), 100, "click", 0)) // rejected: no view yet
-      q.processAllAvailable()
-      stream.addData(Event(2, ts(0), 100, "view", 0)) // earlier event time
-      q.processAllAvailable()
-      val streamed = spark.table("funnel_adv")
-        .as[(Long, Int, Timestamp)].collect().map(r => (r._1, r._2)).toSeq
-      assert(streamed === Seq((100L, 1)), "streaming: stage 1 only")
-      // the same rows as ONE batch: the fold sees event-time order
-      val batched = EventStreams.funnelStages(spark,
-          Seq(Event(1, ts(10), 100, "click", 0),
-            Event(2, ts(0), 100, "view", 0)).toDS(),
-          windowMinutes = 30, setTimeouts = false)
-        .collect().map(u => (u.user_id, u.stage)).toSeq.sorted
-      assert(batched === Seq((100L, 1), (100L, 2)),
-        "batch: the view unlocks the click")
-    } finally q.stop()
-  }
-
-  test("funnelStages re-opens a funnel after its state expires (bounded-state trade-off)") {
-    // Completed funnel, then the watermark passes tView + 2*window and the
-    // event-time timeout removes the state; a later view RE-emits stage 1
-    // for the same user — the documented divergence from the batch fold,
-    // which keys everything to the user's first view ever.
-    val stream = MemoryStream[Event]
-    val q = EventStreams.funnelStages(spark, stream.toDS(),
-        windowMinutes = 30) // timeout at tView + 60 min
-      .writeStream.format("memory").queryName("funnel_reopen")
-      .outputMode(OutputMode.Append).start()
-    try {
-      stream.addData(
-        Event(1, ts(0), 100, "view", 0),
-        Event(2, ts(5), 100, "click", 0),
-        Event(3, ts(10), 100, "purchase", 0))
-      q.processAllAvailable()
-      // sentinel rolls the watermark (1h delay) past ts(60): 200-60=140min
-      stream.addData(Event(4, ts(200), 999, "click", 0))
-      q.processAllAvailable()
-      // above the watermark, after expiry: the funnel re-opens
-      stream.addData(Event(5, ts(150), 100, "view", 0))
-      q.processAllAvailable()
-      val rows = spark.table("funnel_reopen")
-        .filter($"user_id" === 100L)
-        .as[(Long, Int, Timestamp)].collect().sortBy(_._3.getTime)
-      assert(rows.map(_._2).toSeq === Seq(1, 2, 3, 1),
-        s"completed funnel re-emits stage 1 after expiry: $rows")
-    } finally q.stop()
-  }
-
-  test("funnelStages batch mode agrees with the q_events_funnel fold") {
-    val ev = graft.ops.Tables.events(spark, "/root/testdata/sf0.001")
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[Event]
-    val stageCounts = EventStreams.funnelStages(spark, ev,
-        windowMinutes = 1440, setTimeouts = false)
-      .groupByKey(_.stage).count().collect().toMap
-    val batchRow = graft.SparkEntry.queries("q_events_funnel")(
-      spark, "/root/testdata/sf0.001").collect().head
-    assert(stageCounts.getOrElse(1, 0L) === batchRow.getLong(0), "n_view")
-    assert(stageCounts.getOrElse(2, 0L) === batchRow.getLong(1), "n_click")
-    assert(stageCounts.getOrElse(3, 0L) === batchRow.getLong(2), "n_purchase")
-  }
-
-  test("dedupStream drops within-watermark duplicate keys across triggers") {
-    val stream = MemoryStream[Event]
-    val q = EventStreams.dedupStream(stream.toDF(), Seq("event_id"), "10 minutes")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      stream.addData(Event(1, ts(0), 100, "click", 1.0),
-        Event(2, ts(5), 200, "view", 2.0))
-      q.processAllAvailable()
-      // replay of event 1 (same key, later trigger, inside the watermark)
-      // plus a fresh event 3
-      stream.addData(Event(1, ts(6), 100, "click", 1.0),
-        Event(3, ts(7), 300, "click", 3.0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").select("event_id")
-        .as[Long].collect().sorted
-      assert(ids === Array(1L, 2L, 3L), "replayed key must be dropped once seen")
-    } finally q.stop()
-  }
-
-  test("scoreStream applies a broadcast forest to streaming rows") {
-    import graft.tree.{PLeaf, ProximityForestModel, ProximityTreeModel}
-    val leafModel = ProximityForestModel(
-      IndexedSeq(ProximityTreeModel(PLeaf(7), 7)), IndexedSeq(1.0), useWeighting = false)
-    val stream = MemoryStream[(Double, Double)]
-    stream.addData((1.0, 2.0), (3.0, 4.0))
-    val scored = EventStreams.scoreStream(spark, leafModel,
-      stream.toDF().toDF("_f0", "_f1"), Seq("_f0", "_f1"))
-    val q = scored.writeStream.format("memory").queryName("score_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      q.processAllAvailable()
-      val preds = spark.table("score_out").select("prediction")
-        .as[Int].collect()
-      assert(preds.toSeq === Seq(7, 7))
-    } finally q.stop()
-  }
-
-  test("file-source stream: parquet directory -> windowed agg -> parquet sink") {
-    val base = java.nio.file.Files.createTempDirectory("evt_stream").toString
-    batch.toDF().write.parquet(s"$base/in")
-    val stream = EventStreams.readEventStream(spark, s"$base/in")
-    assert(stream.isStreaming)
-    val q = EventStreams.writeParquetStream(
-      EventStreams.windowedAgg(stream, "15 minutes", "5 minutes")
-        .withColumn("window_start", org.apache.spark.sql.functions.col("window_start")),
-      s"$base/out", s"$base/chk").start()
-    try q.processAllAvailable() finally q.stop()
-    // append-mode watermark sinks only emit closed windows; re-reading the
-    // sink directory must at least yield the schema and any closed rows
-    val out = spark.read.parquet(s"$base/out")
-    assert(out.columns.toSet ===
-      Set("window_start", "window_end", "event_type", "n", "total_value"))
   }
 
   test("attributionJoin: streaming and batch interval joins agree; horizon bounds matches") {
@@ -417,24 +173,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
         Event(97, Timestamp.valueOf("2026-01-01 12:30:00"), 999, "purchase", 1.0))
       q.processAllAvailable()
       assert(got === Set((1L, 3L), (7L, -1L)))
-    } finally q.stop()
-  }
-
-  test("streaming and batch windowedAgg agree on the same data") {
-    val batchOut = EventStreams.windowedAgg(batch.toDF(), "15 minutes", "5 minutes")
-      .select("event_type", "n", "total_value")
-      .as[(String, Long, Double)].collect().toSet
-    val stream = MemoryStream[Event]
-    stream.addData(batch: _*)
-    val q = EventStreams.windowedAgg(stream.toDF(), "15 minutes", "5 minutes")
-      .writeStream.format("memory").queryName("agree_out")
-      .outputMode(OutputMode.Complete).start()
-    try {
-      q.processAllAvailable()
-      val streamOut = spark.table("agree_out")
-        .select("event_type", "n", "total_value")
-        .as[(String, Long, Double)].collect().toSet
-      assert(streamOut === batchOut)
     } finally q.stop()
   }
 }

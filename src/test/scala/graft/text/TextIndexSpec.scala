@@ -164,56 +164,4 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     assert(r.getAs[Int]("post_files") < before,
       s"compact must re-pack: $before -> ${r.getAs[Int]("post_files")}")
   }
-
-  test("streaming ingest: streamed index scores bit-for-bit like one-shot; " +
-      "the maintenance beat re-packs; replayed epochs skip") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val t = Files.createTempDirectory("text_stream").toString
-    val idxDir = s"$t/idx"
-    val evens = docs.filter(col("doc_id") % 4 === 0)
-    TextIndex.build(evens, "doc_id", "text", idxDir)
-    val baseFiles = graft.io.IndexHealth.dataFileCount(spark, s"$idxDir/postings")
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    val q = TextIndex.streamingIngest(spark, idxDir, s"$t/ep",
-      stream.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      maintainEvery = 2,
-      policy = TextIndex.MaintenancePolicy(filesBar = baseFiles))
-    try {
-      val batch1 = docs.filter(col("doc_id") % 4 === 1)
-        .select(col("doc_id").as[Long], col("text").as[String]).collect()
-      val batch2 = docs.filter(col("doc_id") % 4 === 2)
-        .select(col("doc_id").as[Long], col("text").as[String]).collect()
-      stream.addData(batch1.toIndexedSeq)
-      q.processAllAvailable() // epoch 0: append only, no beat
-      assert(TextIndex.maintenanceLog(spark, idxDir).count() === 0L)
-      stream.addData(batch2.toIndexedSeq)
-      q.processAllAvailable() // epoch 1: beat fires, fragmentation over bar
-      val log = TextIndex.maintenanceLog(spark, idxDir).collect()
-      assert(log.length === 1 && log(0).getAs[String]("action") === "compact",
-        s"beat at epoch 1 must compact: ${log.toSeq}")
-
-      // query-time stats make streamed == one-shot, bit-for-bit
-      val oneShot = Files.createTempDirectory("text_stream_truth").toString + "/idx"
-      TextIndex.build(docs.filter(col("doc_id") % 4 =!= 3),
-        "doc_id", "text", oneShot)
-      assert(scores(TextIndex.scoreAll(spark, idxDir, terms)) ===
-        scores(TextIndex.scoreAll(spark, oneShot, terms)))
-
-      // both epochs sealed, ledger rows = the streamed ids
-      val ledgered = spark.read.parquet(s"$t/ep")
-        .select("id").as[Long].collect().toSet
-      assert(ledgered === (batch1 ++ batch2).map(_._1).toSet)
-    } finally q.stop()
-  }
-
-  test("topK returns the k best with deterministic tie order") {
-    val top = TextIndex.topK(spark, dir, terms, 5).collect()
-    assert(top.length === 5)
-    val all = scores(TextIndex.scoreAll(spark, dir, terms))
-    val expected = all.toSeq.sortBy { case (id, s) => (-s, id) }.take(5)
-    assert(top.map(r => r.getLong(0) -> r.getDouble(1)).toSeq === expected)
-  }
 }

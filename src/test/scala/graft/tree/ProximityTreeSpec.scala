@@ -22,6 +22,14 @@ class ProximityTreeSpec extends AnyFunSuite {
     }.toIndexedSeq
   }
 
+  /** Proximity Forest without bagging: trees differ only by seed. */
+  private def unweightedForest(data: IndexedSeq[Instance], params: Params,
+      numTrees: Int): ProximityForestModel =
+    ProximityForestModel(
+      (0 until numTrees).map(i =>
+        ProximityTree.fit(data, params.copy(seed = params.seed + i))),
+      IndexedSeq.fill(numTrees)(1.0), useWeighting = false)
+
   test("fits separable clusters to high train accuracy, deterministically") {
     val data = clusterData(new Random(42))
     val model = ProximityTree.fit(data, Params(nSplitters = 5, seed = 1))
@@ -69,7 +77,7 @@ class ProximityTreeSpec extends AnyFunSuite {
 
   test("forest majority vote and weighted vote") {
     val data = clusterData(new Random(8))
-    val forest = ProximityForest.fit(data, Params(seed = 21), numTrees = 5)
+    val forest = unweightedForest(data, Params(seed = 21), numTrees = 5)
     val acc = data.count(i => forest.predictOne(i.ts) == i.label).toDouble / data.size
     assert(acc >= 0.95)
     // weighting: a dominant-weight tree decides alone
@@ -88,7 +96,7 @@ class ProximityTreeSpec extends AnyFunSuite {
     assert(data.forall(i => tree.predictOne(i.ts) == back.predictOne(i.ts)))
     assert(back.majority === tree.majority)
 
-    val forest = ProximityForest.fit(data, Params(seed = 3), numTrees = 3)
+    val forest = unweightedForest(data, Params(seed = 3), numTrees = 3)
     val fBack = ModelJson.forestFromJson(ModelJson.forestJson(forest))
     assert(data.forall(i => forest.predictOne(i.ts) == fBack.predictOne(i.ts)))
     assert(fBack.weights === forest.weights)
