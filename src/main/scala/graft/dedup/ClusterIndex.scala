@@ -329,9 +329,7 @@ object ClusterIndex {
       .sorted
 
   /** Epoch ids recorded under `dir/face/epoch=N` — the one listing
-    * idiom shared by [[unsealedEpochs]], [[maintain]], and
-    * [[compact]]'s score-fold probe (second-review: three hand-rolled
-    * copies of the same listStatus parse drift independently).
+    * idiom shared by [[unsealedEpochs]] and [[maintain]].
     */
   private def epochsOf(spark: SparkSession, dir: String,
       face: String): Seq[Long] = {
@@ -460,25 +458,6 @@ object ClusterIndex {
     resolve(spark, dir).write.mode("error").parquet(s"$st/labels_base")
     if (hasBest(spark, dir))
       resolvedWinners(spark, dir).write.mode("error").parquet(s"$st/best_base")
-    // fold the streamed score epochs too (second-review finding: a
-    // long-lived stream's winner joins otherwise re-scan one parquet dir
-    // per historical trigger) — docScores reads committed epochs only,
-    // and single-writer means no trigger lands between this snapshot and
-    // the swap. Gate on a COMMITTED epoch existing, not on epochsOf
-    // listing any dir (r17 ADVICE): doc_scores holding only a crashed
-    // uncommitted epoch would otherwise fold an EMPTY committed epoch=0.
-    if (hasCommittedScores(spark, dir)) {
-      val folded = s"$st/doc_scores_folded"
-      docScores(spark, dir).write.mode("error").parquet(folded)
-      // seal the STAGED fold before _ready so the finishCompact rename
-      // carries the _graft_commit marker atomically (r17 ADVICE): relying
-      // on the committer's _SUCCESS is configuration-dependent — on
-      // configs that omit it, the swap would delete every live committed
-      // score epoch and install an epoch=0 that docScores refuses to
-      // read, silently losing all winners. Sealing after the rename
-      // would leave a crash window recoverCompact cannot re-enter.
-      graft.io.EpochCommit.seal(spark, folded)
-    }
     fs.create(new org.apache.hadoop.fs.Path(st, "_ready"), false).close()
     val done = finishCompact(spark, dir)
     assert(done == "completed", s"compact swap state: $done")
@@ -502,11 +481,9 @@ object ClusterIndex {
   }
 
   /** Compaction policy for [[maintain]]: `epochsBar` bounds the sealed
-    * update-epoch count AND the streamed score-epoch count —
-    * [[resolve]]/[[resolveBest]] merge-on-read one parquet dir per
-    * update epoch, and a best-enabled stream's winner joins scan one
-    * dir per historical score epoch, so read amplification is linear
-    * in epochs since the last fold on both faces.
+    * update-epoch count — [[resolve]]/[[resolveBest]] merge-on-read one
+    * parquet dir per update epoch, so read amplification is linear in
+    * epochs since the last fold.
     */
   case class MaintenancePolicy(epochsBar: Int = 8) {
     require(epochsBar >= 1, s"epochsBar must be >= 1, got $epochsBar")
@@ -519,8 +496,7 @@ object ClusterIndex {
     * idempotent completion, both safe), read the signals, decide, act,
     * append ONE auditable row to `dir/maintenance/`:
     *
-    *   (seq, healed, unsealed_epochs, update_epochs, score_epochs,
-    *    epochs_bar, action)
+    *   (seq, healed, unsealed_epochs, update_epochs, epochs_bar, action)
     *
     * `action` ∈ none | compact | needs_repair. Signals are exact
     * counters, so no hysteresis (the [[graft.text.TextIndex.maintain]]
@@ -542,20 +518,15 @@ object ClusterIndex {
     // counting crashed epochs twice over-reported the signal)
     val updEpochs = epochsOf(spark, dir, "label_updates")
       .count(e => !badSeq.contains(e))
-    // epoch=0 is the folded base slot; only trigger epochs beyond it
-    // amplify the winner joins
-    val scoreEpochs = epochsOf(spark, dir, "doc_scores").count(_ > 0L)
     val action =
       if (bad > 0) "needs_repair"
-      else if (updEpochs >= policy.epochsBar ||
-          scoreEpochs >= policy.epochsBar) {
+      else if (updEpochs >= policy.epochsBar) {
         compact(spark, dir); "compact"
       } else "none"
     val seq = graft.io.IndexHealth.nextSeq(spark, s"$dir/maintenance")
-    val row = Seq((seq, healed, bad, updEpochs, scoreEpochs,
-        policy.epochsBar, action))
+    val row = Seq((seq, healed, bad, updEpochs, policy.epochsBar, action))
       .toDF("seq", "healed", "unsealed_epochs", "update_epochs",
-        "score_epochs", "epochs_bar", "action")
+        "epochs_bar", "action")
     row.write.mode("append").parquet(s"$dir/maintenance")
     row
   }
@@ -565,7 +536,7 @@ object ClusterIndex {
     val p = new org.apache.hadoop.fs.Path(s"$dir/maintenance")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val schema = "seq long, healed string, unsealed_epochs int, " +
-      "update_epochs int, score_epochs int, epochs_bar int, action string"
+      "update_epochs int, epochs_bar int, action string"
     if (!fs.exists(p)) spark.read.schema(schema).parquet()
     else spark.read.schema(schema).parquet(p.toString).orderBy("seq")
   }
@@ -604,21 +575,6 @@ object ClusterIndex {
         must(fs.rename(staged, live), s"rename staged $face")
       }
     }
-    val stagedScores = new org.apache.hadoop.fs.Path(st, "doc_scores_folded")
-    if (fs.exists(stagedScores)) {
-      // the staged fold snapshotted EVERY committed score epoch (single-
-      // writer: no trigger runs during compact), so clearing the live
-      // epoch dirs before the rename loses nothing; the staged dir was
-      // SEALED (_graft_commit) before _ready, so the rename delivers a
-      // committed epoch=0 on every committer config — _SUCCESS alone is
-      // configuration-dependent (r17 ADVICE)
-      val live = new org.apache.hadoop.fs.Path(s"$dir/doc_scores")
-      if (fs.exists(live)) must(fs.delete(live, true), "clear doc_scores")
-      must(fs.mkdirs(live), "recreate doc_scores")
-      must(fs.rename(stagedScores,
-        new org.apache.hadoop.fs.Path(live, "epoch=0")),
-        "rename folded doc_scores")
-    }
     // stale update epochs surviving a crash here are harmless: they
     // re-assert exactly the rows the folded base already carries
     // (latest-epoch-wins re-applies identical labels/winners; a dead
@@ -630,41 +586,6 @@ object ClusterIndex {
     }
     must(fs.delete(st, true), "clear staging")
     "completed"
-  }
-
-  /** True iff at least one doc_scores epoch carries a commit proof —
-    * the [[compact]] fold gate (a merely-EXISTING epoch dir may be a
-    * crashed partial that must heal in place, not be folded away).
-    */
-  private def hasCommittedScores(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/doc_scores")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("epoch=") &&
-        graft.io.EpochCommit.committed(spark, s.getPath.toString))
-  }
-
-  /** Every committed doc_scores epoch's (id, score) — the docs frame
-    * [[compact]] folds. COMMITTED epochs only (r17 self-review): a crash
-    * mid-scores-write leaves a partial epoch dir that must never feed a
-    * reader. Empty (schema'd) when nothing committed.
-    */
-  def docScores(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Double)].toDF("id", "score")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/doc_scores")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) empty
-    else {
-      val committedDirs = fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-        .map(_.getPath.toString)
-        .filter(graft.io.EpochCommit.committed(spark, _))
-      if (committedDirs.isEmpty) empty
-      else spark.read.schema("id long, score double")
-        .parquet(committedDirs: _*)
-        .select(col("id"), col("score"))
-    }
   }
 
   // explicit schemas: an empty batch writes a part-file-less dir, and

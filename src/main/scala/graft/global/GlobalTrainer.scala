@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.dist.Distances
+import graft.prep.DeterministicSampling
 import graft.tree._
 import graft.tree.ProximityTree.{branchOf, drawMeasure, isLeaf, majorityLabel, weightedGini}
 
@@ -25,8 +26,9 @@ import graft.tree.ProximityTree.{branchOf, drawMeasure, isLeaf, majorityLabel, w
   * Here one (label -> count) aggregate before the loop gives the row
   * total, the root's class histogram and the whole-set majority, and each
   * level then costs a FIXED number of jobs regardless of node count:
-  *   1. exemplar sampling: the k smallest rand() per (node, class), kept by
-  *      a bounded aggregate that ships at most k rows per group per partition
+  *   1. exemplar sampling: the k smallest content keys per (node, class),
+  *      kept by a bounded aggregate that ships at most k rows per group
+  *      per partition
   *   2. ALL candidates scored in one pass: each row emits one
   *      (node, candidate, branch, label) key per candidate of its node and
   *      a map-side-combined count feeds the driver's weighted-Gini argmin;
@@ -36,6 +38,11 @@ import graft.tree.ProximityTree.{branchOf, drawMeasure, isLeaf, majorityLabel, w
   * Gini, branch of an all-Infinity row — is [[ProximityTree]]'s, the one
   * the local learner applies; an empty child is a leaf of its exemplar's
   * class in both.
+  * Every choice is a function of the rows and the seed alone: exemplars
+  * are the smallest `xxhash64(seed + level, label, series)` keys
+  * (ties broken by the series), candidate counts are exact, and the
+  * measure draws come from one seeded RNG — so the same rows in any order
+  * or partitioning grow the same tree.
   * Driver state stays tiny (exemplars + per-node class counts); data never
   * leaves executors except as aggregate counts. On a 1000-executor cluster
   * the shape is identical — broadcasts fan out the split table, the level
@@ -79,37 +86,38 @@ object GlobalTrainer {
       df.select(array(featureCols.map(c => col(c).cast("double")): _*)
         .as("time_series")))
 
-  /** The k smallest (r, series) pairs of one group, ordered by r and then
-    * by series (`java.util.Arrays.compare`), so no tie depends on arrival
-    * order. The buffer holds k pairs per (group, partition), so map-side
-    * combining ships at most k rows per group per partition.
+  /** The k smallest (key, series) pairs of one group, ordered by key and
+    * then by series (`java.util.Arrays.compare`), so no tie depends on
+    * arrival order. The buffer holds k pairs per (group, partition), so
+    * map-side combining ships at most k rows per group per partition.
     */
   private final class SmallestK(k: Int) extends Aggregator[
-      (Double, Array[Double]), Seq[(Double, Array[Double])], Seq[(Double, Array[Double])]] {
-    private def before(a: (Double, Array[Double]), b: (Double, Array[Double])): Boolean =
+      (Long, Array[Double]), Seq[(Long, Array[Double])], Seq[(Long, Array[Double])]] {
+    private def before(a: (Long, Array[Double]), b: (Long, Array[Double])): Boolean =
       a._1 < b._1 || (a._1 == b._1 && java.util.Arrays.compare(a._2, b._2) < 0)
-    def zero: Seq[(Double, Array[Double])] = Nil
-    def reduce(b: Seq[(Double, Array[Double])], v: (Double, Array[Double]))
-        : Seq[(Double, Array[Double])] =
+    def zero: Seq[(Long, Array[Double])] = Nil
+    def reduce(b: Seq[(Long, Array[Double])], v: (Long, Array[Double]))
+        : Seq[(Long, Array[Double])] =
       if (b.length == k && !before(v, b.last)) b // fast reject above the bar
       else (b :+ v).sortWith(before).take(k)
-    def merge(a: Seq[(Double, Array[Double])], b: Seq[(Double, Array[Double])])
-        : Seq[(Double, Array[Double])] =
+    def merge(a: Seq[(Long, Array[Double])], b: Seq[(Long, Array[Double])])
+        : Seq[(Long, Array[Double])] =
       (a ++ b).sortWith(before).take(k)
-    def finish(b: Seq[(Double, Array[Double])]): Seq[(Double, Array[Double])] = b
-    def bufferEncoder: Encoder[Seq[(Double, Array[Double])]] = ExpressionEncoder()
-    def outputEncoder: Encoder[Seq[(Double, Array[Double])]] = ExpressionEncoder()
+    def finish(b: Seq[(Long, Array[Double])]): Seq[(Long, Array[Double])] = b
+    def bufferEncoder: Encoder[Seq[(Long, Array[Double])]] = ExpressionEncoder()
+    def outputEncoder: Encoder[Seq[(Long, Array[Double])]] = ExpressionEncoder()
   }
 
-  /** (node, class) -> the series of its k rows with the smallest `r`, in
-    * `r` order. `frame` has columns node_id, true_label, r, time_series.
+  /** (node, class) -> the series of its k rows with the smallest `key`, in
+    * `key` order. `frame` has columns node_id, true_label, key (long),
+    * time_series.
     */
   private[global] def smallestK(frame: DataFrame, k: Int)
       : Map[(Int, Int), IndexedSeq[Array[Double]]] = {
     import frame.sparkSession.implicits._
-    val top = udaf(new SmallestK(k), ExpressionEncoder[(Double, Array[Double])]())
+    val top = udaf(new SmallestK(k), ExpressionEncoder[(Long, Array[Double])]())
     frame.groupBy(col("node_id"), col("true_label"))
-      .agg(top(col("r"), col("time_series")).as("top"))
+      .agg(top(col("key"), col("time_series")).as("top"))
       .select(col("node_id"), col("true_label"), col("top._2"))
       .as[(Int, Int, Seq[Array[Double]])]
       .collect()
@@ -156,10 +164,9 @@ object GlobalTrainer {
     // loop — measured 34 s of executor time collapsing to ~1.5 s on the
     // 400-row fixture. At any real training size total/MinRowsPerTask
     // exceeds the core count and this is a no-op, so the cluster shape is
-    // untouched. (Values change only through rand()'s partition
-    // dependence — the same freedom any repartition of the caller's input
-    // already has; determinism per (data, partitioning, seed) holds.)
-    // The resized frame persists lazily, like every routed level below.
+    // untouched; the tree does not change, since no draw depends on the
+    // partitioning. The resized frame persists lazily, like every routed
+    // level below.
     val rightParts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong,
       total / MinRowsPerTask)).toInt
@@ -206,12 +213,15 @@ object GlobalTrainer {
         val splittingIds = splitting.map(_._1)
         val active = assign.filter(col("node_id").isin(splittingIds: _*))
 
-        // (1) W2 — distributed exemplar sampling: the k smallest rand() per
-        // (node, class) (reference: global_model_manager.py:225-233, seeded
-        // per SURVEY §4 "P3"), kept by a bounded aggregate instead of a
-        // window sort that would shuffle every row each level
+        // (1) W2 — distributed exemplar sampling: the k smallest content
+        // keys per (node, class) (reference: global_model_manager.py:225-233
+        // orders by unseeded rand — SURVEY §4 "P3"), kept by a bounded
+        // aggregate instead of a window sort that would shuffle every row
+        // each level
         val sampled = smallestK(
-          active.withColumn("r", rand(p.seed + level)), p.nSplitters)
+          active.withColumn("key", DeterministicSampling.contentKey(
+            p.seed + level, col("true_label"), col("time_series"))),
+          p.nSplitters)
         // that collect was this level's first action over `assign`: it ran
         // every partition, so a lazily-persisted frame is now fully cached
         // and the superseded parent can go

@@ -1,7 +1,10 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+
+import graft.prep.DeterministicSampling
 
 /** Ingestion operators (SURVEY §2.1, reference: code/src/data_ingestion.py:37-75).
   *
@@ -39,9 +42,15 @@ object Ingestion {
   def readUcrTsv(spark: SparkSession, path: String, numFeatures: Int): DataFrame =
     readCsv(spark, path, wideSchema(numFeatures), header = false, sep = "\t")
 
-  /** S2 — Bernoulli sample on load (data_ingestion.py:61, seeded here). */
+  /** S2 — Bernoulli sample on load (data_ingestion.py:61): a row is kept
+    * iff its content draw (every column, seed salted by `SampleSalt`)
+    * falls below `fraction` — the same rows in any order or partitioning
+    * give the same sample.
+    */
   def sample(df: DataFrame, fraction: Double, seed: Long = 42L): DataFrame =
-    if (fraction >= 1.0) df else df.sample(fraction, seed)
+    if (fraction >= 1.0) df
+    else df.filter(DeterministicSampling.contentDraw(
+      seed ^ DeterministicSampling.SampleSalt, df.columns.map(col).toSeq: _*) < fraction)
 
   /** S3 — non-empty validation via `take(1)` (one-partition probe, not a
     * full count; data_ingestion.py:67-71).

@@ -297,9 +297,8 @@ object DeletionVectors {
     */
   def deletePositions(spark: SparkSession, dir: String,
       positions: DataFrame): Long = {
-    // at_seq = the batch's OWN commit id — the stamp a `posAsOf` scan
-    // filters on (visible as of s iff at_seq <= s, the same rule as
-    // every other commit)
+    // at_seq = the batch's OWN commit id (visible as of s iff
+    // at_seq <= s, the same rule as every other commit)
     val n = allocateCommit(spark, dir)
     val batch = positions
       .select(col("file_path").cast("string").as("file_path"),
@@ -345,8 +344,7 @@ object DeletionVectors {
     * equality-only path pays nothing for the feature.
     */
   def scanWithPositionMask(spark: SparkSession, dir: String,
-      maxBroadcastBytes: Long = 256L * 1024 * 1024,
-      posAsOf: Option[Long] = None): DataFrame = {
+      maxBroadcastBytes: Long = 256L * 1024 * 1024): DataFrame = {
     val (fs, _) = hfs(spark, dir)
     // only SEALED sequence directories: a crashed or in-flight writer's
     // data files are invisible until the commit marker lands (basePath
@@ -365,8 +363,7 @@ object DeletionVectors {
       .parquet(dataDirs.map(_.toString): _*)
     if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$PosDirName"))) base
     else {
-      val all = readPosDv(spark, dir)
-      val pdv = posAsOf.fold(all)(s => all.filter(col("at_seq") <= s))
+      val pdv = readPosDv(spark, dir)
         .select(col("file_path"), col("row_index")).distinct()
       val est = pdv.queryExecution.optimizedPlan.stats.sizeInBytes
       val side = if (est <= maxBroadcastBytes) broadcast(pdv) else pdv

@@ -413,12 +413,12 @@ object RelationalQueries {
           lead(col("c_custkey"), 1).over(w).as("next_key"))
     }),
 
-    // W1 + R2 — deterministic class-balanced partition-id assignment,
+    // W1 — the pipeline's class-balanced partition-id assignment,
     // validated by per-(segment, pid) counts
     "q_partition_balance" -> ((s, d) =>
-      Preprocessing.deterministicPartitionId(
-          customer(s, d), "c_mktsegment", "c_custkey", 8)
-        .groupBy(col("c_mktsegment").as("segment"), col("_partition_id").as("pid"))
+      Preprocessing.balancedPartitionId(customer(s, d), "c_mktsegment", 8, seed = 123L)
+        .groupBy(col("c_mktsegment").as("segment"),
+          col("_partition_id").cast("long").as("pid"))
         .agg(count(lit(1)).as("cnt"))),
 
     // T2 (deterministic variant) — hash split tagging, per-split counts

@@ -153,11 +153,12 @@ object Preprocessing {
   }
 
   /** W1 + R2 — class-balanced exact repartitioning
-    * (reference: code/src/preprocessing.py:57-86): assign
-    * `_partition_id = (row_number() over (partition by label order by rand)) - 1 mod n`
-    * then hash-repartition on it, so every partition holds an equal,
-    * stratified share of each class. `seed` makes the shuffle order
-    * reproducible (the reference uses unseeded rand — see SURVEY §4 "P3").
+    * (reference: code/src/preprocessing.py:57-86): assign each row
+    * [[balancedPartitionId]] then range-repartition on it, so every
+    * partition holds an equal, stratified share of each class. The
+    * groups depend only on the rows and `seed`, not on how the input is
+    * ordered or partitioned (the reference orders by unseeded rand —
+    * SURVEY §4 "P3").
     */
   def classBalancedPartition(
       df: DataFrame,
@@ -165,30 +166,32 @@ object Preprocessing {
       numPartitions: Int,
       seed: Long = 123L,
       keepPartitionId: Boolean = false): DataFrame = {
-    val w = Window.partitionBy(col(labelCol)).orderBy(rand(seed))
     // repartitionByRange (not hash) avoids the reference's hash collisions
     // (preprocessing.py:79), but its bounds come from a sample, so two pids
     // can still share a partition and leave another empty. Callers that
     // need exactly one group per pid key on `_partition_id`.
-    val withPid = df
-      .withColumn("_partition_id",
-        ((row_number().over(w) - lit(1)) % lit(numPartitions)).cast("int"))
+    val withPid = balancedPartitionId(df, labelCol, numPartitions, seed)
       .repartitionByRange(numPartitions, col("_partition_id"))
     if (keepPartitionId) withPid else withPid.drop("_partition_id")
   }
 
-  /** Deterministic variant of W1 for oracle-checkable plans: ordering by
-    * md5(key) instead of rand() — same balance properties, reproducible in
-    * any engine.
+  /** W1 — `_partition_id = (row_number() over (partition by label order by
+    * key, row)) - 1 mod n`: per label, rows ordered by their content key
+    * ([[DeterministicSampling.contentKey]] over every column, seed salted
+    * by `BalanceSalt`) and then by their columns, so only fully identical
+    * rows tie — and those are interchangeable. Per-(label, pid) counts
+    * depend only on the class sizes.
     */
-  def deterministicPartitionId(
+  def balancedPartitionId(
       df: DataFrame,
       labelCol: String,
-      keyCol: String,
-      numPartitions: Int): DataFrame = {
-    val w = Window.partitionBy(col(labelCol))
-      .orderBy(md5(col(keyCol).cast("string")), col(keyCol))
+      numPartitions: Int,
+      seed: Long): DataFrame = {
+    val cols = df.columns.map(col).toSeq
+    val w = Window.partitionBy(col(labelCol)).orderBy(
+      DeterministicSampling.contentKey(seed ^ DeterministicSampling.BalanceSalt, cols: _*)
+        +: cols: _*)
     df.withColumn("_partition_id",
-      ((row_number().over(w) - lit(1)) % lit(numPartitions)).cast("long"))
+      ((row_number().over(w) - lit(1)) % lit(numPartitions)).cast("int"))
   }
 }

@@ -101,13 +101,6 @@ object IvfIndex {
           must(fs.rename(staged, live), s"rename staged $face")
         }
       }
-      // The TOMBSTONE SIDECAR IS LEFT UNTOUCHED here (second-review
-      // finding): deletes recorded AFTER the staging snapshot but before
-      // this recovery are NOT folded into the staged vectors — wiping
-      // the sidecar would resurrect them. Stale (already-folded)
-      // tombstone rows are harmless: liveVectors' anti-join simply
-      // misses. retrainAndCompact's in-call path clears the sidecar
-      // itself, where single-writer sequencing makes it provably safe.
       must(fs.delete(st, true), "clear staging")
       "completed"
     }
@@ -123,9 +116,8 @@ object IvfIndex {
     * (or `force`, the operator's move after [[recallProbe]] reads a
     * recall drop, the signal occupancy alone cannot see),
     * retrain centroids on a `sampleSize`-bounded sample of the STORED
-    * live vectors and rebuild the hive layout in one pass. Tombstones
-    * fold away in the rebuild; `nlist` 0 keeps the
-    * current cell count. Returns the new centroids, or None when the
+    * vectors and rebuild the hive layout in one pass; `nlist` 0 keeps
+    * the current cell count. Returns the new centroids, or None when the
     * bar did not trip (the index is untouched — a no-op costs one
     * per-cell count aggregate).
     */
@@ -161,11 +153,6 @@ object IvfIndex {
     fs.create(new org.apache.hadoop.fs.Path(st, "_ready"), false).close()
     val done = recoverRetrain(spark, dir)
     assert(done == "completed", s"retrain swap state: $done")
-    // sidecar clear is safe HERE and only here: the staged vectors were
-    // assigned from this call's own live snapshot, and the single-writer
-    // maintenance contract means no delete() interleaved since — unlike
-    // the crash-recovery path, which must leave the sidecar alone
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
     live.queryExecution.logical.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.foreach(_.unpersist(blocking = false))
@@ -207,17 +194,8 @@ object IvfIndex {
     spark.read.parquet(s"$dir/vectors").count() - before
   }
 
-  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(broadcast(spark.read.parquet(p.toString).distinct()))
-    else None
-  }
-
-  private def liveVectors(spark: SparkSession, dir: String): DataFrame = {
-    val v = spark.read.parquet(s"$dir/vectors")
-    tombstones(spark, dir).fold(v)(t => v.join(t, Seq("vec_id"), "left_anti"))
-  }
+  private def liveVectors(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/vectors")
 
   /** The frozen-quantizer assignment projection: (vec_id, vec, vn, cell),
     * non-finite norms dropped — shared by build and append so both

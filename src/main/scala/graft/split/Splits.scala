@@ -3,28 +3,29 @@ package graft.split
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.prep.DeterministicSampling
+
 /** Train/test split operators (reference: code/src/utilities.py:36-76). */
 object Splits {
 
-  /** T2 — stratified split: per-class Bernoulli sample (map-side, no shuffle)
-    * for train; test = anti-join complement on all columns
-    * (reference: code/src/utilities.py:52-76, seed 123 at
-    * code/src/controller_loop.py:193).
-    *
-    * NOTE (kept from the reference, flagged in SURVEY §7): the
-    * anti-join-on-all-columns complement drops duplicate rows from the test
-    * set. `hashSplitColumn` below is the scale-safe idiom.
+  /** T2 — stratified split (reference: code/src/utilities.py:52-76, seed
+    * 123 at code/src/controller_loop.py:193): a row goes to train iff its
+    * [[graft.prep.DeterministicSampling.contentDraw]] over every column
+    * falls below `trainFraction`, else to test. The draw ignores the
+    * label, so each class splits in proportion in expectation. It is
+    * never null and equal for identical rows: every row, nulls included,
+    * lands on exactly one side, and no test row equals a train row —
+    * without the reference's all-column anti-join (SURVEY "J1"), which
+    * shuffles and never matches a row holding a null.
     */
   def stratifiedSplit(
       df: DataFrame,
       labelCol: String,
       trainFraction: Double,
       seed: Long = 123L): (DataFrame, DataFrame) = {
-    val classes = df.select(labelCol).distinct().collect().map(_.get(0))
-    val fractions = classes.map(c => c -> trainFraction).toMap
-    val train = df.stat.sampleBy(col(labelCol), fractions, seed)
-    val test = df.join(train, df.columns.toSeq, "left_anti")
-    (train, test)
+    val inTrain = DeterministicSampling.contentDraw(
+      seed ^ DeterministicSampling.SplitSalt, df.columns.map(col).toSeq: _*) < trainFraction
+    (df.filter(inTrain), df.filter(!inTrain))
   }
 
   /** Deterministic, engine-portable split: a row goes to train iff the first

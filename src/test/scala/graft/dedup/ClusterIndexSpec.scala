@@ -21,16 +21,6 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
   private def labelsOf(df: org.apache.spark.sql.DataFrame) =
     df.as[(Long, Long)].collect().toMap
 
-  /** A committed doc_scores epoch 0 of `bestDocs`' (id, score) — the
-    * on-disk face [[ClusterIndex.docScores]] reads and compact folds.
-    */
-  private def writeScores(dir: String): Unit = {
-    val p = s"$dir/doc_scores/epoch=0"
-    bestDocs.select(col("id").cast("long").as("id"),
-      col("score").cast("double").as("score")).write.parquet(p)
-    graft.io.EpochCommit.seal(spark, p)
-  }
-
   test("incremental batches converge to the from-scratch clustering, merges included") {
     val dir = Files.createTempDirectory("cluster_idx").toString + "/idx"
     // final graph: chain 1-2-3-4-5, triangle 10-11-12, pair 20-21
@@ -324,48 +314,5 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     // and the index accepts batches again
     ClusterIndex.addPairs(spark, dir2, pairsDf(3L -> 4L), "id_a", "id_b", 2)
     assert(labelsOf(ClusterIndex.resolve(spark, dir2))(4L) === 1L)
-  }
-
-  test("compact's folded scores carry graft's own seal — survive a " +
-      "committer that writes no _SUCCESS (r18 ADVICE)") {
-    val dir = Files.createTempDirectory("cluster_seal").toString + "/idx"
-    ClusterIndex.buildWithBest(pairsDf(1L -> 2L), "id_a", "id_b",
-      bestDocs, "id", col("score"), dir)
-    writeScores(dir)
-    val want = ClusterIndex.docScores(spark, dir)
-      .as[(Long, Double)].collect().toMap
-    ClusterIndex.compact(spark, dir)
-    val folded = s"$dir/doc_scores/epoch=0"
-    assert(new java.io.File(folded, "_graft_commit").exists(),
-      "the staged fold's seal must ride the swap rename")
-    // simulate marksuccessfuljobs=false / a cloud committer: strip every
-    // _SUCCESS — before the fix, docScores would see epoch=0 uncommitted
-    // and ALL winners' scores would silently vanish
-    new java.io.File(folded).listFiles()
-      .filter(_.getName == "_SUCCESS").foreach(f => assert(f.delete()))
-    graft.io.EpochCommit.dropCacheForTest(folded)
-    val got = ClusterIndex.docScores(spark, dir)
-      .as[(Long, Double)].collect().toMap
-    assert(got === want, "folded scores must stay readable without _SUCCESS")
-  }
-
-  test("compact refuses to fold a doc_scores face holding ONLY a crashed " +
-      "uncommitted epoch (r18 ADVICE)") {
-    val dir = Files.createTempDirectory("cluster_fold").toString + "/idx"
-    ClusterIndex.buildWithBest(pairsDf(1L -> 2L), "id_a", "id_b",
-      bestDocs, "id", col("score"), dir)
-    // simulate a crashed scores write: the epoch=0 dir exists with data
-    // files but carries no commit proof
-    val partial = s"$dir/doc_scores/epoch=0"
-    bestDocs.select(col("id"), col("score").cast("double").as("score"))
-      .write.parquet(partial)
-    assert(new java.io.File(partial, "_SUCCESS").delete())
-    graft.io.EpochCommit.dropCacheForTest(partial)
-    ClusterIndex.compact(spark, dir)
-    // before the fix: compact folded a committed EMPTY epoch=0
-    assert(ClusterIndex.docScores(spark, dir).count() === 0L,
-      "an uncommitted partial must never feed readers")
-    assert(!new java.io.File(s"$dir/doc_scores/epoch=0", "_graft_commit").exists(),
-      "the crashed partial must stay unfolded and uncommitted")
   }
 }

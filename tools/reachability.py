@@ -76,9 +76,6 @@ KEEP = {
     "graft.quality.QualityQueries.selectPipelineKeptCount":
         "observation seam: stage 1 of q_select_pipeline alone; "
         "SelectPipelineSpec's guard against a pass-through filter",
-    "graft.io.EpochCommit.dropCacheForTest":
-        "fault-injection seam: ClusterIndexSpec strips commit markers on disk "
-        "and drops the positive-commit cache so the reader re-probes",
     # CatalogPlanLintSpec hooks: the scale-safety gate's view of catalog plans
     "graft.dedup.DedupQueries.lintVariants":
         "CatalogPlanLintSpec hook: exposes catalog plan variants to the "
