@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -56,6 +57,18 @@ object DtwKernels {
   }
 }
 
+/** The input check every expression below shares: each child is
+  * array<double>, else a failure with the caller's message.
+  */
+private object DoubleArrays {
+  def check(children: Seq[Expression], message: => String): TypeCheckResult =
+    if (children.forall(_.dataType match {
+        case ArrayType(DoubleType, _) => true
+        case _ => false
+      })) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(message)
+}
+
 /** Native Catalyst expression: DTW distance between two array<double>
   * series (squared local cost, sqrt at the end — see
   * [[graft.dist.Distances.dtw]]). Full codegen via a static kernel call —
@@ -66,17 +79,10 @@ object DtwKernels {
 case class DtwDistance(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult =
+    DoubleArrays.check(Seq(left, right),
       s"dtw_distance expects (array<double>, array<double>), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
   override def dataType: DataType = DoubleType
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
@@ -97,16 +103,9 @@ case class DtwDistance(left: Expression, right: Expression)
   */
 case class EuclideanDistance(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult =
+    DoubleArrays.check(Seq(left, right),
       "euclidean_distance expects (array<double>, array<double>)")
-  }
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
     DtwKernels.euclidean(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -121,16 +120,8 @@ case class EuclideanDistance(left: Expression, right: Expression)
 /** Codegen'd dot product over two array<double> columns. */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      "dot_product expects (array<double>, array<double>)")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    DoubleArrays.check(Seq(left, right), "dot_product expects (array<double>, array<double>)")
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(a: Any, b: Any): Any =
     DtwKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -150,16 +141,9 @@ case class DotProduct(left: Expression, right: Expression)
 case class LbKeogh(first: Expression, second: Expression, third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
     with Serializable {
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(first, second, third).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult =
+    DoubleArrays.check(Seq(first, second, third),
       "lb_keogh expects (array<double>, array<double>, array<double>)")
-  }
   override def dataType: DataType = DoubleType
   override protected def nullSafeEval(x: Any, u: Any, l: Any): Any =
     DtwKernels.lbKeogh(x.asInstanceOf[ArrayData], u.asInstanceOf[ArrayData],

@@ -42,8 +42,9 @@ object LocalTrainer {
   }
 
   /** One partition's tree and its holdout weight (1.0 without a holdout).
-    * The rows are first sorted by (label, series), so the tree depends on
-    * the partition's contents, not on the order its rows arrived in.
+    * The rows are first sorted by (label, series), so the holdout draw, and
+    * with it the tree, depends on the partition's contents, not on the
+    * order its rows arrived in.
     */
   private[local] def fitPartition(
       rows: Seq[ProximityTree.Instance],
@@ -80,12 +81,14 @@ object LocalTrainer {
       useWeighting: Boolean = false): ProximityForestModel = {
     import spark.implicits._
 
+    // pack first: the balanced order keys, sorts and shuffles two columns,
+    // not one per feature
     val packed = Preprocessing.classBalancedPartition(
-        df, labelCol, numPartitions, seed = params.seed, keepPartitionId = true)
-      .select(
-        col("_partition_id"),
-        col(labelCol).cast("int").as("label"),
-        array(featureCols.map(c => col(c).cast("double")): _*).as("ts"))
+        df.select(
+          col(labelCol).cast("int").as("label"),
+          array(featureCols.map(c => col(c).cast("double")): _*).as("ts")),
+        "label", numPartitions, seed = params.seed, keepPartitionId = true)
+      .select(col("_partition_id"), col("label"), col("ts"))
       .as[(Int, Int, Array[Double])]
 
     // One tree per balanced group `_partition_id`, not per physical

@@ -11,10 +11,9 @@ import graft.tree.{ModelJson, ProximityTree}
   * strategies (SURVEY §3.2/§3.4) driven end-to-end over the `embeddings`
   * table (64-point series, 10 classes). The trainer queries emit a
   * completeness-invariant row the DuckDB oracle can reproduce (test/pred
-  * counts from the data, prediction-domain sanity as a literal): training
-  * itself samples exemplars with partition-seeded rand, so its tree shape
-  * is not cross-engine reproducible, but "every test row got exactly one
-  * in-domain prediction" is. Full value-level prediction determinism is
+  * counts from the data, prediction-domain sanity as a literal): the tree
+  * is a function of the rows and the seed, but SQL cannot grow one, so the
+  * oracle checks "every test row got exactly one in-domain prediction". Full value-level prediction determinism is
   * oracled by q_tsc_predict_fixed (frozen model + frozen data -> literal
   * confusion matrix). Accuracy bands on real-signal data live in ScalaTest
   * (SURVEY §7 hard part (c)) — the synthetic embeddings labels are

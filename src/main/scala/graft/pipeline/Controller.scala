@@ -52,8 +52,9 @@ final case class SweepConfig(
   * strategy at the end.
   *
   * The stage pipeline is identical for every scale: actions are limited to
-  * the few driver-side decisions (min-max stats, split class list, model
-  * collection), so the same code runs unchanged on a real cluster.
+  * the few driver-side decisions (min-max stats, the global tree's level
+  * partials, model collection), so the same code runs unchanged on a real
+  * cluster.
   */
 object Controller {
 

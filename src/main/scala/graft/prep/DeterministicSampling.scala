@@ -1,7 +1,9 @@
 package graft.prep
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Reproducible pseudo-random draws: each is a pure function of a row's
   * content and a seed — never of its partition, its place in one, task
@@ -15,7 +17,8 @@ import org.apache.spark.sql.functions._
   * exact integer statistics reproduce bit-for-bit
   * (CAST('0x'||substr(md5(id),1,8) AS BIGINT)). [[contentKey]] and
   * [[contentDraw]] hash the row's columns with xxhash64 for the paper's
-  * pipeline, whose rows carry no id. Each pipeline draw salts the seed
+  * pipeline, whose rows carry no id; [[seriesKey]] is the same key for
+  * code that holds the row in memory. Each pipeline draw salts the seed
   * with its own constant so one seed gives independent draws: keyed alike,
   * `sample(0.5)` then an 80/20 split would send every sampled row to train.
   */
@@ -40,6 +43,22 @@ object DeterministicSampling {
     */
   def contentKey(seed: Long, cols: Column*): Column =
     xxhash64(lit(seed) +: cols: _*)
+
+  /** [[contentKey]]`(seed, label, series)` for an int label and an
+    * array<double> series, computed without a plan: the same chain of
+    * Spark's xxhash64 from its seed 42, so driver- and executor-side code
+    * draw exactly what the column would.
+    */
+  def seriesKey(seed: Long, label: Int, series: Array[Double]): Long = {
+    var h = XxHash64Function.hash(seed, LongType, 42L)
+    h = XxHash64Function.hash(label, IntegerType, h)
+    var i = 0
+    while (i < series.length) {
+      h = XxHash64Function.hash(series(i), DoubleType, h)
+      i += 1
+    }
+    h
+  }
 
   /** Uniform [0,1) draw: the key's low 53 bits over 2^53, exact in doubles. */
   def contentDraw(seed: Long, cols: Column*): Column =

@@ -27,9 +27,7 @@ object Preprocessing {
     * col -> (min, max).
     */
   def computeMinMax(df: DataFrame, cols: Seq[String]): Map[String, (Double, Double)] = {
-    val exprs = cols.flatMap(c =>
-      Seq(min(col(c)).cast("double").as(s"min_$c"),
-          max(col(c)).cast("double").as(s"max_$c")))
+    val exprs = minMaxAggExprs(cols)
     val row = df.agg(exprs.head, exprs.tail: _*).head()
     cols.zipWithIndex.map { case (c, i) =>
       // min is null iff the column has no non-null value: an empty frame

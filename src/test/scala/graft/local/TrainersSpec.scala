@@ -11,7 +11,8 @@ import graft.tree.{ModelJson, PLeaf, PSplit, ProximityTree}
 
 /** End-to-end Spark training tests for both strategies on the reference
   * smoke-test shape (code/src/test.py:58-122): separable clusters, assert
-  * accuracy — not tree identity (SURVEY §7 hard part (c)).
+  * accuracy. That both strategies grow the same tree on the same rows is
+  * GlobalTrainerSpec's case.
   */
 class TrainersSpec extends AnyFunSuite with SparkSpec {
 
