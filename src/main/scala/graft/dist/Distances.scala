@@ -7,8 +7,7 @@ package graft.dist
   * executors, so they are written as tight, allocation-free loops over
   * `Array[Double]` (no boxing, no Breeze). Each kernel is a
   * [[DistanceMeasure]] so the tree learner's measure pool stays pluggable
-  * (SURVEY §2.8: aeon's 11-measure pool; we ship the core five and the
-  * interface for the rest).
+  * (SURVEY §2.8: aeon's 11-measure pool, all of which ship here).
   */
 trait DistanceMeasure extends Serializable {
   def name: String
@@ -335,7 +334,7 @@ object Distances {
       val t = prev; prev = curr; curr = t
       i += 1
     }
-    if (n == 1) prev(m) else prev(m)
+    prev(m)
   }
 
   final case class Msm(c: Double) extends DistanceMeasure {

@@ -2,13 +2,13 @@ package graft.global
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.dist.Distances
+import graft.prep.Preprocessing
 import graft.tree._
-import graft.tree.ProximityTree.{RowSource, Split, addCounts, branchOf, classCountsFold}
+import graft.tree.ProximityTree.{Row, RowSource, addCounts, classCountsFold}
 
 /** Global-model strategy: ONE Proximity Tree whose split decisions are
   * distributed (reference: code/src/global_model_manager.py:168-402).
@@ -19,23 +19,25 @@ import graft.tree.ProximityTree.{RowSource, Split, addCounts, branchOf, classCou
   * (global_model_manager.py:271-295) — i.e. O(nodes × n_splitters) jobs per
   * level, which is why its global training takes 1900–5300 s on 4k rows.
   * Here the tree comes from [[ProximityTree.growLevels]], the level loop the
-  * local learner runs too, over a DataFrame row source: each level
-  * statistic (root class counts once, then per level the k smallest keys
-  * per (node, class) and the (node, candidate, branch, label) counts) is
-  * its fold run by `mapPartitions` over the cached level frame, and the
-  * per-partition partials are merged on the driver — one job and no
-  * exchange per statistic, whatever the node count. Routing is one
-  * broadcast map + one projection, persisted lazily.
+  * local learner runs too, over an RDD row source decoded once from the
+  * packed frame: each level statistic (root class counts once, then per
+  * level the k smallest keys per (node, class) and the (node, candidate,
+  * branch, label) counts) is its fold run by `mapPartitions` over the
+  * level's rows, and the per-partition partials are merged on the driver —
+  * one job and no exchange per statistic, whatever the node count. The
+  * grower's row rewrites (record each row's branches, move it to its
+  * recorded branch's child) are lazy `map`s, each locally checkpointed by
+  * the next statistic's job, so the lineage stays one level deep.
   * Driver state stays tiny (exemplars + per-node class counts); data never
   * leaves executors except as those partials. On a 1000-executor cluster
-  * the shape is identical — broadcasts fan out the split table, the level
-  * barrier is the only synchronization.
+  * the shape is identical — each rewrite ships its split table in the task
+  * closure, the level barrier is the only synchronization.
   */
 object GlobalTrainer {
 
   /** Minimum rows a level-frame partition should hold before extra
     * partitions stop buying parallelism and start buying per-task
-    * overhead (see the right-sizing note in [[fit]]).
+    * overhead (see the right-sizing note in `FrameRows`).
     */
   private val MinRowsPerTask = 64L
 
@@ -60,30 +62,38 @@ object GlobalTrainer {
   /** Wide-column variant of [[computeDataStd]]. */
   def computeDataStdWide(df: DataFrame, featureCols: Seq[String]): Double =
     computeDataStd(
-      df.select(array(featureCols.map(c => col(c).cast("double")): _*)
-        .as("time_series")))
+      df.select(Preprocessing.seriesColumn(featureCols).as("time_series")))
 
-  /** The level frame as a row source, one part per partition: columns
-    * true_label, time_series, node_id, persisted. Construction runs the
-    * root's class counts and right-sizes the frame.
+  /** The level frame as a row source: an RDD of [[ProximityTree.Row]]s
+    * decoded once from the packed (true_label, time_series) frame, one part
+    * per partition. Construction runs the root's class counts and
+    * right-sizes the rows.
     */
-  private final class FrameRows(spark: SparkSession, ts0: DataFrame) extends RowSource {
+  private final class FrameRows(spark: SparkSession, packed: DataFrame) extends RowSource {
     import spark.implicits._
 
-    var assign: DataFrame = ts0.persist(StorageLevel.MEMORY_AND_DISK)
-    // superseded level's cache, dropped only after the successor's lazy
-    // persist has been materialized by the next level's first action
-    private var pendingUnpersist: Option[DataFrame] = None
+    private var rows: RDD[Row] = packed.as[(Int, Array[Double])].rdd
+      .map { case (label, series) => Row(label, series, 0) }.localCheckpoint()
+    // superseded level RDDs, dropped only after the next job has
+    // materialized their successor's checkpoint
+    private var superseded = List.empty[RDD[Row]]
 
     /** One job, no exchange: each partition's partial is collected. */
-    def partials[T: ClassTag](fold: Iterator[ProximityTree.Row] => T): Seq[T] = {
-      val out = assign.as[(Int, Array[Double], Int)].rdd
-        .mapPartitions(rows => Iterator.single(fold(rows))).collect()
-      // that collect ran every partition, so a lazily-persisted frame is
-      // now fully cached and the superseded parent can go
-      pendingUnpersist.foreach(_.unpersist())
-      pendingUnpersist = None
+    def partials[T: ClassTag](fold: Iterator[Row] => T): Seq[T] = {
+      val out = rows.mapPartitions(it => Iterator.single(fold(it))).collect()
+      // that collect ran every partition, so the rows are checkpointed,
+      // their lineage is cut and the superseded RDDs can go
+      superseded.foreach(_.unpersist())
+      superseded = Nil
       out.toSeq
+    }
+
+    /** A lazy `map`: the next [[partials]] job computes and checkpoints it. */
+    def update(f: Row => Row): Unit = replace(rows.map(f))
+
+    private def replace(next: RDD[Row]): Unit = {
+      superseded ::= rows
+      rows = next.localCheckpoint()
     }
 
     // the root's class histogram, which also gives the row total and the
@@ -91,57 +101,19 @@ object GlobalTrainer {
     val rootCounts: Map[Int, Long] =
       partials(classCountsFold).foldLeft(Map.empty[Int, Long])(addCounts)
 
-    // Right-size the frame to the DATA, not the core count: every level
-    // job re-scans this exact frame, and partitions holding fewer than
-    // ~MinRowsPerTask rows each just multiply per-task fixed cost (launch,
-    // broadcast fetch, codegen instance) across the whole level loop —
-    // measured 34 s of executor time collapsing to ~1.5 s on the 400-row
-    // fixture. At any real training size total/MinRowsPerTask exceeds the
-    // core count and this is a no-op, so the cluster shape is untouched;
-    // the tree does not change, since no draw depends on the partitioning.
-    // The resized frame persists lazily, like every routed level.
+    // Right-size the rows to the DATA, not the core count: every level job
+    // re-scans them, and partitions holding fewer than ~MinRowsPerTask rows
+    // each just multiply per-task fixed cost (launch, closure fetch)
+    // across the whole level loop — measured 34 s of executor time
+    // collapsing to ~1.5 s on the 400-row fixture. At any real training
+    // size total/MinRowsPerTask exceeds the core count and this is a no-op,
+    // so the cluster shape is untouched; the tree does not change, since no
+    // draw depends on the partitioning.
     private val rightParts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong, rootCounts.values.sum / MinRowsPerTask)).toInt
-    if (rightParts < assign.rdd.getNumPartitions) {
-      pendingUnpersist = Some(assign)
-      assign = ts0.repartition(rightParts).persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    if (rightParts < rows.getNumPartitions) replace(rows.repartition(rightParts))
 
-    def route(splits: Map[Int, Split], level: Int): Unit = {
-      val bcRoute = spark.sparkContext.broadcast(splits)
-      val routeUdf = udf((nid: Int, series: Seq[Double]) =>
-        bcRoute.value.get(nid) match {
-          case Some(s) => s.childIds(branchOf(Distances.byName(s.candidate.measureName),
-            series.toArray, s.candidate.exemplars))
-          case None => nid
-        })
-      // every few levels cut the lineage: the routed plan stacks one
-      // projection per level, and a depth-20 tree otherwise carries a
-      // 20-deep UDF chain into every subsequent job's planning
-      val routed = assign
-        .withColumn("node_id", routeUdf(col("node_id"), col("time_series")))
-      assign =
-        if (level % 8 == 7) {
-          // eager: safe to drop the parent immediately
-          val c = routed.localCheckpoint(true)
-          assign.unpersist()
-          c
-        } else {
-          // LAZY persist: the next level's first action (the exemplar
-          // fold) populates the cache while doing real work — an explicit
-          // count() here would be a whole extra pass per level. The
-          // superseded parent must stay cached until then (dropping it now
-          // would make that first action recompute the full routing
-          // lineage), so its unpersist is deferred.
-          pendingUnpersist = Some(assign)
-          routed.persist(StorageLevel.MEMORY_AND_DISK)
-        }
-    }
-
-    def close(): Unit = {
-      pendingUnpersist.foreach(_.unpersist())
-      assign.unpersist()
-    }
+    def close(): Unit = (rows :: superseded).foreach(_.unpersist())
   }
 
   /** Fit one distributed Proximity Tree. Returns the same model type as the
@@ -156,11 +128,11 @@ object GlobalTrainer {
       params: ProximityTree.Params): ProximityTreeModel = {
     // _to_ts_df (reference: global_model_manager.py:121-159): array-pack +
     // int label. row_id is unnecessary in this design — rows carry only
-    // their node assignment.
-    val rows = new FrameRows(spark, df.select(
+    // their node and branches.
+    val packed = df.select(
       col(labelCol).cast("int").as("true_label"),
-      array(featureCols.map(c => col(c).cast("double")): _*).as("time_series"),
-      lit(0).as("node_id")))
+      Preprocessing.seriesColumn(featureCols).as("time_series"))
+    val rows = new FrameRows(spark, packed)
     try {
       // sigma for per-candidate lcss/erp parameter sampling — one startup
       // linear aggregate, paid only when sampling is enabled and the caller
@@ -170,7 +142,7 @@ object GlobalTrainer {
       // every fit() repeats an identical full-scan job.
       val p =
         if (params.sampleParams && java.lang.Double.isNaN(params.dataStd))
-          params.copy(dataStd = computeDataStd(rows.assign))
+          params.copy(dataStd = computeDataStd(packed))
         else params
       ProximityTree.growLevels(rows, rows.rootCounts, p, featureCols.length)
     } finally rows.close()

@@ -86,7 +86,7 @@ object LocalTrainer {
     val packed = Preprocessing.classBalancedPartition(
         df.select(
           col(labelCol).cast("int").as("label"),
-          array(featureCols.map(c => col(c).cast("double")): _*).as("ts")),
+          Preprocessing.seriesColumn(featureCols).as("ts")),
         "label", numPartitions, seed = params.seed, keepPartitionId = true)
       .select(col("_partition_id"), col("label"), col("ts"))
       .as[(Int, Int, Array[Double])]
@@ -126,7 +126,7 @@ object LocalTrainer {
     val bc = spark.sparkContext.broadcast(model)
     val predictUdf = udf((ts: Seq[Double]) => bc.value.predictOne(ts.toArray))
     df.withColumn(predictionCol,
-      predictUdf(array(featureCols.map(c => col(c).cast("double")): _*)))
+      predictUdf(Preprocessing.seriesColumn(featureCols)))
   }
 
   /** Single-tree prediction; forwards to [[predict]]. */

@@ -65,6 +65,10 @@ object Preprocessing {
     df.select(normed ++ passthrough.map(col): _*)
   }
 
+  /** One series column: `featureCols` cast to double and packed in order. */
+  def seriesColumn(featureCols: Seq[String]): Column =
+    array(featureCols.map(c => col(c).cast("double")): _*)
+
   /** R1 — round-robin repartition (reference: code/src/preprocessing.py:50-55). */
   def roundRobin(df: DataFrame, numPartitions: Int): DataFrame =
     df.repartition(numPartitions)

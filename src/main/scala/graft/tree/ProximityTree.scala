@@ -19,16 +19,18 @@ import graft.prep.DeterministicSampling
   * the candidate with the lowest weighted Gini of its induced partition,
   * and route each series to its nearest exemplar's branch.
   *
-  * One grower, two row sources. [[growLevels]] builds the tree level by level;
-  * per level it asks a [[RowSource]] for two statistics and tells it how to
-  * route. Each statistic is a pure fold over `(label, series, node)` rows
-  * with an associative merge, so a source may fold its rows in any number
-  * of parts: [[fit]] folds an in-memory sequence (the local strategy, run
-  * inside `mapPartitions`), `GlobalTrainer.fit` folds every partition of a
-  * DataFrame and merges the partials on the driver. Every choice is a
-  * function of the rows and the seed alone — exemplars are the smallest
-  * content keys, counts are exact, measure draws come from one seeded RNG
-  * in level order — so the same rows yield the same tree on either path.
+  * One grower, two row sources. [[growLevels]] builds the tree level by level
+  * over a [[RowSource]], which only folds its rows and rewrites them: the
+  * grower's own rewrites record each row's branch per candidate (scoring)
+  * and move it to its winner's branch (routing), so both sources route by
+  * one rule. Each statistic is a pure fold over [[Row]]s with an
+  * associative merge, so a source may hold its rows in any number of
+  * parts: [[fit]] holds an in-memory array (the local strategy, run inside
+  * `mapPartitions`), `GlobalTrainer.fit` an RDD whose partials are merged
+  * on the driver. Every choice is a function of the rows and the seed
+  * alone — exemplars are the smallest content keys, counts are exact,
+  * measure draws come from one seeded RNG in level order — so the same
+  * rows yield the same tree on either path.
   */
 object ProximityTree {
 
@@ -133,8 +135,15 @@ object ProximityTree {
 
   // ---- the level statistics: pure folds with associative merges -------------
 
-  /** One row as the level statistics read it: (label, series, node id). */
-  type Row = (Int, Array[Double], Int)
+  /** One training row as the grower moves it: its node and, from the
+    * scoring pass of its node's level until routing, its branch per
+    * candidate of that node (else empty).
+    */
+  final case class Row(
+      label: Int,
+      series: Array[Double],
+      node: Int,
+      branches: Array[Int] = Array.emptyIntArray)
 
   /** A candidate split of one node: a measure and one exemplar per class
     * of the node, classes ascending; branch b is exemplar b's.
@@ -155,7 +164,7 @@ object ProximityTree {
 
   /** Rows per label. Merge: [[addCounts]]. */
   def classCountsFold(rows: Iterator[Row]): Map[Int, Long] =
-    rows.foldLeft(Map.empty[Int, Long])((acc, r) => acc.updated(r._1, acc.getOrElse(r._1, 0L) + 1L))
+    rows.foldLeft(Map.empty[Int, Long])((acc, r) => acc.updated(r.label, acc.getOrElse(r.label, 0L) + 1L))
 
   /** The sum of two count partials. */
   def addCounts[K](a: Map[K, Long], b: Map[K, Long]): Map[K, Long] =
@@ -171,9 +180,9 @@ object ProximityTree {
     * smallest of a union are the k smallest of the parts' k smallest.
     */
   def exemplarFold(rows: Iterator[Row], nodes: Set[Int], seed: Long, k: Int): Exemplars =
-    rows.filter(r => nodes(r._3)).foldLeft(Map.empty: Exemplars) { case (acc, (lbl, series, nid)) =>
-      mergeExemplars(k)(acc,
-        Map((nid, lbl) -> Vector((DeterministicSampling.seriesKey(seed, lbl, series), series))))
+    rows.filter(r => nodes(r.node)).foldLeft(Map.empty: Exemplars) { (acc, r) =>
+      mergeExemplars(k)(acc, Map((r.node, r.label) ->
+        Vector((DeterministicSampling.seriesKey(seed, r.label, r.series), r.series))))
     }
 
   def mergeExemplars(k: Int)(a: Exemplars, b: Exemplars): Exemplars =
@@ -181,55 +190,40 @@ object ProximityTree {
       acc.updated(g, (acc.getOrElse(g, Vector.empty) ++ top).sortWith(before).take(k))
     }
 
-  /** Over the rows at the candidates' nodes: (node, candidate, branch,
-    * label) -> rows; `record` sees each such row's branch per candidate, in
-    * row order. Merge: [[addCounts]].
+  /** Over the rows with recorded branches: (node, candidate, branch,
+    * label) -> rows. Merge: [[addCounts]].
     */
-  def scoreFold(
-      rows: Iterator[Row],
-      candidates: Map[Int, IndexedSeq[Candidate]],
-      record: Array[Int] => Unit = _ => ()): Scores = {
-    val measures = candidates.map { case (nid, cs) =>
-      nid -> cs.map(c => Distances.byName(c.measureName))
-    }
+  def scoreFold(rows: Iterator[Row]): Scores = {
     val acc = mutable.HashMap.empty[(Int, Int, Int, Int), Long]
-    rows.foreach { case (lbl, series, nid) =>
-      candidates.get(nid).foreach { cs =>
-        val branches = Array.tabulate(cs.length)(ci =>
-          branchOf(measures(nid)(ci), series, cs(ci).exemplars))
-        branches.indices.foreach { ci =>
-          val key = (nid, ci, branches(ci), lbl)
-          acc(key) = acc.getOrElse(key, 0L) + 1L
-        }
-        record(branches)
+    rows.foreach { r =>
+      r.branches.indices.foreach { ci =>
+        val key = (r.node, ci, r.branches(ci), r.label)
+        acc(key) = acc.getOrElse(key, 0L) + 1L
       }
     }
     acc.toMap
   }
 
-  /** Where the grower's rows live, in one or more parts. Every row sits at
-    * one node (the root, 0, at the start).
+  /** Where the grower's rows live, in one or more parts. Every row starts
+    * at the root, node 0, with no branches; [[growLevels]] alone rewrites
+    * rows, so both sources score and route by one rule.
     */
   trait RowSource {
     /** `fold` run over each part's rows: one partial per part. */
     def partials[T: ClassTag](fold: Iterator[Row] => T): Seq[T]
 
-    def exemplars(nodes: Set[Int], seed: Long, k: Int): Exemplars =
-      partials(exemplarFold(_, nodes, seed, k)).foldLeft(Map.empty: Exemplars)(mergeExemplars(k))
-
-    def scores(candidates: Map[Int, IndexedSeq[Candidate]]): Scores =
-      partials(scoreFold(_, candidates)).foldLeft(Map.empty: Scores)(addCounts)
-
-    /** Move each row of a split node to its winner's branch's child. */
-    def route(splits: Map[Int, Split], level: Int): Unit
+    /** Replace every row by `f(row)`, part by part. */
+    def update(f: Row => Row): Unit
   }
 
   /** Grow one tree breadth-first, one level per step: per level, the k
     * smallest keys per (node, class) give each node's candidates (the
-    * measure draws in node order, exemplar `c % size` of each class), one
-    * scoring fold counts every candidate's (branch, label) rows, the
-    * weighted-Gini argmin wins (first candidate on ties), and its counts
-    * are its children's class histograms. An empty branch is a leaf of its
+    * measure draws in node order, exemplar `c % size` of each class), each
+    * row of a splitting node records its branch per candidate, one count
+    * fold gives every candidate's (branch, label) rows, the weighted-Gini
+    * argmin wins (first candidate on ties), its counts are its children's
+    * class histograms, and each row moves to its recorded branch's child
+    * without another distance. An empty branch is a leaf of its
     * exemplar's class. `rootCounts` is [[classCountsFold]] over all rows;
     * `params.dataStd` must already be resolved when sampling.
     */
@@ -248,8 +242,8 @@ object ProximityTree {
     var nextId = 1
     var open = List((0, 0)) // (nodeId, depth)
     // class histograms of the open nodes: the root's from the caller, every
-    // later node's from its parent's winning scoring counts (scoring and
-    // routing share one branch function, so those counts are exact)
+    // later node's from its parent's winning scoring counts (routing reads
+    // the branches those counts were taken from, so they are exact)
     var hist = Map(0 -> rootCounts)
     var level = 0
 
@@ -267,7 +261,9 @@ object ProximityTree {
         // W2: the k smallest content keys per (node, class) (reference:
         // global_model_manager.py:225-233 orders by unseeded rand — SURVEY
         // §4 "P3")
-        val sampled = source.exemplars(splittingIds.toSet, params.seed + level, params.nSplitters)
+        val (nodes, seed, k) = (splittingIds.toSet, params.seed + level, params.nSplitters)
+        val sampled = source.partials(exemplarFold(_, nodes, seed, k))
+          .foldLeft(Map.empty: Exemplars)(mergeExemplars(k))
 
         // candidate splits: measure + one exemplar per class
         val candidates: Map[Int, IndexedSeq[Candidate]] =
@@ -282,8 +278,20 @@ object ProximityTree {
             }
           }.toMap
 
+        // U1: each row of a splitting node records its branch per candidate
+        // (reference: global_model_manager.py:274-280), measures resolved
+        // here once
+        val scorers = candidates.map { case (nid, cs) =>
+          nid -> cs.map(c => (Distances.byName(c.measureName), c.exemplars))
+        }
+        source.update { r =>
+          scorers.get(r.node).fold(r) { cs =>
+            r.copy(branches = cs.map { case (m, ex) => branchOf(m, r.series, ex) }.toArray)
+          }
+        }
+
         // (node, cand) -> class histogram per branch
-        val scores = source.scores(candidates)
+        val scores = source.partials(scoreFold).foldLeft(Map.empty: Scores)(addCounts)
         val tables: Map[(Int, Int), IndexedSeq[Map[Int, Long]]] =
           candidates.flatMap { case (nid, cs) =>
             cs.indices.map { ci =>
@@ -313,9 +321,16 @@ object ProximityTree {
 
         if (won.nonEmpty) {
           splits ++= won
-          // U2: every row of a split node moves to its child (reference:
-          // global_model_manager.py:351-371)
-          source.route(won.toMap, level)
+          // U2: every row of a split node moves to its winner's recorded
+          // branch's child (reference: global_model_manager.py:351-371);
+          // every row leaves without branches
+          val moves = won.map { case (nid, s) => nid -> (s.index, s.childIds) }.toMap
+          source.update { r =>
+            moves.get(r.node) match {
+              case Some((ci, childIds)) => Row(r.label, r.series, childIds(r.branches(ci)))
+              case None => if (r.branches.isEmpty) r else r.copy(branches = Array.emptyIntArray)
+            }
+          }
           val children = for {
             (nid, s) <- won.toList
             i <- s.childIds.indices
@@ -342,35 +357,11 @@ object ProximityTree {
     ProximityTreeModel(build(0), majorityLabel(rootCounts))
   }
 
-  /** The in-memory row source, one part: scoring records every row's
-    * branch per candidate, so routing reads the winner's and computes no
-    * distance.
-    */
-  private final class InMemoryRows(data: IndexedSeq[Instance]) extends RowSource {
-    private val node = new Array[Int](data.length)
-    // the rows the last scoring pass saw, and their branch per candidate
-    private var scored: IndexedSeq[Int] = IndexedSeq.empty
-    private var branches: IndexedSeq[Array[Int]] = IndexedSeq.empty
+  /** The in-memory row source: one part, an array of rows. */
+  private final class InMemoryRows(rows: Array[Row]) extends RowSource {
+    def partials[T: ClassTag](fold: Iterator[Row] => T): Seq[T] = Seq(fold(rows.iterator))
 
-    private def rows(idx: Iterator[Int]): Iterator[Row] =
-      idx.map(i => (data(i).label, data(i).ts, node(i)))
-
-    def partials[T: ClassTag](fold: Iterator[Row] => T): Seq[T] =
-      Seq(fold(rows(data.indices.iterator)))
-
-    override def scores(candidates: Map[Int, IndexedSeq[Candidate]]): Scores = {
-      scored = data.indices.filter(i => candidates.contains(node(i)))
-      val seen = IndexedSeq.newBuilder[Array[Int]]
-      val counts = scoreFold(rows(scored.iterator), candidates, seen += _)
-      branches = seen.result()
-      counts
-    }
-
-    def route(splits: Map[Int, Split], level: Int): Unit =
-      scored.indices.foreach { j =>
-        val i = scored(j)
-        splits.get(node(i)).foreach(s => node(i) = s.childIds(branches(j)(s.index)))
-      }
+    def update(f: Row => Row): Unit = rows.mapInPlace(f)
   }
 
   def fit(data: IndexedSeq[Instance], params: Params): ProximityTreeModel = {
@@ -379,8 +370,8 @@ object ProximityTree {
       if (params.sampleParams && java.lang.Double.isNaN(params.dataStd))
         params.copy(dataStd = valueStd(data))
       else params
-    growLevels(new InMemoryRows(data),
-      classCountsFold(data.iterator.map(i => (i.label, i.ts, 0))), p, data.head.ts.length)
+    val rows = data.iterator.map(i => Row(i.label, i.ts, 0)).toArray
+    growLevels(new InMemoryRows(rows), classCountsFold(rows.iterator), p, data.head.ts.length)
   }
 }
 

@@ -22,7 +22,7 @@ class GlobalTrainerSpec extends AnyFunSuite with SparkSpec {
       Seq((9, 9), (7, 0))
     val rows: Seq[ProximityTree.Row] = groups.flatMap { case g @ (nid, lbl) =>
       val n = if (g == ((9, 9))) 1 else 1 + rnd.nextInt(12)
-      Seq.fill(n)((lbl, Array.fill(2)(rnd.nextInt(3).toDouble), nid))
+      Seq.fill(n)(ProximityTree.Row(lbl, Array.fill(2)(rnd.nextInt(3).toDouble), nid))
     }
     val nodes = Set(0, 1, 2, 3, 4, 5, 9)
     val k = 5
@@ -33,8 +33,8 @@ class GlobalTrainerSpec extends AnyFunSuite with SparkSpec {
     val merged = chunks.map(c => ProximityTree.exemplarFold(c.iterator, nodes, seed, k))
       .reduce(ProximityTree.mergeExemplars(k))
 
-    val expected = rows.filter(r => nodes(r._3)).groupBy(r => (r._3, r._1)).map { case (g, rs) =>
-      g -> rs.map(r => (DeterministicSampling.seriesKey(seed, r._1, r._2), r._2)).sortWith { (a, b) =>
+    val expected = rows.filter(r => nodes(r.node)).groupBy(r => (r.node, r.label)).map { case (g, rs) =>
+      g -> rs.map(r => (DeterministicSampling.seriesKey(seed, r.label, r.series), r.series)).sortWith { (a, b) =>
         a._1 < b._1 || (a._1 == b._1 && java.util.Arrays.compare(a._2, b._2) < 0)
       }.take(k).map { case (key, s) => (key, s.toSeq) }
     }
@@ -83,16 +83,23 @@ class GlobalTrainerSpec extends AnyFunSuite with SparkSpec {
       "sampled, pinned std" -> ProximityTree.Params(sampleParams = true,
         dataStd = ProximityTree.valueStd(instances), seed = 8),
       "capped" -> ProximityTree.Params(maxDepth = 3, minSamplesSplit = 10,
-        poolNames = Seq("euclidean", "dtw_full"), seed = 2))
-    configs.foreach { case (name, params) =>
+        poolNames = Seq("euclidean", "dtw_full"), seed = 2),
+      "deep" -> ProximityTree.Params(nSplitters = 1, poolNames = Seq("euclidean"), seed = 2))
+    val depths = configs.map { case (name, params) =>
       val localTree = ProximityTree.fit(instances, params)
       assert(localTree.numSplits >= 2, name)
       val local = ModelJson.treeJson(localTree)
       Seq(1, 4).foreach { k =>
+        // every level's rows are unpersisted by the time fit returns
+        val cached = spark.sparkContext.getPersistentRDDs.keySet
         val global = GlobalTrainer.fit(spark, Preprocessing.roundRobin(df, k), "label", feats,
           params)
         assert(ModelJson.treeJson(global) === local, s"$name, k = $k")
+        assert(spark.sparkContext.getPersistentRDDs.keySet === cached, s"$name, k = $k")
       }
-    }
+      name -> localTree.depth
+    }.toMap
+    // over 8 levels: each level's rows are checkpointed and freed many times
+    assert(depths("deep") > 8)
   }
 }

@@ -19,5 +19,5 @@ exec java \
   --add-opens=java.base/sun.security.action=ALL-UNNAMED \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Xmx"${SPARK_DRIVER_MEM:-16g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   "$@"
