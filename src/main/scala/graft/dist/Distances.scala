@@ -4,8 +4,10 @@ package graft.dist
   * code/src/global_model_manager.py:60-85).
   *
   * Pure JVM code — these run inside `mapPartitions`/UDF closures on
-  * executors, so they are written as tight, allocation-free loops over
-  * `Array[Double]` (no boxing, no Breeze). Each kernel is a
+  * executors, so they are written as tight loops over `Array[Double]` (no
+  * boxing, no Breeze). The loops themselves allocate nothing; each elastic
+  * call allocates its two rolling DP rows and any per-call table (WDTW
+  * weights, ERP gap costs, TWE step and stiffness costs). Each kernel is a
   * [[DistanceMeasure]] so the tree learner's measure pool stays pluggable
   * (SURVEY §2.8: aeon's 11-measure pool, all of which ship here).
   */
@@ -24,6 +26,20 @@ object Distances {
     if (a == null || b == null || a.length == 0 || a.length != b.length)
       Double.PositiveInfinity
     else f
+
+  /** The min of DP cells in `dtw`, `wdtw`, `erp` and `twe`. `math.min`
+    * also orders −0.0 below 0.0, and that branch-free code costs more than
+    * the rest of a DTW cell. This min returns NaN exactly when `math.min`
+    * does, and it differs only on a −0.0/0.0 pair, which no DP cell holds:
+    * a sum is −0.0 only when both terms are, and every cell adds a cost to
+    * an earlier cell, starting from 0.0 or an absolute value. So each kernel
+    * returns the same distance as with `math.min`. `msm` keeps `math.min`:
+    * its split and merge costs are themselves data-dependent branches, and
+    * on noisy series (white noise, or the ECG-like benchmark input) this
+    * min's branch mispredicts so often that `msm` gets slower, not faster.
+    */
+  @inline private def min(a: Double, b: Double): Double =
+    if (a <= b) a else if (b < a) b else Double.NaN
 
   /** D2/D5 — Euclidean (L2). */
   object Euclidean extends DistanceMeasure {
@@ -90,15 +106,19 @@ object Distances {
     prev(0) = 0.0
     var i = 1
     while (i <= n) {
-      java.util.Arrays.fill(curr, inf)
       val jLo = math.max(1, i - w)
       val jHi = math.min(m, i + w)
+      // the next row reads this one only on [jLo - 1, jHi + 1]. Right of the
+      // band the row is still +Infinity from its allocation (the band only
+      // moves right), so only the cell left of the band needs resetting
+      curr(jLo - 1) = inf
+      val ai = a(i - 1)
+      var left = inf
       var j = jLo
       while (j <= jHi) {
-        val d = a(i - 1) - b(j - 1)
-        val cost = d * d
-        val best = math.min(prev(j), math.min(prev(j - 1), curr(j - 1)))
-        curr(j) = cost + best
+        val d = ai - b(j - 1)
+        left = d * d + min(prev(j), min(prev(j - 1), left))
+        curr(j) = left
         j += 1
       }
       val t = prev; prev = curr; curr = t
@@ -148,19 +168,29 @@ object Distances {
       return Double.PositiveInfinity
     val n = a.length; val m = b.length
     val half = math.max(n, m) / 2.0
+    // the weight depends on the cell only through k = |i − j|
+    val weight = new Array[Double](math.max(n, m))
+    var k = 0
+    while (k < weight.length) {
+      weight(k) = 1.0 / (1.0 + math.exp(-g * (k - half)))
+      k += 1
+    }
     val inf = Double.PositiveInfinity
     var prev = Array.fill(m + 1)(inf)
     var curr = Array.fill(m + 1)(inf)
     prev(0) = 0.0
     var i = 1
     while (i <= n) {
-      java.util.Arrays.fill(curr, inf)
+      // every other cell of the row is rewritten; cell 0 still holds row 0's
+      // 0.0 after the first swap
+      curr(0) = inf
+      val ai = a(i - 1)
+      var left = inf
       var j = 1
       while (j <= m) {
-        val d = a(i - 1) - b(j - 1)
-        val w = 1.0 / (1.0 + math.exp(-g * (math.abs(i - j) - half)))
-        val cost = w * d * d
-        curr(j) = cost + math.min(prev(j), math.min(prev(j - 1), curr(j - 1)))
+        val d = ai - b(j - 1)
+        left = weight(math.abs(i - j)) * d * d + min(prev(j), min(prev(j - 1), left))
+        curr(j) = left
         j += 1
       }
       val t = prev; prev = curr; curr = t
@@ -194,9 +224,10 @@ object Distances {
     var curr = new Array[Int](m + 1)
     var i = 1
     while (i <= n) {
-      java.util.Arrays.fill(curr, 0)
       val jLo = math.max(1, i - w)
       val jHi = math.min(m, i + w)
+      // as in dtw: only the cell left of the band needs resetting
+      curr(jLo - 1) = 0
       var j = jLo
       while (j <= jHi) {
         curr(j) =
@@ -225,20 +256,28 @@ object Distances {
     if (a == null || b == null || a.length == 0 || b.length == 0)
       return Double.PositiveInfinity
     val n = a.length; val m = b.length
+    val gapB = new Array[Double](m) // gapB(j) = |b(j) − g|
     var prev = new Array[Double](m + 1)
     var curr = new Array[Double](m + 1)
     var j = 1
-    prev(0) = 0.0
-    while (j <= m) { prev(j) = prev(j - 1) + math.abs(b(j - 1) - g); j += 1 }
+    while (j <= m) {
+      gapB(j - 1) = math.abs(b(j - 1) - g)
+      prev(j) = prev(j - 1) + gapB(j - 1)
+      j += 1
+    }
     var i = 1
     while (i <= n) {
-      curr(0) = prev(0) + math.abs(a(i - 1) - g)
+      val ai = a(i - 1)
+      val gapA = math.abs(ai - g)
+      var left = prev(0) + gapA
+      curr(0) = left
       var jj = 1
       while (jj <= m) {
-        val subst = prev(jj - 1) + math.abs(a(i - 1) - b(jj - 1))
-        val delA = prev(jj) + math.abs(a(i - 1) - g)
-        val delB = curr(jj - 1) + math.abs(b(jj - 1) - g)
-        curr(jj) = math.min(subst, math.min(delA, delB))
+        val subst = prev(jj - 1) + math.abs(ai - b(jj - 1))
+        val delA = prev(jj) + gapA
+        val delB = left + gapB(jj - 1)
+        left = min(subst, min(delA, delB))
+        curr(jj) = left
         jj += 1
       }
       val t = prev; prev = curr; curr = t
@@ -260,6 +299,12 @@ object Distances {
     if (a == null || b == null || a.length == 0 || b.length == 0)
       return Double.PositiveInfinity
     val n = a.length; val m = b.length
+    // stepB(j) = |b(j) − b(j − 1)| (b(−1) = 0); stiffness(k) is the warp
+    // penalty of a match at k = |i − j|
+    val stepB = new Array[Double](m)
+    val stiffness = new Array[Double](math.max(n, m))
+    var k = 0
+    while (k < stiffness.length) { stiffness(k) = nu * 2.0 * k; k += 1 }
     val inf = Double.PositiveInfinity
     var prev = Array.fill(m + 1)(inf)
     var curr = Array.fill(m + 1)(inf)
@@ -267,25 +312,29 @@ object Distances {
     var j = 1
     while (j <= m) {
       val bPrev = if (j >= 2) b(j - 2) else 0.0
-      prev(j) = prev(j - 1) + math.abs(b(j - 1) - bPrev) + nu + lambda
+      stepB(j - 1) = math.abs(b(j - 1) - bPrev)
+      prev(j) = prev(j - 1) + stepB(j - 1) + nu + lambda
       j += 1
     }
     var i = 1
     while (i <= n) {
+      val ai = a(i - 1)
       val aPrev = if (i >= 2) a(i - 2) else 0.0
-      curr(0) = prev(0) + math.abs(a(i - 1) - aPrev) + nu + lambda
+      val stepA = math.abs(ai - aPrev)
+      var left = prev(0) + stepA + nu + lambda
+      curr(0) = left
       var jj = 1
       while (jj <= m) {
-        val bPrev = if (jj >= 2) b(jj - 2) else 0.0
         // match: align a(i) with b(j) (+ previous-point continuity term)
         val matchPrevDiff =
-          if (i >= 2 && jj >= 2) math.abs(a(i - 2) - b(jj - 2)) else 0.0
-        val mCost = prev(jj - 1) + math.abs(a(i - 1) - b(jj - 1)) +
-          matchPrevDiff + nu * 2.0 * math.abs(i - jj)
+          if (i >= 2 && jj >= 2) math.abs(aPrev - b(jj - 2)) else 0.0
+        val mCost = prev(jj - 1) + math.abs(ai - b(jj - 1)) +
+          matchPrevDiff + stiffness(math.abs(i - jj))
         // delete in a / delete in b
-        val delA = prev(jj) + math.abs(a(i - 1) - aPrev) + nu + lambda
-        val delB = curr(jj - 1) + math.abs(b(jj - 1) - bPrev) + nu + lambda
-        curr(jj) = math.min(mCost, math.min(delA, delB))
+        val delA = prev(jj) + stepA + nu + lambda
+        val delB = left + stepB(jj - 1) + nu + lambda
+        left = min(mCost, min(delA, delB))
+        curr(jj) = left
         jj += 1
       }
       val t = prev; prev = curr; curr = t
@@ -309,26 +358,28 @@ object Distances {
       if ((x <= newPoint && newPoint <= y) || (y <= newPoint && newPoint <= x)) c
       else c + math.min(math.abs(newPoint - x), math.abs(newPoint - y))
     val n = a.length; val m = b.length
+    // column 0 is never read: every row starts at column 1
     var prev = new Array[Double](m + 1)
     var curr = new Array[Double](m + 1)
-    prev(0) = 0.0
-    var j = 1
     prev(1) = math.abs(a(0) - b(0))
+    var j = 2
     while (j <= m) {
-      if (j >= 2) prev(j) = prev(j - 1) + splitMergeCost(b(j - 1), a(0), b(j - 2))
+      prev(j) = prev(j - 1) + splitMergeCost(b(j - 1), a(0), b(j - 2))
       j += 1
     }
     // row 1 corresponds to a(0); start DP from row 2
     var i = 2
     while (i <= n) {
-      curr(0) = Double.PositiveInfinity
-      curr(1) = prev(1) + splitMergeCost(a(i - 1), a(i - 2), b(0))
+      val ai = a(i - 1); val aPrev = a(i - 2)
+      var left = prev(1) + splitMergeCost(ai, aPrev, b(0))
+      curr(1) = left
       var jj = 2
       while (jj <= m) {
-        val move = prev(jj - 1) + math.abs(a(i - 1) - b(jj - 1))
-        val split = prev(jj) + splitMergeCost(a(i - 1), a(i - 2), b(jj - 1))
-        val merge = curr(jj - 1) + splitMergeCost(b(jj - 1), a(i - 1), b(jj - 2))
-        curr(jj) = math.min(move, math.min(split, merge))
+        val move = prev(jj - 1) + math.abs(ai - b(jj - 1))
+        val split = prev(jj) + splitMergeCost(ai, aPrev, b(jj - 1))
+        val merge = left + splitMergeCost(b(jj - 1), ai, b(jj - 2))
+        left = math.min(move, math.min(split, merge)) // see `min`
+        curr(jj) = left
         jj += 1
       }
       val t = prev; prev = curr; curr = t
