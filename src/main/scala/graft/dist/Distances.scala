@@ -402,31 +402,13 @@ object Distances {
     fixed.map(m => m.name -> m).toMap
   }
 
-  // memo so the per-row traversal hot path never re-parses a name; bounded
-  // because sampled-parameter names are nearly all distinct — a long-lived
-  // executor reused across many fits would otherwise accumulate entries
-  // forever. Past the bound we drop the whole map (entries are tiny and
-  // re-parse is cheap; eviction bookkeeping would cost more than it saves).
-  private val MemoBound = 4096
-  private val parsed =
-    new java.util.concurrent.ConcurrentHashMap[String, DistanceMeasure]()
-
   /** Measure by stable name — the serialized-model vocabulary. Names carry
     * their parameters (`wdtw_0.3715…`, `lcss_0.21_35`), so any measure the
     * per-candidate sampler draws round-trips through the JSON model sink:
     * `byName(m.name) == m` for every constructible measure.
     */
   def byName(name: String): DistanceMeasure =
-    fixedByName.getOrElse(name, {
-      val hit = parsed.get(name)
-      if (hit != null) hit
-      else {
-        val m = parse(name)
-        if (parsed.size >= MemoBound) parsed.clear()
-        parsed.putIfAbsent(name, m)
-        m
-      }
-    })
+    fixedByName.getOrElse(name, parse(name))
 
   private def parse(name: String): DistanceMeasure = {
     def num(s: String): Double = s.toDouble

@@ -29,46 +29,46 @@ object Evaluation {
   final case class ClassMetrics(
       label: Double, precision: Double, recall: Double, f1: Double)
 
-  /** (prediction, label) cast to double, as the evaluator requires
-    * (evaluation.py:99-100); its counts are one Spark job, on first use. */
-  private def metrics(pred: DataFrame, labelCol: String, predCol: String)
-      : MulticlassMetrics =
-    new MulticlassMetrics(pred.select(
-      col(predCol).cast("double"), col(labelCol).cast("double"))
-      .rdd.map(r => (r.getDouble(0), r.getDouble(1))))
+  /** Sorted labels, row-major confusion matrix, per-class metrics. */
+  type ClassWise = (Seq[Double], Array[Array[Double]], Seq[ClassMetrics])
 
-  /** E1 — accuracy / weightedPrecision / weightedRecall / f1, the values
-    * MulticlassClassificationEvaluator reports (evaluation.py:102-117), and
-    * E2 — the mean per-class recall over the actual labels, rounded HALF_UP
-    * to 6 places like [[Metrics.balancedAccuracyDF]]. One pass over `pred`.
+  /** Both results of one evaluation from one MulticlassMetrics over
+    * (prediction, label) cast to double, as the evaluator requires
+    * (evaluation.py:99-100); its counts are one Spark job:
+    *   - E1 — accuracy / weightedPrecision / weightedRecall / f1, the values
+    *     MulticlassClassificationEvaluator reports (evaluation.py:102-117),
+    *     and E2 — the mean per-class recall over the actual labels, rounded
+    *     HALF_UP to 6 places like [[Metrics.balancedAccuracyDF]];
+    *   - E3/E4 — confusion matrix + per-class precision/recall/F1
+    *     (evaluation.py:513-620).
     */
-  def performance(pred: DataFrame, labelCol: String, predCol: String): Performance = {
-    val mm = metrics(pred, labelCol, predCol)
-    val recalls = mm.labels.map(mm.recall)
+  def evaluate(pred: DataFrame, labelCol: String, predCol: String): (Performance, ClassWise) = {
+    val mm = new MulticlassMetrics(pred.select(col(predCol).cast("double"), col(labelCol).cast("double"))
+      .rdd.map(r => (r.getDouble(0), r.getDouble(1))))
+    val labels = mm.labels.toSeq
+    val recalls = labels.map(mm.recall)
     require(recalls.nonEmpty, "performance: no predictions to evaluate")
-    Performance(
+    val perf = Performance(
       accuracy = mm.accuracy,
       balancedAccuracy = BigDecimal(recalls.sum / recalls.length)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
       weightedPrecision = mm.weightedPrecision,
       weightedRecall = mm.weightedRecall,
       f1 = mm.weightedFMeasure)
-  }
-
-  /** E3/E4 — confusion matrix + per-class precision/recall/F1 via mllib
-    * MulticlassMetrics (evaluation.py:513-620). Returns (sorted labels,
-    * row-major confusion matrix, per-class metrics).
-    */
-  def classWise(pred: DataFrame, labelCol: String, predCol: String)
-      : (Seq[Double], Array[Array[Double]], Seq[ClassMetrics]) = {
-    val mm = metrics(pred, labelCol, predCol)
-    val labels = mm.labels.toSeq
     val cm = mm.confusionMatrix
     val matrix = Array.tabulate(cm.numRows, cm.numCols)((i, j) => cm(i, j))
     val per = labels.map(l =>
       ClassMetrics(l, mm.precision(l), mm.recall(l), mm.fMeasure(l)))
-    (labels, matrix, per)
+    (perf, (labels, matrix, per))
   }
+
+  /** E1/E2 of [[evaluate]]. */
+  def performance(pred: DataFrame, labelCol: String, predCol: String): Performance =
+    evaluate(pred, labelCol, predCol)._1
+
+  /** E3/E4 of [[evaluate]]. */
+  def classWise(pred: DataFrame, labelCol: String, predCol: String): ClassWise =
+    evaluate(pred, labelCol, predCol)._2
 
   /** E5 — wall-clock stage timers (evaluation.py:54-77). */
   final class StageTimer {

@@ -41,28 +41,17 @@ object GlobalTrainer {
     */
   private val MinRowsPerTask = 64L
 
-  /** Population std over every element of `arrayCol` in one map-side-
-    * combined aggregate. Callers fitting many trees on the same data
-    * (sweeps, forests) should call this ONCE and pass the value through
-    * `Params.dataStd` — fit() recomputes it per tree otherwise.
+  /** [[ProximityTree.valueStd]] of the rows' series: bit for bit the sigma
+    * that `fit` computes when sampling with a NaN `Params.dataStd`. Callers
+    * fitting many trees on the same rows (sweeps) compute it once here and
+    * pass it through `Params.dataStd`; each fit would otherwise run this
+    * scan again.
     */
-  def computeDataStd(df: DataFrame, arrayCol: String = "time_series"): Double = {
-    val r = df.select(explode(col(arrayCol)).as("v"))
-      .agg(sum(col("v")).as("s"), sum(col("v") * col("v")).as("s2"),
-        count(lit(1)).as("n"))
-      .head()
-    val n = r.getLong(2).toDouble
-    if (n == 0) 1.0
-    else {
-      val mean = r.getDouble(0) / n
-      math.sqrt(math.max(0.0, r.getDouble(1) / n - mean * mean))
-    }
+  def computeDataStdWide(df: DataFrame, featureCols: Seq[String]): Double = {
+    import df.sparkSession.implicits._
+    ProximityTree.valueStd(df.select(Preprocessing.seriesColumn(featureCols)).as[Array[Double]].rdd
+      .mapPartitions(it => Iterator.single(ProximityTree.valueSumsFold(it))).collect().toSeq)
   }
-
-  /** Wide-column variant of [[computeDataStd]]. */
-  def computeDataStdWide(df: DataFrame, featureCols: Seq[String]): Double =
-    computeDataStd(
-      df.select(Preprocessing.seriesColumn(featureCols).as("time_series")))
 
   /** The level frame as a row source: an RDD of [[ProximityTree.Row]]s
     * decoded once from the packed (true_label, time_series) frame, one part
@@ -133,18 +122,7 @@ object GlobalTrainer {
       col(labelCol).cast("int").as("true_label"),
       Preprocessing.seriesColumn(featureCols).as("time_series"))
     val rows = new FrameRows(spark, packed)
-    try {
-      // sigma for per-candidate lcss/erp parameter sampling — one startup
-      // linear aggregate, paid only when sampling is enabled and the caller
-      // didn't supply a std. Callers fitting MANY trees on the same data
-      // (forests, partition sweeps) should compute this once via
-      // [[computeDataStd]] and thread it through params.dataStd — otherwise
-      // every fit() repeats an identical full-scan job.
-      val p =
-        if (params.sampleParams && java.lang.Double.isNaN(params.dataStd))
-          params.copy(dataStd = computeDataStd(packed))
-        else params
-      ProximityTree.growLevels(rows, rows.rootCounts, p, featureCols.length)
-    } finally rows.close()
+    try ProximityTree.growLevels(rows, rows.rootCounts, params, featureCols.length)
+    finally rows.close()
   }
 }

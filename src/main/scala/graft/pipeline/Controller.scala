@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -119,8 +120,7 @@ object Controller {
       p.count(); p
     }
     val (perf, (labels, cm, classWise)) = timer.time("evaluation")(
-      (Evaluation.performance(pred, cfg.labelCol, "prediction"),
-        Evaluation.classWise(pred, cfg.labelCol, "prediction")))
+      Evaluation.evaluate(pred, cfg.labelCol, "prediction"))
     pred.unpersist()
     cfg.plotsDir.foreach(dir =>
       Plots.writeAll(labels, cm, classWise, s"$dir/${kind}_$iteration"))
@@ -170,7 +170,24 @@ object Controller {
     IterationResult("global", iteration, Evaluation.Report(
       "global", iteration, perf, timer.timings, Evaluation.driverMemoryMb(),
       Seq(Evaluation.complexity(tree)), classWise,
-      Map("partitions" -> iteration.toString)))
+      Map("partitions" -> iteration.toString,
+        ModelHash -> DigestUtils.sha256Hex(ModelJson.treeJson(tree)).take(16))))
+  }
+
+  /** The report `meta` key of a global tree's hash: 16 hex digits of the
+    * SHA-256 of its JSON. */
+  val ModelHash = "model_hash"
+
+  /** Throws when the global trees of one sweep differ: the same rows and
+    * sigma give the same tree for every partition count. Local forests
+    * change with the partition count by design and are not checked.
+    */
+  def checkGlobalHashes(results: Seq[IterationResult]): Unit = {
+    val hashes = results.filter(_.modelKind == "global").map(r => r.iteration -> r.report.meta(ModelHash))
+    val off = hashes.filter(_._2 != hashes.head._2)
+    if (off.nonEmpty) throw new IllegalStateException(
+      s"global trees differ across the sweep: iteration ${hashes.head._1} hashes ${hashes.head._2}, but " +
+        off.map { case (i, h) => s"iteration $i hashes $h" }.mkString(", "))
   }
 
   /** First iteration (= partition count) of both strategies' sweeps
@@ -182,7 +199,8 @@ object Controller {
     * [[MinIteration]] to its max partition count. Returns all iteration
     * reports (also written to
     * `reportsDir` when configured, one aggregated JSON per strategy —
-    * reference: controller_loop.py:381-401).
+    * reference: controller_loop.py:381-401). Then throws, by
+    * [[checkGlobalHashes]], when the global trees differ.
     */
   def run(spark: SparkSession, cfg: SweepConfig): Seq[IterationResult] = {
     val prepTimer = new Evaluation.StageTimer
@@ -191,8 +209,8 @@ object Controller {
     (MinIteration to cfg.localMaxPartitions).foreach { i =>
       results += runLocalIteration(spark, cfg, i, train, test, features)
     }
-    // sampling sigma is a property of the dataset, not the iteration:
-    // compute once for the whole sweep instead of once per fit
+    // sigma, bit for bit what each global fit would compute from the same
+    // rows, once for the sweep instead of once per fit
     val dataStd =
       if (cfg.sampleParams) GlobalTrainer.computeDataStdWide(train, features)
       else Double.NaN
@@ -207,6 +225,7 @@ object Controller {
         Evaluation.writeReports(rs.map(_.report), s"$dir/report_${kind}_ALL.json")
       }
     }
+    checkGlobalHashes(all)
     all
   }
 }

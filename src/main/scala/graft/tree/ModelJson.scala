@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.dist.Distances
+
 /** JSON model sink/source (SURVEY S4/S5). The reference pickles aeon
   * objects (code/src/global_model_manager.py:508-552,
   * code/src/controller_loop.py:274-282,343-351); we own the model classes,
@@ -22,7 +24,7 @@ object ModelJson {
     case PLeaf(lbl) =>
       sb.append("""{"kind":"leaf","label":""").append(lbl).append('}')
     case PSplit(m, labels, exemplars, children) =>
-      sb.append("""{"kind":"split","measure":"""").append(m).append('"')
+      sb.append("""{"kind":"split","measure":"""").append(m.name).append('"')
       sb.append(""","exemplar_labels":""").append(labels.mkString("[", ",", "]"))
       sb.append(""","exemplars":[""")
       exemplars.zipWithIndex.foreach { case (e, i) =>
@@ -85,7 +87,7 @@ object ModelJson {
           .map(i => parseDoubles(n.get("exemplars").get(i)))
         val children = (0 until n.get("children").size())
           .map(i => parseNode(n.get("children").get(i)))
-        PSplit(n.get("measure").asText(), labels, exemplars, children)
+        PSplit(Distances.byName(n.get("measure").asText()), labels, exemplars, children)
       case other => throw new IllegalArgumentException(s"unknown node kind: $other")
     }
 

@@ -1,5 +1,7 @@
 package graft.tree
 
+import java.math.{BigDecimal => JBigDecimal}
+
 import scala.collection.mutable
 import scala.reflect.ClassTag
 import scala.util.Random
@@ -40,8 +42,8 @@ object ProximityTree {
   /** `sampleParams = true` switches candidate draws from the fixed
     * representative pool to per-candidate parameter sampling
     * ([[Distances.sampleMeasure]], the Proximity Forest paper's scheme).
-    * `dataStd` feeds the lcss/erp sampling ranges; leave NaN to have the
-    * trainer compute it from the training values.
+    * `dataStd` feeds the lcss/erp sampling ranges; leave NaN to have
+    * [[growLevels]] compute it from the tree's rows with [[valueSumsFold]].
     */
   final case class Params(
       nSplitters: Int = 5,
@@ -77,17 +79,6 @@ object ProximityTree {
   def majorityLabel(classCounts: Map[Int, Long]): Int =
     classCounts.maxBy { case (lbl, n) => (n, -lbl) }._1
 
-  /** One candidate's measure: a parameter draw scaled by `params.dataStd`
-    * when `sampleParams` is set, else a uniform pick from the fixed pool.
-    */
-  def drawMeasure(
-      rng: Random,
-      params: Params,
-      pool: IndexedSeq[DistanceMeasure],
-      seriesLen: Int): DistanceMeasure =
-    if (params.sampleParams) Distances.sampleMeasure(rng, params.dataStd, seriesLen)
-    else pool(rng.nextInt(pool.length))
-
   /** The branch a series takes at a split: its nearest exemplar.
     * `nearestIndex` yields -1 when every distance is +Infinity (empty or
     * length-mismatched series under aligned measures); such series take
@@ -117,22 +108,6 @@ object ProximityTree {
     }
   }
 
-  /** Std of every value in the training matrix — sigma for the lcss/erp
-    * parameter-sampling ranges (PF paper: epsilon, g ~ U(sigma/5, sigma)).
-    */
-  def valueStd(data: IndexedSeq[Instance]): Double = {
-    var s = 0.0; var s2 = 0.0; var n = 0L
-    data.foreach { inst =>
-      val ts = inst.ts; var i = 0
-      while (i < ts.length) { val v = ts(i); s += v; s2 += v * v; n += 1; i += 1 }
-    }
-    if (n == 0) 1.0
-    else {
-      val mean = s / n
-      math.sqrt(math.max(0.0, s2 / n - mean * mean))
-    }
-  }
-
   // ---- the level statistics: pure folds with associative merges -------------
 
   /** One training row as the grower moves it: its node and, from the
@@ -149,7 +124,7 @@ object ProximityTree {
     * of the node, classes ascending; branch b is exemplar b's.
     */
   final case class Candidate(
-      measureName: String,
+      measure: DistanceMeasure,
       labels: IndexedSeq[Int],
       exemplars: IndexedSeq[Array[Double]])
 
@@ -169,6 +144,47 @@ object ProximityTree {
   /** The sum of two count partials. */
   def addCounts[K](a: Map[K, Long], b: Map[K, Long]): Map[K, Long] =
     b.foldLeft(a) { case (acc, (key, n)) => acc.updated(key, acc.getOrElse(key, 0L) + n) }
+
+  /** `n` values, their sum and sum of squares held exactly, and whether
+    * every series' sums were finite (no NaN or infinite value, no overflow).
+    */
+  final case class ValueSums(n: Long, sum: JBigDecimal, sumSq: JBigDecimal, finite: Boolean) {
+    def +(o: ValueSums): ValueSums =
+      ValueSums(n + o.n, sum.add(o.sum), sumSq.add(o.sumSq), finite && o.finite)
+  }
+
+  private val NoValues = ValueSums(0L, JBigDecimal.ZERO, JBigDecimal.ZERO, finite = true)
+
+  /** Each series' Σv and Σv² are doubles summed in series order, so its
+    * content fixes that order; they are added across series exactly
+    * (`java.math.BigDecimal.add` never rounds, where `scala.math.BigDecimal`
+    * rounds to DECIMAL128), so the sums depend only on the multiset of
+    * series. Merge: `+`.
+    */
+  def valueSumsFold(series: Iterator[Array[Double]]): ValueSums =
+    series.foldLeft(NoValues) { (acc, ts) =>
+      var s = 0.0; var s2 = 0.0; var i = 0
+      while (i < ts.length) { val v = ts(i); s += v; s2 += v * v; i += 1 }
+      // new BigDecimal(NaN or ±Infinity) throws: such a series only clears the flag
+      acc + (if (java.lang.Double.isFinite(s) && java.lang.Double.isFinite(s2))
+        ValueSums(ts.length, new JBigDecimal(s), new JBigDecimal(s2), finite = true)
+      else ValueSums(ts.length, JBigDecimal.ZERO, JBigDecimal.ZERO, finite = false))
+    }
+
+  /** The population std of the values behind some [[valueSumsFold]]
+    * partials — sigma of the lcss/erp parameter-sampling ranges (PF paper:
+    * epsilon, g ~ U(sigma/5, sigma)). 1.0 with no values; NaN when a value
+    * is not finite, which `Distances.sampleMeasure` reads as sigma = 1.
+    */
+  def valueStd(partials: Seq[ValueSums]): Double = {
+    val t = partials.foldLeft(NoValues)(_ + _)
+    if (!t.finite) Double.NaN
+    else if (t.n == 0) 1.0
+    else {
+      val mean = t.sum.doubleValue / t.n
+      math.sqrt(math.max(0.0, t.sumSq.doubleValue / t.n - mean * mean))
+    }
+  }
 
   /** Exemplar order: by key, then by series, so no tie depends on arrival. */
   private def before(a: (Long, Array[Double]), b: (Long, Array[Double])): Boolean =
@@ -224,8 +240,9 @@ object ProximityTree {
     * argmin wins (first candidate on ties), its counts are its children's
     * class histograms, and each row moves to its recorded branch's child
     * without another distance. An empty branch is a leaf of its
-    * exemplar's class. `rootCounts` is [[classCountsFold]] over all rows;
-    * `params.dataStd` must already be resolved when sampling.
+    * exemplar's class. `rootCounts` is [[classCountsFold]] over all rows.
+    * When sampling with a NaN `params.dataStd`, sigma is [[valueStd]] of
+    * the rows' [[valueSumsFold]] partials.
     */
   def growLevels(
       source: RowSource,
@@ -235,6 +252,10 @@ object ProximityTree {
     require(rootCounts.values.sum > 0, "cannot fit on empty data")
     val rng = new Random(params.seed)
     val pool = params.pool
+    val dataStd =
+      if (params.sampleParams && java.lang.Double.isNaN(params.dataStd))
+        valueStd(source.partials(rows => valueSumsFold(rows.map(_.series))))
+      else params.dataStd
 
     // the tree under construction
     val leaves = mutable.Map.empty[Int, Int]    // nodeId -> predicted label
@@ -270,8 +291,11 @@ object ProximityTree {
           splittingIds.map { nid =>
             val classLabels = hist(nid).keys.toIndexedSeq.sorted
             nid -> (0 until params.nSplitters).map { c =>
-              val measure = drawMeasure(rng, params, pool, seriesLen)
-              Candidate(measure.name, classLabels, classLabels.map { lbl =>
+              // a parameter draw scaled by sigma, or a pick from the fixed pool
+              val measure =
+                if (params.sampleParams) Distances.sampleMeasure(rng, dataStd, seriesLen)
+                else pool(rng.nextInt(pool.length))
+              Candidate(measure, classLabels, classLabels.map { lbl =>
                 val ex = sampled((nid, lbl))
                 ex(c % ex.size)._2
               })
@@ -279,14 +303,10 @@ object ProximityTree {
           }.toMap
 
         // U1: each row of a splitting node records its branch per candidate
-        // (reference: global_model_manager.py:274-280), measures resolved
-        // here once
-        val scorers = candidates.map { case (nid, cs) =>
-          nid -> cs.map(c => (Distances.byName(c.measureName), c.exemplars))
-        }
+        // (reference: global_model_manager.py:274-280)
         source.update { r =>
-          scorers.get(r.node).fold(r) { cs =>
-            r.copy(branches = cs.map { case (m, ex) => branchOf(m, r.series, ex) }.toArray)
+          candidates.get(r.node).fold(r) { cs =>
+            r.copy(branches = cs.map(c => branchOf(c.measure, r.series, c.exemplars)).toArray)
           }
         }
 
@@ -349,7 +369,7 @@ object ProximityTree {
     def build(nid: Int): PNode =
       splits.get(nid) match {
         case Some(s) =>
-          PSplit(s.candidate.measureName, s.candidate.labels, s.candidate.exemplars,
+          PSplit(s.candidate.measure, s.candidate.labels, s.candidate.exemplars,
             s.childIds.map(build))
         case None =>
           PLeaf(leaves(nid))
@@ -366,12 +386,8 @@ object ProximityTree {
 
   def fit(data: IndexedSeq[Instance], params: Params): ProximityTreeModel = {
     require(data.nonEmpty, "cannot fit a ProximityTree on empty data")
-    val p =
-      if (params.sampleParams && java.lang.Double.isNaN(params.dataStd))
-        params.copy(dataStd = valueStd(data))
-      else params
     val rows = data.iterator.map(i => Row(i.label, i.ts, 0)).toArray
-    growLevels(new InMemoryRows(rows), classCountsFold(rows.iterator), p, data.head.ts.length)
+    growLevels(new InMemoryRows(rows), classCountsFold(rows.iterator), params, data.head.ts.length)
   }
 }
 
@@ -379,7 +395,7 @@ object ProximityTree {
 sealed trait PNode extends Serializable
 final case class PLeaf(label: Int) extends PNode
 final case class PSplit(
-    measureName: String,
+    measure: DistanceMeasure,
     exemplarLabels: IndexedSeq[Int],
     exemplars: IndexedSeq[Array[Double]],
     children: IndexedSeq[PNode]) extends PNode
@@ -406,8 +422,7 @@ final case class ProximityTreeModel(root: PNode, majority: Int) extends SeriesCl
     while (steps < ProximityTree.MaxPredictDepth) {
       node match {
         case PLeaf(lbl) => return lbl
-        case PSplit(m, _, exemplars, children) =>
-          val measure = Distances.byName(m)
+        case PSplit(measure, _, exemplars, children) =>
           val idx = Distances.nearestIndex(measure, ts, exemplars)
           if (idx < 0) return majority
           node = children(idx)

@@ -80,8 +80,7 @@ class GlobalTrainerSpec extends AnyFunSuite with SparkSpec {
     val configs = Seq(
       "euclidean" -> ProximityTree.Params(poolNames = Seq("euclidean"), seed = 3),
       "default pool" -> ProximityTree.Params(seed = 5),
-      "sampled, pinned std" -> ProximityTree.Params(sampleParams = true,
-        dataStd = ProximityTree.valueStd(instances), seed = 8),
+      "sampled" -> ProximityTree.Params(sampleParams = true, seed = 8),
       "capped" -> ProximityTree.Params(maxDepth = 3, minSamplesSplit = 10,
         poolNames = Seq("euclidean", "dtw_full"), seed = 2),
       "deep" -> ProximityTree.Params(nSplitters = 1, poolNames = Seq("euclidean"), seed = 2))
@@ -101,5 +100,8 @@ class GlobalTrainerSpec extends AnyFunSuite with SparkSpec {
     }.toMap
     // over 8 levels: each level's rows are checkpointed and freed many times
     assert(depths("deep") > 8)
+    // the sweep's sigma is the grower's, bit for bit
+    assert(GlobalTrainer.computeDataStdWide(Preprocessing.roundRobin(df, 4), feats) ===
+      ProximityTree.valueStd(Seq(ProximityTree.valueSumsFold(instances.iterator.map(_.ts)))))
   }
 }

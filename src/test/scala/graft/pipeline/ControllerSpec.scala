@@ -1,8 +1,13 @@
 package graft.pipeline
 
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.ops.TscQueries
 
 /** E2E sweep on the in-repo ECG5000 train file (500 rows, 5 classes) —
   * the parity harness shape of reference controller_loop.py, shrunk for CI.
@@ -49,5 +54,27 @@ class ControllerSpec extends AnyFunSuite with SparkSpec {
           .newDocumentBuilder().parse(svg)
       }
     }
+  }
+
+  test("a sampled sweep grows one global tree for every partition count") {
+    val csv = Files.createTempDirectory("sweep-fixture").resolve("train.csv")
+    Files.write(csv, (("label" +: (1 to 16).map(i => s"_c$i")).mkString(",") +:
+      TscQueries.fixtureSeries(5000L, 300).map { case (_, l, ts) => (l +: ts.toSeq).mkString(",") }).asJava)
+    val results = Controller.run(spark, SweepConfig(dataPath = csv.toString, numFeatures = 16,
+      localMaxPartitions = 2, globalMaxPartitions = 4, nSplitters = 3, sampleParams = true))
+    val global = results.filter(_.modelKind == "global")
+    assert(global.map(_.iteration) === Seq(2, 3, 4))
+    val hashes = global.map(_.report.meta(Controller.ModelHash))
+    assert(hashes.distinct.size === 1 && hashes.head.matches("[0-9a-f]{16}"), hashes)
+
+    // one differing tree: the check names its iteration
+    val differing = results.map { r =>
+      if (r.modelKind == "global" && r.iteration == 3)
+        r.copy(report = r.report.copy(meta = r.report.meta.updated(Controller.ModelHash, "0" * 16)))
+      else r
+    }
+    val e = intercept[IllegalStateException](Controller.checkGlobalHashes(differing))
+    assert(e.getMessage.contains("iteration 3 hashes 0000000000000000"), e.getMessage)
+    assert(!e.getMessage.contains("iteration 4"), e.getMessage)
   }
 }

@@ -50,18 +50,17 @@ class LayoutInvarianceSpec extends AnyFunSuite with SparkSpec {
       df, "label", 4, seed = 5, keepPartitionId = true))
     assert(groups(original) === groups(moved))
 
-    val params = ProximityTree.Params(nSplitters = 3, seed = 9)
-    def forest(df: DataFrame) = ModelJson.forestJson(LocalTrainer.trainEnsemble(
-      spark, df, "label", feats, numPartitions = 3, params, holdoutFraction = 0.2))
-    assert(forest(original) === forest(moved))
+    Seq(ProximityTree.Params(nSplitters = 3, seed = 9),
+        ProximityTree.Params(nSplitters = 3, seed = 9, sampleParams = true)).foreach { params =>
+      def forest(df: DataFrame) = ModelJson.forestJson(LocalTrainer.trainEnsemble(
+        spark, df, "label", feats, numPartitions = 3, params, holdoutFraction = 0.2))
+      assert(forest(original) === forest(moved), params)
+    }
   }
 
   test("GlobalTrainer.fit grows a byte-identical tree on roundRobin(k), k in {1, 2, 4, 7}") {
-    // sampled lcss/erp parameters scale with dataStd; it is pinned here
-    // because computeDataStd's floating-point sum is order-dependent in
-    // its last bits, and this case checks the trainer's own draws
     val params = ProximityTree.Params(nSplitters = 3, maxDepth = 4, seed = 11,
-      sampleParams = true, dataStd = 1.0)
+      sampleParams = true)
     val trees = Seq(1, 2, 4, 7).map { k =>
       val input = Preprocessing.roundRobin(moved, k)
       assert(input.rdd.getNumPartitions === k)

@@ -136,6 +136,39 @@ class ProximityTreeSpec extends AnyFunSuite {
     assert(drawsA === drawsB)
   }
 
+  test("the sigma fold is exact: any order, any parts, same bits") {
+    import ProximityTree.{valueStd, valueSumsFold}
+    val series = graft.ops.TscQueries.fixtureSeries(5000L, 300).map(_._3)
+    def std(parts: Seq[Seq[Array[Double]]]): Double = valueStd(parts.map(p => valueSumsFold(p.iterator)))
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    val whole = std(Seq(series))
+    val rng = new Random(21)
+    Seq(1, 3, 7).foreach { k =>
+      (1 to 5).foreach { _ =>
+        val shuffled = rng.shuffle(series)
+        val parts = (0 until k).map(p => shuffled.indices.filter(_ % k == p).map(shuffled))
+        assert(bits(std(parts)) === bits(whole), s"$k parts")
+      }
+    }
+    // a plain running sum does depend on the order: the exact fold is needed
+    def running(ss: Seq[Array[Double]]) = ss.iterator.flatMap(_.iterator).sum
+    assert((1 to 20).exists(_ => running(rng.shuffle(series)) != running(series)))
+
+    // the textbook two-pass std
+    val values = series.flatMap(_.toSeq)
+    val mean = values.sum / values.size
+    val twoPass = math.sqrt(values.map(v => (v - mean) * (v - mean)).sum / values.size)
+    assert(math.abs(whole - twoPass) <= 1e-12 * twoPass, s"$whole vs $twoPass")
+
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { bad =>
+      val poisoned = series.updated(150, series(150).updated(7, bad))
+      assert(std(Seq(poisoned)).isNaN, s"$bad")
+      assert(std(Seq(poisoned.take(100), poisoned.drop(100))).isNaN, s"$bad in a later part")
+    }
+    assert(std(Nil) === 1.0)
+    assert(std(Seq(Seq(Array.emptyDoubleArray), Nil)) === 1.0)
+  }
+
   /** ECG5000 rows from the in-repo reference file: label \t 140 features. */
   private def ecgInstances(n: Int): IndexedSeq[Instance] = {
     val src = scala.io.Source.fromFile(graft.TestData.ecg5000Path)
