@@ -72,17 +72,10 @@ object Evaluation {
 
   /** E5 — wall-clock stage timers (evaluation.py:54-77). */
   final class StageTimer {
-    private val t0 = mutable.Map.empty[String, Long]
     private val out = mutable.LinkedHashMap.empty[String, Double]
-    def start(stage: String): Unit = t0(stage) = System.nanoTime()
-    def record(stage: String): Double = {
-      val sec = (System.nanoTime() - t0(stage)) / 1e9
-      out(stage) = sec
-      sec
-    }
     def time[T](stage: String)(body: => T): T = {
-      start(stage)
-      try body finally { record(stage); () }
+      val t0 = System.nanoTime()
+      try body finally out(stage) = (System.nanoTime() - t0) / 1e9
     }
     def timings: Map[String, Double] = out.toMap
   }

@@ -336,28 +336,16 @@ object LayoutQueries {
   /** One-time (per JVM x sf dir x fixture generation) bloom-indexed
     * documents-key table: md5 keys sorted by doc_id, one writer task,
     * files rolled every ceil(n/16) records → 16 row groups whose doc_id
-    * ranges are pure arithmetic (the [[Partitioning.partitionedOrdersDir]]
-    * staleness protocol: dir name carries the source's mtime+size).
+    * ranges are pure arithmetic ([[graft.ops.QueryFixtures]] dir).
     */
   private[graft] def bloomDocsDir(s: SparkSession, d: String): String =
-    bloomWritten.synchronized {
-      bloomWritten.getOrElseUpdate(d, {
-        val src = new java.io.File(s"$d/documents.parquet")
-        val stamp = s"${src.lastModified()}_${src.length()}"
-        val dir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_bloom_docs_${math.abs(d.hashCode)}_$stamp")
-        if (!new java.io.File(dir, "_SUCCESS").exists()) {
-          val docs = Tables.documents(s, d)
-            .select(col("doc_id"), md5(col("doc_id").cast("string")).as("key"))
-          val total = docs.count()
-          val perFile = (total + BloomGroups - 1) / BloomGroups
-          ParquetBloom.writeWithBloom(
-            docs.coalesce(1).sortWithinPartitions("doc_id"),
-            dir.getAbsolutePath, Map("key" -> BloomNdvOversize),
-            maxRecordsPerFile = perFile)
-        }
-        dir.getAbsolutePath
-      })
+    graft.ops.QueryFixtures.fixtureDir(bloomWritten, "bloom_docs", "documents", d) { dir =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), md5(col("doc_id").cast("string")).as("key"))
+      val total = docs.count()
+      val perFile = (total + BloomGroups - 1) / BloomGroups
+      ParquetBloom.writeWithBloom(docs.coalesce(1).sortWithinPartitions("doc_id"),
+        dir, Map("key" -> BloomNdvOversize), maxRecordsPerFile = perFile)
     }
 
   /** The simulated ingest-file report feeding the compaction queries:

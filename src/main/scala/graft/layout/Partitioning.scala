@@ -24,30 +24,20 @@ object Partitioning {
   /** One-time (per JVM × sf dir × fixture generation) materialization of
     * orders partitioned by order month (`o_month=yyyy-MM/` directories) —
     * the layout a production fact table ships with, here built on demand so
-    * catalog queries can exercise partition-wise plans against it. The dir
-    * name carries the source file's (mtime, size) so a fixture refresh
-    * between rounds can never serve a stale layout. `repartition` on the
+    * catalog queries can exercise partition-wise plans against it (a
+    * [[graft.ops.QueryFixtures]] dir, so a regenerated fixture set can
+    * never serve a stale layout). `repartition` on the
     * partition column first: without it every input task writes a file
     * into every month dir (tasks × partitions small files — the
     * anti-pattern [[Compaction]] exists to clean up).
     */
   def partitionedOrdersDir(spark: SparkSession, sfDir: String): String =
-    written.synchronized {
-      written.getOrElseUpdate(sfDir, {
-        val src = new java.io.File(s"$sfDir/orders.parquet")
-        val stamp = s"${src.lastModified()}_${src.length()}"
-        val dir = new java.io.File(
-          sys.props("java.io.tmpdir"),
-          s"graft_orders_by_month_${math.abs(sfDir.hashCode)}_$stamp")
-        if (!new java.io.File(dir, "_SUCCESS").exists()) {
-          Tables.orders(spark, sfDir)
-            .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-            .repartition(col("o_month"))
-            .write.mode("overwrite").partitionBy("o_month")
-            .parquet(dir.getAbsolutePath)
-        }
-        dir.getAbsolutePath
-      })
+    graft.ops.QueryFixtures.fixtureDir(written, "orders_by_month", "orders", sfDir) { dir =>
+      Tables.orders(spark, sfDir)
+        .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
+        .repartition(col("o_month"))
+        .write.mode("overwrite").partitionBy("o_month")
+        .parquet(dir)
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

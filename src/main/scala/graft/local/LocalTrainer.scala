@@ -13,11 +13,12 @@ import graft.tree._
   * Proximity Tree per partition inside `mapPartitions`, collect the (small)
   * fitted trees to the driver, and ensemble them into a forest.
   *
-  * Scale shape: one shuffle (the class-balanced repartition), then training
-  * is embarrassingly parallel with zero further data movement — only model
-  * objects (KBs) cross the wire. The Python reference pays pandas/pickle
-  * conversion per partition (local_model_manager.py:166-173); here rows
-  * deserialize straight into primitive arrays.
+  * Scale shape: one shuffle (the class-balanced repartition, which puts
+  * group i in partition i), then training is embarrassingly parallel with
+  * zero further data movement — only the fitted trees (KBs) cross the
+  * wire. The Python reference pays pandas/pickle conversion per partition
+  * (local_model_manager.py:166-173); here rows deserialize straight into
+  * primitive arrays.
   */
 object LocalTrainer {
 
@@ -87,29 +88,24 @@ object LocalTrainer {
         df.select(
           col(labelCol).cast("int").as("label"),
           Preprocessing.seriesColumn(featureCols).as("ts")),
-        "label", numPartitions, seed = params.seed, keepPartitionId = true)
+        "label", numPartitions, seed = params.seed)
       .select(col("_partition_id"), col("label"), col("ts"))
       .as[(Int, Int, Array[Double])]
 
-    // One tree per balanced group `_partition_id`, not per physical
-    // partition: the range exchange samples its bounds, so from run to run
-    // two groups can land in one partition. Trees come back as JSON strings
-    // (the model sink format) so the only Encoder needed is the product
-    // (Int, String, Double) — no Kryo/Java-ser.
-    val fitted: Array[(Int, String, Double)] = packed.mapPartitions { it =>
-      it.toIndexedSeq.groupBy(_._1).iterator.map { case (pid, rows) =>
-        val (model, weight) = fitPartition(
-          rows.map { case (_, l, ts) => ProximityTree.Instance(ts, l) },
-          params.copy(seed = params.seed + pid), holdoutFraction)
-        (pid, ModelJson.treeJson(model), weight)
-      }
-    }.collect().sortBy(_._1)
+    // partition i holds balanced group i alone, so it fits tree i; the
+    // trees come back in partition order
+    val fitted = packed.rdd.mapPartitionsWithIndex { (index, it) =>
+      val rows = it.map { case (pid, label, ts) =>
+        require(pid == index, s"group $pid reached partition $index")
+        ProximityTree.Instance(ts, label)
+      }.toIndexedSeq
+      if (rows.isEmpty) Iterator.empty
+      else Iterator(fitPartition(rows, params.copy(seed = params.seed + index), holdoutFraction))
+    }.collect()
 
     require(fitted.nonEmpty, "no partition produced a tree (empty input?)")
-    ProximityForestModel(
-      fitted.map(f => ModelJson.treeFromJson(f._2)).toIndexedSeq,
-      fitted.map(_._3).toIndexedSeq,
-      useWeighting)
+    val (trees, weights) = fitted.toIndexedSeq.unzip
+    ProximityForestModel(trees, weights, useWeighting)
   }
 
   /** U4 — prediction: broadcast the fitted tree or forest and route every

@@ -1,9 +1,10 @@
 package graft.ops
 
 /** The staleness-stamped one-time fixture-dir protocol — ONE definition
-  * for every catalog index fixture (r19 review fix: DedupQueries alone
-  * carried six copy-paste twins of this ~20-line block, and TextQueries
-  * two more; a protocol fix would have had to land eight times).
+  * for every catalog fixture dir: the index fixtures, the deletion-vector
+  * tables, the incremental stats and codebook, and the bloom and
+  * month-partitioned layouts (a copy of this ~20-line block once lived
+  * at each call site, so a protocol fix had to land at every one).
   *
   * Per (JVM × sf dir × fixture generation): build once into a tmp dir
   * stamped by the source table's (mtime, size) — a regenerated fixture

@@ -52,46 +52,27 @@ object RelationalQueries {
   private val posDvWritten = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** One-time (per JVM x sf dir x fixture generation) position-delete DV
-    * table for `q_pos_delete` (the [[graft.layout.LayoutQueries]]
-    * staleness protocol: dir name carries the source's mtime+size):
-    * orders as ONE sorted data file — a single writer task, so the
-    * scan's `_metadata.row_index` is the global o_orderkey-order row
-    * number — plus a position sidecar (every 13th ordinal) and an
-    * equality sidecar (keys divisible by 101). Incomplete builds (no
-    * `_pdv/_SUCCESS`) are discarded and rebuilt whole.
+    * table for `q_pos_delete` (a [[QueryFixtures]] dir): orders as ONE
+    * sorted data file — a single writer task, so the scan's
+    * `_metadata.row_index` is the global o_orderkey-order row number —
+    * plus a position sidecar (every 13th ordinal) and an equality
+    * sidecar (keys divisible by 101). "posdv2" names the
+    * commit-protocol layout (`_dv/b=<n>` subdirs), so a pre-protocol
+    * cached dir is never half-read.
     */
   private def posDvDir(s: SparkSession, d: String): String =
-    posDvWritten.synchronized {
-      posDvWritten.getOrElseUpdate(d, {
-        val src = new java.io.File(s"$d/orders.parquet")
-        val stamp = s"${src.lastModified()}_${src.length()}"
-        // "posdv2": the commit-protocol layout (_dv/b=<n> subdirs) —
-        // a pre-protocol cached dir must not be half-read
-        val dir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_posdv2_${math.abs(d.hashCode)}_$stamp")
-        if (!new java.io.File(dir, "_graft_posdv_complete").exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          if (dir.exists()) rm(dir)
-          DeletionVectors.initTable(
-            orders(s, d).coalesce(1).sortWithinPartitions("o_orderkey"),
-            dir.getAbsolutePath)
-          val scan = s.read.parquet(dir.getAbsolutePath)
-            .withColumn("file_path", col("_metadata.file_path"))
-            .withColumn("row_index", col("_metadata.row_index"))
-          DeletionVectors.deletePositions(s, dir.getAbsolutePath,
-            scan.filter(pmod(col("row_index"), lit(13)) === 0)
-              .select(col("file_path"), col("row_index")))
-          DeletionVectors.deleteKeys(s, dir.getAbsolutePath,
-            orders(s, d).filter(pmod(col("o_orderkey"), lit(101)) === 0)
-              .select(col("o_orderkey")), "o_orderkey")
-          new java.io.File(dir, "_graft_posdv_complete").createNewFile()
-          ()
-        }
-        dir.getAbsolutePath
-      })
+    QueryFixtures.fixtureDir(posDvWritten, "posdv2", "orders", d) { dir =>
+      DeletionVectors.initTable(
+        orders(s, d).coalesce(1).sortWithinPartitions("o_orderkey"), dir)
+      val scan = s.read.parquet(dir)
+        .withColumn("file_path", col("_metadata.file_path"))
+        .withColumn("row_index", col("_metadata.row_index"))
+      DeletionVectors.deletePositions(s, dir,
+        scan.filter(pmod(col("row_index"), lit(13)) === 0)
+          .select(col("file_path"), col("row_index")))
+      DeletionVectors.deleteKeys(s, dir,
+        orders(s, d).filter(pmod(col("o_orderkey"), lit(101)) === 0)
+          .select(col("o_orderkey")), "o_orderkey")
     }
 
   private val joinMvWritten = scala.collection.concurrent.TrieMap.empty[String, String]
@@ -103,47 +84,29 @@ object RelationalQueries {
     * divisible by 7, re-points to a nonexistent customer on keys
     * divisible by 11 (the vanish-without-replacement edge), deletes on
     * keys divisible by 13 (classes disjoint, 13 > 11 > 7 precedence).
+    * "joinmv2" names the commit-protocol layout (`_dv/b=<n>` subdirs).
     */
   private def joinMvDir(s: SparkSession, d: String): String =
-    joinMvWritten.synchronized {
-      joinMvWritten.getOrElseUpdate(d, {
-        val src = new java.io.File(s"$d/orders.parquet")
-        val stamp = s"${src.lastModified()}_${src.length()}"
-        // "joinmv2": the commit-protocol layout (_dv/b=<n> subdirs)
-        val dir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_joinmv2_${math.abs(d.hashCode)}_$stamp")
-        val marker = new java.io.File(dir, "_graft_mv_complete")
-        if (!marker.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          if (dir.exists()) rm(dir)
-          val fact = orders(s, d).select(
-            col("o_custkey").as("c_custkey"), col("o_orderkey").as("k"),
-            col("o_orderstatus").as("status"),
-            round(col("o_totalprice") * 100).cast("long").as("cents"))
-          val dim = customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
-          JoinMv.init(fact, dim, "c_custkey", dir.getAbsolutePath)
-          val del13 = fact.filter(pmod(col("k"), lit(13)) === 0)
-          val move11 = fact.filter(
-            pmod(col("k"), lit(11)) === 0 && pmod(col("k"), lit(13)) =!= 0)
-          val upd7 = fact.filter(pmod(col("k"), lit(7)) === 0 &&
-            pmod(col("k"), lit(11)) =!= 0 && pmod(col("k"), lit(13)) =!= 0)
-          val delta = del13.unionByName(move11).unionByName(upd7)
-            .withColumn("op", lit("d"))
-            .unionByName(move11.withColumn("c_custkey", lit(-1L))
-              .withColumn("op", lit("i")))
-            .unionByName(upd7.withColumn("status", lit("U"))
-              .withColumn("cents", col("cents") + 999L)
-              .withColumn("op", lit("i")))
-          JoinMv.applyCdc(s, dir.getAbsolutePath, delta, dim,
-            factKey = "k", joinKey = "c_custkey")
-          marker.createNewFile()
-          ()
-        }
-        dir.getAbsolutePath
-      })
+    QueryFixtures.fixtureDir(joinMvWritten, "joinmv2", "orders", d) { dir =>
+      val fact = orders(s, d).select(
+        col("o_custkey").as("c_custkey"), col("o_orderkey").as("k"),
+        col("o_orderstatus").as("status"),
+        round(col("o_totalprice") * 100).cast("long").as("cents"))
+      val dim = customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
+      JoinMv.init(fact, dim, "c_custkey", dir)
+      val del13 = fact.filter(pmod(col("k"), lit(13)) === 0)
+      val move11 = fact.filter(
+        pmod(col("k"), lit(11)) === 0 && pmod(col("k"), lit(13)) =!= 0)
+      val upd7 = fact.filter(pmod(col("k"), lit(7)) === 0 &&
+        pmod(col("k"), lit(11)) =!= 0 && pmod(col("k"), lit(13)) =!= 0)
+      val delta = del13.unionByName(move11).unionByName(upd7)
+        .withColumn("op", lit("d"))
+        .unionByName(move11.withColumn("c_custkey", lit(-1L))
+          .withColumn("op", lit("i")))
+        .unionByName(upd7.withColumn("status", lit("U"))
+          .withColumn("cents", col("cents") + 999L)
+          .withColumn("op", lit("i")))
+      JoinMv.applyCdc(s, dir, delta, dim, factKey = "k", joinKey = "c_custkey")
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -156,26 +156,21 @@ object Preprocessing {
 
   /** W1 + R2 — class-balanced exact repartitioning
     * (reference: code/src/preprocessing.py:57-86): assign each row
-    * [[balancedPartitionId]] then range-repartition on it, so every
-    * partition holds an equal, stratified share of each class. The
-    * groups depend only on the rows and `seed`, not on how the input is
-    * ordered or partitioned (the reference orders by unseeded rand —
-    * SURVEY §4 "P3").
+    * [[balancedPartitionId]] and send it to the partition that id names,
+    * so partition i holds group i and nothing else — an equal, stratified
+    * share of each class. The reference hashes the id (preprocessing.py:79),
+    * so two groups can collide in one partition; `repartitionById` places
+    * each row exactly. The output keeps `_partition_id`. The groups depend
+    * only on the rows and `seed`, not on how the input is ordered or
+    * partitioned (the reference orders by unseeded rand — SURVEY §4 "P3").
     */
   def classBalancedPartition(
       df: DataFrame,
       labelCol: String,
       numPartitions: Int,
-      seed: Long = 123L,
-      keepPartitionId: Boolean = false): DataFrame = {
-    // repartitionByRange (not hash) avoids the reference's hash collisions
-    // (preprocessing.py:79), but its bounds come from a sample, so two pids
-    // can still share a partition and leave another empty. Callers that
-    // need exactly one group per pid key on `_partition_id`.
-    val withPid = balancedPartitionId(df, labelCol, numPartitions, seed)
-      .repartitionByRange(numPartitions, col("_partition_id"))
-    if (keepPartitionId) withPid else withPid.drop("_partition_id")
-  }
+      seed: Long = 123L): DataFrame =
+    balancedPartitionId(df, labelCol, numPartitions, seed)
+      .repartitionById(numPartitions, col("_partition_id"))
 
   /** W1 — `_partition_id = (row_number() over (partition by label order by
     * key, row)) - 1 mod n`: per label, rows ordered by their content key
@@ -189,6 +184,7 @@ object Preprocessing {
       labelCol: String,
       numPartitions: Int,
       seed: Long): DataFrame = {
+    require(numPartitions >= 1, s"numPartitions must be >= 1, got $numPartitions")
     val cols = df.columns.map(col).toSeq
     val w = Window.partitionBy(col(labelCol)).orderBy(
       DeterministicSampling.contentKey(seed ^ DeterministicSampling.BalanceSalt, cols: _*)

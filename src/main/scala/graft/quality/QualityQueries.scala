@@ -614,38 +614,20 @@ object QualityQueries {
 
   /** One-time (per JVM x sf dir x fixture generation) incrementally-built
     * stats table for `q_stats_incremental`: init on day 0 (l_orderkey %
-    * 4), three update batches folded in (the staleness-stamped dir +
-    * completion-marker protocol of the index fixtures).
+    * 4), three update batches folded in (a [[graft.ops.QueryFixtures]]
+    * dir).
     */
   private def statsIncrDir(s: SparkSession, d: String): String =
-    statsIncrWritten.synchronized {
-      statsIncrWritten.getOrElseUpdate(d, {
-        val src = new java.io.File(s"$d/lineitem.parquet")
-        val stamp = s"${src.lastModified()}_${src.length()}"
-        val dir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_incr_stats_${math.abs(d.hashCode)}_$stamp")
-        val marker = new java.io.File(dir, "_graft_stats_complete")
-        if (!marker.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          if (dir.exists()) rm(dir)
-          val li = Tables.lineitem(s, d)
-            .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
-          val sd = new java.io.File(dir, "stats").getAbsolutePath
-          IncrementalStats.init(li.filter(col("l_orderkey") % 4 === 0),
-            Seq("l_partkey", "l_suppkey"), sd)
-          (1 to 3).foreach { day =>
-            IncrementalStats.update(s, sd,
-              li.filter(col("l_orderkey") % 4 === day))
-          }
-          marker.createNewFile()
-          ()
-        }
-        new java.io.File(dir, "stats").getAbsolutePath
-      })
-    }
+    graft.ops.QueryFixtures.fixtureDir(statsIncrWritten, "incr_stats", "lineitem", d) { dir =>
+      val li = Tables.lineitem(s, d)
+        .select(col("l_partkey"), col("l_suppkey"), col("l_orderkey"))
+      IncrementalStats.init(li.filter(col("l_orderkey") % 4 === 0),
+        Seq("l_partkey", "l_suppkey"), s"$dir/stats")
+      (1 to 3).foreach { day =>
+        IncrementalStats.update(s, s"$dir/stats",
+          li.filter(col("l_orderkey") % 4 === day))
+      }
+    } + "/stats"
 
   /** Eager-query lint twins (the CatalogPlanLintSpec doctrine): the
     * trainReadout result is a driver-built 3-row frame, so the screened

@@ -498,38 +498,19 @@ object TextQueries {
   private val codebookWritten = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** One-time three-day incrementally-built token codebook for
-    * `q_codebook_tokens` (day = doc_id % 3; same staleness-stamped dir +
-    * marker protocol as the index fixtures).
+    * `q_codebook_tokens` (day = doc_id % 3; a [[graft.ops.QueryFixtures]]
+    * dir).
     */
   private def codebookDir(s: SparkSession, d: String): String =
-    codebookWritten.synchronized {
-      codebookWritten.getOrElseUpdate(d, {
-        val src = new java.io.File(s"$d/documents.parquet")
-        val stamp = s"${src.lastModified()}_${src.length()}"
-        val dir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_codebook_${math.abs(d.hashCode)}_$stamp")
-        val marker = new java.io.File(dir, "_graft_codebook_complete")
-        val bookDir = new java.io.File(dir, "book").getAbsolutePath
-        if (!marker.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          if (dir.exists()) rm(dir)
-          val tok = documents(s, d).select(
-            pmod(col("doc_id"), lit(3)).as("day"),
-            explode(TextFunctions.safeLowerTokens(col("text"))).as("tok"))
-          graft.prep.Codebook.init(tok.filter(col("day") === 0), "tok", bookDir)
-          (1 to 2).foreach { day =>
-            graft.prep.Codebook.update(s, bookDir,
-              tok.filter(col("day") === day), "tok")
-          }
-          marker.createNewFile()
-          ()
-        }
-        bookDir
-      })
-    }
+    graft.ops.QueryFixtures.fixtureDir(codebookWritten, "codebook", "documents", d) { dir =>
+      val tok = documents(s, d).select(
+        pmod(col("doc_id"), lit(3)).as("day"),
+        explode(TextFunctions.safeLowerTokens(col("text"))).as("tok"))
+      graft.prep.Codebook.init(tok.filter(col("day") === 0), "tok", s"$dir/book")
+      (1 to 2).foreach { day =>
+        graft.prep.Codebook.update(s, s"$dir/book", tok.filter(col("day") === day), "tok")
+      }
+    } + "/book"
 
   private val bm25Terms = Seq("spark", "window", "join")
 
@@ -570,28 +551,12 @@ object TextQueries {
     * then %7 doc_ids tombstoned via TextIndex.delete.
     */
   private def textIndexMutDir(s: SparkSession, d: String): String =
-    textIndexMutWritten.synchronized {
-      textIndexMutWritten.getOrElseUpdate(d, {
-        val src = new java.io.File(s"$d/documents.parquet")
-        val stamp = s"${src.lastModified()}_${src.length()}"
-        val dir = new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_text_index_mut_${math.abs(d.hashCode)}_$stamp")
-        val marker = new java.io.File(dir, "_graft_index_complete")
-        if (!marker.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          if (dir.exists()) rm(dir)
-          val doc = documents(s, d)
-          TextIndex.build(doc, "doc_id", "text", dir.getAbsolutePath)
-          TextIndex.delete(s, dir.getAbsolutePath,
-            doc.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
-          marker.createNewFile()
-          ()
-        }
-        dir.getAbsolutePath
-      })
+    graft.ops.QueryFixtures.fixtureDir(textIndexMutWritten,
+        "text_index_mut", "documents", d) { dir =>
+      val doc = documents(s, d)
+      TextIndex.build(doc, "doc_id", "text", dir)
+      TextIndex.delete(s, dir,
+        doc.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
     }
 
   private val textIndexMntWritten = scala.collection.concurrent.TrieMap.empty[String, String]

@@ -43,6 +43,15 @@ class TrainersSpec extends AnyFunSuite with SparkSpec {
     assert(Metrics.accuracyDF(pred, "label", "prediction").head().getDouble(0) >= 0.9)
   }
 
+  test("local path: one tree per non-empty group when groups outnumber rows per class") {
+    // 4 rows per class over 20 groups: groups 0-3 hold one row of each
+    // class, groups 4-19 are empty
+    val forest = LocalTrainer.trainEnsemble(
+      spark, clusterDf(new Random(3), perClass = 4), "label", Seq("_c1", "_c2"),
+      numPartitions = 20, params = ProximityTree.Params(nSplitters = 3, seed = 4))
+    assert(forest.trees.size === 4)
+  }
+
   test("local path: a partition's tree and weight do not depend on its row order") {
     val rng = new Random(21)
     val rows = (1 to 3).flatMap(lbl => (1 to 12).map(_ =>

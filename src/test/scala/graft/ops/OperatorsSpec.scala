@@ -576,12 +576,30 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
 
   test("class-balanced partitioning yields equal class share per partition") {
     val df = (1 to 240).map(i => (i, i % 3)).toDF("id", "label")
-    val parts = Preprocessing.classBalancedPartition(df, "label", 4, seed = 1,
-        keepPartitionId = true)
+    val parts = Preprocessing.classBalancedPartition(df, "label", 4, seed = 1)
       .groupBy("_partition_id", "label").count()
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     // 240 rows, 3 classes x 80, 4 partitions -> 20 per (partition, class)
     assert(parts.values.forall(_ === 20L))
+  }
+
+  test("class-balanced partitioning places group i in partition i alone") {
+    val df = (1 to 90).map(i => (i, i % 3)).toDF("id", "label")
+    Seq(1, 3, 4, 7, 20, 40).foreach { k =>
+      val parts = Preprocessing.classBalancedPartition(df, "label", k, seed = 1)
+      assert(parts.rdd.getNumPartitions === k, s"k = $k")
+      val misplaced = parts.filter(col("_partition_id") =!= spark_partition_id()).count()
+      assert(misplaced === 0L, s"k = $k")
+      assert(parts.count() === 90L, s"k = $k")
+    }
+  }
+
+  test("a partition count below 1 fails naming numPartitions") {
+    val df = (1 to 9).map(i => (i, i % 3)).toDF("id", "label")
+    val e = intercept[IllegalArgumentException] {
+      Preprocessing.classBalancedPartition(df, "label", 0)
+    }
+    assert(e.getMessage.contains("numPartitions") && e.getMessage.contains("0"), e.getMessage)
   }
 
   test("min-max normalize maps to [0,1] with constant columns at 0") {

@@ -46,8 +46,8 @@ class LayoutInvarianceSpec extends AnyFunSuite with SparkSpec {
     assert(sortedRows(trA) === sortedRows(trB))
     assert(sortedRows(teA) === sortedRows(teB))
 
-    def groups(df: DataFrame) = sortedRows(Preprocessing.classBalancedPartition(
-      df, "label", 4, seed = 5, keepPartitionId = true))
+    def groups(df: DataFrame) =
+      sortedRows(Preprocessing.classBalancedPartition(df, "label", 4, seed = 5))
     assert(groups(original) === groups(moved))
 
     Seq(ProximityTree.Params(nSplitters = 3, seed = 9),
