@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.IndexHealth
+
 /** Persistent, incrementally-maintained transitive clustering — the
   * missing state layer between pair DETECTION (LshIndex admits/names new
   * near-dup pairs nightly) and the keep/drop DECISION
@@ -107,7 +109,7 @@ object ClusterIndex {
   def addPairs(spark: SparkSession, dir: String, newPairs: DataFrame,
       aCol: String, bCol: String, epoch: Long): Long = {
     require(epoch > 0, "epoch 0 is the build; batches start at 1")
-    requireNoCompactStaging(spark, dir)
+    IndexHealth.requireNoStaging(spark, compactSwap(dir))
     // guard symmetry with repair() (r17 self-review): a plain-addPairs
     // epoch on a best-enabled index would seal labels WITHOUT
     // recomputing winners or tombstoning merged-away clusters —
@@ -240,7 +242,7 @@ object ClusterIndex {
       idCol: String, score: org.apache.spark.sql.Column,
       epoch: Long): Long = {
     require(epoch > 0, "epoch 0 is the build; batches start at 1")
-    requireNoCompactStaging(spark, dir)
+    IndexHealth.requireNoStaging(spark, compactSwap(dir))
     require(hasBest(spark, dir),
       "not a best-enabled index — build with buildWithBest, or use addPairs")
     val bad = unsealedEpochs(spark, dir)
@@ -366,7 +368,7 @@ object ClusterIndex {
 
   private def repairImpl(spark: SparkSession, dir: String,
       best: Option[(DataFrame, String, org.apache.spark.sql.Column)]): Seq[Long] = {
-    requireNoCompactStaging(spark, dir)
+    IndexHealth.requireNoStaging(spark, compactSwap(dir))
     val bad = unsealedEpochs(spark, dir)
     bad.foreach { e =>
       val conf = spark.sessionState.newHadoopConf()
@@ -436,49 +438,37 @@ object ClusterIndex {
   }
 
   /** Fold updates into a fresh base, clear the update log. One rewrite,
-    * same resolved labels (spec-pinned).
+    * same resolved labels (spec-pinned). CRASH-SAFE: the folded bases
+    * go through the staged swap ([[compactSwap]]) — a crash leaves
+    * either the old state intact (no marker: [[recoverCompact]] rolls
+    * back) or a completable swap (recoverCompact finishes it); an
+    * in-place overwrite of best_base/labels_base would be
+    * delete-then-write, and a crash mid-write would destroy the only
+    * copy of the winners (repair replays unsealed EPOCHS, never the
+    * base).
     */
   def compact(spark: SparkSession, dir: String): Unit = {
-    // CRASH-SAFE (second-review fix): the old in-place mode("overwrite")
-    // of best_base/labels_base was delete-then-write — a crash mid-write
-    // destroyed the only copy of the winners with no recovery path
-    // (repair replays unsealed EPOCHS, never the base). Now every folded
-    // face is STAGED, a _ready marker commits the intent, and
-    // [[finishCompact]] swaps with checked renames — a crash leaves
-    // either the old state intact (no _ready: [[recoverCompact]] rolls
-    // back) or a completable swap (recoverCompact finishes it).
-    requireNoCompactStaging(spark, dir)
     val bad = unsealedEpochs(spark, dir)
     require(bad.isEmpty,
       s"unsealed epochs $bad (crashed addPairs) — repair before compacting")
-    val st = stagingPath(dir)
-    val fs = st.getFileSystem(spark.sessionState.newHadoopConf())
     // staged writes READ pre-compaction state and WRITE a different path,
-    // so the old read-then-overwrite localCheckpoint pin is not needed
-    resolve(spark, dir).write.mode("error").parquet(s"$st/labels_base")
-    if (hasBest(spark, dir))
-      resolvedWinners(spark, dir).write.mode("error").parquet(s"$st/best_base")
-    fs.create(new org.apache.hadoop.fs.Path(st, "_ready"), false).close()
-    val done = finishCompact(spark, dir)
-    assert(done == "completed", s"compact swap state: $done")
+    // so no read-then-overwrite localCheckpoint pin is needed
+    IndexHealth.swapIn(spark, compactSwap(dir)) { st =>
+      resolve(spark, dir).write.mode("error").parquet(s"$st/labels_base")
+      if (hasBest(spark, dir))
+        resolvedWinners(spark, dir).write.mode("error").parquet(s"$st/best_base")
+    }
   }
 
-  /** Crash recovery for [[compact]] (the staged-swap doctrine): staging
-    * without the _ready marker is an abandoned fold — rolled back, live
-    * state untouched; with the marker the swap completes idempotently.
-    * Single-writer like compact itself: must not run concurrently with
-    * writers or readers of this index. Returns "no_staging",
-    * "rolled_back", or "completed".
+  /** Crash recovery for [[compact]] — [[graft.io.IndexHealth.recover]] on
+    * the compaction swap: without the commit marker an abandoned fold
+    * rolls back, live state untouched; with it the swap completes
+    * idempotently. Single-writer like compact itself: must not run
+    * concurrently with writers or readers of this index. Returns
+    * "none", "rolled_back", or "completed".
     */
-  def recoverCompact(spark: SparkSession, dir: String): String = {
-    val st = stagingPath(dir)
-    val fs = st.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(st)) "no_staging"
-    else if (!fs.exists(new org.apache.hadoop.fs.Path(st, "_ready"))) {
-      fs.delete(st, true)
-      "rolled_back"
-    } else finishCompact(spark, dir)
-  }
+  def recoverCompact(spark: SparkSession, dir: String): String =
+    IndexHealth.recover(spark, compactSwap(dir))
 
   /** Compaction policy for [[maintain]]: `epochsBar` bounds the sealed
     * update-epoch count — [[resolve]]/[[resolveBest]] merge-on-read one
@@ -499,8 +489,9 @@ object ClusterIndex {
     *   (seq, healed, unsealed_epochs, update_epochs, epochs_bar, action)
     *
     * `action` ∈ none | compact | needs_repair. Signals are exact
-    * counters, so no hysteresis (the [[graft.text.TextIndex.maintain]]
-    * doctrine — acting resets them to the floor). `needs_repair` is a
+    * counters, so no hysteresis (the
+    * [[graft.io.IndexHealth.maintainTombstoneIndex]] doctrine — acting
+    * resets them to the floor). `needs_repair` is a
     * REPORT, not a move: re-deriving a crashed epoch's winners on a
     * best-enabled index needs the corpus' scores, which maintain must
     * not invent; run [[repair]]/[[repairWithBest]] and call again.
@@ -523,7 +514,7 @@ object ClusterIndex {
       else if (updEpochs >= policy.epochsBar) {
         compact(spark, dir); "compact"
       } else "none"
-    val seq = graft.io.IndexHealth.nextSeq(spark, s"$dir/maintenance")
+    val seq = IndexHealth.nextSeq(spark, s"$dir/maintenance")
     val row = Seq((seq, healed, bad, updEpochs, policy.epochsBar, action))
       .toDF("seq", "healed", "unsealed_epochs", "update_epochs",
         "epochs_bar", "action")
@@ -532,61 +523,24 @@ object ClusterIndex {
   }
 
   /** The full maintenance ledger, seq-ordered. */
-  def maintenanceLog(spark: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/maintenance")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val schema = "seq long, healed string, unsealed_epochs int, " +
-      "update_epochs int, epochs_bar int, action string"
-    if (!fs.exists(p)) spark.read.schema(schema).parquet()
-    else spark.read.schema(schema).parquet(p.toString).orderBy("seq")
-  }
+  def maintenanceLog(spark: SparkSession, dir: String): DataFrame =
+    IndexHealth.ledger(spark, s"$dir/maintenance",
+      "seq long, healed string, unsealed_epochs int, " +
+        "update_epochs int, epochs_bar int, action string")
 
-  private def stagingPath(dir: String) =
-    new org.apache.hadoop.fs.Path(s"$dir/_compact_staging")
-
-  /** A crashed compact left a staging dir; every WRITER refuses until
-    * [[recoverCompact]] adjudicates it — a write landing between the
-    * _ready marker and the swap would be folded away (its update epoch
-    * is deleted by the swap but absent from the staged base).
+  /** The compaction swap: both folded bases staged, the update logs
+    * cleared on commit. A crash after the renames leaves stale update
+    * epochs, which is harmless: they re-assert exactly the rows the
+    * folded base already carries (latest-epoch-wins re-applies identical
+    * labels/winners; a dead cluster's null tombstone re-drops it). The
+    * staging dir doubles as the writer guard
+    * ([[graft.io.IndexHealth.requireNoStaging]]): addPairs, repair and
+    * compact refuse it until [[recoverCompact]] adjudicates it.
     */
-  private def requireNoCompactStaging(spark: SparkSession, dir: String): Unit = {
-    val st = stagingPath(dir)
-    require(!st.getFileSystem(spark.sessionState.newHadoopConf()).exists(st),
-      "compact staging present (crashed compact) — run " +
-        "ClusterIndex.recoverCompact first")
-  }
-
-  /** The committed half of the compact swap. Hadoop FileSystem signals
-    * failure by RETURNING FALSE (the IvfIndex.recoverRetrain doctrine):
-    * every step is checked; on failure the staging and its _ready marker
-    * stay intact and the swap stays re-runnable.
-    */
-  private def finishCompact(spark: SparkSession, dir: String): String = {
-    val st = stagingPath(dir)
-    val fs = st.getFileSystem(spark.sessionState.newHadoopConf())
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"compact swap: $what failed — staging left intact, re-run recoverCompact")
-    Seq("labels_base", "best_base").foreach { face =>
-      val staged = new org.apache.hadoop.fs.Path(st, face)
-      if (fs.exists(staged)) {
-        val live = new org.apache.hadoop.fs.Path(s"$dir/$face")
-        if (fs.exists(live)) must(fs.delete(live, true), s"delete live $face")
-        must(fs.rename(staged, live), s"rename staged $face")
-      }
-    }
-    // stale update epochs surviving a crash here are harmless: they
-    // re-assert exactly the rows the folded base already carries
-    // (latest-epoch-wins re-applies identical labels/winners; a dead
-    // cluster's null tombstone re-drops it), so deleting them after the
-    // base swap is safe in any crash window
-    Seq("label_updates", "best_updates").foreach { face =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$face")
-      if (fs.exists(p)) must(fs.delete(p, true), s"clear $face")
-    }
-    must(fs.delete(st, true), "clear staging")
-    "completed"
-  }
+  private def compactSwap(dir: String) =
+    IndexHealth.StagedSwap(dir, "_compact_staging",
+      Seq("labels_base", "best_base"),
+      clears = Seq("label_updates", "best_updates"))
 
   // explicit schemas: an empty batch writes a part-file-less dir, and
   // schema INFERENCE over it would throw — declared schemas make empty

@@ -236,7 +236,7 @@ object DedupQueries {
     // the implementation's semantics, all recomputed from the raw corpus.
     "q_lsh_index_maintain" -> ((s, d) => {
       val dir = lshIndexMntDir(s, d)
-      LshIndex.maintenanceLog(s, dir)
+      graft.io.IndexHealth.tombstoneMaintenanceLog(s, dir)
         .select(col("seq"), col("dead_ratio"), col("action"),
           col("survivors"), col("folded"))
     }),
@@ -1194,11 +1194,11 @@ object DedupQueries {
       LshIndex.build(doc, "doc_id", "text", dir)
       // filesBar pinned off — the q_text_index_maintain fixture
       // reasoning: the oracle replays only the dead-ratio signal
-      val pol = LshIndex.MaintenancePolicy(filesBar = Int.MaxValue)
-      LshIndex.delete(s, dir,
+      val pol = graft.io.IndexHealth.MaintenancePolicy(filesBar = Int.MaxValue)
+      graft.io.IndexHealth.delete(s, dir,
         doc.filter(col("doc_id") % 11 === 0).select("doc_id"), "doc_id")
       LshIndex.maintain(s, dir, pol)
-      LshIndex.delete(s, dir,
+      graft.io.IndexHealth.delete(s, dir,
         doc.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
       LshIndex.maintain(s, dir, pol)
       ()

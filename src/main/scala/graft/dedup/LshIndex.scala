@@ -3,6 +3,9 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.IndexHealth
+import graft.io.IndexHealth.{MaintenancePolicy, gated}
+
 /** Persistent MinHash-LSH index — the near-duplicate sibling of
   * [[graft.sim.IvfIndex]]: [[Dedup.minhashPairsExact]] hashes and bands
   * the whole corpus inline, the right thing for a one-shot dedup sweep;
@@ -28,10 +31,15 @@ import org.apache.spark.sql.functions._
   * an OOM). Verification joins are candidate-bounded the same way. At
   * 100 TB the corpus postings/docs are scanned in place by executors;
   * nothing corpus-sized ever moves.
+  *
+  * Deletes go through the shared tombstone sidecar
+  * ([[graft.io.IndexHealth.delete]]): [[probe]] subtracts it at the
+  * verification join, [[compact]] folds it.
   */
 object LshIndex {
 
-  private val MaxBroadcastBytes = 256L * 1024 * 1024
+  /** The postings lookup key: range layout and probe pruning columns. */
+  private val PostingsKey = Seq("band_idx", "band_hash")
 
   /** Hash, band, and write the standing corpus; freeze the parameters. */
   def build(docs: DataFrame, idCol: String, textCol: String, dir: String,
@@ -52,10 +60,13 @@ object LshIndex {
     * shingle sets. Existing index files are never rewritten (spec-pinned,
     * the no-rewrite doctrine shared with [[graft.sim.IvfIndex.append]]);
     * a probe after append sees old and new docs through the same scan.
-    * Returns the number of docs appended (post empty-shingle filter).
+    * Refuses a crashed compaction (the
+    * [[graft.io.IndexHealth.requireNoStaging]] writer guard). Returns the
+    * number of docs appended (post empty-shingle filter).
     */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String): Long = {
+    IndexHealth.requireNoStaging(spark, IndexHealth.tombstoneSwap(dir))
     val m = loadMeta(spark, dir)
     val before = spark.read.parquet(s"$dir/docs").count()
     writeEntries(batch, idCol, textCol, dir,
@@ -108,7 +119,7 @@ object LshIndex {
     // tombstoned docs drop out at the verification join (their postings
     // may still surface candidates until compact — harmless, the inner
     // join below is the filter)
-    val indexed = liveDocs(spark, dir)
+    val indexed = IndexHealth.live(spark, dir, "docs")
       .select(col("id").as("index_id"), col("shingles").as("sh_i"))
     val probeSh = base.select(col("id").as("probe_id"),
       col("shingles").as("sh_p"))
@@ -119,89 +130,26 @@ object LshIndex {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Remove docs from the index without touching a data file — ids land
-    * in a `tombstones/` sidecar and [[probe]] subtracts them at the
-    * verification join (the [[graft.text.TextIndex.delete]] doctrine);
-    * [[compact]] folds them. Ids are never reused before a compact.
-    */
-  def delete(spark: SparkSession, dir: String, ids: DataFrame,
-      idCol: String): Long = {
-    val batch = ids.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint()
-    batch.write.mode("append").parquet(s"$dir/tombstones")
-    batch.count()
-  }
-
-  private def tombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(broadcast(spark.read.parquet(p.toString).distinct()))
-    else None
-  }
-
-  private def liveDocs(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/docs")
-    tombstones(spark, dir).fold(docs)(t => docs.join(t, Seq("id"), "left_anti"))
-  }
-
-  /** Fold tombstones into the data: rewrite surviving postings (back
-    * into the range layout — also re-packs append-accumulated small
-    * files) and docs, clear the sidecar. Returns (surviving docs,
+  /** Fold the tombstone sidecar into the data through the staged swap
+    * ([[graft.io.IndexHealth.compactTombstones]] on the band key — also
+    * re-packs append-accumulated small files). Returns (surviving docs,
     * tombstones folded).
     */
-  def compact(spark: SparkSession, dir: String): (Long, Long) = {
-    val nT = tombstones(spark, dir).map(_.count()).getOrElse(0L)
-    val docs = liveDocs(spark, dir).localCheckpoint()
-    val postings = {
-      val p = spark.read.parquet(s"$dir/postings")
-      tombstones(spark, dir).fold(p)(t => p.join(t, Seq("id"), "left_anti"))
-    }
-      .repartitionByRange(col("band_idx"), col("band_hash"))
-      .sortWithinPartitions(col("band_idx"), col("band_hash"))
-      .localCheckpoint() // the sink overwrites dirs the plan reads
-    postings.write.mode("overwrite").parquet(s"$dir/postings")
-    docs.write.mode("overwrite").parquet(s"$dir/docs")
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
-    (docs.count(), nT)
-  }
+  def compact(spark: SparkSession, dir: String): (Long, Long) =
+    IndexHealth.compactTombstones(spark, dir, PostingsKey)
 
-  /** Compaction policy for [[maintain]] — the
-    * [[graft.text.TextIndex.MaintenancePolicy]] shape on the near-dup
-    * index: `deadRatioBar` bounds the tombstoned fraction of the stored
-    * spine (every probe's verification join subtracts the sidecar, and
-    * dead postings keep surfacing candidates the verify step then
-    * discards — wasted candidate work proportional to the dead
-    * fraction); `filesBar` bounds postings data files (append fragments
-    * the (band_idx, band_hash) range layout one generation per batch,
-    * degrading row-group pruning on probes).
-    */
-  case class MaintenancePolicy(
-      deadRatioBar: Double = 0.2,
-      filesBar: Int = 96) {
-    require(deadRatioBar > 0.0 && deadRatioBar <= 1.0,
-      s"deadRatioBar must be in (0,1], got $deadRatioBar")
-    require(filesBar >= 1, s"filesBar must be >= 1, got $filesBar")
-  }
-
-  /** The closed maintenance loop — [[graft.sim.IvfIndex.maintain]]'s
-    * policy doctrine on the LSH index. The whole body (signals,
-    * decision, ledger schema, the reasoned NO-hysteresis design) is
-    * [[graft.io.IndexHealth.maintainTombstoneIndex]], shared with
-    * [[graft.text.TextIndex.maintain]] — one definition, so the twins
-    * cannot drift. The dead numerator is spine-conditioned: deletes of
+  /** The closed maintenance loop on the LSH index: the shared
+    * tombstone-index loop, [[graft.io.IndexHealth.maintainTombstoneIndex]]
+    * (signals, decision, ledger — read it back with
+    * [[graft.io.IndexHealth.tombstoneMaintenanceLog]]), running
+    * [[compact]]. The dead numerator is spine-conditioned: deletes of
     * unknown or empty-shingle ids cost nothing at probe time and must
     * not count (spec-pinned).
     */
   def maintain(spark: SparkSession, dir: String,
       policy: MaintenancePolicy = MaintenancePolicy()): DataFrame =
-    graft.io.IndexHealth.maintainTombstoneIndex(spark, dir,
-      policy.deadRatioBar, policy.filesBar, () => compact(spark, dir))
-
-  /** The full maintenance ledger, seq-ordered. */
-  def maintenanceLog(spark: SparkSession, dir: String): DataFrame =
-    graft.io.IndexHealth.tombstoneMaintenanceLog(spark, dir)
+    IndexHealth.maintainTombstoneIndex(spark, dir, policy,
+      () => compact(spark, dir))
 
   private[dedup] case class Meta(shingleN: Int, numHashes: Int, bands: Int, seed: Long)
 
@@ -229,24 +177,11 @@ object LshIndex {
     val sigs = base.withColumn("sig",
       Dedup.minhashSignature(col("shingles"),
         Dedup.minhashCoefficients(numHashes, seed)))
-    sigs.select(col("id"),
+    IndexHealth.writePostings(
+      sigs.select(col("id"),
         posexplode(Dedup.bandHashUdf(bands, numHashes / bands)(col("sig")))
-          .as(Seq("band_idx", "band_hash")))
-      // range layout on the join key: a probe's band hashes then prune
-      // row groups by parquet min/max instead of scanning every posting
-      .repartitionByRange(col("band_idx"), col("band_hash"))
-      .sortWithinPartitions(col("band_idx"), col("band_hash"))
-      .write.mode(mode).parquet(s"$dir/postings")
+          .as(Seq("band_idx", "band_hash"))),
+      PostingsKey, s"$dir/postings", mode)
     base.write.mode(mode).parquet(s"$dir/docs")
   }
-
-  /** Gated broadcast: hint only when the optimizer's own size estimate
-    * fits the cap (the [[graft.ops.DeletionVectors.applyDv]] doctrine —
-    * the non-CBO estimate overestimates, so the bias only ever declines
-    * a broadcast; an outgrown side degrades to a shuffle, never an OOM).
-    */
-  private def gated(df: DataFrame): DataFrame =
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= MaxBroadcastBytes)
-      broadcast(df)
-    else df
 }

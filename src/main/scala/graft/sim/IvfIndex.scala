@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.IndexHealth
 import Vectors.{cosineFromNorms, norm, toDoubleArray}
 
 /** Persistent IVF index — the build-once / query-many serving shape
@@ -61,50 +62,23 @@ object IvfIndex {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  private def stagingDir(dir: String) = s"$dir/_retrain_staging"
-
-  /** Heal a crashed [[retrainAndCompact]] (r17 self-review — the
-    * reserve/write/seal doctrine applied to the quantizer swap):
-    * staging WITHOUT the ready marker is a pre-commit crash, rolled
-    * back whole (the live index was never touched); staging WITH the
-    * marker is a mid-swap crash, and the swap COMPLETES idempotently
-    * (each face renames only if still staged). Without this, a crash
-    * between the centroid and vector overwrites would leave vectors
-    * assigned under the old quantizer but searched under the new one —
-    * silently wrong cells. Returns "none" | "rolled_back" | "completed";
-    * called automatically by retrainAndCompact, exposed for an operator
-    * healing an index before serving reads.
+  /** The quantizer swap of [[retrainAndCompact]]: centroids and vectors
+    * staged together, so no crash window serves vectors assigned under
+    * one quantizer and searched under another.
     */
-  def recoverRetrain(spark: SparkSession, dir: String): String = {
-    val conf = spark.sessionState.newHadoopConf()
-    val st = new org.apache.hadoop.fs.Path(stagingDir(dir))
-    val fs = st.getFileSystem(conf)
-    if (!fs.exists(st)) "none"
-    else if (!fs.exists(new org.apache.hadoop.fs.Path(st, "_ready"))) {
-      fs.delete(st, true)
-      "rolled_back"
-    } else {
-      // Hadoop FileSystem signals failure by RETURNING FALSE, not
-      // throwing (second-review finding): an unchecked failed rename
-      // followed by the staging delete would destroy the only copy of a
-      // face while reporting success. Every step is checked; on failure
-      // the staging (and its _ready marker) is left INTACT so the swap
-      // stays re-runnable.
-      def must(ok: Boolean, what: String): Unit =
-        if (!ok) throw new java.io.IOException(
-          s"retrain swap: $what failed — staging left intact, re-run recoverRetrain")
-      Seq("centroids", "vectors").foreach { face =>
-        val staged = new org.apache.hadoop.fs.Path(st, face)
-        if (fs.exists(staged)) {
-          val live = new org.apache.hadoop.fs.Path(s"$dir/$face")
-          if (fs.exists(live)) must(fs.delete(live, true), s"delete live $face")
-          must(fs.rename(staged, live), s"rename staged $face")
-        }
-      }
-      must(fs.delete(st, true), "clear staging")
-      "completed"
-    }
-  }
+  private def retrainSwap(dir: String) =
+    IndexHealth.StagedSwap(dir, "_retrain_staging",
+      Seq("centroids", "vectors"))
+
+  /** Heal a crashed [[retrainAndCompact]] — [[graft.io.IndexHealth.recover]]
+    * on the quantizer swap: a pre-commit crash rolls back whole, a
+    * mid-swap crash completes. Returns "none" | "rolled_back" |
+    * "completed"; called automatically by retrainAndCompact and
+    * [[maintain]], exposed for an operator healing an index before
+    * serving reads.
+    */
+  def recoverRetrain(spark: SparkSession, dir: String): String =
+    IndexHealth.recover(spark, retrainSwap(dir))
 
   /** The missing last step of the index lifecycle (r16 verdict task 6):
     * act on the retrain signal [[occupancySkew]] surfaces. The frozen
@@ -138,21 +112,11 @@ object IvfIndex {
         seed = seed)
     require(centroids.nonEmpty,
       "IvfIndex.retrainAndCompact: no finite-norm stored vectors")
-    // CRASH-CONSISTENT SWAP: both new faces land in staging, the ready
-    // marker commits, and the swap executes through the same
-    // [[recoverRetrain]] path a restart would take — a crash before the
-    // marker rolls back whole, after it the completion is idempotent
-    val conf = spark.sessionState.newHadoopConf()
-    val st = new org.apache.hadoop.fs.Path(stagingDir(dir))
-    val fs = st.getFileSystem(conf)
-    fs.delete(st, true)
-    writeCentroids(spark, s"${stagingDir(dir)}/centroids", centroids.toSeq)
-    assignCells(live, "vec_id", "vec", centroids.toSeq)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"${stagingDir(dir)}/vectors")
-    fs.create(new org.apache.hadoop.fs.Path(st, "_ready"), false).close()
-    val done = recoverRetrain(spark, dir)
-    assert(done == "completed", s"retrain swap state: $done")
+    IndexHealth.swapIn(spark, retrainSwap(dir)) { st =>
+      writeCentroids(spark, s"$st/centroids", centroids.toSeq)
+      assignCells(live, "vec_id", "vec", centroids.toSeq)
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$st/vectors")
+    }
     live.queryExecution.logical.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.foreach(_.unpersist(blocking = false))
@@ -389,14 +353,9 @@ object IvfIndex {
       .select(col("recall")).head().getDouble(0)
     val unhealthy = skew >= policy.skewBar || recall < policy.recallFloor
     val ledgerPath = s"$dir/maintenance"
-    val fs = new org.apache.hadoop.fs.Path(ledgerPath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     val prior: Seq[(Long, Boolean, String)] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(ledgerPath))) Seq.empty
-      else spark.read.schema(
+      IndexHealth.ledger(spark, ledgerPath,
           "seq long, unhealthy boolean, action string")
-        .parquet(ledgerPath)
-        .select(col("seq"), col("unhealthy"), col("action"))
         .orderBy(desc("seq")).limit(math.max(policy.badToAct - 1, 1))
         .as[(Long, Boolean, String)].collect().toSeq
     val seq = prior.headOption.map(_._1 + 1L).getOrElse(0L)
@@ -418,7 +377,7 @@ object IvfIndex {
           policy.probeNprobe, policy.seed)
           .select(col("recall")).head().getDouble(0))
       }
-    val row = Seq((seq, graft.io.IndexHealth.round6HalfUp(skew), recall,
+    val row = Seq((seq, IndexHealth.round6HalfUp(skew), recall,
         policy.skewBar,
         policy.recallFloor, unhealthy, consecutiveBad,
         if (act) "retrain" else "none", postRecall, healed))
@@ -432,16 +391,11 @@ object IvfIndex {
     * every [[maintain]] decision (what was read, against which
     * thresholds, what was done, what it recovered to).
     */
-  def maintenanceLog(spark: SparkSession, dir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/maintenance")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val schema = "seq long, skew double, recall double, skew_bar double, " +
-      "recall_floor double, unhealthy boolean, consecutive_bad long, " +
-      "action string, post_recall double, healed string"
-    if (!fs.exists(p))
-      spark.read.schema(schema).parquet() // empty, schema'd
-    else spark.read.schema(schema).parquet(p.toString).orderBy("seq")
-  }
+  def maintenanceLog(spark: SparkSession, dir: String): DataFrame =
+    IndexHealth.ledger(spark, s"$dir/maintenance",
+      "seq long, skew double, recall double, skew_bar double, " +
+        "recall_floor double, unhealthy boolean, consecutive_bad long, " +
+        "action string, post_recall double, healed string")
 
   private def nearestCell(cs: Seq[Array[Double]], v: Seq[Double]): Int = {
     val ds = cellDistances(cs, v)

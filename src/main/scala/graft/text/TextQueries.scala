@@ -414,7 +414,7 @@ object TextQueries {
         .withColumnRenamed("id", "doc_id")
     }),
 
-    // The MUTABLE-corpus face: %7 docs tombstoned (TextIndex.delete —
+    // The MUTABLE-corpus face: %7 docs tombstoned (IndexHealth.delete —
     // sidecar only, no index file touched, TextIndexSpec pins the
     // filesystem half), then scored. Because N/avgdl/df recompute over
     // the SURVIVING spine at query time, the oracle is simply the
@@ -431,7 +431,7 @@ object TextQueries {
 
     // The CLOSED maintenance loop on the lexical index (IvfIndex.maintain's
     // policy doctrine applied to TextIndex — exact-counter signals, so no
-    // hysteresis by design; see TextIndex.maintain's scaladoc): the
+    // hysteresis by design; see IndexHealth.maintainTombstoneIndex): the
     // fixture builds the index, tombstones the %11 docs (dead ratio
     // ~0.091, under the 0.2 bar — maintain records "none" and touches
     // nothing), then tombstones the %7 docs as well (~0.221 — maintain
@@ -441,7 +441,7 @@ object TextQueries {
     // the decision logic itself is value-checked, not just the moves.
     "q_text_index_maintain" -> ((s, d) => {
       val dir = textIndexMntDir(s, d)
-      TextIndex.maintenanceLog(s, dir)
+      graft.io.IndexHealth.tombstoneMaintenanceLog(s, dir)
         .select(col("seq"), col("dead_ratio"), col("action"),
           col("survivors"), col("folded"))
     }),
@@ -548,14 +548,14 @@ object TextQueries {
   private val textIndexMutWritten = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** One-time mutable-corpus index for `q_text_bm25_mutable`: full build,
-    * then %7 doc_ids tombstoned via TextIndex.delete.
+    * then %7 doc_ids tombstoned via IndexHealth.delete.
     */
   private def textIndexMutDir(s: SparkSession, d: String): String =
     graft.ops.QueryFixtures.fixtureDir(textIndexMutWritten,
         "text_index_mut", "documents", d) { dir =>
       val doc = documents(s, d)
       TextIndex.build(doc, "doc_id", "text", dir)
-      TextIndex.delete(s, dir,
+      graft.io.IndexHealth.delete(s, dir,
         doc.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
     }
 
@@ -576,11 +576,11 @@ object TextQueries {
       // shuffle partitions (= cpus), so the default 96 could flip
       // the FIRST decision on a >96-core box — the oracle replays
       // only the corpus-derived dead-ratio signal
-      val pol = TextIndex.MaintenancePolicy(filesBar = Int.MaxValue)
-      TextIndex.delete(s, dir,
+      val pol = graft.io.IndexHealth.MaintenancePolicy(filesBar = Int.MaxValue)
+      graft.io.IndexHealth.delete(s, dir,
         doc.filter(col("doc_id") % 11 === 0).select("doc_id"), "doc_id")
       TextIndex.maintain(s, dir, pol)
-      TextIndex.delete(s, dir,
+      graft.io.IndexHealth.delete(s, dir,
         doc.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
       TextIndex.maintain(s, dir, pol)
       ()

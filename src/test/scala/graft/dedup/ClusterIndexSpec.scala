@@ -99,7 +99,7 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     ClusterIndex.addPairs(spark, dir, pairsDf(2L -> 3L), "id_a", "id_b", 1)
     val r0 = ClusterIndex.maintain(spark, dir).collect()(0)
     assert(r0.getAs[String]("action") === "none")
-    assert(r0.getAs[String]("healed") === "no_staging")
+    assert(r0.getAs[String]("healed") === "none")
     assert(r0.getAs[Int]("update_epochs") === 1)
 
     // crashed addPairs: maintain REPORTS (it must not invent scores on a
@@ -292,7 +292,7 @@ class ClusterIndexSpec extends AnyFunSuite with SparkSpec {
     }
     intercept[IllegalArgumentException] { ClusterIndex.compact(spark, dir) }
     assert(ClusterIndex.recoverCompact(spark, dir) === "rolled_back")
-    assert(ClusterIndex.recoverCompact(spark, dir) === "no_staging")
+    assert(ClusterIndex.recoverCompact(spark, dir) === "none")
     assert(keepOf(ClusterIndex.resolveBest(spark, dir, bestDocs, "id"))
       === want)
     assert(new java.io.File(s"$dir/best_updates").exists(),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.io.IndexHealth
 
 /** The persistent LSH index must (1) discover exactly the cross pairs the
   * inline banded path finds, (2) append without rewriting any existing
@@ -103,7 +104,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(full.nonEmpty, "fixture produced no pairs — vacuous")
     val victim = full.head._1
-    LshIndex.delete(spark, t, Seq(victim).toDF("doc_id"), "doc_id")
+    IndexHealth.delete(spark, t, Seq(victim).toDF("doc_id"), "doc_id")
     val after = LshIndex.probe(spark, t, probeSet, "doc_id", "text", 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(after === full.filterNot(_._1 == victim))
@@ -124,7 +125,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
     // delete a set of ids that do NOT exist in the index: the dead
     // ratio must stay 0 (a tombstone nobody stores costs nothing at
     // probe time), even though the sidecar is non-empty
-    LshIndex.delete(spark, t, (1000000L to 1000050L).toSeq.toDF("doc_id"), "doc_id")
+    IndexHealth.delete(spark, t, (1000000L to 1000050L).toSeq.toDF("doc_id"), "doc_id")
     val r0 = LshIndex.maintain(spark, t).collect()(0)
     assert(r0.getAs[Double]("dead_ratio") === 0.0)
     assert(r0.getAs[String]("action") === "none")
@@ -133,7 +134,7 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
     // whole sidecar (including the unknown ids), survivors the spine
     val dead = docs.filter(col("doc_id") % 11 === 0 || col("doc_id") % 7 === 0)
       .select("doc_id")
-    LshIndex.delete(spark, t, dead, "doc_id")
+    IndexHealth.delete(spark, t, dead, "doc_id")
     val deadInSpine = spark.read.parquet(s"$t/docs")
       .join(dead.withColumnRenamed("doc_id", "id"), Seq("id"), "left_semi")
       .count()
@@ -148,8 +149,61 @@ class LshIndexSpec extends AnyFunSuite with SparkSpec {
     // ledger: two seq-ordered rows; a third call observes the floor
     val r2 = LshIndex.maintain(spark, t).collect()(0)
     assert(r2.getAs[String]("action") === "none")
-    assert(LshIndex.maintenanceLog(spark, t).collect()
+    assert(IndexHealth.tombstoneMaintenanceLog(spark, t).collect()
       .map(r => (r.getAs[Long]("seq"), r.getAs[String]("action"))).toSeq ===
       Seq((0L, "none"), (1L, "compact"), (2L, "none")))
+  }
+
+  test("compact is crash-safe: no _ready rolls back, _ready completes, " +
+      "writers refuse a crashed staging; maintain heals first") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("lsh_cswap").toString + "/idx"
+    LshIndex.build(corpus, "doc_id", "text", t)
+    def res(p: String) = LshIndex.probe(spark, p, batch, "doc_id", "text", 0.3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val victims = res(t).map(_._1).toSeq.sorted.take(3).toDF("doc_id")
+    IndexHealth.delete(spark, t, victims, "doc_id")
+    val want = res(t)
+    assert(want.nonEmpty, "fixture produced no pairs — vacuous")
+    val swap = IndexHealth.tombstoneSwap(t)
+
+    // crash BEFORE the _ready marker: writers refuse, recovery rolls
+    // back, probes unchanged, sidecar still unfolded
+    spark.read.parquet(s"$t/postings")
+      .write.parquet(s"$t/_compact_staging/postings")
+    intercept[IllegalArgumentException] {
+      LshIndex.append(spark, t, batch.limit(3), "doc_id", "text")
+    }
+    intercept[IllegalArgumentException] {
+      IndexHealth.delete(spark, t, victims, "doc_id")
+    }
+    assert(IndexHealth.recover(spark, swap) === "rolled_back")
+    assert(res(t) === want)
+    assert(new java.io.File(s"$t/tombstones").exists())
+
+    // crash AFTER _ready: recovery completes the fold, equal to a clean
+    // compact of the same state
+    val tomb = spark.read.parquet(s"$t/tombstones")
+    Seq("postings", "docs").foreach { f =>
+      spark.read.parquet(s"$t/$f").join(tomb, Seq("id"), "left_anti")
+        .write.parquet(s"$t/_compact_staging/$f")
+    }
+    assert(new java.io.File(s"$t/_compact_staging/_ready").createNewFile())
+    assert(IndexHealth.recover(spark, swap) === "completed")
+    assert(!new java.io.File(s"$t/tombstones").exists())
+    assert(!new java.io.File(s"$t/_compact_staging").exists())
+    val clean = Files.createTempDirectory("lsh_cswap_clean").toString + "/idx"
+    LshIndex.build(corpus, "doc_id", "text", clean)
+    IndexHealth.delete(spark, clean, victims, "doc_id")
+    LshIndex.compact(spark, clean)
+    assert(res(t) === res(clean))
+    assert(res(t) === want)
+
+    // maintain heals a crashed compact before it reads its signals
+    assert(new java.io.File(s"$t/_compact_staging/docs").mkdirs())
+    assert(LshIndex.maintain(spark, t).collect()(0)
+      .getAs[String]("action") === "none")
+    assert(!new java.io.File(s"$t/_compact_staging").exists())
+    assert(LshIndex.append(spark, t, batch.limit(20), "doc_id", "text") > 0)
   }
 }

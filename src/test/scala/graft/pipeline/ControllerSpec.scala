@@ -60,12 +60,23 @@ class ControllerSpec extends AnyFunSuite with SparkSpec {
     val csv = Files.createTempDirectory("sweep-fixture").resolve("train.csv")
     Files.write(csv, (("label" +: (1 to 16).map(i => s"_c$i")).mkString(",") +:
       TscQueries.fixtureSeries(5000L, 300).map { case (_, l, ts) => (l +: ts.toSeq).mkString(",") }).asJava)
+    val plots = Files.createTempDirectory("sweep-plots").toString
     val results = Controller.run(spark, SweepConfig(dataPath = csv.toString, numFeatures = 16,
-      localMaxPartitions = 2, globalMaxPartitions = 4, nSplitters = 3, sampleParams = true))
+      localMaxPartitions = 2, globalMaxPartitions = 4, nSplitters = 3, sampleParams = true,
+      plotsDir = Some(plots)))
     val global = results.filter(_.modelKind == "global")
     assert(global.map(_.iteration) === Seq(2, 3, 4))
     val hashes = global.map(_.report.meta(Controller.ModelHash))
     assert(hashes.distinct.size === 1 && hashes.head.matches("[0-9a-f]{16}"), hashes)
+    // E9: both figures rendered per iteration, and they parse as XML
+    Seq("local_2", "global_2").foreach { it =>
+      Seq("confusion_matrix.svg", "class_metrics.svg").foreach { f =>
+        val svg = new java.io.File(s"$plots/$it/$f")
+        assert(svg.exists() && svg.length() > 200, s"missing plot $it/$f")
+        javax.xml.parsers.DocumentBuilderFactory.newInstance()
+          .newDocumentBuilder().parse(svg)
+      }
+    }
 
     // one differing tree: the check names its iteration
     val differing = results.map { r =>

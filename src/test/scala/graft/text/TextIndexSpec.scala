@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.io.IndexHealth
 
 /** The persistent inverted index must (1) score exactly like the inline
   * relational BM25 (same math, same rounding), (2) append without
@@ -79,7 +80,7 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
         .map(f => s"${f.getPath}@${f.lastModified}@${f.length}").toSet
     }
     val before = files(s"$t/postings") ++ files(s"$t/docs")
-    val nDel = TextIndex.delete(spark, t,
+    val nDel = IndexHealth.delete(spark, t,
       docs.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
     assert(nDel > 0)
     // delete wrote ONLY the tombstone sidecar
@@ -106,7 +107,7 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     val n = docs.count()
 
     // round 1: %11 tombstoned — dead ratio ~0.091, under the 0.2 bar
-    TextIndex.delete(spark, t,
+    IndexHealth.delete(spark, t,
       docs.filter(col("doc_id") % 11 === 0).select("doc_id"), "doc_id")
     val r1 = TextIndex.maintain(spark, t).collect()(0)
     assert(r1.getAs[String]("action") === "none")
@@ -117,7 +118,7 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     assert(new java.io.File(s"$t/tombstones").exists())
 
     // round 2: %7 added — the union crosses the bar, maintain compacts
-    TextIndex.delete(spark, t,
+    IndexHealth.delete(spark, t,
       docs.filter(col("doc_id") % 7 === 0).select("doc_id"), "doc_id")
     val r2 = TextIndex.maintain(spark, t).collect()(0)
     assert(r2.getAs[String]("action") === "compact")
@@ -133,7 +134,7 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     assert(r3.getAs[Double]("dead_ratio") === 0.0)
 
     // the ledger is the audit trail: three seq-ordered rows
-    val log = TextIndex.maintenanceLog(spark, t).collect()
+    val log = IndexHealth.tombstoneMaintenanceLog(spark, t).collect()
     assert(log.map(_.getAs[Long]("seq")).toSeq === Seq(0L, 1L, 2L))
     assert(log.map(_.getAs[String]("action")).toSeq ===
       Seq("none", "compact", "none"))
@@ -153,15 +154,70 @@ class TextIndexSpec extends AnyFunSuite with SparkSpec {
     TextIndex.build(half, "doc_id", "text", t)
     TextIndex.append(spark, t, docs.filter(col("doc_id") % 2 === 1),
       "doc_id", "text")
-    def files() = graft.io.IndexHealth.dataFileCount(spark, s"$t/postings")
+    def files() = IndexHealth.dataFileCount(spark, s"$t/postings")
     val before = files()
     // bar below the current count: no tombstones at all, still compacts
     val r = TextIndex.maintain(spark, t,
-      TextIndex.MaintenancePolicy(filesBar = before - 1)).collect()(0)
+      IndexHealth.MaintenancePolicy(filesBar = before - 1)).collect()(0)
     assert(r.getAs[String]("action") === "compact")
     assert(r.getAs[Double]("dead_ratio") === 0.0)
     assert(r.getAs[Int]("postings_files") === before)
     assert(r.getAs[Int]("post_files") < before,
       s"compact must re-pack: $before -> ${r.getAs[Int]("post_files")}")
+  }
+
+  test("compact is crash-safe: no _ready rolls back, _ready completes, " +
+      "writers refuse a crashed staging") {
+    val t = Files.createTempDirectory("text_cswap").toString + "/idx"
+    TextIndex.build(docs, "doc_id", "text", t)
+    val victims = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
+    IndexHealth.delete(spark, t, victims, "doc_id")
+    val want = scores(TextIndex.scoreAll(spark, t, terms))
+    val swap = IndexHealth.tombstoneSwap(t)
+
+    // crash BEFORE the _ready marker: a half-written staging. Both
+    // writers refuse (a write landing now would be folded away by a
+    // later swap); recovery rolls back and the live index is untouched.
+    spark.read.parquet(s"$t/docs").write.parquet(s"$t/_compact_staging/docs")
+    intercept[IllegalArgumentException] {
+      TextIndex.append(spark, t, docs.limit(3), "doc_id", "text")
+    }
+    intercept[IllegalArgumentException] {
+      IndexHealth.delete(spark, t, victims.limit(1), "doc_id")
+    }
+    assert(IndexHealth.recover(spark, swap) === "rolled_back")
+    assert(IndexHealth.recover(spark, swap) === "none")
+    assert(scores(TextIndex.scoreAll(spark, t, terms)) === want)
+    assert(new java.io.File(s"$t/tombstones").exists(),
+      "rollback must leave the sidecar unfolded")
+
+    // crash AFTER _ready, mid-swap (postings already renamed): recovery
+    // completes, the sidecar is cleared, and the index equals a clean
+    // compact of the same state
+    val tomb = spark.read.parquet(s"$t/tombstones")
+    Seq("postings", "docs").foreach { f =>
+      spark.read.parquet(s"$t/$f").join(tomb, Seq("id"), "left_anti")
+        .write.parquet(s"$t/_compact_staging/$f")
+    }
+    assert(new java.io.File(s"$t/_compact_staging/_ready").createNewFile())
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+      f.delete(); ()
+    }
+    rm(new java.io.File(s"$t/postings"))
+    assert(new java.io.File(s"$t/_compact_staging/postings")
+      .renameTo(new java.io.File(s"$t/postings")))
+    assert(IndexHealth.recover(spark, swap) === "completed")
+    assert(!new java.io.File(s"$t/tombstones").exists())
+    assert(!new java.io.File(s"$t/_compact_staging").exists())
+    val clean = Files.createTempDirectory("text_cswap_clean").toString + "/idx"
+    TextIndex.build(docs, "doc_id", "text", clean)
+    IndexHealth.delete(spark, clean, victims, "doc_id")
+    TextIndex.compact(spark, clean)
+    assert(scores(TextIndex.scoreAll(spark, t, terms)) ===
+      scores(TextIndex.scoreAll(spark, clean, terms)))
+    assert(scores(TextIndex.scoreAll(spark, t, terms)) === want)
+    // and the writers accept again
+    assert(IndexHealth.delete(spark, t, victims.limit(1), "doc_id") === 1L)
   }
 }
